@@ -40,16 +40,24 @@ object Extraction {
     */
   def fullRefresh(source: DataFrame, target: Store,
                   table: String): ExtractResult = {
-    // ONE source scan: the write consumes a persisted snapshot and the
-    // reported count is of THAT data — a second scan both doubles the
-    // dominant cost and, for a live JDBC source, can count rows that
-    // were never written (the reference counts the frame it wrote).
-    val snap = source.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      target.write(snap, table, mode = "overwrite")
-      ExtractResult(table, "Full Refresh", snap.count())
-    } finally { snap.unpersist(blocking = false): Unit }
+    val rows = writeCounted(source)(target.write(_, table, mode = "overwrite"))
+    ExtractResult(table, "Full Refresh", rows)
+  }
+
+  /** Write `df` through `write` and return the number of rows that write
+    * consumed. The count rides the write's own job as an `Observation`
+    * (the Dedup convergence-statistic discipline): ONE source scan, no
+    * cached copy, and what is reported is exactly what was written — a
+    * second scan both doubles the dominant cost and, for a live JDBC
+    * source, can count rows that were never written (the reference
+    * counts the frame it wrote). `write` must run exactly one action on
+    * the frame it is given; the observation is read only after it
+    * returned, so a failed write throws instead of waiting for metrics.
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** The rows of `source` strictly past `target`'s high watermark
@@ -82,15 +90,10 @@ object Extraction {
   def incrementalLoad(spark: SparkSession, source: DataFrame,
                       target: Store, table: String): ExtractResult = {
     val existing = target.readIfExists(spark, table)
-    // persisted for the same one-scan/count-what-was-written contract
-    // as fullRefresh
-    val delta = incrementalRows(source, existing).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val mode = if (existing.isDefined) "append" else "overwrite"
-      target.write(delta, table, mode)
-      ExtractResult(table, "Incremental Load", delta.count())
-    } finally { delta.unpersist(blocking = false): Unit }
+    val mode = if (existing.isDefined) "append" else "overwrite"
+    val rows = writeCounted(incrementalRows(source, existing))(
+      target.write(_, table, mode))
+    ExtractResult(table, "Incremental Load", rows)
   }
 
   /** Per-table extraction config (extraction.json,
@@ -108,11 +111,13 @@ object Extraction {
 
   /** Store-generic E3 — source and target can each be parquet or JDBC,
     * covering all four reference-shaped flows (DB→DB is the reference's
-    * own bronze→silver move).
+    * own bronze→silver move). Tables extract concurrently
+    * ([[Parallel.map]]); results come back in `jobs` order, and every
+    * table has finished when this returns.
     */
   def runJob(spark: SparkSession, source: Store, target: Store,
              jobs: Seq[TableJob]): Seq[Either[(String, Throwable), ExtractResult]] =
-    jobs.map { j =>
+    Parallel.map(spark, jobs) { j =>
       try {
         val src = source.read(spark, j.table)
         Right(j.mode match {

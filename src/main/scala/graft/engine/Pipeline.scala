@@ -10,8 +10,18 @@ import graft.engine.Aggregations.AggSpec
   * medallion layers (raw → silver_mapping → silver → gold).
   *
   * Stage boundaries materialize to parquet for replayability (the
-  * reference's status-file gating); within a stage everything stays lazy so
-  * Catalyst fuses the selected transforms into one codegen'd pass.
+  * reference's status-file gating). Within a stage each table's transform
+  * chain is one plan, so Catalyst fuses the selected transforms into one
+  * codegen'd pass, but a stage still runs jobs per table before its
+  * writes: extraction's watermark probe, imputeNulls' stats pass. The
+  * tables of a stage are independent, so the stage entry points
+  * (Extraction.runJob, Transforms.transformAll, Tables.writeAll) run
+  * their per-table work concurrently through [[Parallel.map]], and every
+  * table's task is joined before the stage returns or fails — the next
+  * stage never starts beside a straggler of the last. The tables a stage
+  * writes are read back by the next without a schema-inference job
+  * (Tables.write pins their schemas).
+  *
   * Time-based scheduling (O2/O3) is driver-side orchestration outside the
   * engine core; the streaming-native upgrade path for recurring incremental
   * loads is graft.streaming.IncrementalStream.

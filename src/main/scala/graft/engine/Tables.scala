@@ -66,24 +66,42 @@ object Tables {
     * SparkEntry.corpusKey discipline), NOT the bare path: Pipeline
     * re-reads layer directories it has just rewritten, and a
     * path-keyed entry would serve the PREVIOUS write's schema. A
-    * rewrite changes the listing, so it re-infers; stale entries for
-    * superseded listings are bounded by rewrites per JVM.
+    * rewrite changes the listing, so it re-infers (or is seeded, see
+    * below); stale entries for superseded listings are bounded by
+    * rewrites per JVM. The listing goes through the session's Hadoop
+    * filesystem, like every read and write of the path: a local-file
+    * walk sees nothing under an `hdfs://`, `s3a://` or `file:` URI, and
+    * the key would degrade to the bare path.
+    *
+    * [[write]] also SEEDS the cache: an overwrite leaves only files
+    * carrying the written frame's schema, which a read infers back made
+    * recursively nullable, so that schema is pinned under the listing
+    * the write left and the stage that reads the table next (Pipeline's
+    * raw → silver_mapping → silver hand-offs) runs no inference job.
+    * An append keeps the older files, so it seeds only when the schema
+    * pinned for the listing it appended to equals the one it writes
+    * (every file then carries it); otherwise the next read infers.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.types.StructType]()
 
-  private def listingKey(root: java.io.File): String = {
-    def walk(x: java.io.File): Seq[java.io.File] =
-      if (x.isDirectory)
-        Option(x.listFiles()).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(x)
-    val listing = walk(root)
-      .map(p => s"${p.getPath.stripPrefix(root.getPath)}:${p.length}:" +
-        s"${p.lastModified}")
-      .mkString("|")
-    root.getAbsolutePath + "#" + java.util.Arrays.hashCode(
+  private def listingKey(spark: SparkSession, path: String): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory)
+        fs.listStatus(s.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
+      else Seq(s)
+    val listing =
+      try walk(fs.getFileStatus(root))
+        .map(s => s"${s.getPath.toString.stripPrefix(root.toString)}:" +
+          s"${s.getLen}:${s.getModificationTime}")
+        .mkString("|")
+      catch { case _: java.io.FileNotFoundException => "" }
+    root.toString + "#" + java.util.Arrays.hashCode(
       java.security.MessageDigest.getInstance("MD5")
         .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
@@ -96,7 +114,7 @@ object Tables {
     * pay one inference job per evaluation.
     */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val key = listingKey(new java.io.File(path))
+    val key = listingKey(spark, path)
     val cached = schemaCache.get(key)
     if (cached != null) spark.read.schema(cached).parquet(path)
     else {
@@ -192,18 +210,35 @@ object Tables {
     * .py:32-43); parquet keeps the schema with the data (S6 for free).
     */
   def write(df: DataFrame, dir: String, name: String,
-            mode: String = "overwrite"): Unit =
-    df.write.mode(mode).parquet(s"$dir/$name.parquet")
+            mode: String = "overwrite"): Unit = {
+    val spark = df.sparkSession
+    val path = s"$dir/$name.parquet"
+    val schema = org.apache.spark.sql.graftbridge.Bridge.asNullable(df.schema)
+    // seed (the [[schemaCache]] note): an append keeps the older files,
+    // so it seeds only when their pinned schema is the one it writes
+    val seed = mode.toLowerCase match {
+      case "overwrite" => true
+      case "append" => schema == schemaCache.get(listingKey(spark, path))
+      case _ => false
+    }
+    df.write.mode(mode).parquet(path)
+    if (seed) schemaCache.put(listingKey(spark, path), schema)
+  }
 
   /** S10 bulk loader: write every table with a name prefix
-    * (transformations_code.py:206-213).
+    * (transformations_code.py:206-213). The tables are written
+    * concurrently ([[Parallel.map]]); every write has finished when this
+    * returns, and the first failure in table order is rethrown.
     */
   def writeAll(tables: Map[String, DataFrame], dir: String,
-               prefix: String = ""): Unit =
-    tables.foreach { case (n, df) =>
-      val out = if (prefix.isEmpty) n else s"${prefix}_$n"
-      write(df, dir, out)
+               prefix: String = ""): Unit = {
+    val ts = tables.toSeq
+    ts.headOption.foreach { case (_, df) =>
+      Parallel.map(df.sparkSession, ts) { case (n, t) =>
+        write(t, dir, if (prefix.isEmpty) n else s"${prefix}_$n")
+      }
     }
+  }
 
   /** S9 CSV sink (mapping.py:183-185 store_dataset). Header on; still a
     * distributed write — one file per partition, `coalesce(1)` only if a

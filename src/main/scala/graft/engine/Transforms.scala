@@ -200,10 +200,21 @@ object Transforms {
   def pipeline(selected: Seq[String])(df: DataFrame): DataFrame =
     selected.foldLeft(df)((d, name) => registry.get(name).fold(d)(_(d)))
 
-  /** Whole-table-set map (transformations_code.py:150-162). */
+  /** Whole-table-set map (transformations_code.py:150-162). Building a
+    * table's pipeline can run Spark jobs ([[imputeNulls]]' stats pass),
+    * so the tables are built concurrently ([[Parallel.map]]); every table
+    * has finished when this returns, and the first failure in table order
+    * is rethrown.
+    */
   def transformAll(tables: Map[String, DataFrame],
-                   selected: Seq[String]): Map[String, DataFrame] =
-    tables.map { case (n, df) => n -> pipeline(selected)(df) }
+                   selected: Seq[String]): Map[String, DataFrame] = {
+    val ts = tables.toSeq
+    ts.headOption.fold(Map.empty[String, DataFrame]) { case (_, df) =>
+      Parallel.map(df.sparkSession, ts) { case (n, t) =>
+        n -> pipeline(selected)(t)
+      }.toMap
+    }
+  }
 }
 
 /** Deterministic replacement for dateutil.parser.parse(dayfirst=True,

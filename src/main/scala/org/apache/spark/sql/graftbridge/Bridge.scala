@@ -82,6 +82,13 @@ object Bridge {
       Map.empty[String, String], Map.empty[String, String])
   }
 
+  /** `StructType.asNullable` (private[spark]): every field, array
+    * element and map value made nullable, recursively — the schema a
+    * file-source read of data written with `s` reports.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Block until the asynchronous listener bus has delivered every
     * queued event (bounded wait). `SparkContext.listenerBus` is
     * private[spark]; [[graft.Bench]]'s per-query shuffle-bytes

@@ -161,4 +161,88 @@ class ExtractionPipelineSpec extends SparkSpecBase {
     // the transform outputs really are on disk despite the bad spec
     assert(spark.read.parquet(s"$silver/transformed_t.parquet").count() == 2)
   }
+
+  test("the observed row count arrives on a DataFrameWriter action, empty frames included") {
+    import org.apache.spark.sql.functions.{count, lit}
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val dir = tmp()
+    def observedWrite(df: org.apache.spark.sql.DataFrame, name: String): Long = {
+      val obs = org.apache.spark.sql.Observation()
+      df.observe(obs, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      // bounded: a metric that never arrives fails here, not hangs
+      Await.result(obs.future, 60.seconds).getAs[Long]("rows")
+    }
+    (1L to 50L).toDF("id").write.parquet(s"$dir/src.parquet")
+    val src = spark.read.parquet(s"$dir/src.parquet")
+    assert(observedWrite(src, "all") == 50)
+    // an empty delta: every row group scanned, no row past the watermark
+    assert(observedWrite(src.filter($"id" > 50L), "delta") == 0)
+    // a plan the optimizer empties outright
+    assert(observedWrite(src.filter(lit(false)), "pruned") == 0)
+    // Extraction counts on the write itself: one job, no count pass
+    val jobs = jobStarts {
+      assert(Extraction.fullRefresh(src, dir, "t").rows == 50)
+    }
+    assert(jobs.size == 1, s"${jobs.size} jobs")
+  }
+
+  test("a file: URI table rewritten by another writer is read back with its new schema") {
+    val uri = new java.io.File(tmp()).toURI.toString.stripSuffix("/")
+    assert(uri.startsWith("file:"))
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$uri/t.parquet")
+    assert(Tables.table(spark, uri, "t").columns.toSeq == Seq("id", "v"))
+    Seq(("x", 2.5)).toDF("name", "score").write.mode("overwrite")
+      .parquet(s"$uri/t.parquet")
+    val back = Tables.table(spark, uri, "t")
+    assert(back.columns.toSeq == Seq("name", "score"))
+    assert(back.as[(String, Double)].collect().toSeq == Seq(("x", 2.5)))
+  }
+
+  test("job budget: an incremental Pipeline.run re-reads its own layers with zero inference jobs") {
+    val src = tmp()
+    val layers = Pipeline.Layers(src, tmp(), tmp(), tmp(), tmp())
+    Seq((1L, "Ada", "London"), (2L, "Alan", "Wilmslow"), (3L, "Grace", "NYC"))
+      .toDF("customer_id", "name", "city").write.parquet(s"$src/customers.parquet")
+    def orders(ids: Seq[Long]) = ids.map(i => (i, 1L + i % 3, 10.0 * i))
+      .toDF("order_id", "customer_id", "total")
+    def items(ids: Seq[Long]) = ids.map(i => (100L + i, i, 2L))
+      .toDF("item_id", "order_id", "qty")
+    orders(1L to 6L).write.parquet(s"$src/orders.parquet")
+    items(1L to 6L).write.parquet(s"$src/items.parquet")
+    def cfg(incremental: Boolean) = Pipeline.Config(
+      extraction = Seq(
+        Extraction.TableJob("customers", "Full Refresh"),
+        Extraction.TableJob("orders",
+          if (incremental) "Incremental Load" else "Full Refresh"),
+        Extraction.TableJob("items",
+          if (incremental) "Incremental Load" else "Full Refresh")),
+      mappingEnabled = true,
+      transforms = Transforms.names,
+      aggregations = Map("customers_orders_merged" ->
+        AggSpec(Seq("city_customers"), Seq("total_orders"), Seq("sum"))))
+    val first = Pipeline.run(spark, layers, cfg(incremental = false))
+    assert(first.forall(_.ok), first.mkString("; "))
+    // the next batch lands in the two fact tables of the source
+    orders(7L to 9L).write.mode("append").parquet(s"$src/orders.parquet")
+    items(7L to 9L).write.mode("append").parquet(s"$src/items.parquet")
+    var tick = Seq.empty[Pipeline.StageStatus]
+    val jobs = jobStarts { tick = Pipeline.run(spark, layers, cfg(incremental = true)) }
+    assert(tick.forall(_.ok), tick.mkString("; "))
+    // schema inference is the one kind of job that runs outside any SQL
+    // execution: a footer read at plan construction. Only the two source
+    // tables the batch grew may infer; raw, silver_mapping and
+    // transformed_* were written by the pipeline itself, which pinned
+    // their schemas
+    val inference = jobs.filter(
+      _.properties.getProperty("spark.sql.execution.id") == null)
+    assert(inference.size == 2,
+      inference.map(_.stageInfos.map(_.name).mkString(",")).mkString("; "))
+    // measured at 25: 2 inference, then the watermark probes, writes,
+    // imputeNulls stats passes and their AQE stages. One job per table
+    // more (the old count pass) or an inference job per re-read layer
+    // breaks the budget
+    assert(jobs.size <= 25, s"${jobs.size} jobs")
+  }
 }

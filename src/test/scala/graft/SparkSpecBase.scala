@@ -18,6 +18,27 @@ trait SparkSpecBase extends AnyFunSuite {
   def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
+  /** The Spark jobs `body` starts, as their job-start events. The
+    * listener bus is drained on both sides, so the window holds exactly
+    * the jobs submitted while `body` ran.
+    */
+  def jobStarts(body: => Unit)
+      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { seen.add(e): Unit }
+    }
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    seen.toArray(Array.empty[SparkListenerJobStart]).toSeq
+  }
+
   /** Registered scratch dir, swept when the forked test JVM exits. */
   def tmpDir(prefix: String): String = TestTmp.dir(prefix)
 }

@@ -216,6 +216,88 @@ class TransformsSpec extends SparkSpecBase {
       s"repeat Tables.table fired ${jobs.get} job(s) \u2014 did table() " +
         "lose the per-JVM parquet-schema cache?")
   }
+
+  test("write-time seeding: Tables.write then Tables.table runs ZERO jobs") {
+    import graft.engine.Tables
+    import spark.implicits._
+    val dir = tmpDir("seed")
+    Tables.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, "t")
+    val jobs = jobStarts {
+      assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq ==
+        Seq("id", "v"))
+    }
+    assert(jobs.isEmpty, s"the read after a write fired ${jobs.size} " +
+      "job(s) \u2014 did Tables.write stop seeding the schema cache?")
+  }
+
+  test("write-time seeding: the seeded schema is the one a fresh read infers") {
+    import graft.engine.Tables
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir("seed")
+    // non-nullable top-level fields, array elements and map values: the
+    // seed must be the writer's schema made nullable all the way down
+    val wide = spark.range(3).select(
+      col("id"),
+      col("id").cast("int").as("i"),
+      lit(1.5f).as("f"),
+      lit(true).as("b"),
+      lit("s").as("str"),
+      lit(Array[Byte](1, 2)).as("bin"),
+      col("id").cast("decimal(10,2)").as("dec"),
+      col("id").cast("decimal(38,18)").as("dec38"),
+      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
+        .as("d"),
+      timestamp_seconds(col("id")).as("ts"),
+      timestamp_seconds(col("id")).cast("timestamp_ntz").as("ts_ntz"),
+      array(col("id"), lit(7L)).as("arr"),
+      struct(col("id").as("k"),
+        array(struct(lit("x").as("y"), col("id").cast("decimal(5,1)").as("z")))
+          .as("nested")).as("st"),
+      map(lit("k"), col("id")).as("m"),
+      map(col("id"), array(lit(1))).as("m2"))
+    assert(!wide.schema("id").nullable, "the probe must carry a non-nullable field")
+    Tables.write(wide, dir, "wide")
+    val inferred = spark.read.parquet(s"$dir/wide.parquet").schema
+    assert(Tables.table(spark, dir, "wide").schema == inferred)
+    // the events.ts epoch-nanos contract column, written as a timestamp
+    // (what a fresh source holds) and as the normalized long nanos (what
+    // Extraction writes to raw): the contract view matches either way
+    val events = spark.range(3).select(col("id").as("event_id"),
+      timestamp_seconds(col("id")).as("ts"))
+    Tables.write(events, dir, "events")
+    val contract = Tables.normalizeTimestamps(
+      spark.read.parquet(s"$dir/events.parquet"), Seq("ts")).schema
+    assert(Tables.table(spark, dir, "events").schema == contract)
+    assert(contract("ts").dataType == LongType)
+    val raw = tmpDir("seed")
+    Tables.write(Tables.table(spark, dir, "events"), raw, "events")
+    assert(Tables.table(spark, raw, "events").schema ==
+      spark.read.parquet(s"$raw/events.parquet").schema)
+  }
+
+  test("write-time seeding: an append never serves a schema older than the files") {
+    import graft.engine.Tables
+    import spark.implicits._
+    val dir = tmpDir("seed")
+    def fresh = spark.read.parquet(s"$dir/t.parquet").schema
+    Tables.write(Seq(1L).toDF("id"), dir, "t")
+    // same schema appended: seeded under the new listing, rows visible
+    Tables.write(Seq(2L).toDF("id"), dir, "t", mode = "append")
+    assert(jobStarts(Tables.table(spark, dir, "t").schema).isEmpty)
+    assert(Tables.table(spark, dir, "t").schema == fresh)
+    assert(Tables.table(spark, dir, "t").count() == 2)
+    // another writer replaces the table with a wider schema; an append
+    // onto THAT must not seed the schema pinned before the rewrite
+    Seq((3L, "x")).toDF("id", "note").write.mode("overwrite")
+      .parquet(s"$dir/t.parquet")
+    Tables.write(Seq((4L, "y")).toDF("id", "note"), dir, "t", mode = "append")
+    assert(Tables.table(spark, dir, "t").schema == fresh)
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "note"))
+    // an append whose schema differs from the files' is left to inference
+    Tables.write(Seq(5L).toDF("id"), dir, "t", mode = "append")
+    assert(Tables.table(spark, dir, "t").schema == fresh)
+    assert(Tables.table(spark, dir, "t").count() == 3)
+  }
 }
 
 class DateParseSpec extends org.scalatest.funsuite.AnyFunSuite {
