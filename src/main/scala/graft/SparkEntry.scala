@@ -2024,10 +2024,10 @@ object SparkEntry {
       val path = graft.northstar.Artifacts.pathFor("ivfhieridx",
         s"${corpusKey(dir, "embeddings")}-c8-sp3")
       graft.northstar.Artifacts.ensureTrained(path) { tmp =>
-        graft.northstar.Artifacts.saveIvfIndexHier(emb, tmp, hq)
+        graft.northstar.Artifacts.saveIvfIndex(emb, tmp, hq)
       }
       val (index, splits) = graft.northstar.Artifacts
-        .loadIvfIndexHier(s, path, hq)
+        .loadIvfIndex(s, path, hq)
       graft.northstar.Ivf.ivfServeTopKHier(
         emb.filter(col("vec_id") < 5), index, hq, splits,
         k = 10, nProbe = 8)
@@ -2057,10 +2057,10 @@ object SparkEntry {
       val path = graft.northstar.Artifacts.pathFor("ivfstoredidx",
         s"${corpusKey(dir, "embeddings")}-c8-full")
       graft.northstar.Artifacts.ensureTrained(path) { tmp =>
-        graft.northstar.Artifacts.saveIvfIndexStored(emb, tmp, sq)
+        graft.northstar.Artifacts.saveIvfIndex(emb, tmp, sq)
       }
       val (index, splits) = graft.northstar.Artifacts
-        .loadIvfIndexStored(s, path, sq)
+        .loadIvfIndex(s, path, sq)
       graft.northstar.Ivf.ivfServeTopKStored(
         emb.filter(col("vec_id") < 5), index, sq, splits,
         k = 10, nProbe = 8)

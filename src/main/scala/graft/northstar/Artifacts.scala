@@ -677,69 +677,180 @@ object Artifacts {
     loadPqCodebooks(corpus.sparkSession, path, m, ksubR, seed)
   }
 
+  // -------------------------------------------------------- cell indexes
+  //
+  // Six cell-index families share ONE stored layout and ONE set of
+  // protocols (publish, load, append, remove): the raw-vector IVF index
+  // and the codes-only IVF-PQ index, each under a literal, hierarchical
+  // or stored coarse quantizer. The quantizer's TYPE picks the family:
+  // every verb below is one def over [[Ivf.CoarseQuantizer]], and
+  // [[cellFamily]] turns the quantizer into the three facts the families
+  // differ in — the `_params` pins, the cell assignment and the
+  // stored-row projection.
+
+  /** One cell-index family as the protocol bodies see it, built once per
+    * verb call by [[cellFamily]]:
+    *   - `params`: the `_params` pins — the quantizer's digests, maxCell,
+    *     vecCol, and the codebook digest for the codes layout;
+    *   - `assign`: (input rows, idCol) → (neighbor_id, cv, cell) through
+    *     the literal [[Ivf.cellOf]] kernel, the [[Ivf.assignCellsJoin]]
+    *     broadcast join or the [[Ivf.assignCellsStored]] relation join.
+    *     Plan construction only — the mutation verbs execute it inside
+    *     their marker mutex;
+    *   - `project`: (neighbor_id, cv, cell) + split map → the stored row
+    *     shape (raw vectors or PQ codes, plus the subcell). ONE
+    *     definition shared by save, append and remove, so an appended
+    *     or re-split row can never differ in shape or subcell derivation
+    *     from a freshly built one — the append==rebuild identity's
+    *     precondition.
+    * `label` names the family in refusals ("hierarchical IVF-PQ");
+    * `verb` is the layout's verb stem, for the remedy messages.
+    */
+  private final case class CellFamily(
+      label: String, verb: String, params: Map[String, String],
+      maxCell: Int,
+      assign: (DataFrame, String) => DataFrame,
+      project: (DataFrame, Map[Int, Int]) => DataFrame) {
+    def what: String = s"$label index"
+  }
+
+  /** The [[CellFamily]] of `quantizer`, with the codes layout when
+    * `codebooks` is given. The literal and hierarchical families pin
+    * centroid digests (driver-side, no Spark job); the hierarchical one
+    * also pins the supercell set and superProbe — corpus assignment and
+    * query probing must agree on both, or the (cell, subcell) probe keys
+    * silently stop matching. The stored family pins the cells-relation
+    * content digest ([[storedCellsDigest]], one nCells-row aggregate)
+    * plus its top level, and derives subcell thresholds from the SPLIT
+    * cells' centroids only ([[Ivf.storedSplitCentroids]] — the full
+    * centroid set never reaches the driver).
+    */
+  private def cellFamily(spark: SparkSession, quantizer: Ivf.CoarseQuantizer,
+                         codebooks: Option[Array[Array[Array[Float]]]],
+                         vecCol: String, maxCell: Int): CellFamily = {
+    def keyed(df: DataFrame, idCol: String): DataFrame =
+      df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+        col("cell"))
+    val (kind, pins, assign, subcell) = quantizer match {
+      case Ivf.LiteralQuantizer(c) =>
+        ("", Map("centroids" -> centroidDigest(c)),
+          (df: DataFrame, idCol: String) =>
+            df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+              Ivf.cellOf(col(vecCol), c).as("cell")),
+          (splits: Map[Int, Int]) =>
+            Ivf.subcellOf(col("cv"), col("cell"), c, splits))
+      case hq: Ivf.HierarchicalQuantizer =>
+        ("hierarchical ", Map("family" -> "hier",
+          "centroids" -> centroidDigest(hq.centroids),
+          "supers" -> centroidDigest(hq.superCentroids),
+          "superProbe" -> hq.superProbe.toString),
+          (df: DataFrame, idCol: String) =>
+            keyed(Ivf.assignCellsJoin(df, hq, idCol, vecCol), idCol),
+          (splits: Map[Int, Int]) =>
+            Ivf.subcellOf(col("cv"), col("cell"), hq.centroids, splits))
+      case sq: Ivf.StoredQuantizer =>
+        ("stored-cells ", Map("family" -> "stored",
+          "cells" -> storedCellsDigest(spark, sq),
+          "ncells" -> sq.nCells.toString,
+          "dim" -> sq.dim.toString,
+          "top" -> (sq.superQ match {
+            case Ivf.LiteralQuantizer(c) => "lit:" + centroidDigest(c)
+            case hq: Ivf.HierarchicalQuantizer =>
+              s"hier:${centroidDigest(hq.centroids)}:" +
+                s"${centroidDigest(hq.superCentroids)}:${hq.superProbe}"
+            case _: Ivf.StoredQuantizer => "unreachable"
+          }),
+          "superProbe" -> sq.superProbe.toString),
+          (df: DataFrame, idCol: String) =>
+            keyed(Ivf.assignCellsStored(df, sq, idCol, vecCol), idCol),
+          (splits: Map[Int, Int]) => {
+            val splitCents = Ivf.storedSplitCentroids(sq, spark, splits)
+            Ivf.subcellOfSparse(col("cv"), col("cell"), splitCents(_),
+              splits)
+          })
+    }
+    val project: (DataFrame, Map[Int, Int]) => DataFrame = codebooks match {
+      case None => (assigned, splits) =>
+        assigned.withColumn("subcell", subcell(splits))
+      // codes layout: the raw vector is dropped after encoding
+      case Some(cb) => (assigned, splits) =>
+        assigned.select(col("neighbor_id"), col("cell"),
+          subcell(splits).as("subcell"), Pq.encode(col("cv"), cb).as("codes"))
+    }
+    val (layout, verb) =
+      if (codebooks.isEmpty) ("IVF", "IvfIndex") else ("IVF-PQ", "IvfPqIndex")
+    CellFamily(kind + layout, verb,
+      pins ++ codebooks.map(cb => "codebooks" -> centroidDigest(cb.flatten)) ++
+        Map("maxCell" -> maxCell.toString, "vecCol" -> vecCol),
+      maxCell, assign, project)
+  }
+
+  /** The raw-vector layout's `resolveVectors`: stored rows already carry
+    * (neighbor_id, cv, cell).
+    */
+  private val rawVectors: DataFrame => DataFrame =
+    _.select("neighbor_id", "cv", "cell")
+
+  /** Order-independent content digest of a stored quantizer's cell
+    * relation — the `_params` pin for the STORED family, where the
+    * centroids never assemble on the driver so [[centroidDigest]]
+    * cannot apply: one nCells-row aggregate (BIT_XOR of per-row
+    * xxhash64 over the canonical (cell, sup, ccv) row — commutative ⇒
+    * partition-order independent, and overflow-free where an ANSI sum
+    * of full-range longs is not), collected as a single long. Row
+    * cancellation needs two IDENTICAL rows, which the unique cell id
+    * precludes; any changed, added, or dropped centroid flips the
+    * digest with xxhash64 probability.
+    */
+  private def storedCellsDigest(spark: SparkSession,
+                                sq: Ivf.StoredQuantizer): String = {
+    val r = sq.cellsRelation(spark)
+      .select(xxhash64(col("cell"), col("sup"), col("ccv")).as("h"))
+      .agg(expr("bit_xor(h)").as("h"))
+      .collect()(0)
+    if (r.isNullAt(0)) "empty" else java.lang.Long.toHexString(r.getLong(0))
+  }
+
   /** Persist the cell-partitioned IVF SERVING index: the corpus assigned
-    * once under `centroids`, written hive-partitioned by cell — so a
-    * probe ([[Ivf.ivfServeTopK]]) prunes unprobed cell directories at
-    * planning time instead of re-deriving assignments in-plan. Two
-    * parts under `path`: `index` (neighbor_id, cv, subcell;
-    * partitioned by cell) and `splits` (the oversized-cell split-bits
+    * once under `quantizer`, written hive-partitioned by cell — so a
+    * probe ([[Ivf.ivfServeTopK]], or the `…Hier`/`…Stored` serve kernel
+    * of the quantizer's family) prunes unprobed cell directories at
+    * planning time instead of re-deriving assignments in-plan. Parts
+    * under `path`: `index` (neighbor_id, cv, subcell; partitioned by
+    * cell) and the `_splits` sidecar (the oversized-cell split-bits
     * census the assignment was computed with — the query side must use
     * the SAME map or (cell, subcell) keys stop matching). The `_params`
-    * sidecar pins the centroid digest and maxCell so a serve against a
-    * stale or foreign index fails loudly.
+    * sidecar pins the quantizer ([[cellFamily]]), maxCell and vecCol so
+    * a serve against a stale or foreign index fails loudly.
+    *
+    * The quantizer's type picks the family: a [[Ivf.LiteralQuantizer]]
+    * (or a bare centroid array) assigns through the centroid plan
+    * literal; a [[Ivf.HierarchicalQuantizer]] (past `Ivf.MaxAutoCells`)
+    * through the broadcast-relation join; a [[Ivf.StoredQuantizer]]
+    * through the stored cells relation, its census frame-only so
+    * nothing the save does is cell-proportional on the driver.
     */
   def saveIvfIndex(corpus: DataFrame, path: String,
-                   centroids: Array[Array[Float]],
-                   idCol: String, vecCol: String, maxCell: Int): Unit =
-    writeCellIndex(corpus, path, centroids, idCol, vecCol, maxCell,
-      params = ivfParams(centroids, vecCol, maxCell))(
-      ivfProject(centroids))
+                   quantizer: Ivf.CoarseQuantizer,
+                   idCol: String = "vec_id", vecCol: String = "embedding",
+                   maxCell: Int = 100000): Unit = {
+    val fam = cellFamily(corpus.sparkSession, quantizer, None, vecCol,
+      maxCell)
+    writeCellIndexAssigned(path, fam,
+      Dedup.trackedPersist(fam.assign(corpus, idCol)))
+  }
 
-  /** The stored-row projection of the raw-vector IVF index — ONE
-    * definition shared by [[saveIvfIndex]] and [[appendIvfIndex]] so an
-    * appended row can never differ in shape or subcell derivation from
-    * a freshly built one. Input: (neighbor_id, cv, cell).
-    */
-  private def ivfProject(centroids: Array[Array[Float]])(
-      assigned: DataFrame, splits: Map[Int, Int]): DataFrame =
-    assigned.withColumn("subcell",
-      Ivf.subcellOf(col("cv"), col("cell"), centroids, splits))
-
-  private def ivfParams(centroids: Array[Array[Float]], vecCol: String,
-                        maxCell: Int): Map[String, String] =
-    Map("centroids" -> centroidDigest(centroids),
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol)
-
-  /** Shared assign-once → split-census → hive-partitioned write →
-    * splits part → `_params` sidecar → top-level `_SUCCESS` sequence
-    * behind [[saveIvfIndex]] and [[saveIvfPqIndex]] — the publish
-    * protocol exists ONCE so a change to it (marker placement, splits
-    * encoding) cannot drift between the two index families. `project`
-    * maps the persisted (neighbor_id, cv, cell) assignment + split-bits
-    * census to the stored row shape (raw vectors for IVF, codes for
-    * IVF-PQ).
-    */
-  private def writeCellIndex(corpus: DataFrame, path: String,
-                             centroids: Array[Array[Float]],
-                             idCol: String, vecCol: String, maxCell: Int,
-                             params: Map[String, String])(
-      project: (DataFrame, Map[Int, Int]) => DataFrame): Unit =
-    writeCellIndexAssigned(path, params,
-      Dedup.trackedPersist(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          Ivf.cellOf(col(vecCol), centroids).as("cell"))),
-      maxCell)(project)
-
-  /** [[writeCellIndex]] after the assignment step — the publish protocol
-    * body shared with the hierarchical family, whose assignment is the
-    * broadcast join rather than the literal kernel. `assigned` must
-    * carry (neighbor_id, cv, cell) and be safe to evaluate twice
+  /** The publish protocol behind [[saveIvfIndex]] and [[saveIvfPqIndex]]
+    * for every family: split census → hive-partitioned write → `_splits`
+    * → `_params` → `_schemas`/`drift_total` → top-level `_SUCCESS`. It
+    * exists ONCE, so a change to it (marker placement, splits encoding)
+    * cannot drift between families. `assigned` must carry (neighbor_id,
+    * cv, cell) — the family's assignment — and be safe to evaluate twice
     * (persisted).
     */
-  private def writeCellIndexAssigned(path: String,
-                                     params: Map[String, String],
-                                     assigned: DataFrame, maxCell: Int)(
-      project: (DataFrame, Map[Int, Int]) => DataFrame): Unit = {
+  private def writeCellIndexAssigned(path: String, fam: CellFamily,
+                                     assigned: DataFrame): Unit = {
+    val maxCell = fam.maxCell
     // overwriting a previously-published index: drop its marker FIRST,
     // so a crash mid-overwrite leaves a refusable wreck, not a stale
     // marker over half-new data (the ensureTrained path writes to a tmp
@@ -792,14 +903,14 @@ object Artifacts {
       cm("oversized").asInstanceOf[scala.collection.Seq[
         org.apache.spark.sql.Row]]
         .map(r => r.getInt(0) -> r.getLong(1)).toMap, maxCell)
-    val projected = project(assigned, splits)
+    val projected = fam.project(assigned, splits)
     clusterByCell(projected)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(new java.io.File(path, "index").toString)
     // split map as a local sidecar (r21, the readSplits note): one
     // Spark write job fewer per publish, one collect fewer per load
     writeSplitsFile(path, splits)
-    writeParams(path, params)
+    writeParams(path, fam.params)
     // pin the reader-side schemas and the build total so serves/appends
     // never pay inference or a base-total aggregation (r21 sidecars;
     // append/remove rewrites preserve both, so the pins stay valid
@@ -835,29 +946,43 @@ object Artifacts {
     df.repartitionByRange(
       df.sparkSession.sparkContext.defaultParallelism, col("cell"))
 
-  /** Shared serve-side tail: pin check, index read, splits read.
-    * `knownSplits` lets a caller that just ran the mutation protocol
-    * (whose return value IS the published split map) skip the
+  /** Shared serve-side tail: marker and pin checks, index read, splits
+    * read. `knownSplits` lets a caller that just ran the mutation
+    * protocol (whose return value IS the published split map) skip the
     * splits-sidecar re-read — one collect job fewer per serve
     * (optimization r21); the marker and `_params` refusals still run.
     */
   private def readCellIndex(spark: SparkSession, path: String,
-                            expected: Map[String, String],
-                            what: String,
+                            fam: CellFamily,
                             knownSplits: Option[Map[Int, Int]] = None)
       : (DataFrame, Map[Int, Int]) = {
     // a torn append deletes the marker before its first mutation and
     // `_params` stays valid throughout, so the params check alone would
     // serve a half-mutated index; every read path refuses instead
     require(new java.io.File(path, "_SUCCESS").exists(),
-      s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
-        "torn by a crashed append) — rebuild it before serving")
-    checkParams(path, expected, what)
+      s"${fam.what} at $path has no _SUCCESS marker (missing, mid-build, " +
+        "or torn by a crashed append) — rebuild it before serving")
+    checkCellParams(path, fam)
     val index = readPart(spark, path, "index")
     val splits =
       knownSplits.getOrElse(readSplits(spark, new java.io.File(path)))
     (index, splits)
   }
+
+  /** Load a [[saveIvfIndex]]-layout index from an EXPLICIT path (the
+    * pipeline-managed counterpart of [[ivfIndexFor]]'s content-keyed
+    * store): pin-checks `_params` against the caller's quantizer — whose
+    * type picks the family — and returns the index frame + the
+    * split-bits map the family's serve kernel needs.
+    */
+  def loadIvfIndex(spark: SparkSession, path: String,
+                   quantizer: Ivf.CoarseQuantizer,
+                   vecCol: String = "embedding",
+                   maxCell: Int = 100000,
+                   knownSplits: Option[Map[Int, Int]] = None)
+      : (DataFrame, Map[Int, Int]) =
+    readCellIndex(spark, path,
+      cellFamily(spark, quantizer, None, vecCol, maxCell), knownSplits)
 
   /** Train-once / serve-many IVF index for a corpus identified by
     * `cacheKey`: assign + write partitioned on first request, serve by
@@ -875,7 +1000,6 @@ object Artifacts {
                   vecCol: String = "embedding", seed: Long = 42L,
                   maxCell: Int = 100000, idCol: String = "vec_id")
       : (DataFrame, Map[Int, Int], Array[Array[Float]]) = {
-    val spark = corpus.sparkSession
     val nCellsR =
       Ivf.resolveNCells(nCells, corpusRowsFor(corpus, cacheKey))
     val centroids = ivfCentroidsFor(corpus, cacheKey, nCellsR, vecCol,
@@ -885,303 +1009,44 @@ object Artifacts {
     ensureTrained(path) { tmp =>
       saveIvfIndex(corpus, tmp, centroids, idCol, vecCol, maxCell)
     }
-    val (index, splits) = readCellIndex(spark, path, Map(
-      "centroids" -> centroidDigest(centroids),
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol), "IVF index")
+    val (index, splits) =
+      loadIvfIndex(corpus.sparkSession, path, centroids, vecCol, maxCell)
     (index, splits, centroids)
   }
 
-  private def ivfHierParams(hq: Ivf.HierarchicalQuantizer, vecCol: String,
-                            maxCell: Int): Map[String, String] =
-    Map("family" -> "hier",
-      "centroids" -> centroidDigest(hq.centroids),
-      "supers" -> centroidDigest(hq.superCentroids),
-      "superProbe" -> hq.superProbe.toString,
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol)
-
-  /** [[saveIvfIndex]] for the HIERARCHICAL quantizer family (past
-    * `Ivf.MaxAutoCells`): same stored layout and publish protocol, but
-    * assignment runs through the broadcast-relation join
-    * ([[Ivf.assignCellsJoin]]) instead of the centroid plan literal.
-    * The `_params` sidecar additionally pins the supercell set and
-    * superProbe — corpus assignment and query probing must agree on
-    * both, or the (cell, subcell) probe keys silently stop matching.
-    */
-  def saveIvfIndexHier(corpus: DataFrame, path: String,
-                       hq: Ivf.HierarchicalQuantizer,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       maxCell: Int = 100000): Unit =
-    writeCellIndexAssigned(path, ivfHierParams(hq, vecCol, maxCell),
-      Dedup.trackedPersist(
-        Ivf.assignCellsJoin(corpus, hq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))),
-      maxCell)(ivfProject(hq.centroids))
-
-  /** [[loadIvfIndex]] for the hierarchical family — feeds
-    * [[Ivf.ivfServeTopKHier]].
-    */
-  def loadIvfIndexHier(spark: SparkSession, path: String,
-                       hq: Ivf.HierarchicalQuantizer,
-                       vecCol: String = "embedding",
-                       maxCell: Int = 100000): (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path, ivfHierParams(hq, vecCol, maxCell),
-      "hierarchical IVF index")
-
-  /** [[appendIvfIndex]] for the hierarchical family: the same mutation
-    * protocol (marker mutex, union census, per-cell re-split, drift
-    * telemetry) with incoming assignment through the broadcast join —
-    * append==rebuild holds exactly like the literal family
-    * (ArtifactsSpec pins it).
-    */
-  def appendIvfIndexHier(incoming: DataFrame, path: String,
-                         hq: Ivf.HierarchicalQuantizer,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path, hq.centroids, idCol, vecCol, maxCell,
-      ivfHierParams(hq, vecCol, maxCell), "hierarchical IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"),
-      assignIncoming = Some(df =>
-        Ivf.assignCellsJoin(df, hq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))))(
-      ivfProject(hq.centroids))
-
-  /** [[removeFromIvfIndex]] for the hierarchical family — removal never
-    * reassigns cells, so only the params pin and the subcell projection
-    * differ from the literal form.
-    */
-  def removeFromIvfIndexHier(removedIds: DataFrame, path: String,
-                             hq: Ivf.HierarchicalQuantizer,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfHierParams(hq, vecCol, maxCell), "hierarchical IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"))(
-      ivfProject(hq.centroids))
-
-  /** Order-independent content digest of a stored quantizer's cell
-    * relation — the `_params` pin for the STORED family, where the
-    * centroids never assemble on the driver so [[centroidDigest]]
-    * cannot apply: one nCells-row aggregate (BIT_XOR of per-row
-    * xxhash64 over the canonical (cell, sup, ccv) row — commutative ⇒
-    * partition-order independent, and overflow-free where an ANSI sum
-    * of full-range longs is not), collected as a single long. Row
-    * cancellation needs two IDENTICAL rows, which the unique cell id
-    * precludes; any changed, added, or dropped centroid flips the
-    * digest with xxhash64 probability.
-    */
-  private def storedCellsDigest(spark: SparkSession,
-                                sq: Ivf.StoredQuantizer): String = {
-    val r = sq.cellsRelation(spark)
-      .select(xxhash64(col("cell"), col("sup"), col("ccv")).as("h"))
-      .agg(expr("bit_xor(h)").as("h"))
-      .collect()(0)
-    if (r.isNullAt(0)) "empty" else java.lang.Long.toHexString(r.getLong(0))
-  }
-
-  private def ivfStoredParams(spark: SparkSession,
-                              sq: Ivf.StoredQuantizer, vecCol: String,
-                              maxCell: Int): Map[String, String] =
-    Map("family" -> "stored",
-      "cells" -> storedCellsDigest(spark, sq),
-      "ncells" -> sq.nCells.toString,
-      "dim" -> sq.dim.toString,
-      "top" -> (sq.superQ match {
-        case Ivf.LiteralQuantizer(c) => "lit:" + centroidDigest(c)
-        case hq: Ivf.HierarchicalQuantizer =>
-          s"hier:${centroidDigest(hq.centroids)}:" +
-            s"${centroidDigest(hq.superCentroids)}:${hq.superProbe}"
-        case _: Ivf.StoredQuantizer => "unreachable"
-      }),
-      "superProbe" -> sq.superProbe.toString,
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol)
-
-  /** [[saveIvfIndex]] for the STORED (three-level) family —
-    * continuation (b): same stored layout and publish protocol, with
-    * assignment through [[Ivf.assignCellsStored]] and the subcell
-    * projection derived from the SPLIT cells' centroids only (the
-    * bounded [[Ivf.storedSplitCentroids]] collect — the full centroid
-    * set never reaches the driver). The `_params` sidecar pins the
-    * cells-relation content digest plus the top level, so a serve under
-    * a different quantizer (or a silently rewritten cells relation)
-    * refuses loudly. Since r18 (VERDICT r17 task 4) the publish
-    * protocol's census is frame-only: the split policy collects ≤1
-    * refusal row plus the oversized cells, and the drift baseline
-    * persists as a parquet relation — the former one-row-per-occupied-
-    * cell collect (~200 MB at the 16.8M-cell saturation point) is
-    * gone, so nothing this family's save does is cell-proportional on
-    * the driver.
-    */
-  def saveIvfIndexStored(corpus: DataFrame, path: String,
-                         sq: Ivf.StoredQuantizer,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         maxCell: Int = 100000): Unit = {
-    val spark = corpus.sparkSession
-    writeCellIndexAssigned(path,
-      ivfStoredParams(spark, sq, vecCol, maxCell),
-      Dedup.trackedPersist(
-        Ivf.assignCellsStored(corpus, sq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))),
-      maxCell)(ivfProjectStored(sq))
-  }
-
-  /** The stored family's row projection — [[ivfProject]] with the
-    * subcell thresholds derived from the SPLIT cells' centroids only
-    * (collected individually from the relation; the full centroid set
-    * never reaches the driver). ONE definition shared by save, append,
-    * and remove, so an appended row cannot differ in shape or subcell
-    * derivation from a freshly built one — the append==rebuild
-    * identity's precondition.
-    */
-  private def ivfProjectStored(sq: Ivf.StoredQuantizer)(
-      assigned: DataFrame, splits: Map[Int, Int]): DataFrame = {
-    val splitCents =
-      Ivf.storedSplitCentroids(sq, assigned.sparkSession, splits)
-    assigned.withColumn("subcell",
-      Ivf.subcellOfSparse(col("cv"), col("cell"), splitCents(_), splits))
-  }
-
-  /** [[loadIvfIndex]] for the stored family — feeds
-    * [[Ivf.ivfServeTopKStored]].
-    */
-  def loadIvfIndexStored(spark: SparkSession, path: String,
-                         sq: Ivf.StoredQuantizer,
-                         vecCol: String = "embedding",
-                         maxCell: Int = 100000): (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path, ivfStoredParams(spark, sq, vecCol, maxCell),
-      "stored-cells IVF index")
-
-  /** [[appendIvfIndex]] for the stored family: the same mutation
-    * protocol (marker mutex, union census, per-cell re-split, drift
-    * telemetry) with incoming assignment through the stored relation
-    * join — append==rebuild holds exactly like the other two families
-    * (ArtifactsSpec pins it). Since r18 the union census and drift
-    * statistic are frame-computed (oversized-only + scalar collects),
-    * so neither the census nor the centroid payload ever materializes
-    * on the driver.
-    */
-  def appendIvfIndexStored(incoming: DataFrame, path: String,
-                           sq: Ivf.StoredQuantizer,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path,
-      // the centroid-array param only feeds the literal family's
-      // DEFAULT incoming assignment; this family always overrides it
-      Array.empty[Array[Float]],
-      idCol, vecCol, maxCell,
-      ivfStoredParams(incoming.sparkSession, sq, vecCol, maxCell),
-      "stored-cells IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"),
-      assignIncoming = Some(df =>
-        Ivf.assignCellsStored(df, sq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))))(
-      ivfProjectStored(sq))
-
-  /** [[removeFromIvfIndex]] for the stored family — removal never
-    * reassigns cells, so only the params pin and the subcell projection
-    * differ from the other families' forms.
-    */
-  def removeFromIvfIndexStored(removedIds: DataFrame, path: String,
-                               sq: Ivf.StoredQuantizer,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfStoredParams(removedIds.sparkSession, sq, vecCol, maxCell),
-      "stored-cells IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"))(
-      ivfProjectStored(sq))
-
-  /** [[retrainIvfIndex]] for the STORED family: refits the three-level
-    * quantizer on the index's current corpus via the fully distributed
-    * [[Ivf.fitStored]] and rebuilds under the same swap protocol. The
-    * refit cells relation is written INSIDE the replacement artifact
-    * (`<path>/cells` after the swap) — for this family the quantizer's
-    * bulk is data, not driver state, so it travels with the index; the
-    * returned handle points at the post-swap location. `nCells =
-    * AutoCells` derives the UNBOUNDED √N count from the current corpus
-    * (this family has no cell-count ceiling to clamp to). The raw-
-    * vector layout is shared with the literal/hier families, so
-    * [[retrainIvfIndex]] can also retrain a stored-family root DOWN
-    * into those families when asked for a small nCells — this op is
-    * the one that keeps the cells stored.
-    */
-  def retrainIvfIndexStored(spark: SparkSession, path: String,
-                            nCells: Int = Ivf.AutoCells,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding",
-                            maxCell: Int = 100000, seed: Long = 42L)
-      : (Ivf.StoredQuantizer, Map[Int, Int]) = {
-    val (fitted, splits) = retrainCellIndex(spark, path,
-      "stored-cells IVF index retrain",
-      layoutCol = "cv",
-      layoutRemedy = "the stored index is codes-only (IVF-PQ) and its " +
-        "raw vectors cannot be recovered from codes; use " +
-        "retrainIvfPqIndexStored with the corpus table",
-      stored => stored.select(col("neighbor_id").as(idCol),
-        col("cv").as(vecCol))) { (corpus, tmp) =>
-      // ONE corpus count feeds both the auto cell count and the fit's
-      // knownRows (code-review r17: the fit re-counted the checkpointed
-      // corpus inside the minutes-long mutex window)
-      val rows = corpus.count()
-      val n = if (nCells == Ivf.AutoCells)
-        Ivf.autoNCellsUnbounded(rows) else nCells
-      val sq = Ivf.fitStored(corpus, n,
-        new java.io.File(tmp, "cells").toString, idCol, vecCol, seed,
-        knownRows = Some(rows))
-      saveIvfIndexStored(corpus, tmp, sq, idCol, vecCol, maxCell)
-      sq
-    }
-    // the scratch was renamed onto the live root — repoint the handle
-    (fitted.copy(cellsPath =
-      new java.io.File(path, "cells").toString), splits)
-  }
-
   /** Persist the cell-partitioned, CODES-ONLY IVF-PQ serving index: the
-    * corpus assigned once under `centroids`, PQ-encoded under
+    * corpus assigned once under `quantizer`, PQ-encoded under
     * `codebooks`, written hive-partitioned by cell carrying
     * (neighbor_id, codes, subcell) — the raw vectors stay in the corpus
     * table; the index a probe reads is ~dim/m× smaller on disk. Same
-    * layout contract as [[saveIvfIndex]] (`index` + `splits` parts,
-    * `_params` sidecar pinning centroid digest / codebook digest /
-    * maxCell, top-level `_SUCCESS`).
+    * layout contract and family dispatch as [[saveIvfIndex]]; `_params`
+    * additionally pins the codebook digest. The hierarchical family is
+    * the 100 TB serving artifact, the stored family the exabyte one.
     */
   def saveIvfPqIndex(corpus: DataFrame, path: String,
-                     centroids: Array[Array[Float]],
+                     quantizer: Ivf.CoarseQuantizer,
                      codebooks: Array[Array[Array[Float]]],
-                     idCol: String, vecCol: String, maxCell: Int): Unit =
-    writeCellIndex(corpus, path, centroids, idCol, vecCol, maxCell,
-      params = ivfPqParams(centroids, codebooks, vecCol, maxCell))(
-      ivfPqProject(centroids, codebooks))
+                     idCol: String = "vec_id", vecCol: String = "embedding",
+                     maxCell: Int = 100000): Unit = {
+    val fam = cellFamily(corpus.sparkSession, quantizer, Some(codebooks),
+      vecCol, maxCell)
+    writeCellIndexAssigned(path, fam,
+      Dedup.trackedPersist(fam.assign(corpus, idCol)))
+  }
 
-  /** The stored-row projection of the codes-only IVF-PQ index — shared
-    * by [[saveIvfPqIndex]] and [[appendIvfPqIndex]] (the
-    * [[ivfProject]] discipline). Input: (neighbor_id, cv, cell); the
-    * raw vector is dropped after encoding.
+  /** [[loadIvfIndex]] for the codes-only IVF-PQ layout — feeds
+    * [[Pq.ivfPqServeTopK]] or its family's `…Hier`/`…Stored` kernel.
     */
-  private def ivfPqProject(centroids: Array[Array[Float]],
-                           codebooks: Array[Array[Array[Float]]])(
-      assigned: DataFrame, splits: Map[Int, Int]): DataFrame =
-    assigned.select(col("neighbor_id"), col("cell"),
-      Ivf.subcellOf(col("cv"), col("cell"), centroids, splits)
-        .as("subcell"),
-      Pq.encode(col("cv"), codebooks).as("codes"))
-
-  private def ivfPqParams(centroids: Array[Array[Float]],
-                          codebooks: Array[Array[Array[Float]]],
-                          vecCol: String,
-                          maxCell: Int): Map[String, String] =
-    Map("centroids" -> centroidDigest(centroids),
-      "codebooks" -> centroidDigest(codebooks.flatten),
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol)
+  def loadIvfPqIndex(spark: SparkSession, path: String,
+                     quantizer: Ivf.CoarseQuantizer,
+                     codebooks: Array[Array[Array[Float]]],
+                     vecCol: String = "embedding",
+                     maxCell: Int = 100000,
+                     knownSplits: Option[Map[Int, Int]] = None)
+      : (DataFrame, Map[Int, Int]) =
+    readCellIndex(spark, path,
+      cellFamily(spark, quantizer, Some(codebooks), vecCol, maxCell),
+      knownSplits)
 
   /** Train-once / serve-many IVF-PQ index for a corpus identified by
     * `cacheKey` (the [[ivfIndexFor]] contract): returns the codes-only
@@ -1199,7 +1064,6 @@ object Artifacts {
                     maxCell: Int = 100000, idCol: String = "vec_id")
       : (DataFrame, Map[Int, Int], Array[Array[Float]],
          Array[Array[Array[Float]]]) = {
-    val spark = corpus.sparkSession
     val ksubR =
       if (ksub == Pq.AutoKsub)
         Pq.autoKsub(corpusRowsFor(corpus, cacheKey))
@@ -1214,51 +1078,25 @@ object Artifacts {
       saveIvfPqIndex(corpus, tmp, centroids, codebooks, idCol, vecCol,
         maxCell)
     }
-    val (index, splits) = readCellIndex(spark, path, Map(
-      "centroids" -> centroidDigest(centroids),
-      "codebooks" -> centroidDigest(codebooks.flatten),
-      "maxCell" -> maxCell.toString, "vecCol" -> vecCol), "IVF-PQ index")
+    val (index, splits) = loadIvfPqIndex(corpus.sparkSession, path,
+      centroids, codebooks, vecCol, maxCell)
     (index, splits, centroids, codebooks)
   }
 
-  // ------------------------------------- explicit-path index load + append
-
-  /** Load a [[saveIvfIndex]]-layout index from an EXPLICIT path (the
-    * pipeline-managed counterpart of [[ivfIndexFor]]'s content-keyed
-    * store): pin-checks `_params` against the caller's quantizer and
-    * returns the index frame + the split-bits map the serve path needs.
-    */
-  def loadIvfIndex(spark: SparkSession, path: String,
-                   centroids: Array[Array[Float]],
-                   vecCol: String = "embedding",
-                   maxCell: Int = 100000,
-                   knownSplits: Option[Map[Int, Int]] = None)
-      : (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path, ivfParams(centroids, vecCol, maxCell),
-      "IVF index", knownSplits)
-
-  /** [[loadIvfIndex]] for the codes-only IVF-PQ layout. */
-  def loadIvfPqIndex(spark: SparkSession, path: String,
-                     centroids: Array[Array[Float]],
-                     codebooks: Array[Array[Array[Float]]],
-                     vecCol: String = "embedding",
-                     maxCell: Int = 100000,
-                     knownSplits: Option[Map[Int, Int]] = None)
-      : (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path,
-      ivfPqParams(centroids, codebooks, vecCol, maxCell), "IVF-PQ index",
-      knownSplits)
+  // ------------------------------------------------ cell-index mutation
 
   /** INCREMENTAL APPEND into a stored cell-partitioned IVF index — the
     * missing lifecycle piece between "build once" and "rebuild from
     * scratch" (VERDICT r12 task 1): a nightly ingest assigns its new
-    * vectors with the PINNED centroids (the `_params` check refuses a
-    * foreign index), appends them into the existing cell partitions,
-    * and re-splits any cell the append pushes over `maxCell` so the
+    * vectors with the PINNED quantizer (the `_params` check refuses a
+    * foreign index; the quantizer's type picks the family's
+    * assignment), appends them into the existing cell partitions, and
+    * re-splits any cell the append pushes over `maxCell` so the
     * mega-cell cap keeps holding as the corpus grows.
     *
     * Append-then-serve is HASH-IDENTICAL to a from-scratch rebuild on
-    * the union corpus under the same quantizers (ArtifactsSpec pins it):
+    * the union corpus under the same quantizers, in every family
+    * (ArtifactsSpec pins it):
     *   - the union census is derived by summing the index's own
     *     per-cell row counts with the incoming assignment's — the
     *     per-cell count sidecar the judge asked for is deliberately
@@ -1268,8 +1106,8 @@ object Artifacts {
     *   - the new split map comes from [[Ivf.splitBitsFromCounts]], the
     *     same pure function a rebuild applies to the same counts;
     *   - cells whose split bits changed are REWRITTEN through the
-    *     shared [[ivfProject]], so existing rows get their subcells
-    *     recomputed exactly as a rebuild would compute them.
+    *     family's shared projection, so existing rows get their
+    *     subcells recomputed exactly as a rebuild would compute them.
     *
     * Crash safety (torn-append recovery, ArtifactsSpec): the top-level
     * `_SUCCESS` marker is deleted BEFORE the first mutation and
@@ -1286,19 +1124,19 @@ object Artifacts {
     * upstream) — duplicate ids would serve duplicate candidates.
     * Scale: cost is one narrow assignment pass over `incoming`, a
     * metadata census, and a rewrite bounded by the CHANGED cells only
-    * — never a full-index rewrite.
+    * — never a full-index rewrite; the census and drift statistic are
+    * frame-computed, so nothing cell-proportional reaches the driver.
     * Returns the new split map (what [[Ivf.ivfServeTopK]] must now be
     * given).
     */
   def appendIvfIndex(incoming: DataFrame, path: String,
-                     centroids: Array[Array[Float]],
+                     quantizer: Ivf.CoarseQuantizer,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path, centroids, idCol, vecCol, maxCell,
-      ivfParams(centroids, vecCol, maxCell), "IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"))(
-      ivfProject(centroids))
+    appendCellIndex(incoming, path, idCol,
+      cellFamily(incoming.sparkSession, quantizer, None, vecCol, maxCell),
+      rawVectors)
 
   /** [[appendIvfIndex]] for the codes-only IVF-PQ layout. `corpus` must
     * be the PRE-append corpus table (vectors for the index's existing
@@ -1313,42 +1151,35 @@ object Artifacts {
     */
   def appendIvfPqIndex(incoming: DataFrame, corpus: DataFrame,
                        path: String,
-                       centroids: Array[Array[Float]],
+                       quantizer: Ivf.CoarseQuantizer,
                        codebooks: Array[Array[Array[Float]]],
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
-                       maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path, centroids, idCol, vecCol, maxCell,
-      ivfPqParams(centroids, codebooks, vecCol, maxCell), "IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol, "IVF-PQ append"))(
-      ivfPqProject(centroids, codebooks))
+                       maxCell: Int = 100000): Map[Int, Int] = {
+    val fam = cellFamily(incoming.sparkSession, quantizer, Some(codebooks),
+      vecCol, maxCell)
+    appendCellIndex(incoming, path, idCol, fam,
+      pqResolveVectors(corpus, path, idCol, vecCol, s"${fam.label} append"))
+  }
 
   /** Shared census → split-diff → append/rewrite → republish sequence
     * behind [[appendIvfIndex]] and [[appendIvfPqIndex]] (the
-    * [[writeCellIndex]] discipline: the mutation protocol exists once).
-    * `resolveVectors` maps stored index rows of the cells being
-    * re-split back to (neighbor_id, cv, cell); `project` is the SAME
-    * stored-row projection the save path used.
+    * [[writeCellIndexAssigned]] discipline: the mutation protocol exists
+    * once). `resolveVectors` maps stored index rows of the cells being
+    * re-split back to (neighbor_id, cv, cell); the family's `project`
+    * is the SAME stored-row projection the save path used.
     */
   private def appendCellIndex(
-      incoming: DataFrame, path: String,
-      centroids: Array[Array[Float]],
-      idCol: String, vecCol: String, maxCell: Int,
-      params: Map[String, String], what: String,
-      resolveVectors: DataFrame => DataFrame,
-      // the incoming-assignment plan: the literal cellOf kernel for the
-      // plan-literal family, the broadcast join for the hierarchical
-      // one. Plan CONSTRUCTION only — execution stays inside the mutex.
-      assignIncoming: Option[DataFrame => DataFrame] = None)(
-      project: (DataFrame, Map[Int, Int]) => DataFrame): Map[Int, Int] = {
+      incoming: DataFrame, path: String, idCol: String, fam: CellFamily,
+      resolveVectors: DataFrame => DataFrame): Map[Int, Int] = {
+    val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = incoming.sparkSession
     val dst = new java.io.File(path)
     val marker = new java.io.File(dst, "_SUCCESS")
     require(marker.exists(),
       s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
         "torn by a crashed append) — rebuild it before appending")
-    checkParams(path, params, what)
+    checkCellParams(path, fam)
     val indexDir = new java.io.File(dst, "index").toString
     // ---- the marker delete is the MUTEX, and it must be won BEFORE
     // any census/splits read: two concurrent appenders both passed the
@@ -1369,11 +1200,8 @@ object Artifacts {
     sweepTmp(dst)
     val (assignedIncoming, oldSplits, newSplits, changed, drift) = try {
       val oldSplits = readSplits(spark, dst)
-      val assignedIncoming = Dedup.trackedPersist(
-        assignIncoming.map(_(incoming)).getOrElse(
-          incoming.select(col(idCol).as("neighbor_id"),
-            col(vecCol).as("cv"),
-            Ivf.cellOf(col(vecCol), centroids).as("cell"))))
+      val assignedIncoming =
+        Dedup.trackedPersist(fam.assign(incoming, idCol))
       // union census, KEPT AS FRAMES (r18, VERDICT r17 task 4): the
       // stored per-cell counts (parquet over the index — exactly the
       // counts a rebuild's assignment pass would produce, since index
@@ -2057,8 +1885,8 @@ object Artifacts {
     * the quantizer family (and `_params`) changes.
     *
     * Returns the retrained quantizer and the new split map; serve with
-    * [[loadIvfIndex]]/[[Ivf.ivfServeTopK]] or
-    * [[loadIvfIndexHier]]/[[Ivf.ivfServeTopKHier]] by family.
+    * [[loadIvfIndex]] under that quantizer, then [[Ivf.ivfServeTopK]]
+    * or [[Ivf.ivfServeTopKHier]] by family.
     * Retrain == a from-scratch [[saveIvfIndex]] on the current corpus
     * under the same quantizer (ArtifactsSpec pins it). Note for
     * `*For`-store roots: the store path encodes the ORIGINAL nCells —
@@ -2080,18 +1908,54 @@ object Artifacts {
       stored => stored.select(col("neighbor_id").as(idCol),
         col("cv").as(vecCol))) { (corpus, tmp) =>
       val q = Ivf.fitQuantizer(corpus, nCells, idCol, vecCol, seed)
-      q match {
-        case Ivf.LiteralQuantizer(cents) =>
-          saveIvfIndex(corpus, tmp, cents, idCol, vecCol, maxCell)
-        case hq: Ivf.HierarchicalQuantizer =>
-          saveIvfIndexHier(corpus, tmp, hq, idCol, vecCol, maxCell)
-        case _: Ivf.StoredQuantizer => throw new IllegalStateException(
-          "unreachable: fitQuantizer never returns the stored family " +
-            "(a stored fit needs a cells location — use fitStored + " +
-            "saveIvfIndexStored explicitly)")
-      }
+      saveIvfIndex(corpus, tmp, q, idCol, vecCol, maxCell)
       q
     }
+  }
+
+  /** [[retrainIvfIndex]] for the STORED family: refits the three-level
+    * quantizer on the index's current corpus via the fully distributed
+    * [[Ivf.fitStored]] and rebuilds under the same swap protocol. The
+    * refit cells relation is written INSIDE the replacement artifact
+    * (`<path>/cells` after the swap) — for this family the quantizer's
+    * bulk is data, not driver state, so it travels with the index; the
+    * returned handle points at the post-swap location. `nCells =
+    * AutoCells` derives the UNBOUNDED √N count from the current corpus
+    * (this family has no cell-count ceiling to clamp to). The raw-
+    * vector layout is shared with the literal/hier families, so
+    * [[retrainIvfIndex]] can also retrain a stored-family root DOWN
+    * into those families when asked for a small nCells — this op is
+    * the one that keeps the cells stored.
+    */
+  def retrainIvfIndexStored(spark: SparkSession, path: String,
+                            nCells: Int = Ivf.AutoCells,
+                            idCol: String = "vec_id",
+                            vecCol: String = "embedding",
+                            maxCell: Int = 100000, seed: Long = 42L)
+      : (Ivf.StoredQuantizer, Map[Int, Int]) = {
+    val (fitted, splits) = retrainCellIndex(spark, path,
+      "stored-cells IVF index retrain",
+      layoutCol = "cv",
+      layoutRemedy = "the stored index is codes-only (IVF-PQ) and its " +
+        "raw vectors cannot be recovered from codes; use " +
+        "retrainIvfPqIndexStored with the corpus table",
+      stored => stored.select(col("neighbor_id").as(idCol),
+        col("cv").as(vecCol))) { (corpus, tmp) =>
+      // ONE corpus count feeds both the auto cell count and the fit's
+      // knownRows (code-review r17: the fit re-counted the checkpointed
+      // corpus inside the minutes-long mutex window)
+      val rows = corpus.count()
+      val n = if (nCells == Ivf.AutoCells)
+        Ivf.autoNCellsUnbounded(rows) else nCells
+      val sq = Ivf.fitStored(corpus, n,
+        new java.io.File(tmp, "cells").toString, idCol, vecCol, seed,
+        knownRows = Some(rows))
+      saveIvfIndex(corpus, tmp, sq, idCol, vecCol, maxCell)
+      sq
+    }
+    // the scratch was renamed onto the live root — repoint the handle
+    (fitted.copy(cellsPath =
+      new java.io.File(path, "cells").toString), splits)
   }
 
   /** [[retrainIvfIndexStored]] for the codes-only STORED IVF-PQ layout:
@@ -2103,7 +1967,7 @@ object Artifacts {
     * tripwire applies). The refit cells relation lands INSIDE the
     * replacement artifact (`<path>/cells` post-swap); the returned
     * handle points there. Serve with
-    * [[loadIvfPqIndexStored]]/[[Pq.ivfPqServeTopKStored]].
+    * [[loadIvfPqIndex]]/[[Pq.ivfPqServeTopKStored]].
     */
   def retrainIvfPqIndexStored(spark: SparkSession, corpus: DataFrame,
                               path: String,
@@ -2131,7 +1995,7 @@ object Artifacts {
           new java.io.File(tmp, "cells").toString, idCol, vecCol, seed,
           knownRows = Some(rows))
         val cb = Pq.fitCodebooks(cur, m, ksub, vecCol, seed = seed)
-        saveIvfPqIndexStored(cur, tmp, sq, cb, idCol, vecCol, maxCell)
+        saveIvfPqIndex(cur, tmp, sq, cb, idCol, vecCol, maxCell)
         (sq, cb)
     }
     (sq.copy(cellsPath = new java.io.File(path, "cells").toString),
@@ -2147,7 +2011,7 @@ object Artifacts {
     * duplicated id fails loudly with counts instead of silently
     * shrinking the rebuilt index). Returns the retrained coarse
     * quantizer, the retrained codebooks, and the new split map; serve
-    * with [[loadIvfPqIndex]]/[[loadIvfPqIndexHier]] by family.
+    * with [[loadIvfPqIndex]] under that quantizer.
     */
   def retrainIvfPqIndex(spark: SparkSession, corpus: DataFrame,
                         path: String,
@@ -2168,16 +2032,7 @@ object Artifacts {
       (cur, tmp) =>
         val q = Ivf.fitQuantizer(cur, nCells, idCol, vecCol, seed)
         val cb = Pq.fitCodebooks(cur, m, ksub, vecCol, seed = seed)
-        q match {
-          case Ivf.LiteralQuantizer(cents) =>
-            saveIvfPqIndex(cur, tmp, cents, cb, idCol, vecCol, maxCell)
-          case hq: Ivf.HierarchicalQuantizer =>
-            saveIvfPqIndexHier(cur, tmp, hq, cb, idCol, vecCol, maxCell)
-          case _: Ivf.StoredQuantizer => throw new IllegalStateException(
-            "unreachable: fitQuantizer never returns the stored family " +
-              "(a stored fit needs a cells location — use fitStored + " +
-              "saveIvfIndexStored explicitly)")
-        }
+        saveIvfPqIndex(cur, tmp, q, cb, idCol, vecCol, maxCell)
         (q, cb)
     }
     (q, cb, splits)
@@ -2524,197 +2379,37 @@ object Artifacts {
     * new split map.
     */
   def removeFromIvfIndex(removedIds: DataFrame, path: String,
-                         centroids: Array[Array[Float]],
+                         quantizer: Ivf.CoarseQuantizer,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding",
                          maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfParams(centroids, vecCol, maxCell), "IVF index",
-      resolveVectors = stored => stored.select("neighbor_id", "cv", "cell"))(
-      ivfProject(centroids))
+    removeFromCellIndex(removedIds, path, idCol,
+      cellFamily(removedIds.sparkSession, quantizer, None, vecCol, maxCell),
+      rawVectors)
 
-  private def ivfPqHierParams(hq: Ivf.HierarchicalQuantizer,
-                              codebooks: Array[Array[Array[Float]]],
-                              vecCol: String,
-                              maxCell: Int): Map[String, String] =
-    ivfHierParams(hq, vecCol, maxCell) +
-      ("codebooks" -> centroidDigest(codebooks.flatten))
-
-  /** [[saveIvfPqIndex]] for the HIERARCHICAL coarse quantizer — the
-    * 100 TB serving artifact: broadcast-join assignment past
-    * `Ivf.MaxAutoCells`, codes-only stored rows. Same layout/publish
-    * protocol; `_params` pins supercells + superProbe + both quantizer
-    * digests.
+  /** [[removeFromIvfIndex]] for the codes-only IVF-PQ layout. `corpus`
+    * supplies raw vectors when a cell's split bits shrink and its
+    * SURVIVING rows need their subcells re-derived (the
+    * [[appendIvfPqIndex]] resolveVectors, drift tripwire included);
+    * removals that change no cell's bits never touch it. The corpus may
+    * be the pre- or post-delete table — only the surviving ids must
+    * resolve.
     */
-  def saveIvfPqIndexHier(corpus: DataFrame, path: String,
-                         hq: Ivf.HierarchicalQuantizer,
-                         codebooks: Array[Array[Array[Float]]],
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         maxCell: Int = 100000): Unit =
-    writeCellIndexAssigned(path,
-      ivfPqHierParams(hq, codebooks, vecCol, maxCell),
-      Dedup.trackedPersist(
-        Ivf.assignCellsJoin(corpus, hq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))),
-      maxCell)(ivfPqProject(hq.centroids, codebooks))
-
-  /** [[loadIvfPqIndex]] for the hierarchical family — feeds
-    * [[Pq.ivfPqServeTopKHier]].
-    */
-  def loadIvfPqIndexHier(spark: SparkSession, path: String,
-                         hq: Ivf.HierarchicalQuantizer,
-                         codebooks: Array[Array[Array[Float]]],
-                         vecCol: String = "embedding",
-                         maxCell: Int = 100000): (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path,
-      ivfPqHierParams(hq, codebooks, vecCol, maxCell),
-      "hierarchical IVF-PQ index")
-
-  /** [[appendIvfPqIndex]] for the hierarchical family (same corpus
-    * membership contract and drift tripwire).
-    */
-  def appendIvfPqIndexHier(incoming: DataFrame, corpus: DataFrame,
+  def removeFromIvfPqIndex(removedIds: DataFrame, corpus: DataFrame,
                            path: String,
-                           hq: Ivf.HierarchicalQuantizer,
+                           quantizer: Ivf.CoarseQuantizer,
                            codebooks: Array[Array[Array[Float]]],
                            idCol: String = "vec_id",
                            vecCol: String = "embedding",
-                           maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path, hq.centroids, idCol, vecCol, maxCell,
-      ivfPqHierParams(hq, codebooks, vecCol, maxCell),
-      "hierarchical IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol,
-          "hierarchical IVF-PQ append"),
-      assignIncoming = Some(df =>
-        Ivf.assignCellsJoin(df, hq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))))(
-      ivfPqProject(hq.centroids, codebooks))
-
-  /** [[removeFromIvfPqIndex]] for the hierarchical family. */
-  def removeFromIvfPqIndexHier(removedIds: DataFrame, corpus: DataFrame,
-                               path: String,
-                               hq: Ivf.HierarchicalQuantizer,
-                               codebooks: Array[Array[Array[Float]]],
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfPqHierParams(hq, codebooks, vecCol, maxCell),
-      "hierarchical IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol,
-          "hierarchical IVF-PQ removal"))(
-      ivfPqProject(hq.centroids, codebooks))
-
-  // -------------------------------------------- IVF-PQ, stored family
-
-  private def ivfPqStoredParams(spark: SparkSession,
-                                sq: Ivf.StoredQuantizer,
-                                codebooks: Array[Array[Array[Float]]],
-                                vecCol: String,
-                                maxCell: Int): Map[String, String] =
-    ivfStoredParams(spark, sq, vecCol, maxCell) +
-      ("codebooks" -> centroidDigest(codebooks.flatten))
-
-  /** [[ivfPqProject]] for the stored family: subcell thresholds from
-    * the SPLIT cells' centroids only — ONE definition across save,
-    * append, and remove (the [[ivfProjectStored]] rationale, codes
-    * layout).
-    */
-  private def ivfPqProjectStored(sq: Ivf.StoredQuantizer,
-                                 codebooks: Array[Array[Array[Float]]])(
-      assigned: DataFrame, splits: Map[Int, Int]): DataFrame = {
-    val splitCents =
-      Ivf.storedSplitCentroids(sq, assigned.sparkSession, splits)
-    assigned.select(col("neighbor_id"), col("cell"),
-      Ivf.subcellOfSparse(col("cv"), col("cell"), splitCents(_), splits)
-        .as("subcell"),
-      Pq.encode(col("cv"), codebooks).as("codes"))
+                           maxCell: Int = 100000): Map[Int, Int] = {
+    val fam = cellFamily(removedIds.sparkSession, quantizer, Some(codebooks),
+      vecCol, maxCell)
+    removeFromCellIndex(removedIds, path, idCol, fam,
+      pqResolveVectors(corpus, path, idCol, vecCol, s"${fam.label} removal"))
   }
 
-  /** [[saveIvfPqIndex]] for the STORED-CELLS family — the exabyte
-    * serving artifact: relation-join assignment with the cell
-    * centroids read from parquet (never driver-resident), codes-only
-    * stored rows. `_params` pins the cells-relation content digest,
-    * the top level, and the codebook digest.
-    */
-  def saveIvfPqIndexStored(corpus: DataFrame, path: String,
-                           sq: Ivf.StoredQuantizer,
-                           codebooks: Array[Array[Array[Float]]],
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           maxCell: Int = 100000): Unit =
-    writeCellIndexAssigned(path,
-      ivfPqStoredParams(corpus.sparkSession, sq, codebooks, vecCol,
-        maxCell),
-      Dedup.trackedPersist(
-        Ivf.assignCellsStored(corpus, sq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))),
-      maxCell)(ivfPqProjectStored(sq, codebooks))
-
-  /** [[loadIvfPqIndex]] for the stored family — feeds
-    * [[Pq.ivfPqServeTopKStored]].
-    */
-  def loadIvfPqIndexStored(spark: SparkSession, path: String,
-                           sq: Ivf.StoredQuantizer,
-                           codebooks: Array[Array[Array[Float]]],
-                           vecCol: String = "embedding",
-                           maxCell: Int = 100000): (DataFrame, Map[Int, Int]) =
-    readCellIndex(spark, path,
-      ivfPqStoredParams(spark, sq, codebooks, vecCol, maxCell),
-      "stored-cells IVF-PQ index")
-
-  /** [[appendIvfPqIndex]] for the stored family (same corpus
-    * membership contract and drift tripwire).
-    */
-  def appendIvfPqIndexStored(incoming: DataFrame, corpus: DataFrame,
-                             path: String,
-                             sq: Ivf.StoredQuantizer,
-                             codebooks: Array[Array[Array[Float]]],
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             maxCell: Int = 100000): Map[Int, Int] =
-    appendCellIndex(incoming, path,
-      // the centroid-array param only feeds the literal family's
-      // DEFAULT incoming assignment; this family always overrides it
-      Array.empty[Array[Float]],
-      idCol, vecCol, maxCell,
-      ivfPqStoredParams(incoming.sparkSession, sq, codebooks, vecCol,
-        maxCell),
-      "stored-cells IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol,
-          "stored-cells IVF-PQ append"),
-      assignIncoming = Some(df =>
-        Ivf.assignCellsStored(df, sq, idCol, vecCol)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))))(
-      ivfPqProjectStored(sq, codebooks))
-
-  /** [[removeFromIvfPqIndex]] for the stored family. */
-  def removeFromIvfPqIndexStored(removedIds: DataFrame, corpus: DataFrame,
-                                 path: String,
-                                 sq: Ivf.StoredQuantizer,
-                                 codebooks: Array[Array[Array[Float]]],
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding",
-                                 maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfPqStoredParams(removedIds.sparkSession, sq, codebooks, vecCol,
-        maxCell),
-      "stored-cells IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol,
-          "stored-cells IVF-PQ removal"))(
-      ivfPqProjectStored(sq, codebooks))
-
   /** The corpus-vector resolver of the codes-only IVF-PQ maintenance
-    * paths (append/remove, literal and hierarchical): stored rows of the
+    * paths (append/remove, every family): stored rows of the
     * cells being rewritten join back to the corpus for their raw
     * vectors, with the id-membership drift tripwire — 0 vectors = a
     * silently-lost corpus row, >1 = an ambiguous duplicate; both fail
@@ -2744,43 +2439,20 @@ object Artifacts {
     joined.select("neighbor_id", "cv", "cell")
   }
 
-  /** [[removeFromIvfIndex]] for the codes-only IVF-PQ layout. `corpus`
-    * supplies raw vectors when a cell's split bits shrink and its
-    * SURVIVING rows need their subcells re-derived (the
-    * [[appendIvfPqIndex]] resolveVectors, drift tripwire included);
-    * removals that change no cell's bits never touch it. The corpus may
-    * be the pre- or post-delete table — only the surviving ids must
-    * resolve.
-    */
-  def removeFromIvfPqIndex(removedIds: DataFrame, corpus: DataFrame,
-                           path: String,
-                           centroids: Array[Array[Float]],
-                           codebooks: Array[Array[Array[Float]]],
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           maxCell: Int = 100000): Map[Int, Int] =
-    removeFromCellIndex(removedIds, path, idCol, maxCell,
-      ivfPqParams(centroids, codebooks, vecCol, maxCell), "IVF-PQ index",
-      resolveVectors =
-        pqResolveVectors(corpus, path, idCol, vecCol, "IVF-PQ removal"))(
-      ivfPqProject(centroids, codebooks))
-
   /** Shared removal sequence behind [[removeFromIvfIndex]] and
     * [[removeFromIvfPqIndex]] (the [[appendCellIndex]] discipline).
     */
   private def removeFromCellIndex(
-      removedIds: DataFrame, path: String,
-      idCol: String, maxCell: Int,
-      params: Map[String, String], what: String,
-      resolveVectors: DataFrame => DataFrame)(
-      project: (DataFrame, Map[Int, Int]) => DataFrame): Map[Int, Int] = {
+      removedIds: DataFrame, path: String, idCol: String, fam: CellFamily,
+      resolveVectors: DataFrame => DataFrame): Map[Int, Int] = {
+    val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = removedIds.sparkSession
     val dst = new java.io.File(path)
     val marker = new java.io.File(dst, "_SUCCESS")
     require(marker.exists(),
       s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
         "torn by a crashed append/remove) — rebuild it before removing")
-    checkParams(path, params, what)
+    checkCellParams(path, fam)
     val indexDir = new java.io.File(dst, "index").toString
     val rm = Dedup.trackedPersist(
       removedIds.select(col(idCol).as("neighbor_id")).distinct())
@@ -3025,6 +2697,22 @@ object Artifacts {
         s"$what artifact at $path was generated with ${fmt(stored)}, " +
           s"serving requested ${fmt(expected)}")
     }
+
+  /** [[checkParams]] for the cell indexes, with the sidecar REQUIRED:
+    * every cell-index writer writes `_params`, so a missing sidecar
+    * means a damaged or pre-sidecar index, and serving or mutating it
+    * under whatever quantizer the caller holds is the silent
+    * wrong-answer case the pins exist to close. Retrain reads no pins
+    * and rewrites the sidecar, so it is the in-place remedy.
+    */
+  private def checkCellParams(path: String, fam: CellFamily): Unit = {
+    require(new java.io.File(path, "_params").isFile,
+      s"${fam.what} at $path has no _params sidecar (damaged, or written " +
+        "before cell indexes pinned their quantizer) — nothing proves " +
+        s"which quantizer built it; rebuild it with save${fam.verb}, or " +
+        s"run retrain${fam.verb}, which rewrites the sidecar")
+    checkParams(path, fam.params, fam.what)
+  }
 
   private def centroidDigest(centroids: Array[Array[Float]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")

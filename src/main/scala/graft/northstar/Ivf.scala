@@ -888,10 +888,23 @@ object Ivf {
       sizedForJoin(spark, cellsRelation(spark))
   }
 
-  /** Marker for the two quantizer families; [[fitQuantizer]] picks the
-    * family from the resolved cell count and [[ivfTopK]] dispatches.
+  /** Marker for the quantizer families; [[fitQuantizer]] picks the
+    * family from the resolved cell count, and [[ivfTopK]] and the
+    * [[Artifacts]] cell-index verbs dispatch on it.
     */
   sealed trait CoarseQuantizer
+
+  object CoarseQuantizer {
+    import scala.language.implicitConversions
+
+    /** A bare centroid matrix IS the literal family, so callers holding
+      * plain [[fitCentroids]] output pass it straight to the
+      * quantizer-keyed cell-index verbs ([[Artifacts.saveIvfIndex]] and
+      * the rest) without a second entry point per verb.
+      */
+    implicit def literal(centroids: Array[Array[Float]]): LiteralQuantizer =
+      LiteralQuantizer(centroids)
+  }
 
   /** The pre-r15 single-level quantizer: centroids as a plan literal via
     * the fused [[cellOf]] kernel. Right up to [[MaxAutoCells]].
@@ -1791,7 +1804,7 @@ object Ivf {
     * the probed cells at planning time — the same serving cost model
     * (read nProbe/nCells of the corpus from disk, nothing else), now
     * without a centroid plan literal. `index`/`splits` come from
-    * [[Artifacts.loadIvfIndexHier]]; given the same quantizer and
+    * [[Artifacts.loadIvfIndex]] under `hq`; given the same quantizer and
     * splits the result is row-identical to [[ivfTopKHier]] (IvfSpec
     * pins it, the ivfServeTopK==ivfTopK contract one family over).
     */
@@ -1849,7 +1862,7 @@ object Ivf {
   /** [[ivfServeTopKHier]] for the STORED family: probe side through the
     * stored relation, the cell-partitioned index pruned to probed cells
     * at planning time. `index`/`splits` come from
-    * [[Artifacts.loadIvfIndexStored]]; given the same quantizer and
+    * [[Artifacts.loadIvfIndex]] under `sq`; given the same quantizer and
     * splits the result is row-identical to [[ivfTopKStored]] (IvfSpec
     * pins it — the serve==fit contract, third family over).
     */

@@ -472,7 +472,7 @@ object Pq {
   /** [[ivfPqServeTopKHier]] over the stored-cells quantizer: codes-only
     * index, planning-time cell pruning, probe side through the stored
     * relation. `index`/`splits` come from
-    * [[Artifacts.loadIvfPqIndexStored]]; the [[ivfPqServeTopK]]
+    * [[Artifacts.loadIvfPqIndex]] under `sq`; the [[ivfPqServeTopK]]
     * membership contract on `corpus` applies unchanged.
     */
   def ivfPqServeTopKStored(queries: DataFrame, index: DataFrame,
@@ -507,8 +507,8 @@ object Pq {
   /** [[ivfPqServeTopK]] over the hierarchical quantizer: stored
     * codes-only index, planning-time cell pruning, probe side from the
     * broadcast-join path. `index`/`splits` come from
-    * [[Artifacts.loadIvfPqIndexHier]]; the [[ivfPqServeTopK]] membership
-    * contract on `corpus` applies unchanged.
+    * [[Artifacts.loadIvfPqIndex]] under `hq`; the [[ivfPqServeTopK]]
+    * membership contract on `corpus` applies unchanged.
     */
   def ivfPqServeTopKHier(queries: DataFrame, index: DataFrame,
                          corpus: DataFrame,

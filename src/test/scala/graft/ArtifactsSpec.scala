@@ -2,6 +2,7 @@ package graft
 
 import graft.northstar.{Artifacts, Ivf, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Pinned-parameter serving artifacts (BPE merge table, IVF centroids):
   * parquet round-trip fidelity, loud parameter-mismatch failure, and the
@@ -1233,7 +1234,7 @@ class ArtifactsSpec extends SparkSpecBase {
     val pS = s"${tempDir("ivfmaintstored")}/idx"
     val sq = Ivf.fitStored(embA, nCells = 4,
       s"${tempDir("ivfmaintstored")}/cellsrc")
-    Artifacts.saveIvfIndexStored(embA, pS, sq)
+    Artifacts.saveIvfIndex(embA, pS, sq)
     val rS = Artifacts.maintainIndex(spark, pS)
     assert(rS.family == "stored-cells" && rS.layout == "raw"
       && !rS.retrained, rS.toString)
@@ -1470,15 +1471,15 @@ class ArtifactsSpec extends SparkSpecBase {
       Ivf.fitCentroids(embA, nCells = 8), superProbe = 2)
     val maxCell = 40 // forces re-splits on the union (the literal test's fixture)
     val p = s"${tempDir("ivfhier")}/idx"
-    Artifacts.saveIvfIndexHier(embA, p, hq, maxCell = maxCell)
-    val splitsApp = Artifacts.appendIvfIndexHier(embB, p, hq,
+    Artifacts.saveIvfIndex(embA, p, hq, maxCell = maxCell)
+    val splitsApp = Artifacts.appendIvfIndex(embB, p, hq,
       maxCell = maxCell)
     val pU = s"${tempDir("ivfhier")}/idx"
-    Artifacts.saveIvfIndexHier(emb, pU, hq, maxCell = maxCell)
-    val (idxU, splitsU) = Artifacts.loadIvfIndexHier(spark, pU, hq,
+    Artifacts.saveIvfIndex(emb, pU, hq, maxCell = maxCell)
+    val (idxU, splitsU) = Artifacts.loadIvfIndex(spark, pU, hq,
       maxCell = maxCell)
     assert(splitsApp == splitsU, "append split map must equal rebuild's")
-    val (idxA, splitsA) = Artifacts.loadIvfIndexHier(spark, p, hq,
+    val (idxA, splitsA) = Artifacts.loadIvfIndex(spark, p, hq,
       maxCell = maxCell)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell")))
@@ -1486,14 +1487,14 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(Ivf.ivfServeTopKHier(q, idxA, hq, splitsA, k = 10, nProbe = 3))
       == rows(Ivf.ivfServeTopKHier(q, idxU, hq, splitsU, k = 10, nProbe = 3)))
     // takedown: removing the appended half must restore the embA build
-    val splitsR = Artifacts.removeFromIvfIndexHier(
+    val splitsR = Artifacts.removeFromIvfIndex(
       embB.select("vec_id"), p, hq, maxCell = maxCell)
     val p0 = s"${tempDir("ivfhier")}/idx"
-    Artifacts.saveIvfIndexHier(embA, p0, hq, maxCell = maxCell)
-    val (idx0, splits0) = Artifacts.loadIvfIndexHier(spark, p0, hq,
+    Artifacts.saveIvfIndex(embA, p0, hq, maxCell = maxCell)
+    val (idx0, splits0) = Artifacts.loadIvfIndex(spark, p0, hq,
       maxCell = maxCell)
     assert(splitsR == splits0)
-    val (idxR, _) = Artifacts.loadIvfIndexHier(spark, p, hq,
+    val (idxR, _) = Artifacts.loadIvfIndex(spark, p, hq,
       maxCell = maxCell)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell")) ==
       rows(idx0.select("neighbor_id", "cell", "subcell")))
@@ -1519,15 +1520,15 @@ class ArtifactsSpec extends SparkSpecBase {
       cellsPath, hq.nCells, hq.centroids(0).length, superProbe = 2)
     val maxCell = 40 // forces re-splits on the union (the hier fixture)
     val p = s"${tempDir("ivfstored")}/idx"
-    Artifacts.saveIvfIndexStored(embA, p, sq, maxCell = maxCell)
-    val splitsApp = Artifacts.appendIvfIndexStored(embB, p, sq,
+    Artifacts.saveIvfIndex(embA, p, sq, maxCell = maxCell)
+    val splitsApp = Artifacts.appendIvfIndex(embB, p, sq,
       maxCell = maxCell)
     val pU = s"${tempDir("ivfstored")}/idx"
-    Artifacts.saveIvfIndexStored(emb, pU, sq, maxCell = maxCell)
-    val (idxU, splitsU) = Artifacts.loadIvfIndexStored(spark, pU, sq,
+    Artifacts.saveIvfIndex(emb, pU, sq, maxCell = maxCell)
+    val (idxU, splitsU) = Artifacts.loadIvfIndex(spark, pU, sq,
       maxCell = maxCell)
     assert(splitsApp == splitsU, "append split map must equal rebuild's")
-    val (idxA, splitsA) = Artifacts.loadIvfIndexStored(spark, p, sq,
+    val (idxA, splitsA) = Artifacts.loadIvfIndex(spark, p, sq,
       maxCell = maxCell)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell")))
@@ -1539,29 +1540,29 @@ class ArtifactsSpec extends SparkSpecBase {
     // ... and the stored serve equals the HIER serve on identical
     // content — the cross-family identity, through the artifact layer
     val pH = s"${tempDir("ivfstored")}/idx"
-    Artifacts.saveIvfIndexHier(emb, pH, hq, maxCell = maxCell)
-    val (idxH, splitsH) = Artifacts.loadIvfIndexHier(spark, pH, hq,
+    Artifacts.saveIvfIndex(emb, pH, hq, maxCell = maxCell)
+    val (idxH, splitsH) = Artifacts.loadIvfIndex(spark, pH, hq,
       maxCell = maxCell)
     assert(rows(Ivf.ivfServeTopKStored(q, idxU, sq, splitsU, k = 10,
         nProbe = 3))
       == rows(Ivf.ivfServeTopKHier(q, idxH, hq, splitsH, k = 10,
         nProbe = 3)))
     // takedown: removing the appended half must restore the embA build
-    val splitsR = Artifacts.removeFromIvfIndexStored(
+    val splitsR = Artifacts.removeFromIvfIndex(
       embB.select("vec_id"), p, sq, maxCell = maxCell)
     val p0 = s"${tempDir("ivfstored")}/idx"
-    Artifacts.saveIvfIndexStored(embA, p0, sq, maxCell = maxCell)
-    val (idx0, splits0) = Artifacts.loadIvfIndexStored(spark, p0, sq,
+    Artifacts.saveIvfIndex(embA, p0, sq, maxCell = maxCell)
+    val (idx0, splits0) = Artifacts.loadIvfIndex(spark, p0, sq,
       maxCell = maxCell)
     assert(splitsR == splits0)
-    val (idxR, _) = Artifacts.loadIvfIndexStored(spark, p, sq,
+    val (idxR, _) = Artifacts.loadIvfIndex(spark, p, sq,
       maxCell = maxCell)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell")) ==
       rows(idx0.select("neighbor_id", "cell", "subcell")))
     // the params pin refuses a cross-family serve: the same path read
     // as a hier-family index must fail loudly, not serve
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfIndexHier(spark, p, hq, maxCell = maxCell)
+      Artifacts.loadIvfIndex(spark, p, hq, maxCell = maxCell)
     }: Unit
   }
 
@@ -1580,24 +1581,24 @@ class ArtifactsSpec extends SparkSpecBase {
       Ivf.LiteralQuantizer(hq.superCentroids), oldCells, hq.nCells,
       hq.centroids(0).length, superProbe = 3)
     val p = s"${tempDir("ivfstretrain")}/idx"
-    Artifacts.saveIvfIndexStored(embA, p, sqOld)
-    Artifacts.appendIvfIndexStored(embB, p, sqOld): Unit
+    Artifacts.saveIvfIndex(embA, p, sqOld)
+    Artifacts.appendIvfIndex(embB, p, sqOld): Unit
     // retrain on the CURRENT corpus (A ∪ B, read from the stored rows)
     val (sqNew, splits) = Artifacts.retrainIvfIndexStored(spark, p,
       nCells = 16)
     assert(sqNew.cellsPath == new java.io.File(p, "cells").toString,
       "the retrained handle must point inside the swapped artifact")
     assert(sqNew.nCells == 16)
-    // identity: retrain == a fresh saveIvfIndexStored on the union
+    // identity: retrain == a fresh saveIvfIndex on the union
     // corpus under the SAME retrained quantizer (the literal retrain
     // test's shape: an INDEPENDENT refit is not comparable, because the
     // top-level driver k-means++ is collect-order-sensitive and the
     // retrain reads its corpus from the stored rows, not the testdata
     // parquet — same set, different physical order)
     val pF = s"${tempDir("ivfstretrain")}/idx"
-    Artifacts.saveIvfIndexStored(emb, pF, sqNew)
-    val (idxF, splitsF) = Artifacts.loadIvfIndexStored(spark, pF, sqNew)
-    val (idxR, splitsR) = Artifacts.loadIvfIndexStored(spark, p, sqNew)
+    Artifacts.saveIvfIndex(emb, pF, sqNew)
+    val (idxF, splitsF) = Artifacts.loadIvfIndex(spark, pF, sqNew)
+    val (idxR, splitsR) = Artifacts.loadIvfIndex(spark, p, sqNew)
     assert(splits == splitsF && splitsR == splitsF)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell")) ==
       rows(idxF.select("neighbor_id", "cell", "subcell")))
@@ -1606,7 +1607,7 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(Artifacts.appendDriftHistory(p).isEmpty,
       "retrain must start a fresh drift history")
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfIndexStored(spark, p, sqOld)
+      Artifacts.loadIvfIndex(spark, p, sqOld)
     }: Unit
     // serving with the returned handle: full probing == brute force
     val qs = emb.filter(col("vec_id") < 5)
@@ -1630,8 +1631,8 @@ class ArtifactsSpec extends SparkSpecBase {
       hq.centroids(0).length, superProbe = 3)
     val cbOld = graft.northstar.Pq.fitCodebooks(embA, m = 8, ksub = 8)
     val p = s"${tempDir("pqstretrain")}/idx"
-    Artifacts.saveIvfPqIndexStored(embA, p, sqOld, cbOld)
-    Artifacts.appendIvfPqIndexStored(embB, embA, p, sqOld, cbOld): Unit
+    Artifacts.saveIvfPqIndex(embA, p, sqOld, cbOld)
+    Artifacts.appendIvfPqIndex(embB, embA, p, sqOld, cbOld): Unit
     // wrong-family guard both ways: the raw-vector stored retrain on a
     // codes-only root, and the codes retrain on a raw-vector root
     val eFam = intercept[IllegalArgumentException] {
@@ -1647,17 +1648,17 @@ class ArtifactsSpec extends SparkSpecBase {
     // identity: retrain == fresh save under the SAME retrained
     // quantizers (independent refits are collect-order-sensitive)
     val pF = s"${tempDir("pqstretrain")}/idx"
-    Artifacts.saveIvfPqIndexStored(emb, pF, sqNew, cbNew)
+    Artifacts.saveIvfPqIndex(emb, pF, sqNew, cbNew)
     val (idxF, splitsF) =
-      Artifacts.loadIvfPqIndexStored(spark, pF, sqNew, cbNew)
+      Artifacts.loadIvfPqIndex(spark, pF, sqNew, cbNew)
     val (idxR, splitsR) =
-      Artifacts.loadIvfPqIndexStored(spark, p, sqNew, cbNew)
+      Artifacts.loadIvfPqIndex(spark, p, sqNew, cbNew)
     assert(splits == splitsF && splitsR == splitsF)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idxF.select("neighbor_id", "cell", "subcell", "codes")))
     // old quantizer retired; fresh drift story
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfPqIndexStored(spark, p, sqOld, cbOld)
+      Artifacts.loadIvfPqIndex(spark, p, sqOld, cbOld)
     }: Unit
     assert(Artifacts.appendDriftHistory(p).isEmpty)
     // serving with the returned handles: full probing + unbounded
@@ -1772,7 +1773,7 @@ class ArtifactsSpec extends SparkSpecBase {
     }
     // the migrated index serves through the hier load path and equals
     // the fit path on the same corpus (serve == fit, post-migration)
-    val (idx, splitsL) = Artifacts.loadIvfIndexHier(spark, p, hq)
+    val (idx, splitsL) = Artifacts.loadIvfIndex(spark, p, hq)
     assert(splitsL == splits)
     val qs = emb.filter(col("vec_id") < 5)
     assert(rows(Ivf.ivfServeTopKHier(qs, idx, hq, splitsL, k = 10,
@@ -1912,10 +1913,11 @@ class ArtifactsSpec extends SparkSpecBase {
       Artifacts.retrainIvfPqIndex(spark, embA, pRaw)
     }
     assert(eRaw.getMessage.contains("no 'codes'"), eRaw.getMessage)
+    // untouched: marker up, every row still under index/ (a load would
+    // refuse the sidecar-less index, so the check reads index/ directly)
     assert(new java.io.File(pRaw, "_SUCCESS").exists() &&
-      Artifacts.loadIvfIndex(spark, pRaw, cents)._1.count()
-        == embA.count(),
-      "the refusal must leave the raw index untouched and servable")
+      spark.read.parquet(s"$pRaw/index").count() == embA.count(),
+      "the refusal must leave the raw index untouched")
     // legacy codes-only index: sidecar removed
     val pPq = s"${tempDir("legacyguard")}/idx"
     Artifacts.saveIvfPqIndex(embA, pPq, cents, cb, "vec_id", "embedding",
@@ -1943,5 +1945,136 @@ class ArtifactsSpec extends SparkSpecBase {
       spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty,
       s"retrain left ${leaked.size} persistent RDD(s) pinned")
+  }
+
+  test("a cell index with no _params sidecar refuses load, append and " +
+       "remove, leaves the index untouched, and a retrain makes it " +
+       "loadable again") {
+    val cents = Ivf.fitCentroids(embA, nCells = 4)
+    val cb = graft.northstar.Pq.fitCodebooks(embA, m = 8, ksub = 8)
+    // name + size of every file under index/: an untouched index keeps
+    // exactly this listing
+    def listing(p: String): Seq[(String, Long)] = {
+      val root = new java.io.File(p, "index").toPath
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> f.toFile.length)
+        .toSeq.sorted
+      finally files.close()
+    }
+    def refuses(p: String, remedy: String)(body: => Any): Unit = {
+      val before = listing(p)
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("no _params sidecar") &&
+        e.getMessage.contains(remedy), e.getMessage)
+      assert(new java.io.File(p, "_SUCCESS").exists(),
+        "the refusal must leave the commit marker up")
+      assert(listing(p) == before, "the refusal must not touch index/")
+      assert(spark.read.parquet(s"$p/index").count() == embA.count())
+    }
+    val takedown = embA.select("vec_id").limit(5)
+
+    val pRaw = s"${tempDir("noparams")}/idx"
+    Artifacts.saveIvfIndex(embA, pRaw, cents, "vec_id", "embedding", 100000)
+    assert(new java.io.File(pRaw, "_params").delete())
+    refuses(pRaw, "retrainIvfIndex")(Artifacts.loadIvfIndex(spark, pRaw, cents))
+    refuses(pRaw, "retrainIvfIndex")(Artifacts.appendIvfIndex(embB, pRaw, cents))
+    refuses(pRaw, "retrainIvfIndex")(
+      Artifacts.removeFromIvfIndex(takedown, pRaw, cents))
+    val (q, splits) = Artifacts.retrainIvfIndex(spark, pRaw, nCells = 4)
+    val (idx, splitsL) = Artifacts.loadIvfIndex(spark, pRaw, q)
+    assert(splitsL == splits && idx.count() == embA.count())
+
+    val pPq = s"${tempDir("noparams")}/idx"
+    Artifacts.saveIvfPqIndex(embA, pPq, cents, cb, "vec_id", "embedding",
+      100000)
+    assert(new java.io.File(pPq, "_params").delete())
+    refuses(pPq, "retrainIvfPqIndex")(
+      Artifacts.loadIvfPqIndex(spark, pPq, cents, cb))
+    refuses(pPq, "retrainIvfPqIndex")(
+      Artifacts.appendIvfPqIndex(embB, embA, pPq, cents, cb))
+    refuses(pPq, "retrainIvfPqIndex")(
+      Artifacts.removeFromIvfPqIndex(takedown, embA, pPq, cents, cb))
+    val (qPq, cbPq, splitsPq) = Artifacts.retrainIvfPqIndex(spark, embA, pPq,
+      nCells = 4, m = 8, ksub = 8)
+    val (idxPq, splitsPqL) = Artifacts.loadIvfPqIndex(spark, pPq, qPq, cbPq)
+    assert(splitsPqL == splitsPq && idxPq.count() == embA.count())
+  }
+
+  test("_params format of all six cell-index families: exact key set " +
+       "and family pin (every index on disk is refused if these drift)") {
+    val cents = Ivf.fitCentroids(embA, nCells = 4)
+    val cb = graft.northstar.Pq.fitCodebooks(embA, m = 8, ksub = 8)
+    val hq = Ivf.HierarchicalQuantizer(
+      Ivf.fitCentroids(embA, nCells = 2, seed = 7L), cents, superProbe = 2)
+    val sq = Ivf.fitStored(embA, nCells = 4, s"${tempDir("pfmt")}/cells")
+    def params(p: String): Map[String, String] = {
+      val lines = java.nio.file.Files.readAllLines(
+        new java.io.File(p, "_params").toPath).asScala
+      lines.map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+        .toMap
+    }
+    val literal = Set("centroids", "maxCell", "vecCol")
+    val hier = literal ++ Set("family", "supers", "superProbe")
+    val stored = Set("family", "cells", "ncells", "dim", "top",
+      "superProbe", "maxCell", "vecCol")
+    val families: Seq[(String, Ivf.CoarseQuantizer, Set[String],
+        Option[String])] = Seq(
+      ("literal", Ivf.LiteralQuantizer(cents), literal, None),
+      ("hier", hq, hier, Some("hier")),
+      ("stored", sq, stored, Some("stored")))
+    for ((name, q, keys, family) <- families) {
+      val pRaw = s"${tempDir("pfmt")}/$name-raw"
+      Artifacts.saveIvfIndex(embA, pRaw, q)
+      val pCodes = s"${tempDir("pfmt")}/$name-codes"
+      Artifacts.saveIvfPqIndex(embA, pCodes, q, cb)
+      for ((p, expected) <- Seq(pRaw -> keys, pCodes -> (keys + "codebooks"))) {
+        val got = params(p)
+        assert(got.keySet == expected, s"$p: ${got.keySet}")
+        assert(got.get("family") == family, s"$p: ${got.get("family")}")
+        assert(got("maxCell") == "100000" && got("vecCol") == "embedding")
+      }
+    }
+  }
+
+  test("the benchmark's call shapes: literal IVF-PQ verbs with positional " +
+       "centroids and named maxCell/knownSplits; a knownSplits load " +
+       "matches a plain load and runs no Spark job") {
+    import org.apache.spark.sql.DataFrame
+    // the shapes perfbench/CorpusIngest.scala compiles against
+    val base = embA
+    val maxCell = 40 // over-cap cells on the union, so the map is non-empty
+    val nCells = 4
+    val (m, ksub, seed) = (8, 8, 42L)
+    val path = s"${tempDir("benchshape")}/idx"
+    val c = Ivf.fitCentroids(base, nCells, seed = seed)
+    val cb = graft.northstar.Pq.fitCodebooks(base, m, ksub, seed = seed)
+    Artifacts.saveIvfPqIndex(base, path, c, cb, "vec_id", "embedding", maxCell)
+    val centroids: Array[Array[Float]] = c
+    val codebooks = cb
+    var splits: Option[Map[Int, Int]] = None
+    def serve(): Unit = {
+      val (plain, plainSplits) = Artifacts.loadIvfPqIndex(spark, path,
+        centroids, codebooks, maxCell = maxCell)
+      var known: (DataFrame, Map[Int, Int]) = null
+      val jobs = jobStarts {
+        known = Artifacts.loadIvfPqIndex(spark, path, centroids, codebooks,
+          maxCell = maxCell, knownSplits = splits)
+      }
+      assert(jobs.isEmpty, s"a knownSplits load ran ${jobs.size} job(s)")
+      assert(known._2 == plainSplits)
+      splits.foreach(s => assert(s == plainSplits))
+      assert(rows(known._1) == rows(plain))
+    }
+    serve()
+    splits = Some(Artifacts.appendIvfPqIndex(embB, base, path, centroids,
+      codebooks, maxCell = maxCell))
+    assert(splits.get.nonEmpty, "the fixture must split a cell")
+    serve()
+    val ids = embB.select("vec_id").as[Long].collect().take(40).toSeq
+    splits = Some(Artifacts.removeFromIvfPqIndex(ids.toDF("vec_id"),
+      emb, path, centroids, codebooks,
+      maxCell = maxCell))
+    serve()
   }
 }

@@ -485,8 +485,8 @@ class IvfSpec extends SparkSpecBase {
     val supers = Ivf.fitCentroids(emb, nCells = 3, seed = 7L)
     val hq = Ivf.HierarchicalQuantizer(supers, centroids, superProbe = 3)
     val path = TestTmp.dir("ivf-hier") + "/idx"
-    Artifacts.saveIvfIndexHier(emb, path, hq)
-    val (index, splits) = Artifacts.loadIvfIndexHier(spark, path, hq)
+    Artifacts.saveIvfIndex(emb, path, hq)
+    val (index, splits) = Artifacts.loadIvfIndex(spark, path, hq)
     val q = emb.filter(col("vec_id") < 5)
     val served = rows(
       Ivf.ivfServeTopKHier(q, index, hq, splits, k = 10, nProbe = 8))
@@ -497,7 +497,7 @@ class IvfSpec extends SparkSpecBase {
     // the _params pin: a different superProbe is a different quantizer —
     // corpus assignment and probing would disagree — so the load refuses
     val e = intercept[IllegalArgumentException] {
-      Artifacts.loadIvfIndexHier(spark, path, hq.copy(superProbe = 2))
+      Artifacts.loadIvfIndex(spark, path, hq.copy(superProbe = 2))
     }
     assert(e.getMessage != null && e.getMessage.nonEmpty)
   }
@@ -678,8 +678,8 @@ class IvfSpec extends SparkSpecBase {
     val hq = Ivf.HierarchicalQuantizer(supers, centroids, superProbe = 3)
     val sq = storedFromHq(hq, "ivf-stored-serve")
     val path = tmpDir("ivf-stored-idx") + "/idx"
-    Artifacts.saveIvfIndexStored(emb, path, sq)
-    val (index, splits) = Artifacts.loadIvfIndexStored(spark, path, sq)
+    Artifacts.saveIvfIndex(emb, path, sq)
+    val (index, splits) = Artifacts.loadIvfIndex(spark, path, sq)
     val q = emb.filter(col("vec_id") < 5)
     val served = rows(
       Ivf.ivfServeTopKStored(q, index, sq, splits, k = 10, nProbe = 8))
@@ -689,7 +689,7 @@ class IvfSpec extends SparkSpecBase {
     assert(served == rows(Similarity.bruteForceTopK(q, emb, k = 10)))
     // params pin: a different superProbe is a different quantizer
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfIndexStored(spark, path, sq.copy(superProbe = 2))
+      Artifacts.loadIvfIndex(spark, path, sq.copy(superProbe = 2))
     }
     // params pin: different cells CONTENT under the same path — the
     // digest is content-derived, so a silently rewritten relation
@@ -699,7 +699,7 @@ class IvfSpec extends SparkSpecBase {
       .cellsRelation(spark).select("cell", "sup", "ccv")
       .write.parquet(otherCells)
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfIndexStored(spark, path,
+      Artifacts.loadIvfIndex(spark, path,
         sq.copy(cellsPath = otherCells))
     }
   }

@@ -645,9 +645,9 @@ class PlanQualitySpec extends SparkSpecBase {
     // and the serve probe prunes the stored index at planning time,
     // like the literal family's serve test
     val path = TestTmp.dir("pq-hier") + "/idx"
-    graft.northstar.Artifacts.saveIvfIndexHier(emb, path, hq)
+    graft.northstar.Artifacts.saveIvfIndex(emb, path, hq)
     val (index, splits) = graft.northstar.Artifacts
-      .loadIvfIndexHier(spark, path, hq)
+      .loadIvfIndex(spark, path, hq)
     val sp = Ivf.ivfServeTopKHier(emb.filter(col("vec_id") < 5), index,
       hq, splits, k = 10, nProbe = 2)
       .queryExecution.executedPlan.toString

@@ -389,12 +389,12 @@ class PqSpec extends SparkSpecBase {
     val embA = emb.filter(col("vec_id") % 2 === 0)
     val embB = emb.filter(col("vec_id") % 2 =!= 0)
     val p = TestTmp.dir("pq-hier-life") + "/idx"
-    Artifacts.saveIvfPqIndexHier(embA, p, hq, cents)
-    Artifacts.appendIvfPqIndexHier(embB, embA, p, hq, cents): Unit
-    val (idxA, splitsA) = Artifacts.loadIvfPqIndexHier(spark, p, hq, cents)
+    Artifacts.saveIvfPqIndex(embA, p, hq, cents)
+    Artifacts.appendIvfPqIndex(embB, embA, p, hq, cents): Unit
+    val (idxA, splitsA) = Artifacts.loadIvfPqIndex(spark, p, hq, cents)
     val pU = TestTmp.dir("pq-hier-life") + "/idx"
-    Artifacts.saveIvfPqIndexHier(emb, pU, hq, cents)
-    val (idxU, splitsU) = Artifacts.loadIvfPqIndexHier(spark, pU, hq, cents)
+    Artifacts.saveIvfPqIndex(emb, pU, hq, cents)
+    val (idxU, splitsU) = Artifacts.loadIvfPqIndex(spark, pU, hq, cents)
     assert(splitsA == splitsU)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell", "codes")))
@@ -403,12 +403,12 @@ class PqSpec extends SparkSpecBase {
     assert(served == rows(Pq.ivfPqTopKHier(q, emb, hq, cents,
       k = 10, nProbe = 3, rerank = 50)))
     // takedown: removing the appended half restores the embA-only index
-    Artifacts.removeFromIvfPqIndexHier(embB.select("vec_id"), embA, p,
+    Artifacts.removeFromIvfPqIndex(embB.select("vec_id"), embA, p,
       hq, cents): Unit
     val p0 = TestTmp.dir("pq-hier-life") + "/idx"
-    Artifacts.saveIvfPqIndexHier(embA, p0, hq, cents)
-    val (idx0, _) = Artifacts.loadIvfPqIndexHier(spark, p0, hq, cents)
-    val (idxR, _) = Artifacts.loadIvfPqIndexHier(spark, p, hq, cents)
+    Artifacts.saveIvfPqIndex(embA, p0, hq, cents)
+    val (idx0, _) = Artifacts.loadIvfPqIndex(spark, p0, hq, cents)
+    val (idxR, _) = Artifacts.loadIvfPqIndex(spark, p, hq, cents)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idx0.select("neighbor_id", "cell", "subcell", "codes")))
   }
@@ -447,14 +447,14 @@ class PqSpec extends SparkSpecBase {
     val embA = emb.filter(col("vec_id") % 2 === 0)
     val embB = emb.filter(col("vec_id") % 2 =!= 0)
     val p = TestTmp.dir("pq-stored-life") + "/idx"
-    Artifacts.saveIvfPqIndexStored(embA, p, sq, cents)
-    Artifacts.appendIvfPqIndexStored(embB, embA, p, sq, cents): Unit
+    Artifacts.saveIvfPqIndex(embA, p, sq, cents)
+    Artifacts.appendIvfPqIndex(embB, embA, p, sq, cents): Unit
     val (idxA, splitsA) =
-      Artifacts.loadIvfPqIndexStored(spark, p, sq, cents)
+      Artifacts.loadIvfPqIndex(spark, p, sq, cents)
     val pU = TestTmp.dir("pq-stored-life") + "/idx"
-    Artifacts.saveIvfPqIndexStored(emb, pU, sq, cents)
+    Artifacts.saveIvfPqIndex(emb, pU, sq, cents)
     val (idxU, splitsU) =
-      Artifacts.loadIvfPqIndexStored(spark, pU, sq, cents)
+      Artifacts.loadIvfPqIndex(spark, pU, sq, cents)
     assert(splitsA == splitsU)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell", "codes")))
@@ -465,24 +465,24 @@ class PqSpec extends SparkSpecBase {
     // ... and == the hier serve on identical content through the
     // artifact layer
     val pH = TestTmp.dir("pq-stored-life") + "/idx"
-    Artifacts.saveIvfPqIndexHier(emb, pH, hq, cents)
-    val (idxH, splitsH) = Artifacts.loadIvfPqIndexHier(spark, pH, hq, cents)
+    Artifacts.saveIvfPqIndex(emb, pH, hq, cents)
+    val (idxH, splitsH) = Artifacts.loadIvfPqIndex(spark, pH, hq, cents)
     assert(rows(Pq.ivfPqServeTopKStored(q, idxU, emb, sq, splitsU,
         cents, k = 10, nProbe = 3, rerank = 50))
       == rows(Pq.ivfPqServeTopKHier(q, idxH, emb, hq, splitsH,
         cents, k = 10, nProbe = 3, rerank = 50)))
     // takedown: removing the appended half restores the embA-only index
-    Artifacts.removeFromIvfPqIndexStored(embB.select("vec_id"), embA, p,
+    Artifacts.removeFromIvfPqIndex(embB.select("vec_id"), embA, p,
       sq, cents): Unit
     val p0 = TestTmp.dir("pq-stored-life") + "/idx"
-    Artifacts.saveIvfPqIndexStored(embA, p0, sq, cents)
-    val (idx0, _) = Artifacts.loadIvfPqIndexStored(spark, p0, sq, cents)
-    val (idxR, _) = Artifacts.loadIvfPqIndexStored(spark, p, sq, cents)
+    Artifacts.saveIvfPqIndex(embA, p0, sq, cents)
+    val (idx0, _) = Artifacts.loadIvfPqIndex(spark, p0, sq, cents)
+    val (idxR, _) = Artifacts.loadIvfPqIndex(spark, p, sq, cents)
     assert(rows(idxR.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idx0.select("neighbor_id", "cell", "subcell", "codes")))
     // cross-family params refusal on the same path
     intercept[IllegalArgumentException] {
-      Artifacts.loadIvfPqIndexHier(spark, p, hq, cents)
+      Artifacts.loadIvfPqIndex(spark, p, hq, cents)
     }: Unit
     // ingest-side screen: the stored form equals the hier form on
     // identical content (same index rows, same probed cells, same ADC

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * distinct ids) and runs the heavyweight operators, printing row counts
   * and wall times. Not part of the driver contract — a local check that
   * plan shapes survive an order-of-magnitude growth without memory
-  * blowups or quadratic cliffs. Usage: runMain graft.ScaleProbe
+  * blowups or quadratic cliffs. Usage: sbt "Test/runMain graft.ScaleProbe"
   */
 object ScaleProbe {
 
@@ -1479,7 +1479,7 @@ object ScaleProbe {
     * measure-first gate): after the census de-proportionalization,
     * does the stored family's build/save/append lifecycle carry any
     * surviving cell-proportional DRIVER cost? Prices fitStored +
-    * saveIvfIndexStored + appendIvfIndexStored at 4096 vs 16384 cells
+    * saveIvfIndex + appendIvfIndex (stored family) at 4096 vs 16384 cells
     * at MATCHED occupancy (rows scale with cells, 128 rows/cell), so
     * the per-row mutation cost must stay ~flat across the 4× cell
     * growth — a superlinear per-row cliff would say some
@@ -1548,10 +1548,10 @@ object ScaleProbe {
         }
         val idx = new java.io.File(scratch, "idx").toString
         val (_, tSave) = timed(f"save      nCells=$nCells%-6d") {
-          Artifacts.saveIvfIndexStored(corpus, idx, sq)
+          Artifacts.saveIvfIndex(corpus, idx, sq)
         }
         val (_, tApp) = timed(f"append8pc nCells=$nCells%-6d") {
-          Artifacts.appendIvfIndexStored(incoming, idx, sq)
+          Artifacts.appendIvfIndex(incoming, idx, sq)
         }
         times((nCells, "fit")) = tFit
         times((nCells, "save")) = tSave
