@@ -64,7 +64,7 @@ class ArtifactsSpec extends SparkSpecBase {
     val other = Seq((1L, "zz zz zz zz qq qq")).toDF("doc_id", "text")
     assert(Artifacts.bpeMergesFor(other, key, rounds = 3) == first)
     // a different rounds value under the same corpus key is a DIFFERENT
-    // artifact (rounds rides in the path AND the pinned column)
+    // artifact (rounds rides in the path AND the _params pin)
     val r2 = Artifacts.bpeMergesFor(docs, key, rounds = 2)
     assert(r2 == first.take(2))
   }
@@ -121,9 +121,9 @@ class ArtifactsSpec extends SparkSpecBase {
 
   test("EMPTY semantic-pair artifact still validates pinned parameters at load") {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // zero pairs crossed the threshold: row-borne __pins have no rows to
-    // check, so the _params sidecar must carry the validation — without
-    // it an empty list would serve 'no duplicates' under ANY threshold
+    // zero pairs crossed the threshold: there are no rows to check, so
+    // the _params sidecar carries the validation — without it an empty
+    // list would serve 'no duplicates' under ANY threshold
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("doc_a", LongType),
@@ -221,7 +221,7 @@ class ArtifactsSpec extends SparkSpecBase {
       Artifacts.loadWinnowSketch(spark, path, k = 7, window = 4)
     }.getMessage.contains("k=5"))
     // the _params sidecar makes the pin hold even for an EMPTY sketch
-    // (the row-borne head probe is vacuous there — code-review r13)
+    // (code-review r13)
     val emptyPath = s"${tempDir("winart")}/empty"
     Artifacts.saveWinnowSketch(
       graft.northstar.Dedup.winnowIndex(docs.limit(0)), emptyPath)
@@ -290,8 +290,8 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(intercept[IllegalArgumentException] {
       Artifacts.loadBoilerplateLines(spark, path, maxDocFreq = 5)
     }.getMessage.contains("10"))
-    // an EMPTY set (legitimately zero rows at a high cut) still pins:
-    // the row-borne check is vacuous there (code-review r13)
+    // an EMPTY set (legitimately zero rows at a high cut) still pins
+    // (code-review r13)
     val emptyPath = s"${tempDir("boilart")}/empty"
     Artifacts.saveBoilerplateLines(
       TextAnalysis.boilerplateLines(docs, maxDocFreq = 1000000), emptyPath,
@@ -320,7 +320,7 @@ class ArtifactsSpec extends SparkSpecBase {
     val other = cfg.copy(minQuality = Some(0.9))
     assert(intercept[IllegalArgumentException] {
       Artifacts.loadFrozenCuration(spark, path, other.toString)
-    }.getMessage.contains("frozen from config"))
+    }.getMessage.contains("cfg="))
   }
 
   test("semantic pair artifact: stored pairs equal the direct list; both collapse variants identical through the store; mismatch fails loudly") {
@@ -499,11 +499,8 @@ class ArtifactsSpec extends SparkSpecBase {
   test("stale destination without _SUCCESS is cleared and retrained (crashed-trainer recovery)") {
     val key = s"artifacts-spec-stale-${System.nanoTime()}"
     val first = Artifacts.bpeMergesFor(docs, key, rounds = 3)
-    // locate the published artifact dir (pathFor layout: kind-md5(key))
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$key-r3".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dst = new java.io.File(
-      sys.props("graft.artifacts.root"), s"bpe-$md")
+    // locate the published artifact dir through the store's own keying
+    val dst = new java.io.File(Artifacts.pathFor("bpe", s"$key-r3"))
     assert(dst.isDirectory, s"expected artifact at $dst")
     // simulate a crashed trainer: destination exists but has no _SUCCESS
     assert(new java.io.File(dst, "_SUCCESS").delete())
@@ -513,6 +510,96 @@ class ArtifactsSpec extends SparkSpecBase {
     val retrained = Artifacts.bpeMergesFor(other, key, rounds = 3)
     assert(new java.io.File(dst, "_SUCCESS").exists(), "retrain must republish")
     assert(retrained != first, "recovery must retrain, not serve the wreck")
+  }
+
+  test("pathFor folds the layout Version into its digest: an overridden " +
+       "store root never serves another layout version's entries") {
+    def md5(s: String): String = java.security.MessageDigest
+      .getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val key = "artifacts-spec-version-key"
+    val dst = new java.io.File(Artifacts.pathFor("bpe", key))
+    // the test build overrides the root, so the root's own name carries
+    // no version — the digest must
+    assert(dst.getParent == sys.props("graft.artifacts.root"))
+    assert(dst.getName != s"bpe-${md5(key)}",
+      "an unversioned digest would serve an older layout's entry")
+    assert(dst.getName == s"bpe-${md5(s"${Artifacts.Version}/$key")}")
+    // the versioned name is still a store entry: pruneStore collects it
+    val root = new java.io.File(tempDir("versionprune"))
+    val entry = new java.io.File(root, dst.getName)
+    assert(entry.mkdirs() && entry.setLastModified(0L))
+    assert(Artifacts.pruneStore(root, ttlMs = 1000L, maxEntries = 8) == 1)
+    assert(!entry.exists())
+  }
+
+  test("an EMPTY BPE merge table or bigram head still refuses a " +
+       "different rounds/topK at load") {
+    import org.apache.spark.sql.types._
+    val bpe = s"${tempDir("emptypin")}/bpe"
+    Artifacts.saveBpeMerges(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("step", LongType),
+        StructField("lhs", StringType), StructField("rhs", StringType),
+        StructField("cnt", LongType)))), bpe, rounds = 3)
+    assert(Artifacts.loadBpeMerges(spark, bpe, rounds = 3).isEmpty)
+    assert(intercept[IllegalArgumentException] {
+      Artifacts.loadBpeMerges(spark, bpe, rounds = 5)
+    }.getMessage.contains("rounds=3"))
+    val bg = s"${tempDir("emptypin")}/bigram"
+    Artifacts.saveBigramHead(spark, Map.empty[String, Long], bg, topK = 10)
+    assert(Artifacts.loadBigramHead(spark, bg, topK = 10).isEmpty)
+    assert(intercept[IllegalArgumentException] {
+      Artifacts.loadBigramHead(spark, bg, topK = 20)
+    }.getMessage.contains("topK=10"))
+  }
+
+  test("_params refuses a caller string it cannot store: a line break " +
+       "in a pinned value fails the save before anything is written") {
+    val labels = Seq((1L, 1L)).toDF("doc_id", "cluster_id")
+    val p = s"${tempDir("badpin")}/labels"
+    val e = intercept[IllegalArgumentException] {
+      Artifacts.saveCollapseLabels(labels, p, "a\nb")
+    }
+    assert(e.getMessage.contains("line breaks"), e.getMessage)
+    assert(!new java.io.File(p).exists(), "a refused pin must write nothing")
+    val pw = s"${tempDir("badpin")}/probe"
+    intercept[IllegalArgumentException] {
+      Artifacts.saveProbeWeights(spark, Seq(1L, 2L), pw, iters = 2,
+        splitAt = 5, labelCol = "label\r")
+    }
+    assert(!new java.io.File(pw).exists())
+  }
+
+  test("a repeat load of a semantic pair, semantic label, collapse label, " +
+       "winnow sketch or boilerplate artifact runs zero Spark jobs") {
+    import graft.northstar.Dedup
+    val d = tempDir("loadjobs")
+    Artifacts.saveSemanticPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
+      s"$d/pairs", 3000L, "ck")
+    Artifacts.saveSemanticLabels(Seq((1L, 1L)).toDF("vec_id", "cluster_id"),
+      s"$d/semlabels", 3000L, "ck")
+    Artifacts.saveCollapseLabels(Seq((1L, 1L)).toDF("doc_id", "cluster_id"),
+      s"$d/cclabels", "doc_id")
+    Artifacts.saveWinnowSketch(Dedup.winnowIndex(docs.limit(20)),
+      s"$d/winnow")
+    Artifacts.saveBoilerplateLines(Seq("h").toDF("nh"), s"$d/boiler", 10L)
+    val loads: Seq[(String, () => Any)] = Seq(
+      "semantic pairs" -> (() =>
+        Artifacts.loadSemanticPairs(spark, s"$d/pairs", 3000L, "ck")),
+      "semantic labels" -> (() => Artifacts.loadSemanticLabels(spark,
+        s"$d/semlabels", "vec_id", 3000L, "ck")),
+      "collapse labels" -> (() =>
+        Artifacts.loadCollapseLabels(spark, s"$d/cclabels", "doc_id")),
+      "winnow sketch" -> (() =>
+        Artifacts.loadWinnowSketch(spark, s"$d/winnow", k = 5, window = 4)),
+      "boilerplate" -> (() =>
+        Artifacts.loadBoilerplateLines(spark, s"$d/boiler", 10L)))
+    for ((name, load) <- loads) {
+      load(): Unit // the first load infers and caches the schema
+      val jobs = jobStarts { load(): Unit }
+      assert(jobs.isEmpty, s"a repeat $name load ran ${jobs.size} job(s)")
+    }
   }
 
   test("winnowSketchFor serves by loading the stored index, not a re-sketch") {
@@ -1277,119 +1364,218 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rq.cellsCompacted == 0, rq.toString)
   }
 
-  test("maintainIndex migrates legacy drift sidecars on first contact: " +
-       "text drift_base -> parquet, torn drift.log lines dropped " +
-       "(VERDICT r18 task 5)") {
+  /** Replace a saved cell index's parquet `drift_base` with the older
+    * builds' "cell=count" text form carrying `lines`, or — when empty —
+    * with the census itself in that form; returns the census.
+    */
+  private def forgeTextDriftBase(p: String,
+                                 lines: Seq[String] = Nil): Seq[(Int, Long)] = {
+    val baseDir = new java.io.File(p, "drift_base")
+    val census = spark.read.parquet(baseDir.toString).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    Artifacts.deleteRec(baseDir)
+    val text = if (lines.nonEmpty) lines
+      else census.map { case (c, n) => s"$c=$n" }
+    java.nio.file.Files.write(baseDir.toPath,
+      text.mkString("", "\n", "\n").getBytes("UTF-8"))
+    census
+  }
+
+  test("maintainIndex canonicalizes a torn drift.log under the marker " +
+       "mutex; a forged text drift_base is refused and retrainIvfIndex " +
+       "unblocks it") {
     val cents = Ivf.fitCentroids(embA, nCells = 4)
     val p = s"${tempDir("ivfmigrate")}/idx"
     Artifacts.saveIvfIndex(embA, p, cents, "vec_id", "embedding", 100000)
     Artifacts.appendIvfIndex(embB, p, cents): Unit
     val histBefore = Artifacts.appendDriftHistory(p)
     assert(histBefore.size == 1, "fixture needs one real history line")
-    // forge the pre-r18 state: parquet drift_base -> "cell=count" text
-    // file; drift.log gains a torn tail line (a crashed append's flush)
+    // forge an older build's text drift_base; drift.log gains a torn
+    // tail line (a crashed append's flush)
+    forgeTextDriftBase(p)
     val baseDir = new java.io.File(p, "drift_base")
-    val census = spark.read.parquet(baseDir.toString).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    Artifacts.deleteRec(baseDir)
-    java.nio.file.Files.write(baseDir.toPath,
-      census.map { case (c, n) => s"$c=$n" }
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
     val logFile = new java.io.File(p, "drift.log")
     java.nio.file.Files.write(logFile.toPath,
       "ts=123 rows=45 drift=0.1".getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.APPEND)
     assert(Artifacts.appendDriftHistory(p) == histBefore,
       "the anchored parse must drop the torn line (fixture sanity)")
-    // first maintenance contact migrates both, under the marker mutex
+    // the maintenance tick canonicalizes the log under the marker mutex
     val r = Artifacts.maintainIndex(spark, p)
     assert(!r.retrained && new java.io.File(p, "_SUCCESS").exists())
-    assert(baseDir.isDirectory,
-      "text drift_base must be rewritten as the parquet relation")
-    assert(spark.read.parquet(baseDir.toString).collect()
-      .map(x => x.getInt(0) -> x.getLong(1)).sortBy(_._1).toSeq
-      == census.toSeq, "migration must preserve the baseline census")
-    import scala.jdk.CollectionConverters._
     val logLines = java.nio.file.Files.readAllLines(logFile.toPath)
       .asScala.toSeq
     assert(logLines.size == 1 && !logLines.exists(_.contains("ts=123")),
       s"torn line must be gone, real line kept: $logLines")
     assert(Artifacts.appendDriftHistory(p) == histBefore,
       "canonicalization must not change what the parse reads")
-    // migrated artifact keeps working: the next append records drift
-    // against the migrated parquet baseline
+    // the text baseline is not migrated: the append refuses it, keeping
+    // the marker up
+    assert(baseDir.isFile)
+    val e = intercept[IllegalArgumentException] {
+      Artifacts.appendIvfIndex(embB, p, cents)
+    }
+    assert(e.getMessage.contains("drift_base") &&
+      e.getMessage.contains("retrainIvfIndex"), e.getMessage)
+    assert(new java.io.File(p, "_SUCCESS").exists())
+    // the retrain rewrites every sidecar; the next append records drift
+    // against the new parquet baseline
+    val (q, _) = Artifacts.retrainIvfIndex(spark, p, nCells = 4)
+    assert(baseDir.isDirectory)
     Artifacts.appendIvfIndex(
       embB.select((col("vec_id") + 7000L).as("vec_id"),
-        col("embedding")), p, cents): Unit
-    assert(Artifacts.appendDriftHistory(p).size == 2)
-    // second contact is a no-op (nothing legacy left to migrate)
+        col("embedding")), p, q): Unit
+    assert(Artifacts.appendDriftHistory(p).size == 1)
+    // a second contact has nothing to canonicalize
     val r2 = Artifacts.maintainIndex(spark, p)
     assert(new java.io.File(p, "_SUCCESS").exists() && !r2.retrained)
   }
 
-  test("legacy drift tolerance (advice r19): a torn/garbage text " +
-       "drift_base neither bricks maintenance nor survives it; " +
-       "parseable lines are kept, an all-torn file falls to no-baseline") {
+  test("a torn or garbage text drift_base never bricks maintenance: the " +
+       "tick still runs, append refuses naming retrainIvfIndex, and a " +
+       "retrain restores a parquet baseline") {
     val cents = Ivf.fitCentroids(embA, nCells = 4)
-    // ALL lines torn: migration must not throw every tick (the old
-    // .toInt threw AFTER the mutex claim — permanent maintenance
-    // failure); it drops the unreadable file and falls through to the
-    // no-baseline path
-    val p = s"${tempDir("ivftorn")}/idx"
-    Artifacts.saveIvfIndex(embA, p, cents, "vec_id", "embedding", 100000)
-    val baseDir = new java.io.File(p, "drift_base")
-    Artifacts.deleteRec(baseDir)
-    java.nio.file.Files.write(baseDir.toPath,
-      "cell=cou\n= \ngarbage\n".getBytes("UTF-8"))
-    val r = Artifacts.maintainIndex(spark, p)
-    assert(!r.retrained && new java.io.File(p, "_SUCCESS").exists())
-    assert(!baseDir.exists(),
-      "an unreadable legacy baseline must be dropped, not re-confused " +
-        "every tick")
-    // the artifact keeps working on the stored-census fallback
-    Artifacts.appendIvfIndex(embB, p, cents): Unit
-    assert(Artifacts.appendDriftHistory(p).size == 1)
-    // MIXED file: the torn line is dropped, survivors migrate
-    val p2 = s"${tempDir("ivfmixed")}/idx"
-    Artifacts.saveIvfIndex(embA, p2, cents, "vec_id", "embedding", 100000)
-    val baseDir2 = new java.io.File(p2, "drift_base")
-    Artifacts.deleteRec(baseDir2)
-    java.nio.file.Files.write(baseDir2.toPath,
-      "2=7\ncell=cou\n3=11\n".getBytes("UTF-8"))
-    Artifacts.maintainIndex(spark, p2): Unit
-    assert(baseDir2.isDirectory, "survivors must migrate to parquet")
-    assert(spark.read.parquet(baseDir2.toString).collect()
-      .map(x => x.getInt(0) -> x.getLong(1)).sortBy(_._1).toSeq
-      == Seq(2 -> 7L, 3 -> 11L))
+    // ALL lines torn, and a MIXED file: maintenance must not throw on
+    // either (an earlier parse threw AFTER the mutex claim — permanent
+    // maintenance failure)
+    for (lines <- Seq(Seq("cell=cou", "= ", "garbage"),
+                      Seq("2=7", "cell=cou", "3=11"))) {
+      val p = s"${tempDir("ivftorn")}/idx"
+      Artifacts.saveIvfIndex(embA, p, cents, "vec_id", "embedding", 100000)
+      forgeTextDriftBase(p, lines)
+      val r = Artifacts.maintainIndex(spark, p)
+      assert(!r.retrained && new java.io.File(p, "_SUCCESS").exists())
+      val e = intercept[IllegalArgumentException] {
+        Artifacts.appendIvfIndex(embB, p, cents)
+      }
+      assert(e.getMessage.contains("retrainIvfIndex"), e.getMessage)
+      assert(new java.io.File(p, "_SUCCESS").exists())
+      val (q, _) = Artifacts.retrainIvfIndex(spark, p, nCells = 4)
+      val baseDir = new java.io.File(p, "drift_base")
+      assert(baseDir.isDirectory, "the retrain must write a parquet baseline")
+      assert(spark.read.parquet(baseDir.toString)
+        .agg(sum("count")).collect()(0).getLong(0) == embA.count())
+      Artifacts.appendIvfIndex(embB, p, q): Unit
+      assert(Artifacts.appendDriftHistory(p).size == 1)
+    }
   }
 
-  test("legacy text drift_base REFUSES to serve (VERDICT r19 task 4): " +
-       "append names maintainIndex as the remedy and republishes the " +
-       "marker; one maintenance tick then unblocks the append") {
+  test("a text drift_base REFUSES to serve: append names retrainIvfIndex " +
+       "as the remedy and keeps the marker up; a retrain then unblocks " +
+       "the append") {
     val cents = Ivf.fitCentroids(embA, nCells = 4)
     val p = s"${tempDir("ivfrefuse")}/idx"
     Artifacts.saveIvfIndex(embA, p, cents, "vec_id", "embedding", 100000)
-    val baseDir = new java.io.File(p, "drift_base")
-    val census = spark.read.parquet(baseDir.toString).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    Artifacts.deleteRec(baseDir)
-    java.nio.file.Files.write(baseDir.toPath,
-      census.map { case (c, n) => s"$c=$n" }
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val census = forgeTextDriftBase(p)
     val e = intercept[IllegalArgumentException] {
       Artifacts.appendIvfIndex(embB, p, cents)
     }
-    assert(e.getMessage.contains("maintainIndex"), e.getMessage)
-    // a refusal, never a wreck: the planning-phase throw republished
-    // the marker, so the index still serves
+    assert(e.getMessage.contains("retrainIvfIndex"), e.getMessage)
+    // a refusal, never a wreck: the index still carries its marker
     assert(new java.io.File(p, "_SUCCESS").exists(),
-      "legacy-sidecar refusal must not strand the artifact markerless")
-    Artifacts.maintainIndex(spark, p): Unit
+      "a sidecar refusal must not strand the artifact markerless")
+    val (q, _) = Artifacts.retrainIvfIndex(spark, p, nCells = 4)
+    val baseDir = new java.io.File(p, "drift_base")
     assert(baseDir.isDirectory)
-    Artifacts.appendIvfIndex(embB, p, cents): Unit
+    assert(spark.read.parquet(baseDir.toString).agg(sum("count"))
+      .collect()(0).getLong(0) == census.map(_._2).sum,
+      "the retrained baseline covers the same corpus")
+    Artifacts.appendIvfIndex(embB, p, q): Unit
     assert(Artifacts.appendDriftHistory(p).size == 1,
-      "post-migration append must record drift against the migrated " +
-        "parquet baseline")
+      "post-retrain append must record drift against the parquet baseline")
+  }
+
+  test("every required sidecar is refused when missing: load, append and " +
+       "remove of an IVF, IVF-PQ and appendable winnow index name the " +
+       "remedy, leave _SUCCESS and the data untouched, and the remedy " +
+       "restores service") {
+    import graft.northstar.Dedup
+    // name + size of every file under `part`: an untouched artifact
+    // keeps exactly this listing
+    def listing(p: String, part: String): Seq[(String, Long)] = {
+      val root = new java.io.File(p, part).toPath
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> f.toFile.length)
+        .toSeq.sorted
+      finally files.close()
+    }
+    def refuses(p: String, part: String, sidecar: String,
+                remedy: String)(body: => Any): Unit = {
+      val before = listing(p, part)
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(sidecar) &&
+        e.getMessage.contains(remedy), e.getMessage)
+      assert(new java.io.File(p, "_SUCCESS").exists(),
+        "the refusal must leave the commit marker up")
+      assert(listing(p, part) == before, s"the refusal must not touch $part/")
+    }
+    // the sidecar gone, or (drift_base) replaced by the older text form
+    def damage(p: String, sidecar: String, text: Boolean): Unit =
+      if (text) forgeTextDriftBase(p): Unit
+      else Artifacts.deleteRec(new java.io.File(p, sidecar))
+    val cellSidecars = Seq("_splits" -> false, "_schemas" -> false,
+      "drift_total" -> false, "drift_base" -> false, "drift_base" -> true)
+    val takedown = embA.select("vec_id").limit(5)
+
+    val cents = Ivf.fitCentroids(embA, nCells = 4)
+    val pRaw = s"${tempDir("sidecars")}/raw"
+    Artifacts.saveIvfIndex(embA, pRaw, cents, "vec_id", "embedding", 100000)
+    var q: Ivf.CoarseQuantizer = Ivf.LiteralQuantizer(cents)
+    for ((sidecar, text) <- cellSidecars) {
+      damage(pRaw, sidecar, text)
+      refuses(pRaw, "index", sidecar, "retrainIvfIndex")(
+        Artifacts.loadIvfIndex(spark, pRaw, q))
+      refuses(pRaw, "index", sidecar, "saveIvfIndex")(
+        Artifacts.appendIvfIndex(embB, pRaw, q))
+      refuses(pRaw, "index", sidecar, "retrainIvfIndex")(
+        Artifacts.removeFromIvfIndex(takedown, pRaw, q))
+      val (q2, splits) = Artifacts.retrainIvfIndex(spark, pRaw, nCells = 4)
+      q = q2
+      val (idx, splitsL) = Artifacts.loadIvfIndex(spark, pRaw, q)
+      assert(splitsL == splits && idx.count() == embA.count())
+    }
+
+    val cb = graft.northstar.Pq.fitCodebooks(embA, m = 8, ksub = 8)
+    val pPq = s"${tempDir("sidecars")}/pq"
+    Artifacts.saveIvfPqIndex(embA, pPq, cents, cb, "vec_id", "embedding",
+      100000)
+    var qPq: Ivf.CoarseQuantizer = Ivf.LiteralQuantizer(cents)
+    var cbPq = cb
+    for ((sidecar, text) <- cellSidecars) {
+      damage(pPq, sidecar, text)
+      refuses(pPq, "index", sidecar, "retrainIvfPqIndex")(
+        Artifacts.loadIvfPqIndex(spark, pPq, qPq, cbPq))
+      refuses(pPq, "index", sidecar, "saveIvfPqIndex")(
+        Artifacts.appendIvfPqIndex(embB, embA, pPq, qPq, cbPq))
+      refuses(pPq, "index", sidecar, "retrainIvfPqIndex")(
+        Artifacts.removeFromIvfPqIndex(takedown, embA, pPq, qPq, cbPq))
+      val (q2, cb2, splits) = Artifacts.retrainIvfPqIndex(spark, embA, pPq,
+        nCells = 4, m = 8, ksub = 8)
+      qPq = q2; cbPq = cb2
+      val (idx, splitsL) = Artifacts.loadIvfPqIndex(spark, pPq, qPq, cbPq)
+      assert(splitsL == splits && idx.count() == embA.count())
+    }
+
+    val base = docs.filter(col("doc_id") % 4 === 0)
+    val pW = s"${tempDir("sidecars")}/winnow"
+    Artifacts.saveWinnowIndexAppendable(base, pW, maxBucket = 100)
+    val served = rows(Artifacts.loadWinnowIndexAppendable(spark, pW,
+      maxBucket = 100))
+    for (sidecar <- Seq("_params", "_schemas")) {
+      damage(pW, sidecar, text = false)
+      val remedy = "saveWinnowIndexAppendable"
+      refuses(pW, "rows", sidecar, remedy)(
+        Artifacts.loadWinnowIndexAppendable(spark, pW, maxBucket = 100))
+      refuses(pW, "rows", sidecar, remedy)(Artifacts.appendWinnowIndex(
+        docs.filter(col("doc_id") % 4 === 1), pW, maxBucket = 100))
+      refuses(pW, "rows", sidecar, remedy)(Artifacts.removeFromWinnowIndex(
+        base.select("doc_id").limit(3), pW, maxBucket = 100))
+      Artifacts.saveWinnowIndexAppendable(base, pW, maxBucket = 100)
+      assert(rows(Artifacts.loadWinnowIndexAppendable(spark, pW,
+        maxBucket = 100)) == served)
+    }
+    assert(served == rows(Dedup.winnowIndex(base, maxBucket = 100)))
   }
 
   test("stored image fingerprint index (VERDICT r19 task 2): " +
