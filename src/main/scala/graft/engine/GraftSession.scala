@@ -8,8 +8,29 @@ import org.apache.spark.sql.SparkSession
   * date semantics, and ns-parquet tolerance. On a real cluster the same
   * settings apply with shufflePartitions sized to total cores (or left to
   * AQE's coalescing with a high initial value).
+  *
+  * The codegen cache is sized to [[CodegenCacheEntries]]. Spark keeps the
+  * classes whole-stage codegen compiled in one JVM-wide LRU cache, and a
+  * repeated plan reuses its class only while the cache still holds it.
+  * A medallion run (Full-Refresh load, then a tick, each with the gold
+  * refresh) generates about 200 distinct classes and a corpus ingest run
+  * about 230. Spark's default of 100 would evict every class before the
+  * next tick asks for it again, and each tick would recompile its whole
+  * plan set. The cache takes its size once per JVM, from the session
+  * that first generates code; a later session's value never applies.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: about four times the classes
+    * one medallion or corpus ingest run generates, so a larger table set
+    * still fits, and the classes of per-tick literals (such as the
+    * watermark filter, about ten a tick) age out of the LRU instead of
+    * evicting the tick's reusable plans.
+    */
+  val CodegenCacheEntries = 1000
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -20,6 +41,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
       .getOrCreate()
     // getOrCreate silently IGNORES every config above when any session
     // already exists in the JVM — the caller would run with 200 shuffle
@@ -55,6 +77,16 @@ object GraftSession {
       Console.err.println(
         "[graft] WARN: reusing an existing session; overrode session " +
           s"configs (${changed.mkString("; ")})")
+    // the codegen cache bound is a STATIC conf: `conf.set` throws on it,
+    // and the JVM's cache was sized when the session that came back
+    // first generated code, so a smaller live value cannot be raised
+    val cacheEntries = spark.conf.get(CodegenCacheKey).toInt
+    if (cacheEntries < CodegenCacheEntries)
+      Console.err.println(
+        s"[graft] WARN: reusing an existing session with $CodegenCacheKey=" +
+          s"$cacheEntries; the engine's bound of $CodegenCacheEntries did " +
+          "not apply (static, sized once per JVM), so repeated plans may " +
+          "recompile")
     if (spark.sparkContext.master != s"local[$cores]")
       Console.err.println(
         s"[graft] WARN: reusing existing session with master " +

@@ -13,11 +13,13 @@ import graft.engine.Aggregations.AggSpec
   * reference's status-file gating). Within a stage each table's transform
   * chain is one plan, so Catalyst fuses the selected transforms into one
   * codegen'd pass, but a stage still runs jobs per table before its
-  * writes: extraction's watermark probe, imputeNulls' stats pass. The
-  * tables of a stage are independent, so the stage entry points
-  * (Extraction.runJob, Transforms.transformAll, Tables.writeAll) run
-  * their per-table work concurrently through [[Parallel.map]], and every
-  * table's task is joined before the stage returns or fails — the next
+  * writes: extraction's watermark probe, and imputeNulls' stats pass
+  * unless an earlier Remove Null Rows made it provably zero
+  * (Transforms.pipeline). The tables of a stage are independent, so the
+  * stage entry points (Extraction.runJob, Transforms.transformAll,
+  * Tables.writeAll) run their per-table work concurrently through
+  * [[Parallel.map]], and every table's task is joined before the stage
+  * returns or fails — the next
   * stage never starts beside a straggler of the last. The tables a stage
   * writes are read back by the next without a schema-inference job
   * (Tables.write pins their schemas).

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * Scale notes: every transform here is a narrow, per-row projection — no
   * shuffle, no driver collect — except removeDuplicates (an inherent
   * hash-repartition on all columns) and imputeNulls (one tiny scalar agg job
-  * for the means, then a projection). All safe at 100 TB.
+  * for the means, then a projection; [[pipeline]] skips that job where an
+  * earlier Remove Null Rows already proved every null count zero). All
+  * safe at 100 TB.
   */
 object Transforms {
 
@@ -47,7 +49,14 @@ object Transforms {
     * exactly where pandas would. One agg job + one projection — two jobs
     * total at any scale, not one per column.
     */
-  def imputeNulls(df: DataFrame): DataFrame = {
+  def imputeNulls(df: DataFrame): DataFrame = impute(df, census = true)
+
+  /** [[imputeNulls]]; `census = false` is for a frame known to hold no
+    * null and no NaN in any numeric column, where the census would count
+    * zero everywhere: it builds the same plan with no job (every numeric
+    * column passes through as `col(c)`, the strings still get "N/A").
+    */
+  private def impute(df: DataFrame, census: Boolean): DataFrame = {
     val nums = numericCols(df)
     val strs = stringCols(df)
     val withStrings =
@@ -65,22 +74,23 @@ object Transforms {
     def nanAsNull(c: String) =
       if (floats(c)) when(isnan(col(c)), lit(null)).otherwise(col(c))
       else col(c)
-    val aggs = nums.flatMap { c =>
-      Seq(sum(when(nanAsNull(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"),
-          avg(nanAsNull(c)).as(s"__mean_$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val cols = withStrings.columns.map { c =>
-      if (nums.contains(c)) {
+    // the columns to fill: those with nulls and a defined mean
+    val means: Map[String, Double] = if (!census) Map.empty else {
+      val aggs = nums.flatMap { c =>
+        Seq(sum(when(nanAsNull(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"),
+            avg(nanAsNull(c)).as(s"__mean_$c"))
+      }
+      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      nums.flatMap { c =>
         val nNull = row.getAs[Long](s"__nulls_$c")
-        val mean = Option(row.get(row.fieldIndex(s"__mean_$c")))
-          .map(_.toString.toDouble)
-        (nNull, mean) match {
-          case (n, Some(m)) if n > 0 =>
-            coalesce(nanAsNull(c).cast(DoubleType), lit(m)).as(c)
-          case _ => col(c)
-        }
-      } else col(c)
+        Option(row.get(row.fieldIndex(s"__mean_$c")))
+          .filter(_ => nNull > 0).map(c -> _.toString.toDouble)
+      }.toMap
+    }
+    val cols = withStrings.columns.map { c =>
+      means.get(c).fold(col(c)) { m =>
+        coalesce(nanAsNull(c).cast(DoubleType), lit(m)).as(c)
+      }
     }
     withStrings.select(cols.toSeq: _*)
   }
@@ -193,15 +203,33 @@ object Transforms {
     "Remove Duplicates", "Remove Null Rows", "Impute Nulls",
     "Trim Whitespace", "Standardize Dates", "Combine Names", "Split Names")
 
+  /** The transforms that can put a null back into a frame Remove Null
+    * Rows cleaned: a date that does not parse, a missing second name.
+    */
+  private val addsNulls = Set("Standardize Dates", "Split Names")
+
   /** T8 pipeline composition: apply selected transforms in list order
     * (transformations_code.py:140-148). Unknown names are skipped (the
     * reference indexes a dict of known names only).
+    *
+    * Impute Nulls skips its census job when Remove Null Rows ran earlier
+    * in the list and neither Standardize Dates nor Split Names ran since:
+    * `na.drop("any")` drops NaN as well as null, and no other transform
+    * adds either, so the census would count zero in every column. The
+    * plan it builds is the one a zero census gives, so the output is the
+    * same rows and schema.
     */
   def pipeline(selected: Seq[String])(df: DataFrame): DataFrame =
-    selected.foldLeft(df)((d, name) => registry.get(name).fold(d)(_(d)))
+    selected.foldLeft((df, false)) { case ((d, nullFree), name) =>
+      if (name == "Impute Nulls" && nullFree) (impute(d, census = false), true)
+      else registry.get(name).fold((d, nullFree)) { t =>
+        (t(d), name == "Remove Null Rows" || nullFree && !addsNulls(name))
+      }
+    }._1
 
   /** Whole-table-set map (transformations_code.py:150-162). Building a
-    * table's pipeline can run Spark jobs ([[imputeNulls]]' stats pass),
+    * table's pipeline can run Spark jobs ([[imputeNulls]]' stats pass,
+    * when [[pipeline]] does not skip it),
     * so the tables are built concurrently ([[Parallel.map]]); every table
     * has finished when this returns, and the first failure in table order
     * is rethrown.

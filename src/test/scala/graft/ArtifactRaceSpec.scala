@@ -14,12 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ArtifactRaceSpec extends AnyFunSuite {
 
-  // worker-JVM launch ingredients shared by ALL race tests in this
-  // suite (code-review r17, second pass: the pruner race kept a third
-  // private copy of javaBin/cp after the first extraction)
-  private val javaBin = new java.io.File(new java.io.File(
-    System.getProperty("java.home"), "bin"), "java").getPath
-  private val cp = System.getProperty("java.class.path")
+  // worker-JVM launch ingredients, shared with every forked-JVM suite
+  import ForkedJvm.{addOpens, javaBin, classPath => cp}
 
   /** Shared worker-launch scaffolding of the two append-vs-remove races
     * (code-review r17: the add-opens list, ProcessBuilder wiring, and
@@ -35,15 +31,6 @@ class ArtifactRaceSpec extends AnyFunSuite {
   private def launchMutateWorker(root: java.io.File, path: String,
                                  extraArgs: Seq[String])
       : (Process, java.io.File) = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val out = java.io.File.createTempFile("mutate-race-out", ".txt")
     val pb = new ProcessBuilder(
       (Seq(javaBin) ++ addOpens ++ Seq("-Dspark.ui.enabled=false",

@@ -8,23 +8,15 @@ import java.nio.file.Files
 class MiscSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("GraftSession.local reapplies session-scoped configs to a pre-existing session") {
-    // getOrCreate ignores builder configs when a session already exists
-    // (as it does across every suite in this JVM) — the factory must
-    // re-assert the engine-critical SQLConf settings on what comes back
+  /** `body`, then the shared session's session-scoped configs that
+    * GraftSession.local overrides are put back. */
+  private def restoringSessionConfs(body: => Unit): Unit = {
     val prevTz = spark.conf.get("spark.sql.session.timeZone")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNanos = spark.conf
       .getOption("spark.sql.legacy.parquet.nanosAsLong")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-      spark.conf.set("spark.sql.shuffle.partitions", "200")
-      val s = graft.engine.GraftSession.local(cores = 8)
-      assert(s.sparkContext eq spark.sparkContext) // the same singleton
-      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-      assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
-      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
-    } finally {
+    try body
+    finally {
       spark.conf.set("spark.sql.session.timeZone", prevTz)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       // restore the legacy flag too: leaving it flipped on the shared
@@ -38,6 +30,40 @@ class MiscSpec extends SparkSpecBase {
           spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
       }
     }
+  }
+
+  test("GraftSession.local reapplies session-scoped configs to a pre-existing session") {
+    // getOrCreate ignores builder configs when a session already exists
+    // (as it does across every suite in this JVM) — the factory must
+    // re-assert the engine-critical SQLConf settings on what comes back
+    restoringSessionConfs {
+      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+      spark.conf.set("spark.sql.shuffle.partitions", "200")
+      val s = graft.engine.GraftSession.local(cores = 8)
+      assert(s.sparkContext eq spark.sparkContext) // the same singleton
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    }
+  }
+
+  test("GraftSession.local on a pre-existing session leaves the static codegen cache bound alone and warns") {
+    // a static conf: `conf.set` on it throws, and the shared session was
+    // built without it, so the engine's bound cannot apply here
+    val key = "spark.sql.codegen.cache.maxEntries"
+    assert(spark.conf.get(key) == "100")
+    assert(graft.engine.GraftSession.CodegenCacheEntries > 100)
+    val err = new java.io.ByteArrayOutputStream()
+    restoringSessionConfs {
+      Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+        graft.engine.GraftSession.local(cores = 4)
+      }
+    }
+    assert(spark.conf.get(key) == "100")
+    val warned = err.toString("UTF-8").linesIterator.filter(_.contains(key))
+      .toSeq
+    assert(warned.size == 1 && warned.head.contains("WARN") &&
+      warned.head.contains("did not apply"), err.toString("UTF-8"))
   }
 
   test("S9 CSV sink round-trips with header") {

@@ -65,3 +65,22 @@ object TestTmp {
     d.toString
   }
 }
+
+/** What a suite needs to run a main of the test classpath in a fresh
+  * JVM: the java binary, the classpath, and the module opens Spark 4
+  * needs outside spark-submit (build.sbt's list for forked runs).
+  */
+object ForkedJvm {
+  val javaBin: String = new java.io.File(new java.io.File(
+    System.getProperty("java.home"), "bin"), "java").getPath
+  val classPath: String = System.getProperty("java.class.path")
+  val addOpens: Seq[String] = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar",
+  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+}

@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.{DateParse, Transforms}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** T1–T8 null-path semantics from transformations_code.py:78-148 — the
@@ -63,6 +63,86 @@ class TransformsSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // pandas: mean([1.0, NaN, None]) = 1.0; fillna fills BOTH NaN and None
     assert(out == Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0), out.toString)
+  }
+
+  /** A frame T2 cleans to two rows: a string null, a double NaN, a
+    * double null and an int null each sit on a row of their own. The
+    * date-named and full-name columns give T5 and T7 something to null.
+    */
+  private def dirty = {
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("name", StringType),
+      StructField("score", DoubleType),
+      StructField("qty", IntegerType),
+      StructField("birth_date", StringType),
+      StructField("full_name", StringType),
+    ))
+    spark.createDataFrame(Seq(
+      Row(1L, "a", 1.5, 3, "garbage", "Plato"),
+      Row(2L, null, 2.5, 4, "1999-12-31", "Ada Lovelace"),
+      Row(3L, "c", Double.NaN, 5, "1999-12-31", "Ada Lovelace"),
+      Row(4L, "d", null, 6, "1999-12-31", "Ada Lovelace"),
+      Row(5L, "e", 4.0, null, "1999-12-31", "Ada Lovelace"),
+      Row(6L, "f", 3.0, 7, "1999-12-31", "Ada Lovelace"),
+    ).asJava, schema)
+  }
+
+  /** `selected` built through [[Transforms.pipeline]]: the census jobs
+    * its construction started, and the frame. */
+  private def built(selected: String*) = {
+    var out: DataFrame = null
+    val jobs = jobStarts { out = Transforms.pipeline(selected)(dirty) }
+    (jobs.size, out)
+  }
+
+  test("T8 pipeline: T2 → T3 runs no census job and equals imputeNulls(removeNullRows(df)), nullability included") {
+    val (jobs, out) = built("Remove Null Rows", "Impute Nulls")
+    assert(jobs == 0, s"$jobs census jobs")
+    var expected: DataFrame = null
+    // the census the skip replaces really is a job
+    assert(jobStarts {
+      expected = Transforms.imputeNulls(Transforms.removeNullRows(dirty))
+    }.nonEmpty)
+    assert(out.schema == expected.schema,
+      s"${out.schema.treeString} vs ${expected.schema.treeString}")
+    // T2 dropped the NaN row too; no numeric column widened to double
+    assert(rows(out) == rows(expected))
+    assert(out.collect().map(_.getLong(0)).toSet == Set(1L, 6L))
+    assert(out.schema("qty").dataType == IntegerType)
+    assert(!out.schema("name").nullable) // T3's "N/A" fill still ran
+    // the medallion's full list (T1 and T4 sit in between) skips it too
+    val (allJobs, all) = built(Transforms.names.take(4): _*)
+    assert(allJobs == 0, s"$allJobs census jobs")
+    assert(rows(all) == rows(Transforms.trimWhitespace(expected)))
+  }
+
+  test("T8 pipeline: T5 or T7 between T2 and T3 brings the census back, and T3 still imputes") {
+    for ((between, f) <- Seq[(String, DataFrame => DataFrame)](
+        "Standardize Dates" -> Transforms.standardizeDates,
+        "Split Names" -> Transforms.splitNames)) {
+      val (jobs, out) = built("Remove Null Rows", between, "Impute Nulls")
+      assert(jobs > 0, s"$between: no census job")
+      val expected = Transforms.imputeNulls(f(Transforms.removeNullRows(dirty)))
+      assert(out.schema == expected.schema, between)
+      assert(rows(out) == rows(expected), between)
+      // the null the transform added (an unparseable date, a missing
+      // second name on row 1) was filled
+      val col = if (between == "Split Names") "last_name_split" else "birth_date"
+      assert(out.collect().map(_.getAs[String](col)).contains("N/A"), between)
+    }
+  }
+
+  test("T8 pipeline: T3 with no T2 before it runs the census") {
+    for (selected <- Seq(Seq("Impute Nulls"),
+                         Seq("Trim Whitespace", "Impute Nulls"),
+                         Seq("Impute Nulls", "Remove Null Rows"))) {
+      val (jobs, out) = built(selected: _*)
+      assert(jobs > 0, s"$selected: no census job")
+      val expected = selected.foldLeft(dirty)((d, n) => Transforms.registry(n)(d))
+      assert(out.schema == expected.schema, selected.toString)
+      assert(rows(out) == rows(expected), selected.toString)
+    }
   }
 
   test("T4 trimWhitespace: strips both ends of every string column") {
