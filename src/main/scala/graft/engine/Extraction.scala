@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{ParquetStore, Store}
+import graft.sources.{CsvStore, JsonlStore, ParquetStore, Store}
 
 /** E1–E3: bronze ingest — full refresh and high-watermark incremental load
   * (/root/reference/ETL_Pipeline_Entire/data_extraction.py:28-144).
@@ -13,11 +13,21 @@ import graft.sources.{ParquetStore, Store}
   * string-quotes the value and leans on MySQL implicit casts; we keep the
   * declared comparison semantics — SURVEY.md §7.5.4).
   *
+  * Where the watermark comes from: every load [[runJob]] makes into a
+  * parquet target records the max of the written first column, riding
+  * the write's own row-count observation, in the table layer's per-JVM
+  * reuse memo (`Tables.Written`). While the target's listing is still
+  * the one that write left, the next incremental load takes the
+  * watermark from there and runs no job for it. Otherwise — a new JVM,
+  * a target another writer touched, a JDBC target, a first column that
+  * is not orderable, or the public [[incrementalLoad]] — it probes the
+  * target: one scalar MAX job over the watermark column only
+  * (column-pruned scan).
+  *
   * Scale notes: the incremental filter is a plain predicate on the source
   * scan — Catalyst pushes it into the parquet/JDBC reader, so an
   * incremental pull reads only matching row groups (min/max pruning), not
-  * the full table. The target-side MAX is a scalar agg over the watermark
-  * column only (column-pruned scan). Appends are partitioned parquet writes
+  * the full table. Appends are partitioned parquet writes
   * — no driver bottleneck at any scale.
   */
 object Extraction {
@@ -40,40 +50,24 @@ object Extraction {
     */
   def fullRefresh(source: DataFrame, target: Store,
                   table: String): ExtractResult = {
-    val rows = writeCounted(source)(target.write(_, table, mode = "overwrite"))
+    val (_, rows, _) =
+      Tables.observed(source)(target.write(_, table, mode = "overwrite"))
     ExtractResult(table, "Full Refresh", rows)
-  }
-
-  /** Write `df` through `write` and return the number of rows that write
-    * consumed. The count rides the write's own job as an `Observation`
-    * (the Dedup convergence-statistic discipline): ONE source scan, no
-    * cached copy, and what is reported is exactly what was written — a
-    * second scan both doubles the dominant cost and, for a live JDBC
-    * source, can count rows that were never written (the reference
-    * counts the frame it wrote). `write` must run exactly one action on
-    * the frame it is given; the observation is read only after it
-    * returned, so a failed write throws instead of waiting for metrics.
-    */
-  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    write(df.observe(obs, count(lit(1)).as("rows")))
-    obs.get("rows").asInstanceOf[Long]
   }
 
   /** The rows of `source` strictly past `target`'s high watermark
     * (max of the first column); whole source when the target is absent or
     * empty (null watermark → initial full load, data_extraction.py:67-92).
     */
-  def incrementalRows(source: DataFrame, target: Option[DataFrame]): DataFrame = {
-    val wmCol = source.columns.head
-    val wm = target.flatMap { t =>
-      Option(t.agg(max(col(t.columns.head))).collect()(0).get(0))
-    }
-    wm match {
-      case Some(v) => source.filter(col(wmCol) > lit(v))
-      case None    => source
-    }
-  }
+  def incrementalRows(source: DataFrame, target: Option[DataFrame]): DataFrame =
+    past(source, target.flatMap(probe))
+
+  /** A target's watermark: the max of its first column, None when null. */
+  private def probe(target: DataFrame): Option[Any] =
+    Option(target.agg(max(col(target.columns.head))).collect()(0).get(0))
+
+  private def past(source: DataFrame, watermark: Option[Any]): DataFrame =
+    watermark.fold(source)(v => source.filter(col(source.columns.head) > lit(v)))
 
   /** E2 Incremental Load: append source rows past the target's watermark;
     * missing target → create + full load (data_extraction.py:59-107).
@@ -91,7 +85,7 @@ object Extraction {
                       target: Store, table: String): ExtractResult = {
     val existing = target.readIfExists(spark, table)
     val mode = if (existing.isDefined) "append" else "overwrite"
-    val rows = writeCounted(incrementalRows(source, existing))(
+    val (_, rows, _) = Tables.observed(incrementalRows(source, existing))(
       target.write(_, table, mode))
     ExtractResult(table, "Incremental Load", rows)
   }
@@ -114,21 +108,50 @@ object Extraction {
     * own bronze→silver move). Tables extract concurrently
     * ([[Parallel.map]]); results come back in `jobs` order, and every
     * table has finished when this returns.
+    *
+    * A load into a parquet target goes through the table layer's reuse
+    * memo (`Tables.Written`): a Full Refresh whose source frame has the
+    * fingerprint of the target's recorded overwrite, and whose target
+    * still shows the listing that write left, is skipped and reports
+    * the rows it wrote; an Incremental Load of a source with the
+    * fingerprint of the target's last recorded write (which took every
+    * source row up to a known max) is skipped with 0 rows; and an
+    * Incremental Load takes its watermark from the memo (see the
+    * object's note). Only a source read by one of the engine's file
+    * stores is fingerprinted: a custom [[Store]]'s read could carry a
+    * UDF, whose body no fingerprint sees.
     */
   def runJob(spark: SparkSession, source: Store, target: Store,
              jobs: Seq[TableJob]): Seq[Either[(String, Throwable), ExtractResult]] =
+    runStage(spark, source, target, jobs).map(_.map(_._1))
+
+  /** [[runJob]], each result paired with whether its load was skipped. */
+  private[engine] def runStage(spark: SparkSession, source: Store,
+      target: Store, jobs: Seq[TableJob])
+      : Seq[Either[(String, Throwable), (ExtractResult, Boolean)]] =
     Parallel.map(spark, jobs) { j =>
       try {
         val src = source.read(spark, j.table)
-        Right(j.mode match {
-          case "Incremental Load" => incrementalLoad(spark, src, target, j.table)
-          case "Full Refresh"     => fullRefresh(src, target, j.table)
+        val fp = source match {
+          case _: ParquetStore | _: CsvStore | _: JsonlStore =>
+            Tables.fingerprint(src)
+          case _ => None
+        }
+        Right((j.mode, target) match {
+          case ("Incremental Load", ParquetStore(dir)) =>
+            incrementalRecorded(spark, src, fp, dir, j.table)
+          case ("Full Refresh", ParquetStore(dir)) =>
+            val (w, reused) = Tables.overwriteReusing(src, dir, j.table, fp)
+            (ExtractResult(j.table, j.mode, w.rows), reused)
+          case ("Incremental Load", _) =>
+            (incrementalLoad(spark, src, target, j.table), false)
+          case ("Full Refresh", _) => (fullRefresh(src, target, j.table), false)
           // a catch-all-to-fullRefresh turned a typo'd or re-cased mode
           // string ("incremental load") into mode=overwrite — silently
           // replacing an accumulated incremental target with the
           // source's current window (code-review r13). Unknown modes
           // fail the TABLE (a Left), like any other per-table error.
-          case other => throw new IllegalArgumentException(
+          case (other, _) => throw new IllegalArgumentException(
             s"unknown extraction mode '$other' for ${j.table} " +
               "(expected 'Full Refresh' or 'Incremental Load')")
         })
@@ -139,4 +162,31 @@ object Extraction {
         case scala.util.control.NonFatal(e) => Left(j.table -> e)
       }
     }
+
+  /** E2 into the parquet table `dir/table` through the reuse memo. The
+    * skip is exact: the recorded write of this same source appended (or
+    * wrote) every row past the watermark it used, so every non-null
+    * first-column value of the source is at most the recorded max, and
+    * `past` would select nothing. A recorded max that is null would
+    * select the whole source again, so that load runs.
+    */
+  private def incrementalRecorded(spark: SparkSession, src: DataFrame,
+      fp: Option[String], dir: String,
+      table: String): (ExtractResult, Boolean) = {
+    val last = Tables.lastWrite(spark, dir, table)
+    def result(rows: Long) = ExtractResult(table, "Incremental Load", rows)
+    if (last.exists(w => fp.isDefined && w.fingerprint == fp &&
+        w.max.flatten.isDefined)) (result(0), true)
+    else {
+      // Some(watermark) when the target exists
+      val wm = last.flatMap(_.max)
+        .orElse(ParquetStore(dir).readIfExists(spark, table).map(probe))
+      val w = wm match {
+        case None => Tables.writeRecorded(src, dir, table, "overwrite", fp)
+        case Some(v) =>
+          Tables.writeRecorded(past(src, v), dir, table, "append", fp, v)
+      }
+      (result(w.rows), false)
+    }
+  }
 }

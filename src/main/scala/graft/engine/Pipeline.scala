@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 import graft.engine.Aggregations.AggSpec
+import graft.sources.ParquetStore
 
 /** O1/O4: config-driven pipeline sequencing
   * (/root/reference/ETL_Pipeline_Entire/scheduler.py:185-209, 58-103) —
@@ -12,17 +13,30 @@ import graft.engine.Aggregations.AggSpec
   * Stage boundaries materialize to parquet for replayability (the
   * reference's status-file gating). Within a stage each table's transform
   * chain is one plan, so Catalyst fuses the selected transforms into one
-  * codegen'd pass, but a stage still runs jobs per table before its
-  * writes: extraction's watermark probe, and imputeNulls' stats pass
-  * unless an earlier Remove Null Rows made it provably zero
-  * (Transforms.pipeline). The tables of a stage are independent, so the
-  * stage entry points (Extraction.runJob, Transforms.transformAll,
-  * Tables.writeAll) run their per-table work concurrently through
+  * codegen'd pass, but a stage can still run jobs per table before its
+  * writes: imputeNulls' stats pass, unless an earlier Remove Null Rows
+  * made it provably zero (Transforms.pipeline), and extraction's
+  * watermark probe when the table layer's reuse memo cannot give the
+  * watermark (Extraction). The tables of a stage are independent, so the
+  * stage entry points (Extraction.runJob, Transforms.transformAll and
+  * the table writers) run their per-table work concurrently through
   * [[Parallel.map]], and every table's task is joined before the stage
-  * returns or fails — the next
-  * stage never starts beside a straggler of the last. The tables a stage
-  * writes are read back by the next without a schema-inference job
-  * (Tables.write pins their schemas).
+  * returns or fails — the next stage never starts beside a straggler of
+  * the last. The tables a stage writes are read back by the next without
+  * a schema-inference job (Tables.write pins their schemas).
+  *
+  * A stage rewrites only the outputs whose inputs changed. Every stage
+  * write (the extraction loads, and the mapping, transformation and
+  * aggregation outputs, all frames the engine built itself) goes through
+  * the per-JVM reuse memo in [[Tables]]: an output whose frame has the
+  * fingerprint of its last recorded write — same plan, same confs, same
+  * listing of every file it reads — and whose own listing is unchanged
+  * since that write is left as it is, and no job runs for it. Between
+  * two ticks only the fact tables grow, so the dimension tables and
+  * every output built from them alone are reused. Each stage's detail
+  * says how many outputs it reused. A new JVM recomputes everything
+  * once; the public writers (Tables.write/writeAll, Sql.saveGold) always
+  * write.
   *
   * Time-based scheduling (O2/O3) is driver-side orchestration outside the
   * engine core; the streaming-native upgrade path for recurring incremental
@@ -62,11 +76,13 @@ object Pipeline {
     val statuses = scala.collection.mutable.ArrayBuffer.empty[StageStatus]
 
     // 1. extraction: source → raw
-    val extracted = Extraction.runJob(spark, layers.source, layers.raw,
-      cfg.extraction)
+    val extracted = Extraction.runStage(spark, ParquetStore(layers.source),
+      ParquetStore(layers.raw), cfg.extraction)
     val failures = extracted.collect { case Left((t, e)) => s"$t: ${e.getMessage}" }
+    val reusedRaw = extracted.count(_.exists(_._2))
     statuses += StageStatus("extraction", failures.isEmpty,
-      if (failures.isEmpty) s"${extracted.size} tables" else failures.mkString("; "))
+      if (failures.isEmpty) s"${extracted.size} tables, $reusedRaw reused"
+      else failures.mkString("; "))
     if (failures.nonEmpty) return statuses.toSeq
 
     val rawNames = cfg.extraction.map(_.table)
@@ -94,8 +110,9 @@ object Pipeline {
       mapped =
         if (cfg.mappingEnabled) Mapping.mergeTables(raw, cfg.tableMeta, rawNames)
         else raw
-      Tables.writeAll(mapped, layers.silverMapping)
-      if (cfg.mappingEnabled) s"${mapped.size} outputs" else "skipped (copy)"
+      val reused = Tables.writeAllReusing(mapped, layers.silverMapping)
+      (if (cfg.mappingEnabled) s"${mapped.size} outputs" else "skipped (copy)") +
+        s", $reused reused"
     }) return statuses.toSeq
 
     // 3. transformation: silver_mapping → silver, prefix "transformed"
@@ -105,7 +122,8 @@ object Pipeline {
     if (!stage("transformation") {
       val silverIn = Tables.load(spark, layers.silverMapping, mapped.keys.toSeq)
       transformed = Transforms.transformAll(silverIn, cfg.transforms)
-      Tables.writeAll(transformed, layers.silver, prefix = "transformed")
+      val reused = Tables.writeAllReusing(transformed, layers.silver,
+        prefix = "transformed")
       // bucketed-layout publication: the configured fact tables ALSO land
       // in the catalog pre-shuffled on their join key, so downstream
       // star queries join them with zero Exchange on the fact edge. A
@@ -120,7 +138,7 @@ object Pipeline {
       for ((name, (key, buckets)) <- cfg.bucketBy)
         Bucketing.writeBucketed(transformed(name),
           s"silver_${name}_bucketed", key, buckets)
-      s"${transformed.size} transformed" +
+      s"${transformed.size} transformed, $reused reused" +
         (if (cfg.bucketBy.nonEmpty) s", ${cfg.bucketBy.size} bucketed" else "")
     }) return statuses.toSeq
 
@@ -149,8 +167,9 @@ object Pipeline {
                   None
                 })
       } yield name -> out
-      Tables.writeAll(aggregated, layers.silver, prefix = "agg")
-      s"${aggregated.size} aggregated" +
+      val reused = Tables.writeAllReusing(aggregated, layers.silver,
+        prefix = "agg")
+      s"${aggregated.size} aggregated, $reused reused" +
         (if (skipped.isEmpty) "" else s"; errors: ${skipped.mkString("; ")}")
     }
     statuses.toSeq

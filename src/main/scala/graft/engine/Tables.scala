@@ -49,6 +49,52 @@ object Tables {
     * `event_id`), so nothing loses pushdown — if one ever does, filter on
     * the timestamp column before calling normalize.
     */
+  /** Two per-JVM caches below trust a digest of a path's file listing:
+    * [[schemaCache]] pins the parquet schema a listing was read with, and
+    * the reuse memo ([[written]]) trusts that a listing it recorded still
+    * holds the rows its write left there. The digest is the full 128-bit
+    * MD5 (hex) of the listing's `relative path:size:mtime` entries, read
+    * through the session's Hadoop filesystem like every read and write of
+    * the path (a local-file walk sees nothing under an `hdfs://`, `s3a://`
+    * or `file:` URI). A Spark write always lands fresh part-file names,
+    * so every overwrite or append changes the listing. An outside writer
+    * that replaces files keeping their name, size and mtime is NOT
+    * detected: both caches would go on serving what they hold.
+    */
+  private def qualify(spark: SparkSession, path: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(p))
+  }
+
+  private def hex(algorithm: String, text: String): String =
+    java.security.MessageDigest.getInstance(algorithm)
+      .digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+
+  /** The listing digest of a qualified path; an absent path lists empty. */
+  private def listingDigest(fs: org.apache.hadoop.fs.FileSystem,
+                            root: org.apache.hadoop.fs.Path): String = {
+    import org.apache.hadoop.fs.FileStatus
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory)
+        fs.listStatus(s.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
+      else Seq(s)
+    val listing =
+      try walk(fs.getFileStatus(root))
+        .map(s => s"${s.getPath.toString.stripPrefix(root.toString)}:" +
+          s"${s.getLen}:${s.getModificationTime}")
+        .mkString("|")
+      catch { case _: java.io.FileNotFoundException => "" }
+    hex("MD5", listing)
+  }
+
+  private def listingKey(spark: SparkSession, path: String): String = {
+    val (fs, root) = qualify(spark, path)
+    s"$root#${listingDigest(fs, root)}"
+  }
+
   /** Per-JVM parquet-schema cache (optimization r21, guide §6 — the
     * file-listing-cache class of fix, and the artifact store's
     * `_schemas` discipline applied to the table layer): every
@@ -56,22 +102,16 @@ object Tables {
     * (`mergeSchemasInParallel`), and plan CONSTRUCTION re-runs it per
     * call — the bench pays it for every table reference of every rep
     * of every query, and on an object store each one is a round-trip
-    * before the real read starts. The layer directories are immutable
-    * inputs (the driver contract), so the first read's inferred schema
-    * is pinned per (absolute path) and later reads pass it explicitly
-    * — zero inference jobs. This caches METADATA only; every action
-    * still reads the parquet bytes.
+    * before the real read starts. The first read's inferred schema is
+    * pinned per listing key (the qualified path and its listing digest)
+    * and later reads pass it explicitly — zero inference jobs. This
+    * caches METADATA only; every action still reads the parquet bytes.
     *
-    * The key carries a name:size:mtime listing digest of the path (the
-    * SparkEntry.corpusKey discipline), NOT the bare path: Pipeline
-    * re-reads layer directories it has just rewritten, and a
-    * path-keyed entry would serve the PREVIOUS write's schema. A
-    * rewrite changes the listing, so it re-infers (or is seeded, see
-    * below); stale entries for superseded listings are bounded by
-    * rewrites per JVM. The listing goes through the session's Hadoop
-    * filesystem, like every read and write of the path: a local-file
-    * walk sees nothing under an `hdfs://`, `s3a://` or `file:` URI, and
-    * the key would degrade to the bare path.
+    * Keying on the listing, NOT the bare path: Pipeline re-reads layer
+    * directories it has just rewritten, and a path-keyed entry would
+    * serve the PREVIOUS write's schema. A rewrite changes the listing,
+    * so it re-infers (or is seeded, see below); stale entries for
+    * superseded listings are bounded by rewrites per JVM.
     *
     * [[write]] also SEEDS the cache: an overwrite leaves only files
     * carrying the written frame's schema, which a read infers back made
@@ -86,24 +126,156 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.types.StructType]()
 
-  private def listingKey(spark: SparkSession, path: String): String = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(p)
-    def walk(s: FileStatus): Seq[FileStatus] =
-      if (s.isDirectory)
-        fs.listStatus(s.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
-      else Seq(s)
-    val listing =
-      try walk(fs.getFileStatus(root))
-        .map(s => s"${s.getPath.toString.stripPrefix(root.toString)}:" +
-          s"${s.getLen}:${s.getModificationTime}")
-        .mkString("|")
-      catch { case _: java.io.FileNotFoundException => "" }
-    root.toString + "#" + java.util.Arrays.hashCode(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+  /** What the last recorded write of an output left there (an entry of
+    * the reuse memo, [[written]]):
+    *   - `fingerprint`: of the frame written, when it may be reused
+    *     ([[fingerprint]]);
+    *   - `overwrite`: the write replaced the output (false: appended);
+    *   - `listing`: the output's listing digest right after the write;
+    *   - `rows`: the rows written;
+    *   - `max`: the max of the first column as the output now holds it,
+    *     `Some(None)` when it holds no non-null value, `None` when the
+    *     column is not orderable.
+    */
+  private[graft] final case class Written(fingerprint: Option[String],
+      overwrite: Boolean, listing: String, rows: Long,
+      max: Option[Option[Any]])
+
+  /** Per-JVM reuse memo: qualified output path → [[Written]]. Between
+    * two medallion ticks only the fact tables grow, yet every tick used
+    * to rewrite the dimension tables and every mapping, transform and
+    * aggregate output built from them alone, with the same rows.
+    * Pipeline's stages skip an overwrite whose frame has the fingerprint
+    * of the recorded write while the output still shows the listing
+    * that write left ([[overwriteReusing]]), and Extraction takes its
+    * incremental watermark from `max` instead of a probe job. Every
+    * write of a path drops its entry first; only a recorded write that
+    * succeeded puts one back, so a write that throws leaves nothing to
+    * reuse. Nothing is kept on disk: a new JVM recomputes every output
+    * once.
+    */
+  private val written =
+    new java.util.concurrent.ConcurrentHashMap[String, Written]()
+
+  /** The identity of what `df` computes, for the reuse memo: a SHA-256
+    * over its canonicalized analyzed plan printed in full (ids
+    * normalized, no field elided: Bridge.fullPlanString), its output
+    * schema, the session's SQL confs (the timezone among them) and, per
+    * file scan, the scan's schemas, options and the path:size:mtime of
+    * every file it lists. The transform list, an AggSpec, the mapping
+    * keys and the timezone are all covered, with no lineage passed by
+    * the caller.
+    *
+    * None — never reused — when the plan reads anything but files (a
+    * `LocalRelation`, JDBC, an RDD), holds a nondeterministic
+    * expression (`rand()`), or reads the clock: Spark marks
+    * `current_timestamp()` and its kin deterministic, as they are
+    * constant within one query but not across two.
+    *
+    * A UDF prints by its name only, so its body is not covered: only
+    * frames the engine built, whose UDFs are its own, are fingerprinted
+    * for reuse. The public writers never consult the memo.
+    */
+  private[graft] def fingerprint(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp,
+      CurrentDate, CurrentTime, CurrentTimestampLike, LocalTimestamp}
+    import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    val nodes = df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+    val clock = nodes.exists(_.expressions.exists(_.exists {
+      case _: CurrentTimestampLike | _: CurrentDate | _: CurrentTime |
+           _: LocalTimestamp | _: CurrentBatchTimestamp => true
+      case _ => false
+    }))
+    val scans = nodes.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case i: PartitioningAwareFileIndex =>
+            Some(Seq(i.rootPaths.mkString(","), h.dataSchema.json,
+              h.partitionSchema.json, h.options.toSeq.sorted.mkString(","),
+              i.allFiles().map(f =>
+                s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+                .sorted.mkString("|")).mkString("\n"))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _: LeafNode => None
+    }
+    val deterministic = nodes.forall(_.expressions.forall(_.deterministic))
+    if (clock || !deterministic || scans.contains(None)) None
+    else Some(hex("SHA-256", (Seq(
+      org.apache.spark.sql.graftbridge.Bridge.fullPlanString(df),
+      df.schema.json,
+      df.sparkSession.conf.getAll.toSeq.sorted.mkString("\n")) ++
+      scans.flatten).mkString("\n\u0000\n")))
+  }
+
+  /** The memo's entry for `dir/name` while the output still shows the
+    * listing its recorded write left; None otherwise.
+    */
+  private[graft] def lastWrite(spark: SparkSession, dir: String,
+                               name: String): Option[Written] = {
+    val (fs, root) = qualify(spark, s"$dir/$name.parquet")
+    Option(written.get(root.toString))
+      .filter(_.listing == listingDigest(fs, root))
+  }
+
+  /** Write `df` to `dir/name` ("overwrite" or "append") and record the
+    * write in the memo under `fingerprint`. The row count and the
+    * first column's max ride the write's one job ([[observed]]). An
+    * append's max is the appended rows' max, or `watermark` — the
+    * output's max before the append, which every appended row exceeds —
+    * when it appended no non-null value.
+    */
+  private[engine] def writeRecorded(df: DataFrame, dir: String, name: String,
+      mode: String, fingerprint: Option[String],
+      watermark: Option[Any] = None): Written = {
+    val ((path, listing), rows, max) = observed(df)(put(_, dir, name, mode))
+    val w = Written(fingerprint, mode == "overwrite", listing, rows,
+      if (mode == "overwrite") max else max.map(_.orElse(watermark)))
+    written.put(path, w)
+    w
+  }
+
+  /** Pipeline's sink for one frame the engine built: overwrite `dir/name`
+    * unless the memo's entry for it replaced it with a frame of the same
+    * `fingerprint` and its listing is still the one that write left.
+    * Returns the output's entry and whether it was reused (nothing ran).
+    */
+  private[engine] def overwriteReusing(df: DataFrame, dir: String,
+      name: String, fingerprint: Option[String]): (Written, Boolean) =
+    lastWrite(df.sparkSession, dir, name)
+      .filter(w => w.overwrite && fingerprint.isDefined &&
+        w.fingerprint == fingerprint) match {
+      case Some(w) => (w, true)
+      case None => (writeRecorded(df, dir, name, "overwrite", fingerprint), false)
+    }
+
+  /** Run `write` on `df` with the row count and the max of its first
+    * column riding the write's own job as an `Observation` (the Dedup
+    * convergence-statistic discipline): ONE scan, no cached copy, and
+    * what is reported is exactly what was written — a second scan both
+    * doubles the dominant cost and, for a live JDBC source, can count
+    * rows that were never written. The max is `Some(None)` when no
+    * non-null value was written and `None` when the column is not
+    * orderable. `write` must run exactly one action on the frame it is
+    * given; the observation is read only after it returned, so a failed
+    * write throws instead of waiting for metrics.
+    */
+  private[engine] def observed[B](df: DataFrame)(write: DataFrame => B)
+      : (B, Long, Option[Option[Any]]) = {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val first = df.schema.fields.headOption
+      .filter(f => RowOrdering.isOrderable(f.dataType))
+    val obs = org.apache.spark.sql.Observation()
+    val b = write(df.observe(obs, count(lit(1)).as("rows"),
+      first.map(f => max(col(s"`${f.name.replace("`", "``")}`")).as("max"))
+        .toSeq: _*))
+    val m = obs.get
+    (b, m("rows").asInstanceOf[Long], first.map(_ => Option(m("max"))))
   }
 
   /** Schema-cached parquet read of an immutable-while-referenced path
@@ -211,18 +383,32 @@ object Tables {
     */
   def write(df: DataFrame, dir: String, name: String,
             mode: String = "overwrite"): Unit = {
-    val spark = df.sparkSession
+    put(df, dir, name, mode)
+    ()
+  }
+
+  /** [[write]], returning the qualified output path and the listing
+    * digest the write left. Drops the path's reuse-memo entry first
+    * ([[written]]).
+    */
+  private def put(df: DataFrame, dir: String, name: String,
+                  mode: String): (String, String) = {
     val path = s"$dir/$name.parquet"
+    val (fs, root) = qualify(df.sparkSession, path)
     val schema = org.apache.spark.sql.graftbridge.Bridge.asNullable(df.schema)
+    written.remove(root.toString)
     // seed (the [[schemaCache]] note): an append keeps the older files,
     // so it seeds only when their pinned schema is the one it writes
     val seed = mode.toLowerCase match {
       case "overwrite" => true
-      case "append" => schema == schemaCache.get(listingKey(spark, path))
+      case "append" =>
+        schema == schemaCache.get(s"$root#${listingDigest(fs, root)}")
       case _ => false
     }
     df.write.mode(mode).parquet(path)
-    if (seed) schemaCache.put(listingKey(spark, path), schema)
+    val listing = listingDigest(fs, root)
+    if (seed) schemaCache.put(s"$root#$listing", schema)
+    (root.toString, listing)
   }
 
   /** S10 bulk loader: write every table with a name prefix
@@ -231,11 +417,24 @@ object Tables {
     * returns, and the first failure in table order is rethrown.
     */
   def writeAll(tables: Map[String, DataFrame], dir: String,
-               prefix: String = ""): Unit = {
+               prefix: String = ""): Unit =
+    eachOutput(tables, prefix)(write(_, dir, _))
+
+  /** [[writeAll]] for the frames of a `Pipeline.run` stage, each through
+    * [[overwriteReusing]]. Returns how many outputs were reused.
+    */
+  private[engine] def writeAllReusing(tables: Map[String, DataFrame],
+                                      dir: String, prefix: String = ""): Int =
+    eachOutput(tables, prefix) { (t, name) =>
+      overwriteReusing(t, dir, name, fingerprint(t))._2
+    }.count(identity)
+
+  private def eachOutput[B](tables: Map[String, DataFrame], prefix: String)(
+      f: (DataFrame, String) => B): Seq[B] = {
     val ts = tables.toSeq
-    ts.headOption.foreach { case (_, df) =>
+    ts.headOption.fold(Seq.empty[B]) { case (_, df) =>
       Parallel.map(df.sparkSession, ts) { case (n, t) =>
-        write(t, dir, if (prefix.isEmpty) n else s"${prefix}_$n")
+        f(t, if (prefix.isEmpty) n else s"${prefix}_$n")
       }
     }
   }

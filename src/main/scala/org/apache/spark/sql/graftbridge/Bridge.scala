@@ -82,6 +82,26 @@ object Bridge {
       Map.empty[String, String], Map.empty[String, String])
   }
 
+  /** The canonicalized analyzed plan of `df`, printed in full: no node
+    * or expression elides fields past `spark.sql.debug.maxToStringFields`
+    * and the text is not cut at `spark.sql.maxPlanStringLength`, so two
+    * plans that differ only past either limit print differently. The
+    * print runs under a copy of the session's conf
+    * (`SQLConf.withExistingConf`, private[sql]); the session is not
+    * touched.
+    */
+  def fullPlanString(df: org.apache.spark.sql.Dataset[_]): String = {
+    import org.apache.spark.sql.internal.SQLConf
+    val qe = df.queryExecution
+    val conf = qe.sparkSession.sessionState.conf.clone()
+    conf.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+    conf.unsetConf(SQLConf.MAX_PLAN_STRING_LENGTH)
+    SQLConf.withExistingConf(conf) {
+      qe.analyzed.canonicalized.treeString(verbose = true,
+        addSuffix = false, maxFields = Int.MaxValue, printOperatorId = false)
+    }
+  }
+
   /** `StructType.asNullable` (private[spark]): every field, array
     * element and map value made nullable, recursively — the schema a
     * file-source read of data written with `s` reports.

@@ -7,10 +7,14 @@ import org.apache.spark.metrics.source.CodegenMetrics
 /** Fresh-JVM worker for [[CodegenReuseSpec]]: starts the engine's session
   * with `GraftSession.local`, writes a source of `tables` small tables
   * of distinct schemas under `root`, then runs the same Full-Refresh
-  * `Pipeline.run` over it twice. A class that whole-stage codegen
+  * `Pipeline.run` over it twice. Before the second run every source
+  * table is rewritten with the same rows: new part files give every
+  * table a new listing, so the second run recomputes every output
+  * instead of reusing the first run's. A class that whole-stage codegen
   * compiles is counted by Spark's `CodegenMetrics`; a cache hit is not.
   *
-  * Stdout: `first=<n> second=<m>`, the classes each run compiled.
+  * Stdout: `first=<n> second=<m> reused=<k>`, the classes each run
+  * compiled and the outputs the second run's stages reused.
   */
 object CodegenReuseMain {
 
@@ -42,15 +46,24 @@ object CodegenReuseMain {
         AggSpec(Seq("name"), Seq("v0"), Seq("sum"))).toMap)
     val layers = Pipeline.Layers(src, s"$root/raw", s"$root/silver_mapping",
       s"$root/silver", s"$root/gold")
-    def compiled(): Long = {
+    def compiled(): (Long, Seq[Pipeline.StageStatus]) = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val statuses = Pipeline.run(spark, layers, cfg)
       require(statuses.forall(_.ok), statuses.mkString("; "))
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, statuses)
     }
-    val first = compiled()
-    val second = compiled()
-    println(s"first=$first second=$second")
+    val (first, _) = compiled()
+    for (n <- names) {
+      val path = s"$src/$n.parquet"
+      val t = spark.read.parquet(path)
+      spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+        .write.mode("overwrite").parquet(path)
+    }
+    val (second, statuses) = compiled()
+    val reused = statuses.map(s => "(\\d+) reused".r.findFirstMatchIn(s.detail)
+      .map(_.group(1).toInt)
+      .getOrElse(sys.error(s"no reuse count in: ${s.detail}"))).sum
+    println(s"first=$first second=$second reused=$reused")
     spark.stop()
   }
 }

@@ -27,9 +27,13 @@ class CodegenReuseSpec extends AnyFunSuite {
     }
     val report = new String(java.nio.file.Files.readAllBytes(out.toPath), "UTF-8")
     assert(p.exitValue() == 0, s"worker failed:\n$report")
-    val m = "first=(\\d+) second=(\\d+)".r.findFirstMatchIn(report)
+    val m = "first=(\\d+) second=(\\d+) reused=(\\d+)".r.findFirstMatchIn(report)
       .getOrElse(fail(s"no compile-count report:\n$report"))
     val (first, second) = (m.group(1).toLong, m.group(2).toLong)
+    // the worker rewrote every source table before the second run, so
+    // every output was recomputed: the count is of classes the second
+    // run's plans needed, not of a run that skipped them
+    assert(m.group(3) == "0", s"the second run reused ${m.group(3)} outputs")
     info(s"classes compiled: first run $first, second run $second")
     // more classes than Spark's default cache of 100 holds, so the check
     // sees an undersized cache evict them between the runs
