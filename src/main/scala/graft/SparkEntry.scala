@@ -1549,12 +1549,10 @@ object SparkEntry {
         concat(col("text"), lit(" quoted with appended commentary")).as("text"))
       val path = Artifacts.pathFor("winnowappend",
         s"${corpusKey(dir, "documents")}-$jvmTag")
-      Artifacts.saveWinnowIndexAppendable(
-        corpus.filter(col("doc_id") % 2 === 0), path, maxBucket = 100)
-      Artifacts.appendWinnowIndex(
-        corpus.filter(col("doc_id") % 2 =!= 0), path, maxBucket = 100)
-      Dedup.winnowPairsAgainstIndex(incoming,
-        Artifacts.loadWinnowIndexAppendable(s, path, maxBucket = 100),
+      val index = Artifacts.CappedIndex.winnow(maxBucket = 100)
+      index.save(corpus.filter(col("doc_id") % 2 === 0), path)
+      index.append(corpus.filter(col("doc_id") % 2 =!= 0), path)
+      Dedup.winnowPairsAgainstIndex(incoming, index.load(s, path),
         maxBucket = 100)
     }),
     // dedup-side takedown REMOVAL (the ns_knn_ivfpq_remove pattern):
@@ -1573,12 +1571,10 @@ object SparkEntry {
         concat(col("text"), lit(" quoted with appended commentary")).as("text"))
       val path = Artifacts.pathFor("winnowremove",
         s"${corpusKey(dir, "documents")}-$jvmTag")
-      Artifacts.saveWinnowIndexAppendable(corpus.unionAll(extra), path,
-        maxBucket = 100)
-      Artifacts.removeFromWinnowIndex(extra.select("doc_id"), path,
-        maxBucket = 100)
-      Dedup.winnowPairsAgainstIndex(incoming,
-        Artifacts.loadWinnowIndexAppendable(s, path, maxBucket = 100),
+      val index = Artifacts.CappedIndex.winnow(maxBucket = 100)
+      index.save(corpus.unionAll(extra), path)
+      index.remove(extra.select("doc_id"), path)
+      Dedup.winnowPairsAgainstIndex(incoming, index.load(s, path),
         maxBucket = 100)
     }),
     // duplicated-span REMOVAL (the remedy half of substring dedup, Lee
@@ -2571,9 +2567,9 @@ object SparkEntry {
     }),
     // STORED image-fingerprint serve (VERDICT r19 task 2): the corpus
     // PNGs are decoded+hashed once into the train-once phash artifact
-    // (Artifacts.imageHashIndexFor), and the ingest screen joins the
-    // STORED 8-byte fingerprints — a restart never re-decodes the
-    // corpus. The incoming batch is every doc's flipped-cell copy
+    // (Artifacts.CappedIndex.imageHash().indexFor), and the ingest
+    // screen joins the STORED 8-byte fingerprints — a restart never
+    // re-decodes the corpus. The incoming batch is every doc's flipped-cell copy
     // (Hamming <= 1 by the fixture's closed form), so the screen's
     // full output — every (incoming, corpus) pair within Hamming 3 —
     // replays in DuckDB as bit arithmetic over md5(doc_id), hash-exact
@@ -2586,8 +2582,8 @@ object SparkEntry {
       val incoming = ids.map(id => (id + (1L << 40),
         Multimodal.syntheticPatternPng(id, flipTopLeft = true)))
         .toDF("asset_id", "payload")
-      val sigs = graft.northstar.Artifacts.imageHashIndexFor(
-        corpus, cacheKey = corpusKey(dir, "documents"))
+      val sigs = graft.northstar.Artifacts.CappedIndex.imageHash()
+        .indexFor(corpus, cacheKey = corpusKey(dir, "documents"))
       Multimodal.imageDupIncoming(incoming, sigs)
         .withColumn("hamming", col("hamming").cast("long"))
     }),
@@ -2618,10 +2614,10 @@ object SparkEntry {
         .toDF("asset_id", "payload")
       val path = Artifacts.pathFor("phashappend",
         s"${corpusKey(dir, "documents")}-$jvmTag")
-      Artifacts.saveImageHashIndex(evens, path)
-      Artifacts.appendImageHashIndex(odds, path)
-      Multimodal.imageDupIncoming(incoming,
-          Artifacts.loadImageHashIndex(s, path))
+      val index = Artifacts.CappedIndex.imageHash()
+      index.save(evens, path)
+      index.append(odds, path)
+      Multimodal.imageDupIncoming(incoming, index.load(s, path))
         .withColumn("hamming", col("hamming").cast("long"))
     }),
     // phash takedown REMOVAL (the ns_winnow_remove pattern): the index
@@ -2651,10 +2647,10 @@ object SparkEntry {
         .toDF("asset_id", "payload")
       val path = Artifacts.pathFor("phashremove",
         s"${corpusKey(dir, "documents")}-$jvmTag")
-      Artifacts.saveImageHashIndex(corpus.unionAll(extra), path)
-      Artifacts.removeFromImageHashIndex(extra.select("asset_id"), path)
-      Multimodal.imageDupIncoming(incoming,
-          Artifacts.loadImageHashIndex(s, path))
+      val index = Artifacts.CappedIndex.imageHash()
+      index.save(corpus.unionAll(extra), path)
+      index.remove(extra.select("asset_id"), path)
+      Multimodal.imageDupIncoming(incoming, index.load(s, path))
         .withColumn("hamming", col("hamming").cast("long"))
     }),
     // AUDIO near-dup (VERDICT r19 task 5 — the multimodal dedup

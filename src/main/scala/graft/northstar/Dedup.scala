@@ -538,7 +538,7 @@ object Dedup {
     * k/window would silently report zero overlap — fingerprints of
     * different gram sizes never collide — so the parameters ride the
     * artifact and the probe FAILS LOUDLY on disagreement). Persist via
-    * [[Artifacts.saveWinnowSketch]]; the nightly ingest then pays only
+    * [[Artifacts.winnowSketchFor]]; the nightly ingest then pays only
     * the incoming batch's in-row sketch plus one equi-join against the
     * stored index.
     */
@@ -803,10 +803,10 @@ object Dedup {
       .withColumn("__k", lit(k)).withColumn("__bands", lit(bands))
 
   /** The UNCAPPED banded-signature rows of [[bandIndex]] — the row
-    * stream the appendable artifact stores ([[Artifacts
-    * .saveBandIndexAppendable]] keeps all rows and applies the bucket
-    * cap at load, so an append can re-derive the over-cap set exactly
-    * as a rebuild would).
+    * stream the appendable artifact stores
+    * ([[Artifacts.CappedIndex.band]] keeps all rows and applies the
+    * bucket cap at load, so an append can re-derive the over-cap set
+    * exactly as a rebuild would).
     */
   private[northstar] def bandRows(df: DataFrame, textCol: String,
                                   idCol: String, k: Int,

@@ -1070,10 +1070,10 @@ object Multimodal {
     * against a STATIC corpus fingerprint frame (id, sig) — the batch
     * body for a streaming foreachBatch ingest (no incoming×incoming
     * pairs, no corpus re-hash). Feed `corpusSigs` from the STORED
-    * fingerprint artifact ([[Artifacts.loadImageHashIndex]] /
-    * [[Artifacts.imageHashIndexFor]] — r20): the corpus is decoded and
-    * hashed ONCE at index build, nightly batches append their own
-    * 8-byte fingerprints ([[Artifacts.appendImageHashIndex]]), and an
+    * fingerprint artifact ([[Artifacts.CappedIndex.imageHash]]'s load
+    * or indexFor — r20): the corpus is decoded and hashed ONCE at
+    * index build, nightly batches append their own 8-byte fingerprints
+    * (its append), and an
     * ingest restart loads the index instead of re-decoding the corpus
     * — at 100 TB of images the re-decode, not the join, is the
     * dominant cost this artifact removes.
@@ -1127,8 +1127,8 @@ object Multimodal {
   /** Ingest-side audio near-dup screening against a static corpus
     * fingerprint frame — the [[imageDupIncoming]] contract for audio;
     * feed `corpusSigs` from the stored artifact
-    * ([[Artifacts.loadAudioHashIndex]] / [[Artifacts.audioHashIndexFor]])
-    * so restarts never re-decode the corpus.
+    * ([[Artifacts.CappedIndex.audioHash]]'s load or indexFor) so
+    * restarts never re-decode the corpus.
     */
   def audioDupIncoming(incoming: DataFrame, corpusSigs: DataFrame,
                        maxHamming: Int = 3, maxBucket: Int = 1000,

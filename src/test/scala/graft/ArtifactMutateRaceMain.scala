@@ -170,8 +170,8 @@ object ArtifactMutateRaceMain {
             vecs(spark, ids), universe, path, centsOpt.get, cbOpt.get,
             maxCell = 10): Unit
         else
-          graft.northstar.Artifacts.appendWinnowIndex(
-            docs(spark, ids), path, maxBucket = 100)
+          graft.northstar.Artifacts.CappedIndex.winnow(maxBucket = 100).append(
+            docs(spark, ids), path)
       }
     }
     val t1 = System.currentTimeMillis()

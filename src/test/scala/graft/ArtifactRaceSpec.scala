@@ -121,13 +121,12 @@ class ArtifactRaceSpec extends AnyFunSuite {
       .master("local[2]").appName("race-loud")
       .config("spark.ui.enabled", "false").getOrCreate()
     val path = TestTmp.dir("probe-pruned")
-    Artifacts.saveProbeWeights(spark, Seq.fill(8)(1L), path,
-      iters = 2, splitAt = 5, labelCol = "label")
+    Artifacts.ProbeWeights.save(spark, Seq.fill(8)(1L), path,
+      (8, 2, 5, "label"))
     new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".parquet")).foreach(_.delete())
     val e = intercept[Exception] {
-      Artifacts.loadProbeWeights(spark, path, dim = 8,
-        iters = 2, splitAt = 5, labelCol = "label")
+      Artifacts.ProbeWeights.load(spark, path, (8, 2, 5, "label"))
     }
     // pin that the failure is the PRUNED-DATA path (schema inference /
     // missing files at this path), not some unrelated early error the
@@ -140,7 +139,7 @@ class ArtifactRaceSpec extends AnyFunSuite {
 
   test("two JVMs racing append vs remove on one index: final state is the " +
        "serialized order, never torn (VERDICT r14 task 6)") {
-    // takedown compliance runs removeFromWinnowIndex while the nightly
+    // takedown compliance runs the winnow index's remove while the nightly
     // ingest appends elsewhere. The _SUCCESS marker delete is the
     // cross-process mutex: losers fail LOUDLY and retry, so with
     // disjoint slices every interleaving converges to one state —
@@ -155,8 +154,8 @@ class ArtifactRaceSpec extends AnyFunSuite {
     val root = new java.io.File(TestTmp.dir("graft-mutate-race"))
     val path = new java.io.File(root, "winnow-idx").getPath
     // initial index: keepers 0..19 plus removal victims 200..239
-    Artifacts.saveWinnowIndexAppendable(
-      docs(spark, (0 until 20) ++ (200 until 240)), path, maxBucket = 100)
+    Artifacts.CappedIndex.winnow(maxBucket = 100).save(
+      docs(spark, (0 until 20) ++ (200 until 240)), path)
 
     // worker: 4 appends of 5 docs each (ids 100..119)
     val (p, out) = launchMutateWorker(root, path, Seq.empty)
@@ -168,8 +167,8 @@ class ArtifactRaceSpec extends AnyFunSuite {
     for (b <- 0 until 4) {
       val ids = (200 + b * 10) until (200 + (b + 1) * 10)
       retries += retryLoud(180000) {
-        Artifacts.removeFromWinnowIndex(
-          docs(spark, ids).select("doc_id"), path, maxBucket = 100)
+        Artifacts.CappedIndex.winnow(maxBucket = 100).remove(
+          docs(spark, ids).select("doc_id"), path)
       }
     }
     val t1 = System.currentTimeMillis()
@@ -177,11 +176,10 @@ class ArtifactRaceSpec extends AnyFunSuite {
 
     // final state == from-scratch build on the difference corpus
     val expectPath = new java.io.File(root, "winnow-expect").getPath
-    Artifacts.saveWinnowIndexAppendable(
-      docs(spark, (0 until 20) ++ (100 until 120)), expectPath,
-      maxBucket = 100)
+    Artifacts.CappedIndex.winnow(maxBucket = 100).save(
+      docs(spark, (0 until 20) ++ (100 until 120)), expectPath)
     def loaded(p0: String): Set[Seq[Any]] =
-      Artifacts.loadWinnowIndexAppendable(spark, p0, maxBucket = 100)
+      Artifacts.CappedIndex.winnow(maxBucket = 100).load(spark, p0)
         .select("fp", "doc").collect().map(_.toSeq).toSet
     assert(loaded(path) == loaded(expectPath),
       "raced index diverged from the serialized-order rebuild")

@@ -34,8 +34,8 @@ class ArtifactsSpec extends SparkSpecBase {
     val direct = induced.collect().sortBy(_.getLong(0))
       .map(r => (r.getString(1), r.getString(2))).toSeq
     val path = s"${tempDir("bpeart")}/merges"
-    Artifacts.saveBpeMerges(induced, path, rounds = 5)
-    val loaded = Artifacts.loadBpeMerges(spark, path, rounds = 5)
+    Artifacts.BpeMerges.save(spark, induced, path, 5)
+    val loaded = Artifacts.BpeMerges.load(spark, path, 5)
     assert(loaded == direct)
     // serving: identical output frame through the stored artifact
     val a = TextAnalysis.bpeApply(docs, direct)
@@ -47,10 +47,10 @@ class ArtifactsSpec extends SparkSpecBase {
 
   test("BPE artifact with mismatched rounds fails loudly at load") {
     val path = s"${tempDir("bpeart")}/merges"
-    Artifacts.saveBpeMerges(
-      TextAnalysis.bpeInduct(docs.limit(50), rounds = 3), path, rounds = 3)
+    Artifacts.BpeMerges.save(
+      spark, TextAnalysis.bpeInduct(docs.limit(50), rounds = 3), path, 3)
     val e = intercept[IllegalArgumentException] {
-      Artifacts.loadBpeMerges(spark, path, rounds = 5)
+      Artifacts.BpeMerges.load(spark, path, 5)
     }
     assert(e.getMessage.contains("rounds=3"))
   }
@@ -72,8 +72,8 @@ class ArtifactsSpec extends SparkSpecBase {
   test("LM heads round-trip parquet; serving with loaded heads is bit-identical; mismatch fails loudly") {
     val (vocab, total) = TextAnalysis.lmHead(docs, topK = 25)
     val path = s"${tempDir("lmart")}/head"
-    Artifacts.saveLmHead(spark, vocab, total, path, topK = 25)
-    val (lv, lt) = Artifacts.loadLmHead(spark, path, topK = 25)
+    Artifacts.LmHead.save(spark, (vocab, total), path, 25)
+    val (lv, lt) = Artifacts.LmHead.load(spark, path, 25)
     assert(lv == vocab && lt == total)
     val a = TextAnalysis.scoreWithLm(docs, vocab, total)
       .collect().map(_.toSeq).toSet
@@ -81,15 +81,15 @@ class ArtifactsSpec extends SparkSpecBase {
       .collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadLmHead(spark, path, topK = 50)
+      Artifacts.LmHead.load(spark, path, 50)
     }.getMessage.contains("topK=25"))
     // bigram head: round-trip + mismatch
     val bg = TextAnalysis.bigramHead(docs, topK = 40)
     val bpath = s"${tempDir("lmart")}/bg"
-    Artifacts.saveBigramHead(spark, bg, bpath, topK = 40)
-    assert(Artifacts.loadBigramHead(spark, bpath, topK = 40) == bg)
+    Artifacts.BigramHead.save(spark, bg, bpath, 40)
+    assert(Artifacts.BigramHead.load(spark, bpath, 40) == bg)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBigramHead(spark, bpath, topK = 10)
+      Artifacts.BigramHead.load(spark, bpath, 10)
     }.getMessage.contains("topK=40"))
   }
 
@@ -97,8 +97,8 @@ class ArtifactsSpec extends SparkSpecBase {
     val terms = Seq("the", "and")
     val (dfm, n, s) = TextAnalysis.bm25Stats(docs, terms, minTermLen = 1)
     val path = s"${tempDir("bmart")}/stats"
-    Artifacts.saveBm25Stats(spark, dfm, n, s, path, minTermLen = 1)
-    val (ld, ln, ls) = Artifacts.loadBm25Stats(spark, path, terms, minTermLen = 1)
+    Artifacts.Bm25Stats.save(spark, (dfm, n, s), path, (terms, 1))
+    val (ld, ln, ls) = Artifacts.Bm25Stats.load(spark, path, (terms, 1))
     assert(ld == dfm && ln == n && ls == s)
     // serving from the loaded stats == serving the in-memory fit,
     // and == the one-plan bm25 on the same corpus
@@ -112,10 +112,10 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(a == b && a.nonEmpty)
     assert(a == c)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBm25Stats(spark, path, terms, minTermLen = 3)
+      Artifacts.Bm25Stats.load(spark, path, (terms, 3))
     }.getMessage.contains("minTermLen=1"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBm25Stats(spark, path, Seq("the", "of"), minTermLen = 1)
+      Artifacts.Bm25Stats.load(spark, path, (Seq("the", "of"), 1))
     }.getMessage.contains("cover terms"))
   }
 
@@ -129,14 +129,15 @@ class ArtifactsSpec extends SparkSpecBase {
       StructType(Seq(StructField("doc_a", LongType),
         StructField("doc_b", LongType))))
     val path = s"${tempDir("semart")}/pairs"
-    Artifacts.saveSemanticPairs(empty, path, thresholdE4 = 9999L, "ckA")
+    Artifacts.SemanticPairs.save(spark, empty, path, (9999L, "ckA"))
     // matching parameters: the empty frame serves fine
-    assert(Artifacts.loadSemanticPairs(spark, path, 9999L, "ckA").count() == 0)
+    assert(
+      Artifacts.SemanticPairs.load(spark, path, (9999L, "ckA")).count() == 0)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadSemanticPairs(spark, path, 3000L, "ckA")
+      Artifacts.SemanticPairs.load(spark, path, (3000L, "ckA"))
     }.getMessage.contains("9999"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadSemanticPairs(spark, path, 9999L, "ckB")
+      Artifacts.SemanticPairs.load(spark, path, (9999L, "ckB"))
     }.getMessage.contains("ckA"))
   }
 
@@ -153,8 +154,8 @@ class ArtifactsSpec extends SparkSpecBase {
   test("IVF centroids round-trip parquet with exact float equality; probing parity") {
     val fit = Ivf.fitCentroids(emb, nCells = 4)
     val path = s"${tempDir("ivfart")}/centroids"
-    Artifacts.saveIvfCentroids(spark, fit, path, nCells = 4, seed = 42L)
-    val loaded = Artifacts.loadIvfCentroids(spark, path, nCells = 4, seed = 42L)
+    Artifacts.IvfCentroids.save(spark, fit, path, (4, 42L))
+    val loaded = Artifacts.IvfCentroids.load(spark, path, (4, 42L))
     assert(loaded.map(_.toSeq).toSeq == fit.map(_.toSeq).toSeq)
     val q = emb.filter(col("vec_id") < 3)
     val a = Ivf.ivfTopK(q, emb, fit, k = 5, nProbe = 2)
@@ -166,13 +167,13 @@ class ArtifactsSpec extends SparkSpecBase {
 
   test("IVF artifact with mismatched parameters fails loudly at load") {
     val path = s"${tempDir("ivfart")}/centroids"
-    Artifacts.saveIvfCentroids(spark, Ivf.fitCentroids(emb, nCells = 4),
-      path, nCells = 4, seed = 42L)
+    Artifacts.IvfCentroids.save(spark, Ivf.fitCentroids(emb, nCells = 4),
+      path, (4, 42L))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadIvfCentroids(spark, path, nCells = 8, seed = 42L)
+      Artifacts.IvfCentroids.load(spark, path, (8, 42L))
     }.getMessage.contains("nCells=4"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadIvfCentroids(spark, path, nCells = 4, seed = 7L)
+      Artifacts.IvfCentroids.load(spark, path, (4, 7L))
     }.getMessage.contains("seed=42"))
   }
 
@@ -212,21 +213,21 @@ class ArtifactsSpec extends SparkSpecBase {
   test("winnow sketch round-trips parquet; stored-index probe equals the direct pairs; mismatch fails loudly") {
     val index = graft.northstar.Dedup.winnowIndex(docs, maxBucket = 100)
     val path = s"${tempDir("winart")}/sketch"
-    Artifacts.saveWinnowSketch(index, path)
-    val loaded = Artifacts.loadWinnowSketch(spark, path, k = 5, window = 4)
+    Artifacts.WinnowSketch.save(spark, index, path, (5, 4))
+    val loaded = Artifacts.WinnowSketch.load(spark, path, (5, 4))
     assert(loaded.select("doc", "fp").collect().map(_.toSeq).toSet ==
       index.select("doc", "fp").collect().map(_.toSeq).toSet)
     // driver-side pinned-parameter check
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadWinnowSketch(spark, path, k = 7, window = 4)
+      Artifacts.WinnowSketch.load(spark, path, (7, 4))
     }.getMessage.contains("k=5"))
     // the _params sidecar makes the pin hold even for an EMPTY sketch
     // (code-review r13)
     val emptyPath = s"${tempDir("winart")}/empty"
-    Artifacts.saveWinnowSketch(
-      graft.northstar.Dedup.winnowIndex(docs.limit(0)), emptyPath)
+    Artifacts.WinnowSketch.save(spark,
+      graft.northstar.Dedup.winnowIndex(docs.limit(0)), emptyPath, (5, 4))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadWinnowSketch(spark, emptyPath, k = 7, window = 4)
+      Artifacts.WinnowSketch.load(spark, emptyPath, (7, 4))
     }.getMessage.contains("generated with"))
     // probing the STORED index equals probing the in-memory one
     val incoming = docs.select((col("doc_id") + 900000).as("doc_id"),
@@ -253,7 +254,8 @@ class ArtifactsSpec extends SparkSpecBase {
     val k7 = graft.northstar.Dedup.winnowIndex(docs, k = 7, window = 6,
       maxBucket = 100)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.saveWinnowSketch(k7, s"${tempDir("winart")}/k7bad")
+      Artifacts.WinnowSketch.save(spark, k7, s"${tempDir("winart")}/k7bad",
+        (5, 4))
     }.getMessage.contains("pass the build parameters explicitly"))
     // a mismatched save must not destroy an EXISTING valid artifact:
     // the sketch stages, validates, and only then replaces
@@ -261,13 +263,13 @@ class ArtifactsSpec extends SparkSpecBase {
     // no sidecar and the k=5 artifact gone)
     val preserved = loaded.count()
     assert(intercept[IllegalArgumentException] {
-      Artifacts.saveWinnowSketch(k7, path)
+      Artifacts.WinnowSketch.save(spark, k7, path, (5, 4))
     }.getMessage.contains("pass the build parameters explicitly"))
-    assert(Artifacts.loadWinnowSketch(spark, path, k = 5, window = 4)
+    assert(Artifacts.WinnowSketch.load(spark, path, (5, 4))
       .count() == preserved)
     val k7Path = s"${tempDir("winart")}/k7good"
-    Artifacts.saveWinnowSketch(k7, k7Path, k = 7, window = 6)
-    assert(Artifacts.loadWinnowSketch(spark, k7Path, k = 7, window = 6)
+    Artifacts.WinnowSketch.save(spark, k7, k7Path, (7, 6))
+    assert(Artifacts.WinnowSketch.load(spark, k7Path, (7, 6))
       .count() == k7.count())
   }
 
@@ -276,8 +278,8 @@ class ArtifactsSpec extends SparkSpecBase {
       concat(lit("shared header line\n"), col("text")).as("text"))
     val trained = TextAnalysis.boilerplateLines(aug, maxDocFreq = 10)
     val path = s"${tempDir("boilart")}/lines"
-    Artifacts.saveBoilerplateLines(trained, path, maxDocFreq = 10)
-    val loaded = Artifacts.loadBoilerplateLines(spark, path, maxDocFreq = 10)
+    Artifacts.BoilerplateLines.save(spark, trained, path, 10)
+    val loaded = Artifacts.BoilerplateLines.load(spark, path, 10)
     assert(loaded.collect().map(_.getString(0)).toSet ==
       trained.collect().map(_.getString(0)).toSet)
     assert(loaded.collect().nonEmpty, "header must cross the df threshold")
@@ -288,16 +290,16 @@ class ArtifactsSpec extends SparkSpecBase {
       .collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBoilerplateLines(spark, path, maxDocFreq = 5)
+      Artifacts.BoilerplateLines.load(spark, path, 5)
     }.getMessage.contains("10"))
     // an EMPTY set (legitimately zero rows at a high cut) still pins
     // (code-review r13)
     val emptyPath = s"${tempDir("boilart")}/empty"
-    Artifacts.saveBoilerplateLines(
+    Artifacts.BoilerplateLines.save(spark,
       TextAnalysis.boilerplateLines(docs, maxDocFreq = 1000000), emptyPath,
-      maxDocFreq = 1000000)
+      1000000)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBoilerplateLines(spark, emptyPath, maxDocFreq = 2)
+      Artifacts.BoilerplateLines.load(spark, emptyPath, 2)
     }.getMessage.contains("generated with"))
   }
 
@@ -311,15 +313,15 @@ class ArtifactsSpec extends SparkSpecBase {
         .select("doc_id", "lang"), Seq("doc_id"))
     val frozen = Curation.freeze(corpus, cfg)
     val path = s"${tempDir("curart")}/policy"
-    Artifacts.saveFrozenCuration(spark, frozen, path, cfg.toString)
-    val loaded = Artifacts.loadFrozenCuration(spark, path, cfg.toString)
+    Artifacts.CurationPolicy.save(spark, frozen, path, cfg.toString)
+    val loaded = Artifacts.CurationPolicy.load(spark, path, cfg.toString)
     assert(loaded == frozen)
     val a = Curation.serve(corpus, frozen).collect().map(_.toSeq).toSet
     val b = Curation.serve(corpus, loaded).collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
     val other = cfg.copy(minQuality = Some(0.9))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadFrozenCuration(spark, path, other.toString)
+      Artifacts.CurationPolicy.load(spark, path, other.toString)
     }.getMessage.contains("cfg="))
   }
 
@@ -350,12 +352,12 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(again) == rows(stored))
     // threshold / quantizer mismatch at load fails loudly
     val path = s"${tempDir("spart")}/pairs"
-    Artifacts.saveSemanticPairs(direct, path, thresholdE4 = 3000, "ckey")
+    Artifacts.SemanticPairs.save(spark, direct, path, (3000, "ckey"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadSemanticPairs(spark, path, thresholdE4 = 4000, "ckey")
+      Artifacts.SemanticPairs.load(spark, path, (4000, "ckey"))
     }.getMessage.contains("thresholdE4=3000"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadSemanticPairs(spark, path, thresholdE4 = 3000, "other")
+      Artifacts.SemanticPairs.load(spark, path, (3000, "other"))
     }.getMessage.contains("centroids=ckey"))
   }
 
@@ -386,10 +388,10 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(again) == rows(labels))
     // threshold / quantizer mismatch at load fails loudly
     val path = s"${tempDir("slart")}/labels"
-    Artifacts.saveSemanticLabels(labels, path, thresholdE4 = 3000, "ckey")
+    Artifacts.SemanticLabels.save(spark, labels, path,
+      ("vec_id", 3000, "ckey"))
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadSemanticLabels(spark, path, "vec_id",
-        thresholdE4 = 4000, "ckey")
+      Artifacts.SemanticLabels.load(spark, path, ("vec_id", 4000, "ckey"))
     }.getMessage.contains("thresholdE4=3000"))
   }
 
@@ -427,9 +429,9 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(again) == rows(stored))
     // pinned id column mismatch at load fails loudly
     val path = s"${tempDir("cclart")}/labels"
-    Artifacts.saveCollapseLabels(stored, path, "doc_id")
+    Artifacts.CollapseLabels.save(spark, stored, path, "doc_id")
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadCollapseLabels(spark, path, "vec_id")
+      Artifacts.CollapseLabels.load(spark, path, "vec_id")
     }.getMessage.contains("idCol=doc_id"))
   }
 
@@ -447,17 +449,14 @@ class ArtifactsSpec extends SparkSpecBase {
     // recipe mismatch on the stored artifact fails loudly (sidecar pins
     // iters/splitAt/labelCol/dim even though the weight rows look alike)
     val path = tempDir("probe-art")
-    Artifacts.saveProbeWeights(spark, direct, path,
-      iters = 2, splitAt = 5, labelCol = "label")
-    assert(Artifacts.loadProbeWeights(spark, path, dim = 64,
-      iters = 2, splitAt = 5, labelCol = "label") == direct)
+    Artifacts.ProbeWeights.save(spark, direct, path, (64, 2, 5, "label"))
+    assert(
+      Artifacts.ProbeWeights.load(spark, path, (64, 2, 5, "label")) == direct)
     intercept[IllegalArgumentException] {
-      Artifacts.loadProbeWeights(spark, path, dim = 64,
-        iters = 3, splitAt = 5, labelCol = "label")
+      Artifacts.ProbeWeights.load(spark, path, (64, 3, 5, "label"))
     }
     intercept[IllegalArgumentException] {
-      Artifacts.loadProbeWeights(spark, path, dim = 64,
-        iters = 2, splitAt = 4, labelCol = "label")
+      Artifacts.ProbeWeights.load(spark, path, (64, 2, 4, "label"))
     }
   }
 
@@ -537,20 +536,20 @@ class ArtifactsSpec extends SparkSpecBase {
        "different rounds/topK at load") {
     import org.apache.spark.sql.types._
     val bpe = s"${tempDir("emptypin")}/bpe"
-    Artifacts.saveBpeMerges(spark.createDataFrame(
+    Artifacts.BpeMerges.save(spark, spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("step", LongType),
         StructField("lhs", StringType), StructField("rhs", StringType),
-        StructField("cnt", LongType)))), bpe, rounds = 3)
-    assert(Artifacts.loadBpeMerges(spark, bpe, rounds = 3).isEmpty)
+        StructField("cnt", LongType)))), bpe, 3)
+    assert(Artifacts.BpeMerges.load(spark, bpe, 3).isEmpty)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBpeMerges(spark, bpe, rounds = 5)
+      Artifacts.BpeMerges.load(spark, bpe, 5)
     }.getMessage.contains("rounds=3"))
     val bg = s"${tempDir("emptypin")}/bigram"
-    Artifacts.saveBigramHead(spark, Map.empty[String, Long], bg, topK = 10)
-    assert(Artifacts.loadBigramHead(spark, bg, topK = 10).isEmpty)
+    Artifacts.BigramHead.save(spark, Map.empty[String, Long], bg, 10)
+    assert(Artifacts.BigramHead.load(spark, bg, 10).isEmpty)
     assert(intercept[IllegalArgumentException] {
-      Artifacts.loadBigramHead(spark, bg, topK = 20)
+      Artifacts.BigramHead.load(spark, bg, 20)
     }.getMessage.contains("topK=10"))
   }
 
@@ -559,14 +558,14 @@ class ArtifactsSpec extends SparkSpecBase {
     val labels = Seq((1L, 1L)).toDF("doc_id", "cluster_id")
     val p = s"${tempDir("badpin")}/labels"
     val e = intercept[IllegalArgumentException] {
-      Artifacts.saveCollapseLabels(labels, p, "a\nb")
+      Artifacts.CollapseLabels.save(spark, labels, p, "a\nb")
     }
     assert(e.getMessage.contains("line breaks"), e.getMessage)
     assert(!new java.io.File(p).exists(), "a refused pin must write nothing")
     val pw = s"${tempDir("badpin")}/probe"
     intercept[IllegalArgumentException] {
-      Artifacts.saveProbeWeights(spark, Seq(1L, 2L), pw, iters = 2,
-        splitAt = 5, labelCol = "label\r")
+      Artifacts.ProbeWeights.save(spark, Seq(1L, 2L), pw,
+        (2, 2, 5, "label\r"))
     }
     assert(!new java.io.File(pw).exists())
   }
@@ -575,26 +574,28 @@ class ArtifactsSpec extends SparkSpecBase {
        "winnow sketch or boilerplate artifact runs zero Spark jobs") {
     import graft.northstar.Dedup
     val d = tempDir("loadjobs")
-    Artifacts.saveSemanticPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
-      s"$d/pairs", 3000L, "ck")
-    Artifacts.saveSemanticLabels(Seq((1L, 1L)).toDF("vec_id", "cluster_id"),
-      s"$d/semlabels", 3000L, "ck")
-    Artifacts.saveCollapseLabels(Seq((1L, 1L)).toDF("doc_id", "cluster_id"),
-      s"$d/cclabels", "doc_id")
-    Artifacts.saveWinnowSketch(Dedup.winnowIndex(docs.limit(20)),
-      s"$d/winnow")
-    Artifacts.saveBoilerplateLines(Seq("h").toDF("nh"), s"$d/boiler", 10L)
+    Artifacts.SemanticPairs.save(spark, Seq((1L, 2L)).toDF("doc_a", "doc_b"),
+      s"$d/pairs", (3000L, "ck"))
+    Artifacts.SemanticLabels.save(spark,
+      Seq((1L, 1L)).toDF("vec_id", "cluster_id"), s"$d/semlabels",
+      ("vec_id", 3000L, "ck"))
+    Artifacts.CollapseLabels.save(spark,
+      Seq((1L, 1L)).toDF("doc_id", "cluster_id"), s"$d/cclabels", "doc_id")
+    Artifacts.WinnowSketch.save(spark, Dedup.winnowIndex(docs.limit(20)),
+      s"$d/winnow", (5, 4))
+    Artifacts.BoilerplateLines.save(spark, Seq("h").toDF("nh"), s"$d/boiler",
+      10L)
     val loads: Seq[(String, () => Any)] = Seq(
       "semantic pairs" -> (() =>
-        Artifacts.loadSemanticPairs(spark, s"$d/pairs", 3000L, "ck")),
-      "semantic labels" -> (() => Artifacts.loadSemanticLabels(spark,
-        s"$d/semlabels", "vec_id", 3000L, "ck")),
+        Artifacts.SemanticPairs.load(spark, s"$d/pairs", (3000L, "ck"))),
+      "semantic labels" -> (() => Artifacts.SemanticLabels.load(spark,
+        s"$d/semlabels", ("vec_id", 3000L, "ck"))),
       "collapse labels" -> (() =>
-        Artifacts.loadCollapseLabels(spark, s"$d/cclabels", "doc_id")),
+        Artifacts.CollapseLabels.load(spark, s"$d/cclabels", "doc_id")),
       "winnow sketch" -> (() =>
-        Artifacts.loadWinnowSketch(spark, s"$d/winnow", k = 5, window = 4)),
+        Artifacts.WinnowSketch.load(spark, s"$d/winnow", (5, 4))),
       "boilerplate" -> (() =>
-        Artifacts.loadBoilerplateLines(spark, s"$d/boiler", 10L)))
+        Artifacts.BoilerplateLines.load(spark, s"$d/boiler", 10L)))
     for ((name, load) <- loads) {
       load(): Unit // the first load infers and caches the schema
       val jobs = jobStarts { load(): Unit }
@@ -641,7 +642,7 @@ class ArtifactsSpec extends SparkSpecBase {
       s"pinned ${idx.schema.treeString} vs inferred ${inferred.schema.treeString}")
     // capped (appendable winnow) family: rows/ and dropped/
     val pw = tempDir("schemas-winnow")
-    Artifacts.saveWinnowIndexAppendable(docs, pw, maxBucket = 2)
+    Artifacts.CappedIndex.winnow(maxBucket = 2).save(docs, pw)
     val rowsInf = spark.read.parquet(new java.io.File(pw, "rows").toString)
     val dropInf = spark.read.parquet(new java.io.File(pw, "dropped").toString)
     val pinnedRows = Artifacts.storedSchema(pw, "rows")
@@ -897,39 +898,33 @@ class ArtifactsSpec extends SparkSpecBase {
     val difference = corpus.filter(col("doc_id") % 2 === 0)
     val cap = 5
     val p = s"${tempDir("winrm")}/idx"
-    Artifacts.saveWinnowIndexAppendable(corpus, p, maxBucket = cap)
+    val winnow = Artifacts.CappedIndex.winnow(maxBucket = cap)
+    winnow.save(corpus, p)
     // the boiler bucket must be dropped pre-removal (8 > cap)
     assert(spark.read.parquet(s"$p/dropped").count() > 0)
-    Artifacts.removeFromWinnowIndex(removedHalf.select("doc_id"), p,
-      maxBucket = cap)
-    val loaded = Artifacts.loadWinnowIndexAppendable(spark, p,
-      maxBucket = cap)
+    winnow.remove(removedHalf.select("doc_id"), p)
+    val loaded = winnow.load(spark, p)
     val rebuilt = Dedup.winnowIndex(difference, maxBucket = cap)
     assert(rows(loaded) == rows(rebuilt))
     // resurrection is live: the surviving boiler docs serve from the
     // previously-dropped bucket
     assert(loaded.filter(col("doc") >= 800000).count() > 0)
     // absent-id removal is a no-op
-    Artifacts.removeFromWinnowIndex(
-      spark.range(5).select((col("id") + 7000000).as("doc_id")), p,
-      maxBucket = cap)
-    assert(rows(Artifacts.loadWinnowIndexAppendable(spark, p,
-      maxBucket = cap)) == rows(rebuilt))
+    winnow.remove(
+      spark.range(5).select((col("id") + 7000000).as("doc_id")), p)
+    assert(rows(winnow.load(spark, p)) == rows(rebuilt))
     // band index: same protocol, same identity
     val pb = s"${tempDir("bandrm")}/idx"
-    Artifacts.saveBandIndexAppendable(docs, pb, maxBucket = 50)
-    Artifacts.removeFromBandIndex(
-      docs.filter(col("doc_id") % 2 =!= 0).select("doc_id"), pb,
-      maxBucket = 50)
-    assert(rows(Artifacts.loadBandIndexAppendable(spark, pb,
-        maxBucket = 50))
+    val band = Artifacts.CappedIndex.band(maxBucket = 50)
+    band.save(docs, pb)
+    band.remove(docs.filter(col("doc_id") % 2 =!= 0).select("doc_id"), pb)
+    assert(rows(band.load(spark, pb))
       == rows(Dedup.bandIndex(docs.filter(col("doc_id") % 2 === 0),
         maxBucket = 50)))
     // torn remove refuses
     assert(new java.io.File(pb, "_SUCCESS").delete())
     val e = intercept[IllegalArgumentException] {
-      Artifacts.removeFromBandIndex(docs.select("doc_id"), pb,
-        maxBucket = 50)
+      band.remove(docs.select("doc_id"), pb)
     }
     assert(e.getMessage.contains("_SUCCESS"), e.getMessage)
   }
@@ -970,18 +965,15 @@ class ArtifactsSpec extends SparkSpecBase {
     // loaded capped view identical
     import graft.northstar.Dedup
     val pw = s"${tempDir("wincmp")}/idx"
-    Artifacts.saveWinnowIndexAppendable(
-      docs.filter(col("doc_id") % 8 === 0), pw, maxBucket = 100)
+    val winnow = Artifacts.CappedIndex.winnow(maxBucket = 100)
+    winnow.save(docs.filter(col("doc_id") % 8 === 0), pw)
     for (r <- 1 to 7)
-      Artifacts.appendWinnowIndex(
-        docs.filter(col("doc_id") % 8 === r), pw, maxBucket = 100)
-    val beforeW = rows(Artifacts.loadWinnowIndexAppendable(spark, pw,
-      maxBucket = 100))
+      winnow.append(docs.filter(col("doc_id") % 8 === r), pw)
+    val beforeW = rows(winnow.load(spark, pw))
     assert(Artifacts.compactAppendableIndex(spark, pw, maxFiles = 4))
-    assert(rows(Artifacts.loadWinnowIndexAppendable(spark, pw,
-      maxBucket = 100)) == beforeW)
-    assert(rows(Artifacts.loadWinnowIndexAppendable(spark, pw,
-      maxBucket = 100)) == rows(Dedup.winnowIndex(docs, maxBucket = 100)))
+    assert(rows(winnow.load(spark, pw)) == beforeW)
+    assert(rows(winnow.load(spark, pw)) ==
+      rows(Dedup.winnowIndex(docs, maxBucket = 100)))
     assert(!Artifacts.compactAppendableIndex(spark, pw, maxFiles = 4))
     // torn: marker gone → both compactors refuse
     assert(new java.io.File(p, "_SUCCESS").delete())
@@ -1083,10 +1075,9 @@ class ArtifactsSpec extends SparkSpecBase {
     val docsB = corpus.filter(col("doc_id") % 2 =!= 0)
     val cap = 5
     val p = s"${tempDir("winapp")}/idx"
-    Artifacts.saveWinnowIndexAppendable(docsA, p, maxBucket = cap)
-    Artifacts.appendWinnowIndex(docsB, p, maxBucket = cap)
-    val loaded = Artifacts.loadWinnowIndexAppendable(spark, p,
-      maxBucket = cap)
+    Artifacts.CappedIndex.winnow(maxBucket = cap).save(docsA, p)
+    Artifacts.CappedIndex.winnow(maxBucket = cap).append(docsB, p)
+    val loaded = Artifacts.CappedIndex.winnow(maxBucket = cap).load(spark, p)
     val rebuilt = Dedup.winnowIndex(corpus, maxBucket = cap)
     assert(rows(loaded) == rows(rebuilt))
     // the dropped list is live (a cap of 5 on 500 shared-vocab docs
@@ -1102,17 +1093,17 @@ class ArtifactsSpec extends SparkSpecBase {
     // torn append: marker gone → both load and append refuse
     assert(new java.io.File(p, "_SUCCESS").delete())
     val e1 = intercept[IllegalArgumentException] {
-      Artifacts.loadWinnowIndexAppendable(spark, p, maxBucket = cap)
+      Artifacts.CappedIndex.winnow(maxBucket = cap).load(spark, p)
     }
     assert(e1.getMessage.contains("_SUCCESS"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Artifacts.appendWinnowIndex(docsB, p, maxBucket = cap)
+      Artifacts.CappedIndex.winnow(maxBucket = cap).append(docsB, p)
     }
     assert(e2.getMessage.contains("_SUCCESS"), e2.getMessage)
     // parameter drift (different cap) fails the params pin
-    Artifacts.saveWinnowIndexAppendable(docsA, p, maxBucket = cap)
+    Artifacts.CappedIndex.winnow(maxBucket = cap).save(docsA, p)
     val e3 = intercept[IllegalArgumentException] {
-      Artifacts.appendWinnowIndex(docsB, p, maxBucket = cap + 1)
+      Artifacts.CappedIndex.winnow(maxBucket = cap + 1).append(docsB, p)
     }
     assert(e3.getMessage.contains("generated with"), e3.getMessage)
   }
@@ -1123,10 +1114,9 @@ class ArtifactsSpec extends SparkSpecBase {
     val docsB = docs.filter(col("doc_id") % 2 =!= 0)
     val cap = 50
     val p = s"${tempDir("bandapp")}/idx"
-    Artifacts.saveBandIndexAppendable(docsA, p, maxBucket = cap)
-    Artifacts.appendBandIndex(docsB, p, maxBucket = cap)
-    val loaded = Artifacts.loadBandIndexAppendable(spark, p,
-      maxBucket = cap)
+    Artifacts.CappedIndex.band(maxBucket = cap).save(docsA, p)
+    Artifacts.CappedIndex.band(maxBucket = cap).append(docsB, p)
+    val loaded = Artifacts.CappedIndex.band(maxBucket = cap).load(spark, p)
     val rebuilt = Dedup.bandIndex(docs, maxBucket = cap)
     assert(rows(loaded) == rows(rebuilt))
     // nightly screen parity: quoting copies of accumulated docs must
@@ -1332,8 +1322,8 @@ class ArtifactsSpec extends SparkSpecBase {
        "(VERDICT r18 task 4)") {
     import graft.northstar.Dedup
     val p = s"${tempDir("winmaint")}/idx"
-    Artifacts.saveWinnowIndexAppendable(
-      docs.filter(col("doc_id") % 8 === 0), p, maxBucket = 100)
+    Artifacts.CappedIndex.winnow(maxBucket = 100).save(
+      docs.filter(col("doc_id") % 8 === 0), p)
     // the nightly pattern: Scheduler.runEvery (O3) drives append-then-
     // maintain ticks; with the tick threshold at 4 files the LAST
     // ticks must see the fragmentation and rewrite rows/ exactly when
@@ -1344,7 +1334,7 @@ class ArtifactsSpec extends SparkSpecBase {
       .empty[Artifacts.IndexMaintenanceReport]
     graft.engine.Scheduler.runEvery(minutes = 60, times = Some(7),
         sleep = _ => ()) { () =>
-      Artifacts.appendWinnowIndex(batches.next(), p, maxBucket = 100)
+      Artifacts.CappedIndex.winnow(maxBucket = 100).append(batches.next(), p)
       reports += Artifacts.maintainIndex(spark, p, compactOver = 4)
     }
     assert(reports.forall(r => r.family == "appendable-winnow"
@@ -1356,8 +1346,8 @@ class ArtifactsSpec extends SparkSpecBase {
     // marker republished; the served capped view equals a from-scratch
     // rebuild on the accumulated corpus (compaction is content-neutral)
     assert(new java.io.File(p, "_SUCCESS").exists())
-    assert(rows(Artifacts.loadWinnowIndexAppendable(spark, p,
-      maxBucket = 100)) == rows(Dedup.winnowIndex(docs, maxBucket = 100)))
+    assert(rows(Artifacts.CappedIndex.winnow(maxBucket = 100).load(spark, p))
+      == rows(Dedup.winnowIndex(docs, maxBucket = 100)))
     // a quiet tick is a no-op report (below threshold after compaction
     // + nothing appended)
     val rq = Artifacts.maintainIndex(spark, p, compactOver = 16)
@@ -1557,25 +1547,44 @@ class ArtifactsSpec extends SparkSpecBase {
       assert(splitsL == splits && idx.count() == embA.count())
     }
 
+    // the capped arm runs over all four kinds; each refusal names its
+    // own kind's save verb
+    import graft.northstar.Multimodal
     val base = docs.filter(col("doc_id") % 4 === 0)
-    val pW = s"${tempDir("sidecars")}/winnow"
-    Artifacts.saveWinnowIndexAppendable(base, pW, maxBucket = 100)
-    val served = rows(Artifacts.loadWinnowIndexAppendable(spark, pW,
-      maxBucket = 100))
-    for (sidecar <- Seq("_params", "_schemas")) {
-      damage(pW, sidecar, text = false)
-      val remedy = "saveWinnowIndexAppendable"
-      refuses(pW, "rows", sidecar, remedy)(
-        Artifacts.loadWinnowIndexAppendable(spark, pW, maxBucket = 100))
-      refuses(pW, "rows", sidecar, remedy)(Artifacts.appendWinnowIndex(
-        docs.filter(col("doc_id") % 4 === 1), pW, maxBucket = 100))
-      refuses(pW, "rows", sidecar, remedy)(Artifacts.removeFromWinnowIndex(
-        base.select("doc_id").limit(3), pW, maxBucket = 100))
-      Artifacts.saveWinnowIndexAppendable(base, pW, maxBucket = 100)
-      assert(rows(Artifacts.loadWinnowIndexAppendable(spark, pW,
-        maxBucket = 100)) == served)
+    def assets(payload: Long => Array[Byte], sel: Long => Boolean) =
+      (0L until 8L).filter(sel).map(id => (id, payload(id)))
+        .toDF("asset_id", "payload")
+    def png(id: Long) = Multimodal.syntheticPatternPng(id)
+    def wav(id: Long) = Multimodal.syntheticPatternWav(id)
+    val capped: Seq[(String, Artifacts.CappedIndex,
+        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("winnow", Artifacts.CappedIndex.winnow(maxBucket = 100), base,
+        docs.filter(col("doc_id") % 4 === 1), base.select("doc_id").limit(3)),
+      ("band", Artifacts.CappedIndex.band(maxBucket = 100), base,
+        docs.filter(col("doc_id") % 4 === 1), base.select("doc_id").limit(3)),
+      ("imageHash", Artifacts.CappedIndex.imageHash(),
+        assets(png, _ % 2 == 0), assets(png, _ % 2 == 1),
+        assets(png, _ < 3).select("asset_id")),
+      ("audioHash", Artifacts.CappedIndex.audioHash(),
+        assets(wav, _ % 2 == 0), assets(wav, _ % 2 == 1),
+        assets(wav, _ < 3).select("asset_id")))
+    for ((ctor, ix, built, delta, takedown) <- capped) {
+      val pW = s"${tempDir("sidecars")}/$ctor"
+      ix.save(built, pW)
+      val served = rows(ix.load(spark, pW))
+      for (sidecar <- Seq("_params", "_schemas")) {
+        damage(pW, sidecar, text = false)
+        val remedy = s"CappedIndex.$ctor(...).save"
+        refuses(pW, "rows", sidecar, remedy)(ix.load(spark, pW))
+        refuses(pW, "rows", sidecar, remedy)(ix.append(delta, pW))
+        refuses(pW, "rows", sidecar, remedy)(ix.remove(takedown, pW))
+        ix.save(built, pW)
+        assert(rows(ix.load(spark, pW)) == served)
+      }
+      if (ctor == "winnow")
+        assert(served == rows(Dedup.winnowIndex(base, maxBucket = 100)))
     }
-    assert(served == rows(Dedup.winnowIndex(base, maxBucket = 100)))
   }
 
   test("stored image fingerprint index (VERDICT r19 task 2): " +
@@ -1591,9 +1600,9 @@ class ArtifactsSpec extends SparkSpecBase {
     def sigSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val p = s"${tempDir("phashidx")}/idx"
-    Artifacts.saveImageHashIndex(even, p)
-    Artifacts.appendImageHashIndex(odd, p)
-    assert(sigSet(Artifacts.loadImageHashIndex(spark, p))
+    Artifacts.CappedIndex.imageHash().save(even, p)
+    Artifacts.CappedIndex.imageHash().append(odd, p)
+    assert(sigSet(Artifacts.CappedIndex.imageHash().load(spark, p))
       == sigSet(Multimodal.imageHashes(all)),
       "append-then-load must equal hashing the union corpus — the " +
         "decode-once contract")
@@ -1601,26 +1610,27 @@ class ArtifactsSpec extends SparkSpecBase {
     val r = Artifacts.maintainIndex(spark, p, compactOver = 1)
     assert(r.family == "appendable-phash" && r.layout == "rows"
       && !r.retrained && r.cellsCompacted == 1, r.toString)
-    assert(sigSet(Artifacts.loadImageHashIndex(spark, p))
+    assert(sigSet(Artifacts.CappedIndex.imageHash().load(spark, p))
       == sigSet(Multimodal.imageHashes(all)),
       "compaction must not change the served fingerprints")
     // takedown: remove-then-load == hashing the difference corpus
-    Artifacts.removeFromImageHashIndex(odd.select("asset_id"), p)
-    assert(sigSet(Artifacts.loadImageHashIndex(spark, p))
+    Artifacts.CappedIndex.imageHash().remove(odd.select("asset_id"), p)
+    assert(sigSet(Artifacts.CappedIndex.imageHash().load(spark, p))
       == sigSet(Multimodal.imageHashes(even)))
     assert(new java.io.File(p, "_SUCCESS").exists())
     // the artifact pins its kind: serving it as an AUDIO index is the
     // silent-wrong class the sidecar exists to refuse
     val eKind = intercept[IllegalArgumentException] {
-      Artifacts.loadAudioHashIndex(spark, p)
+      Artifacts.CappedIndex.audioHash().load(spark, p)
     }
     assert(eKind.getMessage.contains("kind=phash"), eKind.getMessage)
     // train-once: imageHashIndexFor serves BY LOADING (same key ->
     // stored rows, even under different corpus content)
     val key = s"artifacts-spec-phash-${System.nanoTime()}"
-    val first = sigSet(Artifacts.imageHashIndexFor(even, key))
+    val first = sigSet(Artifacts.CappedIndex.imageHash().indexFor(even, key))
     assert(first == sigSet(Multimodal.imageHashes(even)))
-    assert(sigSet(Artifacts.imageHashIndexFor(odd, key)) == first,
+    assert(
+      sigSet(Artifacts.CappedIndex.imageHash().indexFor(odd, key)) == first,
       "same cache key must serve the stored fingerprints, not re-decode")
   }
 
@@ -1635,12 +1645,12 @@ class ArtifactsSpec extends SparkSpecBase {
     def sigSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val p = s"${tempDir("ahashidx")}/idx"
-    Artifacts.saveAudioHashIndex(even, p)
-    Artifacts.appendAudioHashIndex(odd, p)
-    assert(sigSet(Artifacts.loadAudioHashIndex(spark, p))
+    Artifacts.CappedIndex.audioHash().save(even, p)
+    Artifacts.CappedIndex.audioHash().append(odd, p)
+    assert(sigSet(Artifacts.CappedIndex.audioHash().load(spark, p))
       == sigSet(Multimodal.audioHashes(assets(_ => true))))
-    Artifacts.removeFromAudioHashIndex(odd.select("asset_id"), p)
-    assert(sigSet(Artifacts.loadAudioHashIndex(spark, p))
+    Artifacts.CappedIndex.audioHash().remove(odd.select("asset_id"), p)
+    assert(sigSet(Artifacts.CappedIndex.audioHash().load(spark, p))
       == sigSet(Multimodal.audioHashes(even)))
     val r = Artifacts.maintainIndex(spark, p, compactOver = 1)
     assert(r.family == "appendable-ahash" && r.cellsCompacted == 1,
@@ -2262,5 +2272,214 @@ class ArtifactsSpec extends SparkSpecBase {
       emb, path, centroids, codebooks,
       maxCell = maxCell))
     serve()
+  }
+
+  test("_params format of all 13 pinned and 4 capped kinds: exact " +
+       "sidecar text, and a load with one pin changed names the stored " +
+       "pin (empty artifacts included)") {
+    import graft.northstar.{Curation, Dedup, Multimodal}
+    import org.apache.spark.sql.DataFrame
+    val d = tempDir("pinfmt")
+    def text(p: String, name: String): String =
+      new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(p, name).toPath), "UTF-8")
+    def kv(m: Map[String, String]): String =
+      m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\n")
+    def empty(cols: (String, String)*): DataFrame =
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(
+          cols.map { case (c, t) => s"$c $t" }.mkString(", ")))
+    // (kind, exact pins, save, matching load, same load with one pin
+    // changed, the stored pin its refusal must name, whether the stored
+    // artifact is empty and the kind refuses to serve it, and for a
+    // capped kind its exact _schemas text)
+    case class Kind(name: String, pins: Map[String, String],
+                    save: String => Unit, load: String => Any,
+                    mismatched: String => Any, stored: String,
+                    refusesEmpty: Boolean = false,
+                    schemas: Option[String] = None)
+    val cfg = Curation.CurationConfig(minQuality = Some(0.5))
+    val pinned = Seq(
+      Kind("bpe", Map("rounds" -> "3"),
+        Artifacts.BpeMerges.save(spark, empty("step" -> "BIGINT",
+          "lhs" -> "STRING", "rhs" -> "STRING", "cnt" -> "BIGINT"), _, 3),
+        Artifacts.BpeMerges.load(spark, _, 3),
+        Artifacts.BpeMerges.load(spark, _, 4), "rounds=3"),
+      Kind("lmhead", Map("topK" -> "25"),
+        Artifacts.LmHead.save(spark, (Map.empty, 7L), _, 25),
+        Artifacts.LmHead.load(spark, _, 25),
+        Artifacts.LmHead.load(spark, _, 26), "topK=25",
+        refusesEmpty = true),
+      Kind("bghead", Map("topK" -> "10"),
+        Artifacts.BigramHead.save(spark, Map.empty, _, 10),
+        Artifacts.BigramHead.load(spark, _, 10),
+        Artifacts.BigramHead.load(spark, _, 11), "topK=10"),
+      Kind("bm25", Map("minTermLen" -> "1"),
+        Artifacts.Bm25Stats.save(spark, (Map.empty, 3L, 9L), _, (Nil, 1)),
+        Artifacts.Bm25Stats.load(spark, _, (Nil, 1)),
+        Artifacts.Bm25Stats.load(spark, _, (Nil, 2)),
+        "minTermLen=1", refusesEmpty = true),
+      Kind("probe", Map("iters" -> "2", "split_at" -> "5",
+          "label_col" -> "label", "dim" -> "2"),
+        Artifacts.ProbeWeights.save(spark, Seq(3L, 4L), _,
+          (2, 2, 5, "label")),
+        Artifacts.ProbeWeights.load(spark, _, (2, 2, 5, "label")),
+        Artifacts.ProbeWeights.load(spark, _, (2, 2, 5, "y")),
+        "label_col=label"),
+      Kind("ivf", Map("nCells" -> "2", "seed" -> "42"),
+        Artifacts.IvfCentroids.save(spark, Array.empty, _, (2, 42L)),
+        Artifacts.IvfCentroids.load(spark, _, (2, 42L)),
+        Artifacts.IvfCentroids.load(spark, _, (2, 7L)),
+        "seed=42", refusesEmpty = true),
+      Kind("pq", Map("m" -> "2", "ksub" -> "4", "seed" -> "42"),
+        Artifacts.PqCodebooks.save(spark, Array.empty, _, (2, 4, 42L)),
+        Artifacts.PqCodebooks.load(spark, _, (2, 4, 42L)),
+        Artifacts.PqCodebooks.load(spark, _, (2, 8, 42L)),
+        "ksub=4", refusesEmpty = true),
+      Kind("sempairs", Map("thresholdE4" -> "3000", "centroids" -> "ck"),
+        Artifacts.SemanticPairs.save(spark, empty("doc_a" -> "BIGINT",
+          "doc_b" -> "BIGINT"), _, (3000L, "ck")),
+        Artifacts.SemanticPairs.load(spark, _, (3000L, "ck")),
+        Artifacts.SemanticPairs.load(spark, _, (3000L, "other")),
+        "centroids=ck"),
+      Kind("semlabels", Map("thresholdE4" -> "3000", "centroids" -> "ck"),
+        Artifacts.SemanticLabels.save(spark, empty("vec_id" -> "BIGINT",
+          "cluster_id" -> "BIGINT"), _, ("vec_id", 3000L, "ck")),
+        Artifacts.SemanticLabels.load(spark, _, ("vec_id", 3000L, "ck")),
+        Artifacts.SemanticLabels.load(spark, _, ("vec_id", 4000L, "ck")),
+        "thresholdE4=3000"),
+      Kind("cclabels", Map("idCol" -> "doc_id"),
+        Artifacts.CollapseLabels.save(spark, empty("doc_id" -> "BIGINT",
+          "cluster_id" -> "BIGINT"), _, "doc_id"),
+        Artifacts.CollapseLabels.load(spark, _, "doc_id"),
+        Artifacts.CollapseLabels.load(spark, _, "vec_id"), "idCol=doc_id"),
+      Kind("winnow", Map("k" -> "5", "window" -> "4"),
+        Artifacts.WinnowSketch.save(spark, Dedup.winnowIndex(docs.limit(0)),
+          _, (5, 4)),
+        Artifacts.WinnowSketch.load(spark, _, (5, 4)),
+        Artifacts.WinnowSketch.load(spark, _, (5, 6)),
+        "window=4"),
+      Kind("boiler", Map("max_doc_freq" -> "10"),
+        Artifacts.BoilerplateLines.save(spark, empty("nh" -> "STRING"), _,
+          10L),
+        Artifacts.BoilerplateLines.load(spark, _, 10L),
+        Artifacts.BoilerplateLines.load(spark, _, 11L), "max_doc_freq=10"),
+      Kind("curation",
+        Map("cfg" -> "CurationConfig(Some(0.5),None,None,None,None,None)"),
+        Artifacts.CurationPolicy.save(spark,
+          Curation.FrozenCuration(Some(0.5), None, None, None), _,
+          cfg.toString),
+        Artifacts.CurationPolicy.load(spark, _, cfg.toString),
+        Artifacts.CurationPolicy.load(spark, _,
+          cfg.copy(minQuality = Some(0.6)).toString),
+        "cfg=CurationConfig(Some(0.5)"))
+    val ids = 0L until 4L
+    def images = ids.map(id => (id, Multimodal.syntheticPatternPng(id)))
+      .toDF("asset_id", "payload")
+    def audio = ids.map(id => (id, Multimodal.syntheticPatternWav(id)))
+      .toDF("asset_id", "payload")
+    val corpus = docs.limit(20)
+    def field(n: String, t: String): String =
+      s"""{"name":"$n","type":$t,"nullable":true,"metadata":{}}"""
+    def struct(fs: String*): String =
+      fs.mkString("""{"type":"struct","fields":[""", ",", "]}")
+    val (long, int, str) = ("\"long\"", "\"integer\"", "\"string\"")
+    def schemaText(dropped: String, rows: String): Option[String] =
+      Some(s"dropped=$dropped\nrows=$rows")
+    val sigSchemas = schemaText(struct(field("sig", long), field("n", long)),
+      struct(field("id", long), field("sig", long)))
+    val capped = Seq(
+      Kind("cwinnow", Map("kind" -> "winnow", "k" -> "5", "window" -> "4",
+          "maxBucket" -> "100"),
+        Artifacts.CappedIndex.winnow(maxBucket = 100).save(corpus, _),
+        Artifacts.CappedIndex.winnow(maxBucket = 100).load(spark, _),
+        Artifacts.CappedIndex.winnow(k = 6, maxBucket = 100).load(spark, _),
+        "k=5",
+        schemas = schemaText(struct(field("fp", str), field("n", long)),
+          struct(field("doc", long), field("fp", str), field("__k", int),
+            field("__window", int)))),
+      Kind("cband", Map("kind" -> "band", "k" -> "16", "bands" -> "8",
+          "maxBucket" -> "100"),
+        Artifacts.CappedIndex.band(maxBucket = 100).save(corpus, _),
+        Artifacts.CappedIndex.band(maxBucket = 100).load(spark, _),
+        Artifacts.CappedIndex.band(bands = 4, maxBucket = 100)
+          .load(spark, _), "bands=8",
+        schemas = schemaText(struct(field("band_hash", long), field("n", long)),
+          struct(field("id", long), field("mh", """{"type":"array",""" +
+            """"elementType":"long","containsNull":false}"""),
+            field("band_hash", long), field("__k", int),
+            field("__bands", int)))),
+      Kind("phash", Map("kind" -> "phash", "algo" -> "dhash64"),
+        Artifacts.CappedIndex.imageHash().save(images, _),
+        Artifacts.CappedIndex.imageHash().load(spark, _),
+        Artifacts.CappedIndex.audioHash().load(spark, _), "kind=phash",
+        schemas = sigSchemas),
+      Kind("ahash", Map("kind" -> "ahash", "algo" -> "hk65"),
+        Artifacts.CappedIndex.audioHash().save(audio, _),
+        Artifacts.CappedIndex.audioHash().load(spark, _),
+        Artifacts.CappedIndex.imageHash().load(spark, _), "kind=ahash",
+        schemas = sigSchemas))
+    for (k <- pinned ++ capped) {
+      val p = s"$d/${k.name}"
+      k.save(p)
+      assert(text(p, "_params") == kv(k.pins), s"${k.name} _params")
+      k.schemas.foreach(s =>
+        assert(text(p, "_schemas") == s, s"${k.name} _schemas"))
+      if (k.refusesEmpty)
+        assert(intercept[IllegalArgumentException](k.load(p))
+          .getMessage.contains("empty"), k.name)
+      else k.load(p): Unit
+      val e = intercept[IllegalArgumentException](k.mismatched(p))
+      assert(e.getMessage.contains(k.stored) &&
+        e.getMessage.contains("generated with"), s"${k.name}: ${e.getMessage}")
+    }
+  }
+
+  test("maintainIndex refuses window < 1 before touching any file: a torn " +
+       "drift.log stays byte-identical with the marker up, and a capped " +
+       "index refuses too") {
+    val cents = Ivf.fitCentroids(embA, nCells = 4)
+    val p = s"${tempDir("ivfwindow")}/idx"
+    Artifacts.saveIvfIndex(embA, p, cents, "vec_id", "embedding", 100000)
+    Artifacts.appendIvfIndex(embB, p, cents): Unit
+    // a crashed append's torn tail: the tick would canonicalize it
+    val logFile = new java.io.File(p, "drift.log")
+    java.nio.file.Files.write(logFile.toPath,
+      "ts=123 rows=45 drift=0.1".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    val before = java.nio.file.Files.readAllBytes(logFile.toPath)
+    val e = intercept[IllegalArgumentException] {
+      Artifacts.maintainIndex(spark, p, window = 0)
+    }
+    assert(e.getMessage.contains("window must be >= 1"), e.getMessage)
+    assert(java.util.Arrays.equals(before,
+      java.nio.file.Files.readAllBytes(logFile.toPath)),
+      "a refused window must not rewrite drift.log")
+    assert(new java.io.File(p, "_SUCCESS").exists())
+    intercept[IllegalArgumentException](Artifacts.driftExceeded(p, 0))
+    val pw = s"${tempDir("winwindow")}/idx"
+    Artifacts.CappedIndex.winnow(maxBucket = 100).save(docs.limit(20), pw)
+    assert(intercept[IllegalArgumentException] {
+      Artifacts.maintainIndex(spark, pw, window = 0)
+    }.getMessage.contains("window must be >= 1"))
+    assert(new java.io.File(pw, "_SUCCESS").exists())
+  }
+
+  test("CappedIndex.indexFor serves the winnow and band indexes by " +
+       "loading: the same cache key returns the stored rows") {
+    val key = s"artifacts-spec-capped-${System.nanoTime()}"
+    val other = Seq((1L, "totally different text about nothing at all"))
+      .toDF("doc_id", "text")
+    val base = docs.limit(30)
+    for (ix <- Seq(Artifacts.CappedIndex.winnow(maxBucket = 100),
+                   Artifacts.CappedIndex.band(maxBucket = 100))) {
+      val first = rows(ix.indexFor(base, key))
+      val p = s"${tempDir("cappedfor")}/idx"
+      ix.save(base, p)
+      assert(first.nonEmpty && first == rows(ix.load(spark, p)))
+      assert(rows(ix.indexFor(other, key)) == first,
+        "same cache key must serve the stored rows, not re-sketch")
+    }
   }
 }

@@ -286,13 +286,12 @@ class PqSpec extends SparkSpecBase {
     try {
       val cb = Pq.fitCodebooks(emb, m = 8, ksub = 16)
       val p = new java.io.File(dir, "cb").toString
-      Artifacts.savePqCodebooks(spark, cb, p, m = 8, ksub = 16, seed = 42L)
-      val loaded = Artifacts.loadPqCodebooks(spark, p, m = 8, ksub = 16,
-        seed = 42L)
+      Artifacts.PqCodebooks.save(spark, cb, p, (8, 16, 42L))
+      val loaded = Artifacts.PqCodebooks.load(spark, p, (8, 16, 42L))
       assert(loaded.map(_.map(_.toSeq).toSeq).toSeq ==
         cb.map(_.map(_.toSeq).toSeq).toSeq)
       val e = intercept[IllegalArgumentException] {
-        Artifacts.loadPqCodebooks(spark, p, m = 8, ksub = 16, seed = 7L)
+        Artifacts.PqCodebooks.load(spark, p, (8, 16, 7L))
       }
       assert(e.getMessage.contains("seed"))
     } finally {

@@ -558,16 +558,17 @@ object ScaleProbe {
       val wiBase = docs10.filter(col("doc_id") % 10 =!= 3)
       val wiDelta = docs10.filter(col("doc_id") % 10 === 3)
       timed("winnowIdx appendable build 45k") {
-        graft.northstar.Artifacts.saveWinnowIndexAppendable(
+        graft.northstar.Artifacts.CappedIndex.winnow().save(
           wiBase, s"$wiDir/idx")
         spark.read.parquet(s"$wiDir/idx/rows").count()
       }
       val wiApp = timed("winnowIdx append 5k delta") {
-        graft.northstar.Artifacts.appendWinnowIndex(wiDelta, s"$wiDir/idx")
+        graft.northstar.Artifacts.CappedIndex.winnow()
+          .append(wiDelta, s"$wiDir/idx")
         spark.read.parquet(s"$wiDir/idx/rows").count()
       }
       val wiReb = timed("winnowIdx full rebuild 50k") {
-        graft.northstar.Artifacts.saveWinnowIndexAppendable(
+        graft.northstar.Artifacts.CappedIndex.winnow().save(
           docs10, s"$wiDir/idx2")
         spark.read.parquet(s"$wiDir/idx2/rows").count()
       }

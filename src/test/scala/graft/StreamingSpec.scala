@@ -507,10 +507,11 @@ class StreamingSpec extends SparkSpecBase {
       Multimodal.syntheticPatternPng(id, flipTopLeft = true)))
     incoming.toDF("asset_id", "payload").write.parquet(s"$src/in.parquet")
     val p = s"${tmp()}/phash"
-    Artifacts.saveImageHashIndex(originals.toDF("asset_id", "payload"), p)
+    Artifacts.CappedIndex.imageHash()
+      .save(originals.toDF("asset_id", "payload"), p)
     // the serving path: the STORED (id, sig) frame feeds the screen —
     // a stream-static join against parquet, stateless on the stream
-    val stored = Artifacts.loadImageHashIndex(spark, p)
+    val stored = Artifacts.CappedIndex.imageHash().load(spark, p)
     val schema = spark.read.parquet(s"$src/in.parquet").schema
     val name = s"img_stored_ingest_${System.nanoTime()}"
     val q = Multimodal.imageDupIncoming(
@@ -543,8 +544,9 @@ class StreamingSpec extends SparkSpecBase {
       Multimodal.syntheticPatternWav(id, flipFirst = true)))
     incoming.toDF("asset_id", "payload").write.parquet(s"$src/in.parquet")
     val p = s"${tmp()}/ahash"
-    Artifacts.saveAudioHashIndex(originals.toDF("asset_id", "payload"), p)
-    val stored = Artifacts.loadAudioHashIndex(spark, p)
+    Artifacts.CappedIndex.audioHash()
+      .save(originals.toDF("asset_id", "payload"), p)
+    val stored = Artifacts.CappedIndex.audioHash().load(spark, p)
     val schema = spark.read.parquet(s"$src/in.parquet").schema
     val name = s"aud_stored_ingest_${System.nanoTime()}"
     val q = Multimodal.audioDupIncoming(
@@ -927,7 +929,8 @@ class StreamingSpec extends SparkSpecBase {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") < 100)
     val path = s"${tmp()}/winidx"
-    Artifacts.saveWinnowIndexAppendable(corpus, path, maxBucket = 100)
+    val winnow = Artifacts.CappedIndex.winnow(maxBucket = 100)
+    winnow.save(corpus, path)
     val victims = corpus.filter(col("doc_id") >= 50).select("doc_id")
     val inDir = s"$src/in.parquet"
     // batch 0: copies of docs 0..59 (ids +1M) — overlaps the victims;
@@ -947,8 +950,7 @@ class StreamingSpec extends SparkSpecBase {
       .readTableStream(spark, src, "in", schema, maxFilesPerTrigger = 1)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val idx = Artifacts.loadWinnowIndexAppendable(spark, path,
-          maxBucket = 100)
+        val idx = winnow.load(spark, path)
         got.synchronized {
           got(id) = Dedup
             .winnowPairsAgainstIndex(batch, idx, maxBucket = 100)
@@ -957,8 +959,7 @@ class StreamingSpec extends SparkSpecBase {
         }
         // the takedown, after batch 0 completes and before batch 1 plans
         if (id == 0L)
-          Artifacts.removeFromWinnowIndex(victims, path,
-            maxBucket = 100): Unit
+          winnow.remove(victims, path): Unit
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -976,13 +977,11 @@ class StreamingSpec extends SparkSpecBase {
     // ... and it equals the batch-mode probe against a from-scratch
     // build on the difference corpus, row-exactly
     val diffPath = s"${tmp()}/winidx-diff"
-    Artifacts.saveWinnowIndexAppendable(
-      corpus.filter(col("doc_id") < 50), diffPath, maxBucket = 100)
+    winnow.save(corpus.filter(col("doc_id") < 50), diffPath)
     val expect = Dedup.winnowPairsAgainstIndex(
         corpus.filter(col("doc_id") >= 20 && col("doc_id") < 80)
           .select((col("doc_id") + 2000000L).as("doc_id"), col("text")),
-        Artifacts.loadWinnowIndexAppendable(spark, diffPath,
-          maxBucket = 100),
+        winnow.load(spark, diffPath),
         maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got(1L) == expect)
