@@ -492,4 +492,121 @@ class PqSpec extends SparkSpecBase {
       == rows(Pq.annMatchesIncomingHier(incoming, idxU, emb, hq,
         splitsU, cents, thresholdE4 = 7000)))
   }
+
+  test("one table over the literal, hierarchical and stored quantizers: " +
+       "every IVF / IVF-PQ top-k, serve and ingest-screen call fires a " +
+       "pinned number of Spark jobs and returns pinned rows") {
+    import Ivf.{CoarseQuantizer, HierarchicalQuantizer, LiteralQuantizer,
+      StoredQuantizer}
+    import org.apache.spark.sql.DataFrame
+    // partial supercell probing (2 of 3) so the relation families'
+    // probe ranking genuinely cuts, and maxCell under the ~62-row mean
+    // cell so every family builds a non-empty split map (the stored
+    // family's split-centroid fetch is one of the pinned jobs)
+    val coarse = Ivf.fitCentroids(emb, nCells = 8)
+    val supers = Ivf.fitCentroids(emb, nCells = 3, seed = 7L)
+    val cb = Pq.fitCodebooks(emb, m = 8, ksub = 16)
+    val hq = HierarchicalQuantizer(supers, coarse, superProbe = 2)
+    val cellsPath = TestTmp.dir("pq-table") + "/cells"
+    hq.cellsRelation(spark).select("cell", "sup", "ccv")
+      .write.parquet(cellsPath)
+    val sq = StoredQuantizer(LiteralQuantizer(supers), cellsPath, 8,
+      coarse(0).length, superProbe = 2)
+    val maxCell = 40
+    val q = emb.filter(col("vec_id") < 2)
+    val incoming = emb.filter(col("vec_id") < 2)
+      .select((col("vec_id") + 5000).as("vec_id"), col("embedding"))
+    // "query>neighbor,neighbor,…" in rank order, queries ascending
+    def topK(df: DataFrame): String =
+      df.collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(1)))
+        .sorted.groupBy(_._1).toSeq.sortBy(_._1).map { case (qid, rs) =>
+          s"$qid>${rs.map(_._3).mkString(",")}" }.mkString(" ")
+    def pairs(df: DataFrame): String =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sorted.map { case (i, n, s) => s"$i>$n@$s" }.mkString(" ")
+    def calls(fam: CoarseQuantizer, p: String)
+        : Seq[(String, () => DataFrame, DataFrame => String)] = {
+      Artifacts.saveIvfIndex(emb, p + "/ivf", fam, maxCell = maxCell)
+      Artifacts.saveIvfPqIndex(emb, p + "/pq", fam, cb, maxCell = maxCell)
+      val (ivfIdx, ivfSplits) =
+        Artifacts.loadIvfIndex(spark, p + "/ivf", fam, maxCell = maxCell)
+      val (pqIdx, pqSplits) =
+        Artifacts.loadIvfPqIndex(spark, p + "/pq", fam, cb,
+          maxCell = maxCell)
+      assert(ivfSplits.nonEmpty && pqSplits.nonEmpty)
+      fam match {
+        case LiteralQuantizer(c) => Seq(
+          ("ivfTopK", () => Ivf.ivfTopK(q, emb, c, k = 3, nProbe = 2,
+            maxCell = maxCell), topK),
+          ("ivfServeTopK", () => Ivf.ivfServeTopK(q, ivfIdx, c, ivfSplits,
+            k = 3), topK),
+          ("ivfPqTopK", () => Pq.ivfPqTopK(q, emb, c, cb, k = 3,
+            nProbe = 2, maxCell = maxCell), topK),
+          ("ivfPqServeTopK", () => Pq.ivfPqServeTopK(q, pqIdx, emb, c,
+            pqSplits, cb, k = 3, nProbe = 2), topK),
+          ("annMatchesIncoming", () => Pq.annMatchesIncoming(incoming,
+            pqIdx, emb, c, pqSplits, cb, thresholdE4 = 3000,
+            nProbe = 2), pairs))
+        case h: HierarchicalQuantizer => Seq(
+          ("ivfTopK", () => Ivf.ivfTopKHier(q, emb, h, k = 3, nProbe = 2,
+            maxCell = maxCell), topK),
+          ("ivfServeTopK", () => Ivf.ivfServeTopKHier(q, ivfIdx, h,
+            ivfSplits, k = 3), topK),
+          ("ivfPqTopK", () => Pq.ivfPqTopKHier(q, emb, h, cb, k = 3,
+            nProbe = 2, maxCell = maxCell), topK),
+          ("ivfPqServeTopK", () => Pq.ivfPqServeTopKHier(q, pqIdx, emb, h,
+            pqSplits, cb, k = 3, nProbe = 2), topK),
+          ("annMatchesIncoming", () => Pq.annMatchesIncomingHier(incoming,
+            pqIdx, emb, h, pqSplits, cb, thresholdE4 = 3000,
+            perSuperProbe = 2), pairs))
+        case s: StoredQuantizer => Seq(
+          ("ivfTopK", () => Ivf.ivfTopKStored(q, emb, s, k = 3,
+            nProbe = 2, maxCell = maxCell), topK),
+          ("ivfServeTopK", () => Ivf.ivfServeTopKStored(q, ivfIdx, s,
+            ivfSplits, k = 3), topK),
+          ("ivfPqTopK", () => Pq.ivfPqTopKStored(q, emb, s, cb, k = 3,
+            nProbe = 2, maxCell = maxCell), topK),
+          ("ivfPqServeTopK", () => Pq.ivfPqServeTopKStored(q, pqIdx, emb,
+            s, pqSplits, cb, k = 3, nProbe = 2), topK),
+          ("annMatchesIncoming", () => Pq.annMatchesIncomingStored(
+            incoming, pqIdx, emb, s, pqSplits, cb, thresholdE4 = 3000,
+            perSuperProbe = 2), pairs))
+      }
+    }
+    // (family, shape) -> (Spark jobs of build + collect, rendered rows)
+    val expected: Map[(String, String), (Int, String)] = Map(
+      ("literal", "ivfTopK") -> (6, "0>225,347,299 1>257,440,260"),
+      ("literal", "ivfServeTopK") -> (6, "0>17,225,212 1>257,129,440"),
+      ("literal", "ivfPqTopK") -> (9, "0>225,299,497 1>257,440,260"),
+      ("literal", "ivfPqServeTopK") -> (9, "0>225,299,497 1>257,440,260"),
+      ("literal", "annMatchesIncoming") ->
+        (3, "5000>0@10000 5001>1@10000 5001>257@3918"),
+      ("hierarchical", "ivfTopK") -> (12, "0>225,347,299 1>257,129,75"),
+      ("hierarchical", "ivfServeTopK") -> (8, "0>225,73,347 1>257,129,75"),
+      ("hierarchical", "ivfPqTopK") -> (15, "0>225,299,497 1>257,129,75"),
+      ("hierarchical", "ivfPqServeTopK") ->
+        (11, "0>225,299,497 1>257,129,75"),
+      ("hierarchical", "annMatchesIncoming") ->
+        (5, "5000>0@10000 5001>1@10000 5001>129@3515 5001>257@3918"),
+      ("stored", "ivfTopK") -> (16, "0>225,347,299 1>257,129,75"),
+      ("stored", "ivfServeTopK") -> (11, "0>225,73,347 1>257,129,75"),
+      ("stored", "ivfPqTopK") -> (19, "0>225,299,497 1>257,129,75"),
+      ("stored", "ivfPqServeTopK") -> (14, "0>225,299,497 1>257,129,75"),
+      ("stored", "annMatchesIncoming") ->
+        (8, "5000>0@10000 5001>1@10000 5001>129@3515 5001>257@3918"))
+    val measured = for {
+      (name, fam) <- Seq("literal" -> LiteralQuantizer(coarse),
+        "hierarchical" -> hq, "stored" -> sq)
+      (shape, call, render) <- calls(fam, TestTmp.dir(s"pq-table-$name"))
+    } yield {
+      // a cached frame from an earlier suite over a value-identical
+      // subtree would serve a persisted assignment and hide its jobs
+      graft.northstar.Dedup.releasePersisted()
+      spark.catalog.clearCache()
+      var out = ""
+      val jobs = jobStarts { out = render(call()) }
+      (name, shape) -> (jobs.size, out)
+    }
+    assert(measured.toMap == expected)
+  }
 }
