@@ -2008,7 +2008,7 @@ object SparkEntry {
     "ns_knn_ivf_hier_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val hq = hierQuantizerFor(s, dir)
-      graft.northstar.Ivf.ivfTopKHier(
+      graft.northstar.Ivf.ivfTopK(
         emb.filter(col("vec_id") < 5), emb, hq, k = 10, nProbe = 8)
     }),
     // and the hierarchical STORED index (train-once cell-partitioned
@@ -2024,7 +2024,7 @@ object SparkEntry {
       }
       val (index, splits) = graft.northstar.Artifacts
         .loadIvfIndex(s, path, hq)
-      graft.northstar.Ivf.ivfServeTopKHier(
+      graft.northstar.Ivf.ivfServeTopK(
         emb.filter(col("vec_id") < 5), index, hq, splits,
         k = 10, nProbe = 8)
     }),
@@ -2038,7 +2038,7 @@ object SparkEntry {
     "ns_knn_ivf_stored_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val sq = storedQuantizerFor(s, dir, nCells = 8, superProbe = 4)
-      graft.northstar.Ivf.ivfTopKStored(
+      graft.northstar.Ivf.ivfTopK(
         emb.filter(col("vec_id") < 5), emb,
         sq.copy(superProbe = sq.nSuper), k = 10, nProbe = 8)
     }),
@@ -2057,7 +2057,7 @@ object SparkEntry {
       }
       val (index, splits) = graft.northstar.Artifacts
         .loadIvfIndex(s, path, sq)
-      graft.northstar.Ivf.ivfServeTopKStored(
+      graft.northstar.Ivf.ivfServeTopK(
         emb.filter(col("vec_id") < 5), index, sq, splits,
         k = 10, nProbe = 8)
     }),
@@ -2181,7 +2181,7 @@ object SparkEntry {
       val key = corpusKey(dir, "embeddings")
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
-      graft.northstar.Pq.ivfPqTopKHier(emb.filter(col("vec_id") < 5),
+      graft.northstar.Pq.ivfPqTopK(emb.filter(col("vec_id") < 5),
         emb, hierQuantizerFor(s, dir), codebooks, k = 10, nProbe = 8,
         rerank = 1 << 30)
     }),
@@ -2196,7 +2196,7 @@ object SparkEntry {
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
       val sq = storedQuantizerFor(s, dir, nCells = 8, superProbe = 4)
-      graft.northstar.Pq.ivfPqTopKStored(emb.filter(col("vec_id") < 5),
+      graft.northstar.Pq.ivfPqTopK(emb.filter(col("vec_id") < 5),
         emb, sq.copy(superProbe = sq.nSuper), codebooks, k = 10,
         nProbe = 8, rerank = 1 << 30)
     }),
@@ -2340,7 +2340,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       Similarity.recallCounts(
-        graft.northstar.Ivf.ivfTopKHier(
+        graft.northstar.Ivf.ivfTopK(
           q, emb, hierQuantizerPartialFor(s, dir), k = 10, nProbe = 5),
         Similarity.bruteForceTopK(q, emb, k = 10))
     }),
@@ -2354,7 +2354,7 @@ object SparkEntry {
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
       Similarity.recallCounts(
-        graft.northstar.Pq.ivfPqTopKHier(
+        graft.northstar.Pq.ivfPqTopK(
           q, emb, hierQuantizerPartialFor(s, dir), codebooks,
           k = 10, nProbe = 5, rerank = 30),
         Similarity.bruteForceTopK(q, emb, k = 10))
@@ -2371,7 +2371,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       Similarity.recallCounts(
-        graft.northstar.Ivf.ivfTopKStored(
+        graft.northstar.Ivf.ivfTopK(
           q, emb, storedQuantizerFor(s, dir, nCells = 24, superProbe = 2),
           k = 10, nProbe = 5),
         Similarity.bruteForceTopK(q, emb, k = 10))
@@ -2386,7 +2386,7 @@ object SparkEntry {
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
       Similarity.recallCounts(
-        graft.northstar.Pq.ivfPqTopKStored(
+        graft.northstar.Pq.ivfPqTopK(
           q, emb, storedQuantizerFor(s, dir, nCells = 24, superProbe = 2),
           codebooks, k = 10, nProbe = 5, rerank = 30),
         Similarity.bruteForceTopK(q, emb, k = 10))

@@ -1,6 +1,6 @@
 package graft.northstar
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The artifact store for the train-offline / serve-online operators:
@@ -892,17 +892,16 @@ object Artifacts {
   // or stored coarse quantizer. The quantizer's TYPE picks the family:
   // every verb below is one def over [[Ivf.CoarseQuantizer]], and
   // [[cellFamily]] turns the quantizer into the three facts the families
-  // differ in — the `_params` pins, the cell assignment and the
-  // stored-row projection.
+  // differ in — the `_params` pins, the cell assignment (the search's
+  // own, from [[Ivf.family]]) and the stored-row projection.
 
   /** One cell-index family as the protocol bodies see it, built once per
     * verb call by [[cellFamily]]:
     *   - `params`: the `_params` pins — the quantizer's digests, maxCell,
     *     vecCol, and the codebook digest for the codes layout;
-    *   - `assign`: (input rows, idCol) → (neighbor_id, cv, cell) through
-    *     the literal [[Ivf.cellOf]] kernel, the [[Ivf.assignCellsJoin]]
-    *     broadcast join or the [[Ivf.assignCellsStored]] relation join.
-    *     Plan construction only — the mutation verbs execute it inside
+    *   - `assign`: (input rows, idCol) → (neighbor_id, cv, cell), the
+    *     search's own assignment ([[Ivf.Family.assign]]). Plan
+    *     construction only — the mutation verbs execute it inside
     *     their marker mutex;
     *   - `project`: (neighbor_id, cv, cell) + split map → the stored row
     *     shape (raw vectors or PQ codes, plus the subcell). ONE
@@ -924,39 +923,28 @@ object Artifacts {
   }
 
   /** The [[CellFamily]] of `quantizer`, with the codes layout when
-    * `codebooks` is given. The literal and hierarchical families pin
-    * centroid digests (driver-side, no Spark job); the hierarchical one
-    * also pins the supercell set and superProbe — corpus assignment and
-    * query probing must agree on both, or the (cell, subcell) probe keys
-    * silently stop matching. The stored family pins the cells-relation
-    * content digest ([[storedCellsDigest]], one nCells-row aggregate)
-    * plus its top level, and derives subcell thresholds from the SPLIT
-    * cells' centroids only ([[Ivf.storedSplitCentroids]] — the full
-    * centroid set never reaches the driver).
+    * `codebooks` is given. The assignment and the subcell derivation
+    * are the search's own ([[Ivf.family]]), so an index row and a probe
+    * key cannot be derived two ways. The literal and hierarchical
+    * families pin centroid digests (driver-side, no Spark job); the
+    * hierarchical one also pins the supercell set and superProbe —
+    * corpus assignment and query probing must agree on both, or the
+    * (cell, subcell) probe keys silently stop matching. The stored
+    * family pins the cells-relation content digest
+    * ([[storedCellsDigest]], one nCells-row aggregate) plus its top
+    * level.
     */
   private def cellFamily(spark: SparkSession, quantizer: Ivf.CoarseQuantizer,
                          codebooks: Option[Array[Array[Array[Float]]]],
                          vecCol: String, maxCell: Int): CellFamily = {
-    def keyed(df: DataFrame, idCol: String): DataFrame =
-      df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        col("cell"))
-    val (kind, pins, assign, subcell) = quantizer match {
+    val (kind, pins) = quantizer match {
       case Ivf.LiteralQuantizer(c) =>
-        ("", Map("centroids" -> centroidDigest(c)),
-          (df: DataFrame, idCol: String) =>
-            df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-              Ivf.cellOf(col(vecCol), c).as("cell")),
-          (splits: Map[Int, Int]) =>
-            Ivf.subcellOf(col("cv"), col("cell"), c, splits))
+        ("", Map("centroids" -> centroidDigest(c)))
       case hq: Ivf.HierarchicalQuantizer =>
         ("hierarchical ", Map("family" -> "hier",
           "centroids" -> centroidDigest(hq.centroids),
           "supers" -> centroidDigest(hq.superCentroids),
-          "superProbe" -> hq.superProbe.toString),
-          (df: DataFrame, idCol: String) =>
-            keyed(Ivf.assignCellsJoin(df, hq, idCol, vecCol), idCol),
-          (splits: Map[Int, Int]) =>
-            Ivf.subcellOf(col("cv"), col("cell"), hq.centroids, splits))
+          "superProbe" -> hq.superProbe.toString))
       case sq: Ivf.StoredQuantizer =>
         ("stored-cells ", Map("family" -> "stored",
           "cells" -> storedCellsDigest(spark, sq),
@@ -969,15 +957,11 @@ object Artifacts {
                 s"${centroidDigest(hq.superCentroids)}:${hq.superProbe}"
             case _: Ivf.StoredQuantizer => "unreachable"
           }),
-          "superProbe" -> sq.superProbe.toString),
-          (df: DataFrame, idCol: String) =>
-            keyed(Ivf.assignCellsStored(df, sq, idCol, vecCol), idCol),
-          (splits: Map[Int, Int]) => {
-            val splitCents = Ivf.storedSplitCentroids(sq, spark, splits)
-            Ivf.subcellOfSparse(col("cv"), col("cell"), splitCents(_),
-              splits)
-          })
+          "superProbe" -> sq.superProbe.toString))
     }
+    val search = Ivf.family(quantizer, spark)
+    def subcell(splits: Map[Int, Int]): Column =
+      search.subcell(splits)(col("cv"))
     val project: (DataFrame, Map[Int, Int]) => DataFrame = codebooks match {
       case None => (assigned, splits) =>
         assigned.withColumn("subcell", subcell(splits))
@@ -991,7 +975,7 @@ object Artifacts {
     CellFamily(kind + layout, verb,
       pins ++ codebooks.map(cb => "codebooks" -> centroidDigest(cb.flatten)) ++
         Map("maxCell" -> maxCell.toString, "vecCol" -> vecCol),
-      maxCell, assign, project)
+      maxCell, search.assign(_, _, vecCol), project)
   }
 
   /** The raw-vector layout's `resolveVectors`: stored rows already carry
@@ -1022,9 +1006,9 @@ object Artifacts {
 
   /** Persist the cell-partitioned IVF SERVING index: the corpus assigned
     * once under `quantizer`, written hive-partitioned by cell — so a
-    * probe ([[Ivf.ivfServeTopK]], or the `…Hier`/`…Stored` serve kernel
-    * of the quantizer's family) prunes unprobed cell directories at
-    * planning time instead of re-deriving assignments in-plan. Parts
+    * probe ([[Ivf.ivfServeTopK]] under the same quantizer) prunes
+    * unprobed cell directories at planning time instead of
+    * re-deriving assignments in-plan. Parts
     * under `path`: `index` (neighbor_id, cv, subcell; partitioned by
     * cell) and the `_splits` sidecar (the oversized-cell split-bits
     * census the assignment was computed with — the query side must use
@@ -1241,7 +1225,7 @@ object Artifacts {
   }
 
   /** [[loadIvfIndex]] for the codes-only IVF-PQ layout — feeds
-    * [[Pq.ivfPqServeTopK]] or its family's `…Hier`/`…Stored` kernel.
+    * [[Pq.ivfPqServeTopK]] under the same quantizer.
     */
   def loadIvfPqIndex(spark: SparkSession, path: String,
                      quantizer: Ivf.CoarseQuantizer,
@@ -1948,7 +1932,7 @@ object Artifacts {
     *
     * Returns the retrained quantizer and the new split map; serve with
     * [[loadIvfIndex]] under that quantizer, then [[Ivf.ivfServeTopK]]
-    * or [[Ivf.ivfServeTopKHier]] by family.
+    * under it, whatever its family.
     * Retrain == a from-scratch [[saveIvfIndex]] on the current corpus
     * under the same quantizer (ArtifactsSpec pins it). Note for
     * `*For`-store roots: the store path encodes the ORIGINAL nCells —
@@ -2029,7 +2013,7 @@ object Artifacts {
     * tripwire applies). The refit cells relation lands INSIDE the
     * replacement artifact (`<path>/cells` post-swap); the returned
     * handle points there. Serve with
-    * [[loadIvfPqIndex]]/[[Pq.ivfPqServeTopKStored]].
+    * [[loadIvfPqIndex]]/[[Pq.ivfPqServeTopK]].
     */
   def retrainIvfPqIndexStored(spark: SparkSession, corpus: DataFrame,
                               path: String,

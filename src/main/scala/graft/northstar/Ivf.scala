@@ -62,43 +62,9 @@ object Ivf {
     * block limit, leaving headroom for serialization overhead and the
     * executor-side deserialized copy. Overridable per session via the
     * `graft.hier.relationBroadcastCeiling` conf — see
-    * [[HierarchicalQuantizer.joinPackedRelation]].
+    * [[RelationQuantizer.joinPackedRelation]].
     */
   val RelationBroadcastCeiling: Long = 4L << 30
-
-  /** A centroid relation SIZED for its `sup` equi-join — ONE definition
-    * behind [[HierarchicalQuantizer]]'s broadcast/shuffle-hash degrade
-    * and the stored family's ([[StoredQuantizer]]), so the ceiling
-    * semantics and the conf-key parse cannot drift between them. Under
-    * `estimatedBytes <= ceiling` the relation is broadcast; past it the
-    * join degrades to SHUFFLE-HASH with the relation pinned as the
-    * per-partition hash build side (a sort-merge would sort the
-    * superProbe-exploded row side — the exact materialization the
-    * packed-relation design exists to avoid).
-    */
-  private[northstar] def sizedRelationForJoin(
-      spark: org.apache.spark.sql.SparkSession,
-      rel: DataFrame, estimatedBytes: Long): DataFrame = {
-    // Spark byte-string parse ("4g", "512m", plain bytes) with the
-    // conf key named on failure — a bare toLong would surface an
-    // operator's natural "4g" spelling as an uncontextualized
-    // NumberFormatException from deep inside plan construction
-    // (code-review r17)
-    val ceiling = spark.conf
-      .getOption("graft.hier.relationBroadcastCeiling")
-      .map { v =>
-        try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-        catch { case e: NumberFormatException =>
-          throw new IllegalArgumentException(
-            "graft.hier.relationBroadcastCeiling: cannot parse '" + v +
-              "' as a byte size (plain bytes or a Spark byte string " +
-              "like 4g / 512m)", e)
-        }
-      }
-      .getOrElse(Ivf.RelationBroadcastCeiling)
-    if (estimatedBytes <= ceiling) broadcast(rel)
-    else rel.hint("shuffle_hash")
-  }
 
   /** The √N cell-count rule (the standard IVF sizing guideline:
     * nlist ≈ √corpus balances cells scanned per probe against rows per
@@ -124,10 +90,18 @@ object Ivf {
 
   /** One definition of the [[AutoProbe]] sentinel resolution, shared by
     * every probe entry point here and in [[Pq]] — a future change to
-    * the rule (e.g. clamping to the live cell count) lands once.
+    * the rule (e.g. clamping to the live cell count) lands once. Any
+    * other width below 1 is refused, naming the value: it would probe
+    * no cell, and the relation families' ranking cut would return an
+    * empty result with no error.
     */
-  def resolveNProbe(nProbe: Int, centroids: Array[Array[Float]]): Int =
-    if (nProbe == AutoProbe) autoNProbe(centroids.length) else nProbe
+  def resolveNProbe(nProbe: Int, nCells: Int): Int =
+    if (nProbe == AutoProbe) autoNProbe(nCells)
+    else {
+      require(nProbe >= 1, s"nProbe must be >= 1 (or Ivf.AutoProbe), " +
+        s"got $nProbe: a probe of no cell returns no neighbor")
+      nProbe
+    }
 
   /** One definition of the [[AutoCells]] sentinel resolution; `rows` is
     * by-name so explicit callers never pay the count.
@@ -559,21 +533,136 @@ object Ivf {
         entries.map(_._2), thrs, SplitTable)
     }
 
-  /** The probe-side frame every IVF-family search builds: queries as
-    * (query_id, qv) with their nProbe cells EXPLODED and the mega-cell
-    * subcell key attached. Shared by [[ivfTopK]], [[ivfServeTopK]], and
-    * the PQ family ([[Pq.ivfPqTopK]]/[[Pq.ivfPqServeTopK]]) so a
-    * probing or subcell change cannot drift between the four paths.
+  /** The search-time routines of one quantizer family, built once per
+    * call by [[family]] — the one place that knows how a family assigns
+    * and probes. Every search shape ([[ivfTopK]], [[ivfServeTopK]],
+    * [[Pq.ivfPqTopK]], [[Pq.ivfPqServeTopK]], [[Pq.annMatchesIncoming]])
+    * is one body over it, and the [[Artifacts]] cell-index verbs take
+    * their assignment and subcell derivation from it, so a probing or
+    * subcell change cannot drift between shapes or between the index
+    * build and the search.
     */
-  private[northstar] def probeFrame(queries: DataFrame,
-                                    centroids: Array[Array[Float]],
-                                    splits: Map[Int, Int], nProbe: Int,
-                                    idCol: String,
-                                    vecCol: String): DataFrame =
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeCells(col(vecCol), centroids, nProbe)).as("cell"))
-      .withColumn("subcell",
-        subcellOf(col("qv"), col("cell"), centroids, splits))
+  private[northstar] sealed abstract class Family(val nCells: Int) {
+
+    /** rows → (neighbor_id, cv, cell): the [[cellOf]] kernel,
+      * [[assignCellsJoin]] or [[assignCellsStored]].
+      */
+    def assign(rows: DataFrame, idCol: String, vecCol: String): DataFrame
+
+    /** The split map of an [[assign]]ed frame — the collected census
+      * ([[splitBitsFromCensus]]); the stored family never collects it
+      * ([[splitBitsFromAssigned]]).
+      */
+    def splitsOf(assigned: DataFrame, maxCell: Int): Map[Int, Int] =
+      splitBitsFromCensus(assigned.groupBy("cell").count(), maxCell)
+
+    /** The subcell key of a vector column (next to a `cell` column)
+      * under `splits`: [[subcellOf]], or for the stored family
+      * [[subcellOfSparse]] over the split cells' centroids, fetched
+      * once per call of this method.
+      */
+    def subcell(splits: Map[Int, Int]): Column => Column
+
+    /** queries → (query_id, qv, cell), each query's `nProbe` cells: the
+      * [[probeCells]] explode, [[probeCellsJoin]] or
+      * [[probeCellsStored]].
+      */
+    def probe(queries: DataFrame, nProbe: Int, idCol: String,
+              vecCol: String): DataFrame
+
+    /** The STREAM-SAFE probe of the ingest screen, (query_id, qv, cell)
+      * with no window: the literal family's [[probe]] (its `nProbe`
+      * resolved here); for the relation families the top
+      * `perSuperProbe` cells inside each probed supercell through the
+      * packed relation and the [[graft.functions.VecOps.topCellsIn]]
+      * kernel — the stored family reaching its supercells through
+      * [[probeSupsIngest]].
+      */
+    def ingestProbe(incoming: DataFrame, nProbe: Int, perSuperProbe: Int,
+                    idCol: String, vecCol: String): DataFrame
+
+    /** [[probe]] with the subcell key attached: the probe side of every
+      * top-k and serve shape.
+      */
+    final def probeKeyed(queries: DataFrame, nProbe: Int,
+                         subcell: Column => Column, idCol: String,
+                         vecCol: String): DataFrame =
+      probe(queries, nProbe, idCol, vecCol)
+        .withColumn("subcell", subcell(col("qv")))
+  }
+
+  /** The [[Family]] of `quantizer`. Building it runs no Spark job. */
+  private[northstar] def family(quantizer: CoarseQuantizer,
+                                spark: org.apache.spark.sql.SparkSession)
+      : Family = quantizer match {
+    case LiteralQuantizer(c) => new Family(c.length) {
+      def assign(rows: DataFrame, idCol: String, vecCol: String) =
+        rows.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+          cellOf(col(vecCol), c).as("cell"))
+      def subcell(splits: Map[Int, Int]) =
+        subcellOf(_, col("cell"), c, splits)
+      def probe(queries: DataFrame, nProbe: Int, idCol: String,
+                vecCol: String) =
+        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+          explode(probeCells(col(vecCol), c, nProbe)).as("cell"))
+      def ingestProbe(incoming: DataFrame, nProbe: Int,
+                      perSuperProbe: Int, idCol: String, vecCol: String) =
+        probe(incoming, resolveNProbe(nProbe, nCells), idCol, vecCol)
+    }
+    case hq: HierarchicalQuantizer => new Family(hq.nCells) {
+      def assign(rows: DataFrame, idCol: String, vecCol: String) =
+        assignCellsJoin(rows, hq, idCol, vecCol)
+          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+            col("cell"))
+      def subcell(splits: Map[Int, Int]) =
+        subcellOf(_, col("cell"), hq.centroids, splits)
+      def probe(queries: DataFrame, nProbe: Int, idCol: String,
+                vecCol: String) =
+        probeCellsJoin(queries, hq, nProbe, idCol, vecCol)
+      def ingestProbe(incoming: DataFrame, nProbe: Int,
+                      perSuperProbe: Int, idCol: String, vecCol: String) =
+        topCellsPerSuper(
+          incoming.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+            explode(probeCells(col(vecCol), hq.superCentroids,
+              math.min(hq.superProbe, hq.nSuper))).as("sup")),
+          hq, perSuperProbe)
+    }
+    case sq: StoredQuantizer => new Family(sq.nCells) {
+      def assign(rows: DataFrame, idCol: String, vecCol: String) =
+        assignCellsStored(rows, sq, idCol, vecCol)
+          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+            col("cell"))
+      override def splitsOf(assigned: DataFrame, maxCell: Int) =
+        splitBitsFromAssigned(assigned, "cv", maxCell)
+      def subcell(splits: Map[Int, Int]) = {
+        val splitCents = storedSplitCentroids(sq, spark, splits)
+        subcellOfSparse(_, col("cell"), splitCents(_), splits)
+      }
+      def probe(queries: DataFrame, nProbe: Int, idCol: String,
+                vecCol: String) =
+        probeCellsStored(queries, sq, nProbe, idCol, vecCol)
+      def ingestProbe(incoming: DataFrame, nProbe: Int,
+                      perSuperProbe: Int, idCol: String, vecCol: String) =
+        topCellsPerSuper(
+          probeSupsIngest(
+            incoming.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+            sq, math.min(sq.superProbe, sq.nSuper), "query_id", "qv"),
+          sq, perSuperProbe)
+    }
+  }
+
+  /** The relation families' ingest tail: each probed supercell's top
+    * `perSuperProbe` cells by the packed-group kernel — a per-row
+    * partial selection, not a window, so the cell fan-out is bounded at
+    * supercells × perSuperProbe per row on an append-mode stream.
+    * `sups` carries (query_id, qv, sup).
+    */
+  private def topCellsPerSuper(sups: DataFrame, rq: RelationQuantizer,
+                               perSuperProbe: Int): DataFrame =
+    sups.join(rq.joinPackedRelation(sups.sparkSession), "sup")
+      .select(col("query_id"), col("qv"),
+        explode(vectors.top_cells_in(col("qv"), col("flat"), col("cells"),
+          perSuperProbe)).as("cell"))
 
   /** Planning-time partition pruning for a stored cell-partitioned
     * index: the probed-cell census is bounded by nCells regardless of
@@ -593,26 +682,31 @@ object Ivf {
     * than `maxCell` are re-split by secondary hyperplane bits (see
     * [[splitBitsByCell]]) so no mega-cell can dominate the probe join.
     * Output: (query_id, neighbor_id, rank).
+    *
+    * One body for every quantizer family (a bare centroid array is the
+    * literal one; the auto pipeline is
+    * `ivfTopK(q, corpus, fitQuantizer(corpus), ...)`): the hierarchical
+    * and stored families assign and probe through their centroid
+    * relation ([[Family]]), and the stored family derives subcell
+    * thresholds from the SPLIT cells' centroids only. With every
+    * supercell and every cell probed the result is exact
+    * (rank-identical to brute force) whatever the centroid content.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
-              centroids: Array[Array[Float]], k: Int = 10,
+              quantizer: CoarseQuantizer, k: Int = 10,
               nProbe: Int = AutoProbe,
               idCol: String = "vec_id", vecCol: String = "embedding",
               maxCell: Int = 100000): DataFrame = {
-    val nProbeR = resolveNProbe(nProbe, centroids)
-    // the nCells-cosines-per-row corpus assignment is the dominant
-    // narrow pass — persist it once and derive BOTH the split census
-    // and the join side from the cached frame (unpersisted, the full
-    // pass ran twice: once inside splitBitsByCell's action, again for
-    // the join build)
-    val assigned = Dedup.trackedPersist(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        cellOf(col(vecCol), centroids).as("cell")))
-    val splits = splitBitsFromCensus(
-      assigned.groupBy("cell").count(), maxCell)
-    val c = assigned.withColumn("subcell",
-      subcellOf(col("cv"), col("cell"), centroids, splits))
-    val q = probeFrame(queries, centroids, splits, nProbeR, idCol, vecCol)
+    val fam = family(quantizer, corpus.sparkSession)
+    val nProbeR = resolveNProbe(nProbe, fam.nCells)
+    // the corpus assignment is the dominant pass — persist it once and
+    // derive BOTH the split census and the join side from the cached
+    // frame (unpersisted, the full pass ran twice: once inside the
+    // census action, again for the join build)
+    val assigned = Dedup.trackedPersist(fam.assign(corpus, idCol, vecCol))
+    val subcell = fam.subcell(fam.splitsOf(assigned, maxCell))
+    val c = assigned.withColumn("subcell", subcell(col("cv")))
+    val q = fam.probeKeyed(queries, nProbeR, subcell, idCol, vecCol)
     rankCandidates(q, c, k)
   }
 
@@ -652,25 +746,27 @@ object Ivf {
     *
     * `index` must carry (neighbor_id, cv, subcell) with partition
     * column `cell`, and `splits` must be the split-bits map the index
-    * was BUILT with (both come from [[Artifacts.ivfIndexFor]]; the
-    * `_params` sidecar pins centroids/maxCell so a mismatched serve
-    * fails loudly). Given the same centroids and splits, the result is
-    * row-identical to [[ivfTopK]] — the ranking join is the same
-    * (cell, subcell) equi-join over exact cosine.
+    * was BUILT with under the same quantizer (both come from
+    * [[Artifacts.ivfIndexFor]] or [[Artifacts.loadIvfIndex]]; the
+    * `_params` sidecar pins the quantizer and maxCell so a mismatched
+    * serve fails loudly). Given the same quantizer and splits, the
+    * result is row-identical to [[ivfTopK]] for every family — the
+    * ranking join is the same (cell, subcell) equi-join over exact
+    * cosine.
     */
   def ivfServeTopK(queries: DataFrame, index: DataFrame,
-                   centroids: Array[Array[Float]], splits: Map[Int, Int],
+                   quantizer: CoarseQuantizer, splits: Map[Int, Int],
                    k: Int = 10, nProbe: Int = AutoProbe,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val nProbeR = resolveNProbe(nProbe, centroids)
+    val fam = family(quantizer, queries.sparkSession)
+    val nProbeR = resolveNProbe(nProbe, fam.nCells)
     // persisted: pruneToProbedCells COLLECTS the probed-cell census, so
-    // an unpersisted probe frame would pay the per-query nCells-cosine
-    // assignment twice (census action + ranking join)
+    // an unpersisted probe frame would pay the probe (the per-query
+    // cosines, or the relation-join ranking) twice
     val q = Dedup.trackedPersist(
-      probeFrame(queries, centroids, splits, nProbeR, idCol, vecCol))
-    val c = pruneToProbedCells(index, q)
-    rankCandidates(q, c, k)
+      fam.probeKeyed(queries, nProbeR, fam.subcell(splits), idCol, vecCol))
+    rankCandidates(q, pruneToProbedCells(index, q), k)
   }
 
   // ---- quantizer distribution-drift policy (VERDICT r14 task 5) ----
@@ -809,7 +905,7 @@ object Ivf {
   final case class HierarchicalQuantizer(
       superCentroids: Array[Array[Float]],
       centroids: Array[Array[Float]],
-      superProbe: Int) extends CoarseQuantizer {
+      superProbe: Int) extends RelationQuantizer {
     def nCells: Int = centroids.length
     def nSuper: Int = superCentroids.length
 
@@ -827,13 +923,44 @@ object Ivf {
         .withColumn("sup", cellOf(col("ccv"), superCentroids))
     }
 
+    def relationBytes: Long =
+      nCells.toLong * (4L * centroids(0).length + 32L)
+  }
+
+  /** The quantizer families: [[fitQuantizer]] picks one from the
+    * resolved cell count. Every search shape ([[ivfTopK]],
+    * [[ivfServeTopK]], [[Pq.ivfPqTopK]], [[Pq.ivfPqServeTopK]],
+    * [[Pq.annMatchesIncoming]]) and every [[Artifacts]] cell-index verb
+    * takes one, and [[family]] is the one place that turns it into the
+    * family's assignment and probe routines.
+    */
+  sealed trait CoarseQuantizer
+
+  /** The two families whose cell centroids are a RELATION joined on
+    * `sup` ([[HierarchicalQuantizer]], [[StoredQuantizer]]) rather than
+    * a plan literal. Each supplies its (cell, ccv, sup) relation and its
+    * byte estimate; the packed form and the join sizing are defined
+    * here once.
+    */
+  sealed trait RelationQuantizer extends CoarseQuantizer {
+
+    /** The centroid relation (cell, ccv, sup). */
+    def cellsRelation(spark: org.apache.spark.sql.SparkSession): DataFrame
+
+    /** Estimated serialized bytes of the centroid relation: 4 B/float
+      * plus per-row framing. Flat and packed forms carry the same
+      * float payload, so one estimate serves both.
+      */
+    def relationBytes: Long
+
     /** [[cellsRelation]] PACKED one row per supercell — (sup,
-      * cells array<int>, flat array<float>) with the sub-matrix
-      * flattened in ascending-cell order. The assignment join fans out
-      * superProbe rows per input instead of superProbe ×
-      * cells-per-supercell; the per-group argmax runs inside the
-      * [[graft.functions.VecOps.bestCellIn]] kernel (measured 40×
-      * fewer join rows at nCells=8192, nSuper=91).
+      * cells array&lt;int&gt;, flat array&lt;float&gt;) with the
+      * sub-matrix flattened in ascending-cell order (for the stored
+      * family one nCells-row shuffle on `sup`, never a driver pass).
+      * The assignment join fans out superProbe rows per input instead
+      * of superProbe × cells-per-supercell; the per-group argmax runs
+      * inside the [[graft.functions.VecOps.bestCellIn]] kernel
+      * (measured 40× fewer join rows at nCells=8192, nSuper=91).
       */
     def packedRelation(spark: org.apache.spark.sql.SparkSession): DataFrame =
       cellsRelation(spark)
@@ -845,54 +972,57 @@ object Ivf {
           flatten(transform(col("packed"), x => x.getField("ccv")))
             .as("flat"))
 
-    /** Estimated serialized bytes of the centroid relation: 4 B/float
-      * plus per-row framing. Flat and packed forms carry the same
-      * float payload, so one estimate serves both.
-      */
-    def relationBytes: Long =
-      nCells.toLong * (4L * centroids(0).length + 32L)
-
-    /** The centroid relation SIZED for its `sup` equi-join
-      * (continuation (a) of the scale story above): under
+    /** [[packedRelation]] SIZED for its `sup` equi-join
+      * (continuation (a) of the scale story in
+      * [[HierarchicalQuantizer]]'s scaladoc): under
       * [[Ivf.RelationBroadcastCeiling]] it is broadcast — the relation
       * reaches each executor once via torrent and the exploded row
       * side never exchanges; past the ceiling (where an 8 GB torrent
       * block is a hard refusal, not a tuning knob) it degrades to a
       * SHUFFLE-HASH join — both sides exchange on `sup`, and the hint
-      * keeps the relation the per-partition hash BUILD side, because a
-      * sort-merge would sort the superProbe-exploded corpus side,
-      * which is the exact materialization the packed-relation design
-      * exists to avoid. Same plan shape otherwise, one extra exchange
-      * of the row side — the trade the scaladoc priced. The ceiling is
-      * overridable per session via the
+      * keeps the relation the per-partition hash BUILD side (a
+      * sort-merge would sort the superProbe-exploded row side — the
+      * exact materialization the packed-relation design exists to
+      * avoid). Same plan shape otherwise, one extra exchange of the row
+      * side. The ceiling is overridable per session via the
       * `graft.hier.relationBroadcastCeiling` conf (tests force the
       * shuffle path with 0; an operator with generous executor memory
       * can raise it toward the 8 GB hard limit).
-      */
-    private def sizedForJoin(spark: org.apache.spark.sql.SparkSession,
-                             rel: DataFrame): DataFrame =
-      Ivf.sizedRelationForJoin(spark, rel, relationBytes)
-
-    /** [[packedRelation]] ready to join: broadcast under the ceiling,
-      * shuffle-hash build side past it.
       */
     def joinPackedRelation(
         spark: org.apache.spark.sql.SparkSession): DataFrame =
       sizedForJoin(spark, packedRelation(spark))
 
-    /** [[cellsRelation]] ready to join: broadcast under the ceiling,
-      * shuffle-hash build side past it.
+    /** [[cellsRelation]] sized for its `sup` join, as
+      * [[joinPackedRelation]].
       */
     def joinCellsRelation(
         spark: org.apache.spark.sql.SparkSession): DataFrame =
       sizedForJoin(spark, cellsRelation(spark))
-  }
 
-  /** Marker for the quantizer families; [[fitQuantizer]] picks the
-    * family from the resolved cell count, and [[ivfTopK]] and the
-    * [[Artifacts]] cell-index verbs dispatch on it.
-    */
-  sealed trait CoarseQuantizer
+    private def sizedForJoin(spark: org.apache.spark.sql.SparkSession,
+                             rel: DataFrame): DataFrame = {
+      // Spark byte-string parse ("4g", "512m", plain bytes) with the
+      // conf key named on failure — a bare toLong would surface an
+      // operator's natural "4g" spelling as an uncontextualized
+      // NumberFormatException from deep inside plan construction
+      // (code-review r17)
+      val ceiling = spark.conf
+        .getOption("graft.hier.relationBroadcastCeiling")
+        .map { v =>
+          try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
+          catch { case e: NumberFormatException =>
+            throw new IllegalArgumentException(
+              "graft.hier.relationBroadcastCeiling: cannot parse '" + v +
+                "' as a byte size (plain bytes or a Spark byte string " +
+                "like 4g / 512m)", e)
+          }
+        }
+        .getOrElse(RelationBroadcastCeiling)
+      if (relationBytes <= ceiling) broadcast(rel)
+      else rel.hint("shuffle_hash")
+    }
+  }
 
   object CoarseQuantizer {
     import scala.language.implicitConversions
@@ -932,8 +1062,8 @@ object Ivf {
     * `superQ` (narrow kernel when literal; the relation join when
     * hierarchical), then joins the stored cell relation on `sup` —
     * broadcast under [[RelationBroadcastCeiling]], shuffle-hash build
-    * side past it ([[sizedRelationForJoin]], the same degrade the
-    * two-level family uses). The candidate-set semantics are identical
+    * side past it (the same [[RelationQuantizer.joinPackedRelation]]
+    * degrade the two-level family uses). The candidate-set semantics are identical
     * to [[HierarchicalQuantizer]]: a centroid whose supercell the row
     * did not probe is never a candidate; at `superProbe == nSuper` the
     * assignment is exactly [[cellOf]] PROVIDED the top level itself
@@ -957,7 +1087,7 @@ object Ivf {
       cellsPath: String,
       nCells: Int,
       dim: Int,
-      superProbe: Int) extends CoarseQuantizer {
+      superProbe: Int) extends RelationQuantizer {
     require(!superQ.isInstanceOf[StoredQuantizer],
       "a StoredQuantizer top level is unsupported: the top level must " +
         "be driver-resident (literal or hierarchical) — a stored top " +
@@ -977,40 +1107,7 @@ object Ivf {
     def cellsRelation(spark: org.apache.spark.sql.SparkSession): DataFrame =
       spark.read.parquet(cellsPath).select("cell", "sup", "ccv")
 
-    /** [[cellsRelation]] packed one row per supercell — the same
-      * (sup, cells array&lt;int&gt;, flat array&lt;float&gt;) shape as
-      * [[HierarchicalQuantizer.packedRelation]], derived in-plan from
-      * the stored relation (one nCells-row shuffle on `sup`, never a
-      * driver pass).
-      */
-    def packedRelation(spark: org.apache.spark.sql.SparkSession): DataFrame =
-      cellsRelation(spark)
-        .groupBy("sup")
-        .agg(array_sort(collect_list(struct(col("cell"), col("ccv"))))
-          .as("packed"))
-        .select(col("sup"),
-          transform(col("packed"), x => x.getField("cell")).as("cells"),
-          flatten(transform(col("packed"), x => x.getField("ccv")))
-            .as("flat"))
-
-    /** Estimated serialized bytes of the stored relation — the same
-      * 4 B/float + framing estimate as the two-level family's.
-      */
     def relationBytes: Long = nCells.toLong * (4L * dim + 32L)
-
-    /** [[packedRelation]] sized for its `sup` join (broadcast under the
-      * ceiling, shuffle-hash build side past it — the same
-      * `graft.hier.relationBroadcastCeiling` session conf the
-      * two-level family honors governs this family's joins too).
-      */
-    def joinPackedRelation(
-        spark: org.apache.spark.sql.SparkSession): DataFrame =
-      Ivf.sizedRelationForJoin(spark, packedRelation(spark), relationBytes)
-
-    /** [[cellsRelation]] sized for its `sup` join. */
-    def joinCellsRelation(
-        spark: org.apache.spark.sql.SparkSession): DataFrame =
-      Ivf.sizedRelationForJoin(spark, cellsRelation(spark), relationBytes)
   }
 
   /** The √N rule WITHOUT the literal ceiling — what a corpus actually
@@ -1402,9 +1499,9 @@ object Ivf {
   /** Broadcast-relation cell assignment (the hierarchical counterpart of
     * `select(..., cellOf(vec))`): narrow kernel pass to the row's
     * superProbe supercells, BroadcastHashJoin against
-    * [[HierarchicalQuantizer.packedRelation]] (one packed row per
+    * [[RelationQuantizer.packedRelation]] (one packed row per
     * supercell; past [[RelationBroadcastCeiling]] the join degrades to
-    * shuffle-hash — [[HierarchicalQuantizer.joinPackedRelation]]),
+    * shuffle-hash — [[RelationQuantizer.joinPackedRelation]]),
     * per-group argmax inside the
     * [[graft.functions.VecOps.bestCellIn]] kernel, cross-group argmax as
     * a plain `max` on the (sim, cell) struct — Spark's nan-safe double
@@ -1530,7 +1627,7 @@ object Ivf {
   }
 
   /** STREAM-SAFE variant of [[probeSupsFrame]] for the ingest screen
-    * ([[Pq.annMatchesIncomingStored]]): the batch form ranks a
+    * ([[Pq.annMatchesIncoming]] under a stored quantizer): the batch form ranks a
     * hierarchical top level's supercells with a window
     * ([[probeCellsJoin]]), which Structured Streaming refuses. Here the
     * hier-top branch takes the per-super²-group top-`sProbe`
@@ -1586,8 +1683,8 @@ object Ivf {
     * the candidates its superProbe supercells admit — same supercell
     * kernel and same (sim desc, cell desc) ordering as
     * [[assignCellsJoin]], so a corpus row and a query that land in the
-    * same supercells rank the same centroids identically. Output matches
-    * [[probeFrame]] minus the subcell column: (query_id, qv, cell).
+    * same supercells rank the same centroids identically. Output is
+    * [[Family.probe]]'s: (query_id, qv, cell).
     *
     * Duplicate-id tripwire (ADVICE r17): the ranking window in
     * [[probeOverCellsRelation]] partitions by query_id ALONE, so two
@@ -1754,137 +1851,6 @@ object Ivf {
       .filter(col("cell").isin(splits.keys.toSeq.map(Int.box): _*))
       .select("cell", "ccv").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-
-  /** IVF top-k with a [[CoarseQuantizer]] — dispatches to the literal
-    * kernel path or the hierarchical broadcast-join path. The auto
-    * pipeline is `ivfTopK(q, corpus, fitQuantizer(corpus), ...)`.
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame,
-              quantizer: CoarseQuantizer, k: Int, nProbe: Int,
-              idCol: String, vecCol: String,
-              maxCell: Int): DataFrame = quantizer match {
-    case LiteralQuantizer(c) =>
-      ivfTopK(queries, corpus, c, k, nProbe, idCol, vecCol, maxCell)
-    case hq: HierarchicalQuantizer =>
-      ivfTopKHier(queries, corpus, hq, k, nProbe, idCol, vecCol, maxCell)
-    case sq: StoredQuantizer =>
-      ivfTopKStored(queries, corpus, sq, k, nProbe, idCol, vecCol, maxCell)
-  }
-
-  /** [[ivfTopK]] over the hierarchical quantizer: identical shape
-    * (assign → split census → subcell → probe join → exact-cosine rank)
-    * with the two assignment passes replaced by the broadcast-join path.
-    * The mega-cell re-split machinery is unchanged — [[subcellOf]] only
-    * indexes centroids of oversized cells, which is as cheap at 31k
-    * cells as at 8.
-    */
-  def ivfTopKHier(queries: DataFrame, corpus: DataFrame,
-                  hq: HierarchicalQuantizer, k: Int = 10,
-                  nProbe: Int = AutoProbe,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  maxCell: Int = 100000): DataFrame = {
-    val nProbeR =
-      if (nProbe == AutoProbe) autoNProbe(hq.nCells) else nProbe
-    val assigned = Dedup.trackedPersist(
-      assignCellsJoin(corpus, hq, idCol, vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          col("cell")))
-    val splits = splitBitsFromCensus(
-      assigned.groupBy("cell").count(), maxCell)
-    val c = assigned.withColumn("subcell",
-      subcellOf(col("cv"), col("cell"), hq.centroids, splits))
-    val q = probeCellsJoin(queries, hq, nProbeR, idCol, vecCol)
-      .withColumn("subcell",
-        subcellOf(col("qv"), col("cell"), hq.centroids, splits))
-    rankCandidates(q, c, k)
-  }
-
-  /** [[ivfServeTopK]] over the hierarchical quantizer: probe side built
-    * by the broadcast-join path, stored cell-partitioned index pruned to
-    * the probed cells at planning time — the same serving cost model
-    * (read nProbe/nCells of the corpus from disk, nothing else), now
-    * without a centroid plan literal. `index`/`splits` come from
-    * [[Artifacts.loadIvfIndex]] under `hq`; given the same quantizer and
-    * splits the result is row-identical to [[ivfTopKHier]] (IvfSpec
-    * pins it, the ivfServeTopK==ivfTopK contract one family over).
-    */
-  def ivfServeTopKHier(queries: DataFrame, index: DataFrame,
-                       hq: HierarchicalQuantizer, splits: Map[Int, Int],
-                       k: Int = 10, nProbe: Int = AutoProbe,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val nProbeR =
-      if (nProbe == AutoProbe) autoNProbe(hq.nCells) else nProbe
-    // persisted for the same reason as ivfServeTopK: pruneToProbedCells
-    // collects the probed-cell census, so an unpersisted probe frame
-    // would pay the broadcast-join probe ranking twice
-    val q = Dedup.trackedPersist(
-      probeCellsJoin(queries, hq, nProbeR, idCol, vecCol)
-        .withColumn("subcell",
-          subcellOf(col("qv"), col("cell"), hq.centroids, splits)))
-    val c = pruneToProbedCells(index, q)
-    rankCandidates(q, c, k)
-  }
-
-  /** [[ivfTopKHier]] for the STORED family — same shape (assign → split
-    * census → subcell → probe join → exact-cosine rank) with assignment
-    * and probing through the stored relation, the split census never
-    * collected ([[splitBitsFromAssigned]]), and the subcell
-    * thresholds derived from the SPLIT cells' centroids only
-    * ([[storedSplitCentroids]] — bounded by skew, not nCells). At
-    * `superProbe == nSuper` and `nProbe == nCells` the result is exact
-    * (rank-identical to brute force) regardless of centroid content —
-    * the same exactness-by-construction the hier family's exhaustive
-    * rows pin.
-    */
-  def ivfTopKStored(queries: DataFrame, corpus: DataFrame,
-                    sq: StoredQuantizer, k: Int = 10,
-                    nProbe: Int = AutoProbe,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    maxCell: Int = 100000): DataFrame = {
-    val nProbeR =
-      if (nProbe == AutoProbe) autoNProbe(sq.nCells) else nProbe
-    val assigned = Dedup.trackedPersist(
-      assignCellsStored(corpus, sq, idCol, vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          col("cell")))
-    val splits = splitBitsFromAssigned(assigned, "cv", maxCell)
-    val splitCents =
-      storedSplitCentroids(sq, corpus.sparkSession, splits)
-    val c = assigned.withColumn("subcell",
-      subcellOfSparse(col("cv"), col("cell"), splitCents(_), splits))
-    val q = probeCellsStored(queries, sq, nProbeR, idCol, vecCol)
-      .withColumn("subcell",
-        subcellOfSparse(col("qv"), col("cell"), splitCents(_), splits))
-    rankCandidates(q, c, k)
-  }
-
-  /** [[ivfServeTopKHier]] for the STORED family: probe side through the
-    * stored relation, the cell-partitioned index pruned to probed cells
-    * at planning time. `index`/`splits` come from
-    * [[Artifacts.loadIvfIndex]] under `sq`; given the same quantizer and
-    * splits the result is row-identical to [[ivfTopKStored]] (IvfSpec
-    * pins it — the serve==fit contract, third family over).
-    */
-  def ivfServeTopKStored(queries: DataFrame, index: DataFrame,
-                         sq: StoredQuantizer, splits: Map[Int, Int],
-                         k: Int = 10, nProbe: Int = AutoProbe,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val nProbeR =
-      if (nProbe == AutoProbe) autoNProbe(sq.nCells) else nProbe
-    val splitCents =
-      storedSplitCentroids(sq, queries.sparkSession, splits)
-    // persisted for the same reason as the other serve paths:
-    // pruneToProbedCells collects the probed-cell census, so an
-    // unpersisted probe frame would pay the relation-join ranking twice
-    val q = Dedup.trackedPersist(
-      probeCellsStored(queries, sq, nProbeR, idCol, vecCol)
-        .withColumn("subcell",
-          subcellOfSparse(col("qv"), col("cell"), splitCents(_), splits)))
-    val c = pruneToProbedCells(index, q)
-    rankCandidates(q, c, k)
-  }
 
   // ---- distributed Lloyd refinement, exact quantized-integer space ----
   //

@@ -155,6 +155,15 @@ object Pq {
     * hyperplane bits exactly like [[Ivf.ivfTopK]].
     * Output: (query_id, neighbor_id, rank) — ranks from EXACT cosine.
     *
+    * One body for every quantizer family (a bare centroid array is the
+    * literal one): the hierarchical family is the 100 TB configuration
+    * (broadcast-relation cell assignment past `Ivf.MaxAutoCells`, no
+    * centroid plan literal), the stored family the exabyte one (cell
+    * centroids as a parquet relation that never assembles on the
+    * driver, subcell thresholds from the SPLIT cells only). With full
+    * supercell probing the relation families row-equal the literal
+    * family on the same centroids (PqSpec pins it).
+    *
     * SIZING WITH CORPUS GROWTH (ScaleProbe, measured r13): `rerank` and
     * `ksub` are the corpus-tracking knobs — the ADC screen's rank noise
     * grows with corpus size while a fixed exact-rerank budget stays
@@ -170,35 +179,40 @@ object Pq {
     * fixed base) — pass explicit values only to pin a configuration.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame,
-                centroids: Array[Array[Float]],
+                quantizer: Ivf.CoarseQuantizer,
                 codebooks: Array[Array[Array[Float]]],
                 k: Int = 10, nProbe: Int = Ivf.AutoProbe,
                 rerank: Int = AutoRerank,
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 maxCell: Int = 100000): DataFrame = {
-    val nProbeR = Ivf.resolveNProbe(nProbe, centroids)
+    val fam = Ivf.family(quantizer, corpus.sparkSession)
+    val nProbeR = Ivf.resolveNProbe(nProbe, fam.nCells)
     // one persisted assignment pass feeds the split census, the join
     // build, AND the auto-rerank sizing (the Ivf.ivfTopK contract)
-    val assigned = Dedup.trackedPersist(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        Ivf.cellOf(col(vecCol), centroids).as("cell")))
+    val assigned = Dedup.trackedPersist(fam.assign(corpus, idCol, vecCol))
     // sentinel → size the exact-rerank budget from the corpus the
     // screen actually runs over (a count on the already-persisted
     // assignment — no extra scan)
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(assigned.count(), k) else rerank
+    val rerankR = resolveRerank(rerank, k, assigned.count())
+    val subcell = fam.subcell(fam.splitsOf(assigned, maxCell))
+    // codes, not vectors, on the corpus side of the probe join
+    val c = assigned.select(col("neighbor_id"), col("cell"),
+      subcell(col("cv")).as("subcell"),
+      encode(col("cv"), codebooks).as("codes"))
+    val q = fam.probeKeyed(queries, nProbeR, subcell, idCol, vecCol)
+    adcRerank(q, c, assigned, codebooks, k, rerankR)
+  }
+
+  /** The [[AutoRerank]] sentinel resolution and its refusal, shared by
+    * the top-k and serve shapes; `rows` is by-name so an explicit
+    * budget never pays the count.
+    */
+  private def resolveRerank(rerank: Int, k: Int, rows: => Long): Int = {
+    val rerankR = if (rerank == AutoRerank) autoRerank(rows, k) else rerank
     require(rerankR >= k,
       s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
         "return candidates the ADC stage kept")
-    val splits = Ivf.splitBitsFromCensus(
-      assigned.groupBy("cell").count(), maxCell)
-    // codes, not vectors, on the corpus side of the probe join
-    val c = assigned.select(col("neighbor_id"), col("cell"),
-      Ivf.subcellOf(col("cv"), col("cell"), centroids, splits).as("subcell"),
-      encode(col("cv"), codebooks).as("codes"))
-    val q = Ivf.probeFrame(queries, centroids, splits, nProbeR, idCol,
-      vecCol)
-    adcRerank(q, c, assigned, codebooks, k, rerankR)
+    rerankR
   }
 
   /** Ingest-side embedding near-match: every INCOMING vector screened
@@ -209,36 +223,48 @@ object Pq {
     * the compressed index.
     *
     * STREAM-SAFE by construction (StreamingSpec pins stream==batch):
-    * cell/subcell assignment is a narrow per-row pass — deliberately NO
-    * probed-cell collect (a stream cannot census its cells at planning
-    * time; the (cell, subcell) equi-join prunes instead), the index
-    * probe and the vector fetch are stream-static equi-joins, and there
-    * is no window — output is the match PAIR list, not top-k, so
-    * append-mode streaming works without state.
+    * cell/subcell assignment is a per-row pass or a join against static
+    * state — deliberately NO probed-cell collect (a stream cannot
+    * census its cells at planning time; the (cell, subcell) equi-join
+    * prunes instead), the index probe and the vector fetch are
+    * stream-static equi-joins, and there is no window — output is the
+    * match PAIR list, not top-k, so append-mode streaming works without
+    * state.
+    *
+    * The probe width is per family: the literal family probes each
+    * incoming row's `nProbe` best cells; the relation families read
+    * `perSuperProbe` instead — the top `perSuperProbe` cells WITHIN
+    * each of the row's superProbe supercells, a per-row partial
+    * selection rather than a window (a hierarchical top level of the
+    * stored family probes through the window-free
+    * [[Ivf.probeSupsIngest]] superset).
     *
     * The ADC screen admits candidates with adc_e4 >= thresholdE4 −
     * screenMarginE4: reconstruction error can push a true match's ADC
     * below the exact threshold, so the margin buys screen recall while
     * the exact confirm keeps precision exact — every emitted pair
     * carries its true e4 cosine >= thresholdE4. With a single trivial
-    * cell and a margin >= 2·10⁴ the screen admits everything and the
-    * result must equal the flat exact threshold join — the
-    * `ns_ann_incoming_exact` oracle identity.
+    * cell (or one supercell and perSuperProbe >= nCells) and a margin
+    * >= 2·10⁴ the screen admits everything and the result must equal
+    * the flat exact threshold join — the `ns_ann_incoming_exact`
+    * oracle identity.
     * Output: (incoming_id, neighbor_id, sim_e4).
     */
   def annMatchesIncoming(incoming: DataFrame, index: DataFrame,
                          corpus: DataFrame,
-                         centroids: Array[Array[Float]],
+                         quantizer: Ivf.CoarseQuantizer,
                          splits: Map[Int, Int],
                          codebooks: Array[Array[Array[Float]]],
                          thresholdE4: Long, screenMarginE4: Long = 1500,
                          nProbe: Int = Ivf.AutoProbe,
+                         perSuperProbe: Int = 3,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame = {
-    val nProbeR = Ivf.resolveNProbe(nProbe, centroids)
-    val q = Ivf.probeFrame(incoming, centroids, splits, nProbeR, idCol,
-        vecCol)
-      .withColumnRenamed("query_id", "incoming_id")
+    val fam = Ivf.family(quantizer, incoming.sparkSession)
+    val subcell = fam.subcell(splits)
+    val q = fam.ingestProbe(incoming, nProbe, perSuperProbe, idCol, vecCol)
+      .select(col("query_id").as("incoming_id"), col("qv"), col("cell"),
+        subcell(col("qv")).as("subcell"))
     // (incoming, neighbor) pairs unique without dedup: distinct probed
     // cells × one (cell, subcell) per index row — the rankCandidates
     // argument, which is what keeps this append-safe on a stream
@@ -246,16 +272,8 @@ object Pq {
       .filter(round(adcCosine(col("qv"), col("codes"), codebooks) * 10000)
         .cast("long") >= thresholdE4 - screenMarginE4)
       .select("incoming_id", "qv", "neighbor_id")
-    confirmExact(screened, corpus, thresholdE4, idCol, vecCol)
-  }
-
-  /** The exact-confirm tail of the ingest screens: survivors fetch
-    * their corpus vector and every emitted pair carries its true e4
-    * cosine >= thresholdE4.
-    */
-  private def confirmExact(screened: DataFrame, corpus: DataFrame,
-                           thresholdE4: Long, idCol: String,
-                           vecCol: String): DataFrame = {
+    // exact confirm: survivors fetch their corpus vector and every
+    // emitted pair carries its true e4 cosine >= thresholdE4
     val full = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"))
     screened.join(full, Seq("neighbor_id"))
@@ -263,89 +281,6 @@ object Pq {
         round(vectors.vec_cosine(col("qv"), col("cv")) * 10000)
           .cast("long").as("sim_e4"))
       .filter(col("sim_e4") >= thresholdE4)
-  }
-
-  /** [[annMatchesIncoming]] over the HIERARCHICAL quantizer — the
-    * nightly ingest screen past `Ivf.MaxAutoCells`, STREAM-SAFE like
-    * the literal form: no window anywhere. The probe side explodes the
-    * incoming row's superProbe supercells (narrow kernel), broadcast-
-    * joins the packed centroid relation, and takes the top
-    * `perSuperProbe` cells WITHIN each supercell via the
-    * [[graft.functions.VecOps.topCellsIn]] kernel — a per-row partial
-    * selection, not a window — so the cell fan-out is bounded at
-    * superProbe × perSuperProbe per incoming row on an append-mode
-    * stream. The screen + exact confirm are the literal path's.
-    *
-    * With one supercell, perSuperProbe >= nCells, and an unbounded
-    * margin the screen admits everything and the result equals the flat
-    * exact threshold join — the `ns_ann_incoming_exact` identity, which
-    * StreamingSpec replays streamed == batch.
-    */
-  def annMatchesIncomingHier(incoming: DataFrame, index: DataFrame,
-                             corpus: DataFrame,
-                             hq: Ivf.HierarchicalQuantizer,
-                             splits: Map[Int, Int],
-                             codebooks: Array[Array[Array[Float]]],
-                             thresholdE4: Long,
-                             screenMarginE4: Long = 1500,
-                             perSuperProbe: Int = 3,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
-    val rel = hq.joinPackedRelation(incoming.sparkSession)
-    val q = incoming
-      .select(col(idCol).as("incoming_id"), col(vecCol).as("qv"),
-        explode(Ivf.probeCells(col(vecCol), hq.superCentroids,
-          math.min(hq.superProbe, hq.nSuper))).as("sup"))
-      .join(rel, "sup")
-      .select(col("incoming_id"), col("qv"),
-        explode(vectors.top_cells_in(col("qv"), col("flat"), col("cells"),
-          perSuperProbe)).as("cell"))
-      .withColumn("subcell",
-        Ivf.subcellOf(col("qv"), col("cell"), hq.centroids, splits))
-    val screened = q.join(index, Seq("cell", "subcell"))
-      .filter(round(adcCosine(col("qv"), col("codes"), codebooks) * 10000)
-        .cast("long") >= thresholdE4 - screenMarginE4)
-      .select("incoming_id", "qv", "neighbor_id")
-    confirmExact(screened, corpus, thresholdE4, idCol, vecCol)
-  }
-
-  /** [[annMatchesIncomingHier]] for the STORED-CELLS family: the
-    * incoming batch's candidate cells come from the parquet-backed
-    * relation (top-`perSuperProbe` cells inside each probed supercell
-    * via the same packed-group kernel), subcell thresholds from the
-    * split cells only. Stream-safe exactly like the hier form — every
-    * step is a per-row projection or a join against static state; a
-    * HIERARCHICAL top level probes through the window-free
-    * [[Ivf.probeSupsIngest]] superset (streaming refuses windows).
-    */
-  def annMatchesIncomingStored(incoming: DataFrame, index: DataFrame,
-                               corpus: DataFrame,
-                               sq: Ivf.StoredQuantizer,
-                               splits: Map[Int, Int],
-                               codebooks: Array[Array[Array[Float]]],
-                               thresholdE4: Long,
-                               screenMarginE4: Long = 1500,
-                               perSuperProbe: Int = 3,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
-    val splitCents =
-      Ivf.storedSplitCentroids(sq, incoming.sparkSession, splits)
-    val rel = sq.joinPackedRelation(incoming.sparkSession)
-    val q = Ivf.probeSupsIngest(
-        incoming.select(col(idCol).as("incoming_id"),
-          col(vecCol).as("qv")),
-        sq, math.min(sq.superProbe, sq.nSuper), "incoming_id", "qv")
-      .join(rel, "sup")
-      .select(col("incoming_id"), col("qv"),
-        explode(vectors.top_cells_in(col("qv"), col("flat"), col("cells"),
-          perSuperProbe)).as("cell"))
-      .withColumn("subcell",
-        Ivf.subcellOfSparse(col("qv"), col("cell"), splitCents(_), splits))
-    val screened = q.join(index, Seq("cell", "subcell"))
-      .filter(round(adcCosine(col("qv"), col("codes"), codebooks) * 10000)
-        .cast("long") >= thresholdE4 - screenMarginE4)
-      .select("incoming_id", "qv", "neighbor_id")
-    confirmExact(screened, corpus, thresholdE4, idCol, vecCol)
   }
 
   /** Shared ADC-candidates → exact-re-rank tail of [[ivfPqTopK]] and
@@ -358,8 +293,8 @@ object Pq {
     * (query, neighbor) pairs are unique by construction: probeCells
     * yields DISTINCT cells and each index row has exactly one
     * (cell, subcell) — no dedup exchange before ranking.
-    */
-  /** `full` is the (neighbor_id, cv) vector-fetch relation for the exact
+    *
+    * `full` is the (neighbor_id, cv) vector-fetch relation for the exact
     * re-rank — the caller picks the cheapest source: the fit path hands
     * its already-persisted assignment frame (cache-served, no second
     * corpus scan — code-review r14), the serve path the raw corpus.
@@ -388,154 +323,6 @@ object Pq {
       .select("query_id", "neighbor_id", "rank")
   }
 
-  /** [[ivfPqTopK]] over the HIERARCHICAL coarse quantizer — the 100 TB
-    * ANN configuration: broadcast-relation cell assignment past
-    * `Ivf.MaxAutoCells` (no centroid plan literal) combined with the
-    * codes-only candidate join (4m bytes per row through the probe
-    * shuffle, not vectors). Same ADC screen + exact re-rank tail as the
-    * literal family; with full supercell probing the result is
-    * row-identical to [[ivfPqTopK]] on the same quantizers (PqSpec pins
-    * it).
-    */
-  def ivfPqTopKHier(queries: DataFrame, corpus: DataFrame,
-                    hq: Ivf.HierarchicalQuantizer,
-                    codebooks: Array[Array[Array[Float]]],
-                    k: Int = 10, nProbe: Int = Ivf.AutoProbe,
-                    rerank: Int = AutoRerank,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    maxCell: Int = 100000): DataFrame = {
-    val nProbeR =
-      if (nProbe == Ivf.AutoProbe) Ivf.autoNProbe(hq.nCells) else nProbe
-    val assigned = Dedup.trackedPersist(
-      Ivf.assignCellsJoin(corpus, hq, idCol, vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          col("cell")))
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(assigned.count(), k) else rerank
-    require(rerankR >= k,
-      s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
-        "return candidates the ADC stage kept")
-    val splits = Ivf.splitBitsFromCensus(
-      assigned.groupBy("cell").count(), maxCell)
-    val c = assigned.select(col("neighbor_id"), col("cell"),
-      Ivf.subcellOf(col("cv"), col("cell"), hq.centroids, splits)
-        .as("subcell"),
-      encode(col("cv"), codebooks).as("codes"))
-    val q = Ivf.probeCellsJoin(queries, hq, nProbeR, idCol, vecCol)
-      .withColumn("subcell",
-        Ivf.subcellOf(col("qv"), col("cell"), hq.centroids, splits))
-    adcRerank(q, c, assigned, codebooks, k, rerankR)
-  }
-
-  /** [[ivfPqTopKHier]] over the STORED-CELLS (three-level) coarse
-    * quantizer — the exabyte ANN configuration: the cell centroids live
-    * as a parquet relation that never assembles on the driver
-    * ([[Ivf.StoredQuantizer]]), combined with the codes-only candidate
-    * join. Same ADC screen + exact re-rank tail; subcell thresholds
-    * derive from the SPLIT cells' centroids only and the split census
-    * never collects. With full supercell probing the result is
-    * row-identical to [[ivfPqTopKHier]] on identical centroid content
-    * (PqSpec pins it).
-    */
-  def ivfPqTopKStored(queries: DataFrame, corpus: DataFrame,
-                      sq: Ivf.StoredQuantizer,
-                      codebooks: Array[Array[Array[Float]]],
-                      k: Int = 10, nProbe: Int = Ivf.AutoProbe,
-                      rerank: Int = AutoRerank,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      maxCell: Int = 100000): DataFrame = {
-    val nProbeR =
-      if (nProbe == Ivf.AutoProbe) Ivf.autoNProbe(sq.nCells) else nProbe
-    val assigned = Dedup.trackedPersist(
-      Ivf.assignCellsStored(corpus, sq, idCol, vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          col("cell")))
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(assigned.count(), k) else rerank
-    require(rerankR >= k,
-      s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
-        "return candidates the ADC stage kept")
-    val splits = Ivf.splitBitsFromAssigned(assigned, "cv", maxCell)
-    val splitCents =
-      Ivf.storedSplitCentroids(sq, corpus.sparkSession, splits)
-    val c = assigned.select(col("neighbor_id"), col("cell"),
-      Ivf.subcellOfSparse(col("cv"), col("cell"), splitCents(_), splits)
-        .as("subcell"),
-      encode(col("cv"), codebooks).as("codes"))
-    val q = Ivf.probeCellsStored(queries, sq, nProbeR, idCol, vecCol)
-      .withColumn("subcell",
-        Ivf.subcellOfSparse(col("qv"), col("cell"), splitCents(_), splits))
-    adcRerank(q, c, assigned, codebooks, k, rerankR)
-  }
-
-  /** [[ivfPqServeTopKHier]] over the stored-cells quantizer: codes-only
-    * index, planning-time cell pruning, probe side through the stored
-    * relation. `index`/`splits` come from
-    * [[Artifacts.loadIvfPqIndex]] under `sq`; the [[ivfPqServeTopK]]
-    * membership contract on `corpus` applies unchanged.
-    */
-  def ivfPqServeTopKStored(queries: DataFrame, index: DataFrame,
-                           corpus: DataFrame,
-                           sq: Ivf.StoredQuantizer,
-                           splits: Map[Int, Int],
-                           codebooks: Array[Array[Array[Float]]],
-                           k: Int = 10, nProbe: Int = Ivf.AutoProbe,
-                           rerank: Int = AutoRerank,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
-    val nProbeR =
-      if (nProbe == Ivf.AutoProbe) Ivf.autoNProbe(sq.nCells) else nProbe
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(index.count(), k) else rerank
-    require(rerankR >= k,
-      s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
-        "return candidates the ADC stage kept")
-    val splitCents =
-      Ivf.storedSplitCentroids(sq, queries.sparkSession, splits)
-    val q = Dedup.trackedPersist(
-      Ivf.probeCellsStored(queries, sq, nProbeR, idCol, vecCol)
-        .withColumn("subcell",
-          Ivf.subcellOfSparse(col("qv"), col("cell"), splitCents(_),
-            splits)))
-    val c = Ivf.pruneToProbedCells(index, q)
-    adcRerank(q, c,
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-      codebooks, k, rerankR)
-  }
-
-  /** [[ivfPqServeTopK]] over the hierarchical quantizer: stored
-    * codes-only index, planning-time cell pruning, probe side from the
-    * broadcast-join path. `index`/`splits` come from
-    * [[Artifacts.loadIvfPqIndex]] under `hq`; the [[ivfPqServeTopK]]
-    * membership contract on `corpus` applies unchanged.
-    */
-  def ivfPqServeTopKHier(queries: DataFrame, index: DataFrame,
-                         corpus: DataFrame,
-                         hq: Ivf.HierarchicalQuantizer,
-                         splits: Map[Int, Int],
-                         codebooks: Array[Array[Array[Float]]],
-                         k: Int = 10, nProbe: Int = Ivf.AutoProbe,
-                         rerank: Int = AutoRerank,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val nProbeR =
-      if (nProbe == Ivf.AutoProbe) Ivf.autoNProbe(hq.nCells) else nProbe
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(index.count(), k) else rerank
-    require(rerankR >= k,
-      s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
-        "return candidates the ADC stage kept")
-    val q = Dedup.trackedPersist(
-      Ivf.probeCellsJoin(queries, hq, nProbeR, idCol, vecCol)
-        .withColumn("subcell",
-          Ivf.subcellOf(col("qv"), col("cell"), hq.centroids, splits)))
-    val c = Ivf.pruneToProbedCells(index, q)
-    adcRerank(q, c,
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-      codebooks, k, rerankR)
-  }
-
   /** IVF-PQ top-k over a STORED, cell-partitioned, CODES-ONLY serving
     * index (see [[Artifacts.ivfPqIndexFor]]): the corpus was assigned and
     * encoded ONCE and written hive-partitioned by cell carrying
@@ -547,9 +334,11 @@ object Pq {
     * survivors per query — a query-bounded set — touch `corpus` for
     * their full vectors in the exact re-rank.
     *
-    * Given the same centroids, splits, and codebooks, the result is
-    * row-identical to [[ivfPqTopK]] (same ADC candidate generation, same
-    * shared exact-re-rank tail) — PqSpec pins the equality.
+    * `index`/`splits` come from [[Artifacts.loadIvfPqIndex]] under the
+    * same quantizer (any family). Given the same quantizer, splits, and
+    * codebooks, the result is row-identical to [[ivfPqTopK]] (same ADC
+    * candidate generation, same shared exact-re-rank tail) — PqSpec
+    * pins the equality.
     *
     * MEMBERSHIP CONTRACT (code-review r12): `corpus` must contain every
     * id the stored index carries — the exact re-rank is an inner join
@@ -563,25 +352,22 @@ object Pq {
     * [[Ivf.ivfServeTopK]] ranks from index-resident vectors.)
     */
   def ivfPqServeTopK(queries: DataFrame, index: DataFrame, corpus: DataFrame,
-                     centroids: Array[Array[Float]], splits: Map[Int, Int],
+                     quantizer: Ivf.CoarseQuantizer, splits: Map[Int, Int],
                      codebooks: Array[Array[Array[Float]]],
                      k: Int = 10, nProbe: Int = Ivf.AutoProbe,
                      rerank: Int = AutoRerank,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val nProbeR = Ivf.resolveNProbe(nProbe, centroids)
+    val fam = Ivf.family(quantizer, queries.sparkSession)
+    val nProbeR = Ivf.resolveNProbe(nProbe, fam.nCells)
     // sentinel → size the budget from the STORED index (a parquet
     // count — row-group metadata, no column IO), so a serving endpoint
     // tracks nightly appends without redeploys
-    val rerankR =
-      if (rerank == AutoRerank) autoRerank(index.count(), k) else rerank
-    require(rerankR >= k,
-      s"rerank=$rerankR must be >= k=$k: the exact re-rank can only " +
-        "return candidates the ADC stage kept")
+    val rerankR = resolveRerank(rerank, k, index.count())
     // persisted for the same reason as Ivf.ivfServeTopK: the probed-cell
     // census below is an action over this frame
     val q = Dedup.trackedPersist(
-      Ivf.probeFrame(queries, centroids, splits, nProbeR, idCol, vecCol))
+      fam.probeKeyed(queries, nProbeR, fam.subcell(splits), idCol, vecCol))
     // bounded probed-cell census → literal IN → PartitionFilters at
     // planning time (the Ivf.ivfServeTopK contract, shared code)
     val c = Ivf.pruneToProbedCells(index, q)

@@ -1680,8 +1680,8 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(idxA.select("neighbor_id", "cell", "subcell")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell")))
     val q = emb.filter(col("vec_id") < 5)
-    assert(rows(Ivf.ivfServeTopKHier(q, idxA, hq, splitsA, k = 10, nProbe = 3))
-      == rows(Ivf.ivfServeTopKHier(q, idxU, hq, splitsU, k = 10, nProbe = 3)))
+    assert(rows(Ivf.ivfServeTopK(q, idxA, hq, splitsA, k = 10, nProbe = 3))
+      == rows(Ivf.ivfServeTopK(q, idxU, hq, splitsU, k = 10, nProbe = 3)))
     // takedown: removing the appended half must restore the embA build
     val splitsR = Artifacts.removeFromIvfIndex(
       embB.select("vec_id"), p, hq, maxCell = maxCell)
@@ -1729,9 +1729,9 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(idxA.select("neighbor_id", "cell", "subcell")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell")))
     val q = emb.filter(col("vec_id") < 5)
-    assert(rows(Ivf.ivfServeTopKStored(q, idxA, sq, splitsA, k = 10,
+    assert(rows(Ivf.ivfServeTopK(q, idxA, sq, splitsA, k = 10,
         nProbe = 3))
-      == rows(Ivf.ivfServeTopKStored(q, idxU, sq, splitsU, k = 10,
+      == rows(Ivf.ivfServeTopK(q, idxU, sq, splitsU, k = 10,
         nProbe = 3)))
     // ... and the stored serve equals the HIER serve on identical
     // content — the cross-family identity, through the artifact layer
@@ -1739,9 +1739,9 @@ class ArtifactsSpec extends SparkSpecBase {
     Artifacts.saveIvfIndex(emb, pH, hq, maxCell = maxCell)
     val (idxH, splitsH) = Artifacts.loadIvfIndex(spark, pH, hq,
       maxCell = maxCell)
-    assert(rows(Ivf.ivfServeTopKStored(q, idxU, sq, splitsU, k = 10,
+    assert(rows(Ivf.ivfServeTopK(q, idxU, sq, splitsU, k = 10,
         nProbe = 3))
-      == rows(Ivf.ivfServeTopKHier(q, idxH, hq, splitsH, k = 10,
+      == rows(Ivf.ivfServeTopK(q, idxH, hq, splitsH, k = 10,
         nProbe = 3)))
     // takedown: removing the appended half must restore the embA build
     val splitsR = Artifacts.removeFromIvfIndex(
@@ -1807,7 +1807,7 @@ class ArtifactsSpec extends SparkSpecBase {
     }: Unit
     // serving with the returned handle: full probing == brute force
     val qs = emb.filter(col("vec_id") < 5)
-    assert(rows(Ivf.ivfServeTopKStored(qs, idxR,
+    assert(rows(Ivf.ivfServeTopK(qs, idxR,
         sqNew.copy(superProbe = sqNew.nSuper), splitsR, k = 10,
         nProbe = 16))
       == rows(Similarity.bruteForceTopK(qs, emb, k = 10)))
@@ -1860,7 +1860,7 @@ class ArtifactsSpec extends SparkSpecBase {
     // serving with the returned handles: full probing + unbounded
     // rerank == brute force
     val qs = emb.filter(col("vec_id") < 5)
-    assert(rows(graft.northstar.Pq.ivfPqServeTopKStored(qs, idxR, emb,
+    assert(rows(graft.northstar.Pq.ivfPqServeTopK(qs, idxR, emb,
         sqNew.copy(superProbe = sqNew.nSuper), splitsR, cbNew, k = 10,
         nProbe = 16, rerank = 1 << 30))
       == rows(Similarity.bruteForceTopK(qs, emb, k = 10)))
@@ -1972,9 +1972,9 @@ class ArtifactsSpec extends SparkSpecBase {
     val (idx, splitsL) = Artifacts.loadIvfIndex(spark, p, hq)
     assert(splitsL == splits)
     val qs = emb.filter(col("vec_id") < 5)
-    assert(rows(Ivf.ivfServeTopKHier(qs, idx, hq, splitsL, k = 10,
+    assert(rows(Ivf.ivfServeTopK(qs, idx, hq, splitsL, k = 10,
         nProbe = 8))
-      == rows(Ivf.ivfTopKHier(qs, emb, hq, k = 10, nProbe = 8)))
+      == rows(Ivf.ivfTopK(qs, emb, hq, k = 10, nProbe = 8)))
     // cross-family reads refuse: the literal loader on a hier index
     intercept[IllegalArgumentException] {
       Artifacts.loadIvfIndex(spark, p, hq.centroids)
@@ -2249,7 +2249,8 @@ class ArtifactsSpec extends SparkSpecBase {
     val centroids: Array[Array[Float]] = c
     val codebooks = cb
     var splits: Option[Map[Int, Int]] = None
-    def serve(): Unit = {
+    val queries = base.filter(col("vec_id") < 10)
+    def serve(live: DataFrame): Unit = {
       val (plain, plainSplits) = Artifacts.loadIvfPqIndex(spark, path,
         centroids, codebooks, maxCell = maxCell)
       var known: (DataFrame, Map[Int, Int]) = null
@@ -2261,17 +2262,32 @@ class ArtifactsSpec extends SparkSpecBase {
       assert(known._2 == plainSplits)
       splits.foreach(s => assert(s == plainSplits))
       assert(rows(known._1) == rows(plain))
+      // the serve shapes: positional bare centroids, named k, and named
+      // nProbe/rerank for the all-cells serve; each equals the in-memory
+      // top-k over the live corpus
+      val (index, sp) = known
+      assert(rows(graft.northstar.Pq.ivfPqServeTopK(queries, index, live,
+          centroids, sp, codebooks, k = 10))
+        == rows(graft.northstar.Pq.ivfPqTopK(queries, live, centroids,
+          codebooks, k = 10, maxCell = maxCell)))
+      val rerank = live.count().toInt + 10
+      assert(rows(graft.northstar.Pq.ivfPqServeTopK(queries, index, live,
+          centroids, sp, codebooks, k = 10, nProbe = centroids.length,
+          rerank = rerank))
+        == rows(graft.northstar.Pq.ivfPqTopK(queries, live, centroids,
+          codebooks, k = 10, nProbe = centroids.length, rerank = rerank,
+          maxCell = maxCell)))
     }
-    serve()
+    serve(base)
     splits = Some(Artifacts.appendIvfPqIndex(embB, base, path, centroids,
       codebooks, maxCell = maxCell))
     assert(splits.get.nonEmpty, "the fixture must split a cell")
-    serve()
+    serve(emb)
     val ids = embB.select("vec_id").as[Long].collect().take(40).toSeq
     splits = Some(Artifacts.removeFromIvfPqIndex(ids.toDF("vec_id"),
       emb, path, centroids, codebooks,
       maxCell = maxCell))
-    serve()
+    serve(emb.filter(!col("vec_id").isin(ids: _*)))
   }
 
   test("_params format of all 13 pinned and 4 capped kinds: exact " +

@@ -395,7 +395,7 @@ class IvfSpec extends SparkSpecBase {
     // reference results on the default (broadcast) path
     val assignB = Ivf.assignCellsJoin(emb, hq).select("vec_id", "cell")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val topB = rows(Ivf.ivfTopKHier(q, emb, hq, k = 10, nProbe = 4))
+    val topB = rows(Ivf.ivfTopK(q, emb, hq, k = 10, nProbe = 4))
     spark.conf.set("graft.hier.relationBroadcastCeiling", "0")
     try {
       val assigned = Ivf.assignCellsJoin(emb, hq)
@@ -408,7 +408,7 @@ class IvfSpec extends SparkSpecBase {
       assert(assigned.select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap == assignB,
         "shuffle-path assignment diverged from the broadcast path")
-      assert(rows(Ivf.ivfTopKHier(q, emb, hq, k = 10, nProbe = 4))
+      assert(rows(Ivf.ivfTopK(q, emb, hq, k = 10, nProbe = 4))
         == topB,
         "shuffle-path probe results diverged from the broadcast path")
       // the ceiling accepts Spark byte strings (the spelling every
@@ -434,7 +434,7 @@ class IvfSpec extends SparkSpecBase {
     val supers = Ivf.fitCentroids(emb, nCells = 3, seed = 7L)
     val hq = Ivf.HierarchicalQuantizer(supers, centroids, superProbe = 3)
     val q = emb.filter(col("vec_id") < 5)
-    val viaHier = rows(Ivf.ivfTopKHier(q, emb, hq, k = 10, nProbe = 4))
+    val viaHier = rows(Ivf.ivfTopK(q, emb, hq, k = 10, nProbe = 4))
     val viaLit = rows(Ivf.ivfTopK(q, emb, centroids, k = 10, nProbe = 4))
     assert(viaHier == viaLit)
     // the CoarseQuantizer dispatch hits the same paths
@@ -470,7 +470,7 @@ class IvfSpec extends SparkSpecBase {
     // hierarchical path
     val hqFull = hq.asInstanceOf[Ivf.HierarchicalQuantizer]
     val q = emb.filter(col("vec_id") < 3)
-    val hier = rows(Ivf.ivfTopKHier(q, emb,
+    val hier = rows(Ivf.ivfTopK(q, emb,
       hqFull.copy(superProbe = hqFull.nSuper), k = 5,
       nProbe = Ivf.MaxAutoCells + 1))
     val brute = rows(Similarity.bruteForceTopK(q, emb, k = 5))
@@ -489,9 +489,9 @@ class IvfSpec extends SparkSpecBase {
     val (index, splits) = Artifacts.loadIvfIndex(spark, path, hq)
     val q = emb.filter(col("vec_id") < 5)
     val served = rows(
-      Ivf.ivfServeTopKHier(q, index, hq, splits, k = 10, nProbe = 8))
+      Ivf.ivfServeTopK(q, index, hq, splits, k = 10, nProbe = 8))
     // serve == fit (the ivfServeTopK == ivfTopK contract, hier family)
-    assert(served == rows(Ivf.ivfTopKHier(q, emb, hq, k = 10, nProbe = 8)))
+    assert(served == rows(Ivf.ivfTopK(q, emb, hq, k = 10, nProbe = 8)))
     // and with full supercell probing both equal the LITERAL family
     assert(served == rows(Ivf.ivfTopK(q, emb, centroids, k = 10, nProbe = 8)))
     // the _params pin: a different superProbe is a different quantizer —
@@ -583,7 +583,7 @@ class IvfSpec extends SparkSpecBase {
     // corpus (unique ids) stays well-formed
     import org.apache.spark.sql.functions.col
     val q = emb.filter(col("vec_id") < 2)
-    val res = Ivf.ivfTopKHier(q, emb,
+    val res = Ivf.ivfTopK(q, emb,
       hq.copy(superProbe = hq.nSuper), k = 5, nProbe = 6)
     assert(res.groupBy("query_id").count().collect()
       .forall(_.getLong(1) == 5))
@@ -655,16 +655,16 @@ class IvfSpec extends SparkSpecBase {
     val hq = Ivf.HierarchicalQuantizer(supers, centroids, superProbe = 3)
     val sq = storedFromHq(hq, "ivf-stored-topk")
     val q = emb.filter(col("vec_id") < 5)
-    val full = rows(Ivf.ivfTopKStored(q, emb, sq, k = 10, nProbe = 4))
+    val full = rows(Ivf.ivfTopK(q, emb, sq, k = 10, nProbe = 4))
     assert(full == rows(Ivf.ivfTopK(q, emb, centroids, k = 10, nProbe = 4)))
-    assert(full == rows(Ivf.ivfTopKHier(q, emb, hq, k = 10, nProbe = 4)))
+    assert(full == rows(Ivf.ivfTopK(q, emb, hq, k = 10, nProbe = 4)))
     // partial supercell probing: the approximation must agree with the
     // hier family's on identical content — same candidate admission,
     // same tie-breaks, one family over
     val hqP = hq.copy(superProbe = 1)
     val sqP = sq.copy(superProbe = 1)
-    assert(rows(Ivf.ivfTopKStored(q, emb, sqP, k = 10, nProbe = 2))
-      == rows(Ivf.ivfTopKHier(q, emb, hqP, k = 10, nProbe = 2)))
+    assert(rows(Ivf.ivfTopK(q, emb, sqP, k = 10, nProbe = 2))
+      == rows(Ivf.ivfTopK(q, emb, hqP, k = 10, nProbe = 2)))
     assert(rows(Ivf.ivfTopK(q, emb, sq,
       10, 4, "vec_id", "embedding", 100000)) == full)
   }
@@ -682,9 +682,9 @@ class IvfSpec extends SparkSpecBase {
     val (index, splits) = Artifacts.loadIvfIndex(spark, path, sq)
     val q = emb.filter(col("vec_id") < 5)
     val served = rows(
-      Ivf.ivfServeTopKStored(q, index, sq, splits, k = 10, nProbe = 8))
+      Ivf.ivfServeTopK(q, index, sq, splits, k = 10, nProbe = 8))
     assert(served ==
-      rows(Ivf.ivfTopKStored(q, emb, sq, k = 10, nProbe = 8)))
+      rows(Ivf.ivfTopK(q, emb, sq, k = 10, nProbe = 8)))
     // full probing: the stored family serves brute-exactly
     assert(served == rows(Similarity.bruteForceTopK(q, emb, k = 10)))
     // params pin: a different superProbe is a different quantizer
@@ -714,7 +714,7 @@ class IvfSpec extends SparkSpecBase {
     val q = emb.filter(col("vec_id") < 5)
     val assignB = Ivf.assignCellsStored(emb, sq).select("vec_id", "cell")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val topB = rows(Ivf.ivfTopKStored(q, emb, sq, k = 10, nProbe = 4))
+    val topB = rows(Ivf.ivfTopK(q, emb, sq, k = 10, nProbe = 4))
     // drop the reference run's tracked persists: the stored family's
     // relation is parquet-backed (same path ⇒ same canonical plan), so
     // the cached assignment subtree would otherwise serve the ceiling=0
@@ -731,7 +731,7 @@ class IvfSpec extends SparkSpecBase {
       assert(plan.contains("BuildRight"), plan.take(2000))
       assert(assigned.select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap == assignB)
-      assert(rows(Ivf.ivfTopKStored(q, emb, sq, k = 10, nProbe = 4))
+      assert(rows(Ivf.ivfTopK(q, emb, sq, k = 10, nProbe = 4))
         == topB)
     } finally spark.conf.unset("graft.hier.relationBroadcastCeiling")
   }
@@ -776,7 +776,7 @@ class IvfSpec extends SparkSpecBase {
     // full supercell probing + exhaustive nProbe == brute force (the
     // exactness-by-construction identity, stored family)
     val q = emb.filter(col("vec_id") < 3)
-    assert(rows(Ivf.ivfTopKStored(q, emb,
+    assert(rows(Ivf.ivfTopK(q, emb,
         sq1.copy(superProbe = sq1.nSuper), k = 5, nProbe = 8))
       == rows(Similarity.bruteForceTopK(q, emb, k = 5)))
     // and the checkpoint blocks are released (the fitHierarchical
@@ -800,7 +800,7 @@ class IvfSpec extends SparkSpecBase {
       superQOverride = Some(topHq.copy(superProbe = topHq.nSuper)))
     assert(sq.nSuper == 6)
     val q = emb.filter(col("vec_id") < 3)
-    assert(rows(Ivf.ivfTopKStored(q, emb,
+    assert(rows(Ivf.ivfTopK(q, emb,
         sq.copy(superProbe = sq.nSuper), k = 5, nProbe = 12))
       == rows(Similarity.bruteForceTopK(q, emb, k = 5)))
   }
@@ -837,7 +837,7 @@ class IvfSpec extends SparkSpecBase {
       .filter(col("cell").isNull).count() == 0)
     // and full probing stays brute-exact through the pruned top
     val q = emb.filter(col("vec_id") < 3)
-    assert(rows(Ivf.ivfTopKStored(q, emb,
+    assert(rows(Ivf.ivfTopK(q, emb,
         sq.copy(superProbe = sq.nSuper), k = 5, nProbe = 4))
       == rows(Similarity.bruteForceTopK(q, emb, k = 5)))
   }
@@ -887,7 +887,7 @@ class IvfSpec extends SparkSpecBase {
       centroids(0).length, superProbe = 1)
     val q = emb.filter(col("vec_id") < 2)
     val e1 = intercept[IllegalArgumentException] {
-      Ivf.ivfTopKStored(q, emb, sq, k = 5, nProbe = 4): Unit
+      Ivf.ivfTopK(q, emb, sq, k = 5, nProbe = 4): Unit
     }
     assert(e1.getMessage.contains("zero cell centroids"), e1.getMessage)
     assert(!e1.getMessage.contains("null embeddings"), e1.getMessage)
@@ -896,10 +896,50 @@ class IvfSpec extends SparkSpecBase {
     val withNull = emb.withColumn("embedding",
       when(col("vec_id") === 3L, lit(null)).otherwise(col("embedding")))
     val e2 = intercept[IllegalArgumentException] {
-      Ivf.ivfTopKStored(q, withNull, sqFull, k = 5, nProbe = 4): Unit
+      Ivf.ivfTopK(q, withNull, sqFull, k = 5, nProbe = 4): Unit
     }
     assert(e2.getMessage.contains("null embeddings"), e2.getMessage)
     assert(!e2.getMessage.contains("zero cell centroids"), e2.getMessage)
   }
 
+  test("nProbe below 1 is refused before any Spark job under every " +
+       "quantizer family (the relation families used to return an " +
+       "empty result with no error)") {
+    import graft.northstar.{Artifacts, Pq}
+    import org.apache.spark.sql.functions.col
+    val centroids = Ivf.fitCentroids(emb, nCells = 8)
+    val supers = Ivf.fitCentroids(emb, nCells = 3, seed = 7L)
+    val hq = Ivf.HierarchicalQuantizer(supers, centroids, superProbe = 2)
+    val cb = Pq.fitCodebooks(emb, m = 8, ksub = 16)
+    val q = emb.filter(col("vec_id") < 2)
+    for ((name, quant) <- Seq[(String, Ivf.CoarseQuantizer)](
+        "literal" -> Ivf.LiteralQuantizer(centroids),
+        "hierarchical" -> hq,
+        "stored" -> storedFromHq(hq, "ivf-nprobe0"))) {
+      val p = tmpDir(s"ivf-nprobe0-$name")
+      Artifacts.saveIvfIndex(emb, p + "/ivf", quant)
+      Artifacts.saveIvfPqIndex(emb, p + "/pq", quant, cb)
+      val (ivfIdx, ivfSplits) = Artifacts.loadIvfIndex(spark, p + "/ivf",
+        quant)
+      val (pqIdx, pqSplits) = Artifacts.loadIvfPqIndex(spark, p + "/pq",
+        quant, cb)
+      for ((shape, call) <- Seq[(String, () => Unit)](
+          "ivfTopK" -> (() => Ivf.ivfTopK(q, emb, quant, nProbe = 0)),
+          "ivfServeTopK" -> (() =>
+            Ivf.ivfServeTopK(q, ivfIdx, quant, ivfSplits, nProbe = 0)),
+          "ivfPqTopK" -> (() =>
+            Pq.ivfPqTopK(q, emb, quant, cb, nProbe = 0)),
+          "ivfPqServeTopK" -> (() =>
+            Pq.ivfPqServeTopK(q, pqIdx, emb, quant, pqSplits, cb,
+              nProbe = 0)))) {
+        var e: IllegalArgumentException = null
+        val jobs = jobStarts {
+          e = intercept[IllegalArgumentException] { call() }
+        }
+        assert(e.getMessage.contains("nProbe must be >= 1") &&
+          e.getMessage.contains("got 0"), s"$name $shape: ${e.getMessage}")
+        assert(jobs.isEmpty, s"$name $shape ran ${jobs.size} job(s)")
+      }
+    }
+  }
 }

@@ -648,7 +648,7 @@ class PlanQualitySpec extends SparkSpecBase {
     graft.northstar.Artifacts.saveIvfIndex(emb, path, hq)
     val (index, splits) = graft.northstar.Artifacts
       .loadIvfIndex(spark, path, hq)
-    val sp = Ivf.ivfServeTopKHier(emb.filter(col("vec_id") < 5), index,
+    val sp = Ivf.ivfServeTopK(emb.filter(col("vec_id") < 5), index,
       hq, splits, k = 10, nProbe = 2)
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(sp).isDefined,

@@ -377,7 +377,7 @@ class PqSpec extends SparkSpecBase {
     val hqFull = Ivf.HierarchicalQuantizer(supers, coarse, superProbe = 3)
     val q = emb.filter(col("vec_id") < 5)
     // full supercell probing: candidate set == the literal family's
-    val viaHier = rows(Pq.ivfPqTopKHier(q, emb, hqFull, cents,
+    val viaHier = rows(Pq.ivfPqTopK(q, emb, hqFull, cents,
       k = 10, nProbe = 4, rerank = 50))
     val viaLit = rows(Pq.ivfPqTopK(q, emb, coarse, cents,
       k = 10, nProbe = 4, rerank = 50))
@@ -397,9 +397,9 @@ class PqSpec extends SparkSpecBase {
     assert(splitsA == splitsU)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell", "codes")))
-    val served = rows(Pq.ivfPqServeTopKHier(q, idxA, emb, hq, splitsA,
+    val served = rows(Pq.ivfPqServeTopK(q, idxA, emb, hq, splitsA,
       cents, k = 10, nProbe = 3, rerank = 50))
-    assert(served == rows(Pq.ivfPqTopKHier(q, emb, hq, cents,
+    assert(served == rows(Pq.ivfPqTopK(q, emb, hq, cents,
       k = 10, nProbe = 3, rerank = 50)))
     // takedown: removing the appended half restores the embA-only index
     Artifacts.removeFromIvfPqIndex(embB.select("vec_id"), embA, p,
@@ -431,16 +431,16 @@ class PqSpec extends SparkSpecBase {
       cellsPath, 8, coarse(0).length, superProbe = 3)
     val q = emb.filter(col("vec_id") < 5)
     // full supercell probing: candidate set == the literal family's
-    val viaStored = rows(Pq.ivfPqTopKStored(q, emb, sqFull, cents,
+    val viaStored = rows(Pq.ivfPqTopK(q, emb, sqFull, cents,
       k = 10, nProbe = 4, rerank = 50))
     assert(viaStored == rows(Pq.ivfPqTopK(q, emb, coarse, cents,
       k = 10, nProbe = 4, rerank = 50)))
     // PARTIAL probing: identical to the hier family on equal content
     val hq = hqFull.copy(superProbe = 2)
     val sq = sqFull.copy(superProbe = 2)
-    assert(rows(Pq.ivfPqTopKStored(q, emb, sq, cents,
+    assert(rows(Pq.ivfPqTopK(q, emb, sq, cents,
         k = 10, nProbe = 3, rerank = 50))
-      == rows(Pq.ivfPqTopKHier(q, emb, hq, cents,
+      == rows(Pq.ivfPqTopK(q, emb, hq, cents,
         k = 10, nProbe = 3, rerank = 50)))
     // lifecycle under PARTIAL probing
     val embA = emb.filter(col("vec_id") % 2 === 0)
@@ -457,18 +457,18 @@ class PqSpec extends SparkSpecBase {
     assert(splitsA == splitsU)
     assert(rows(idxA.select("neighbor_id", "cell", "subcell", "codes")) ==
       rows(idxU.select("neighbor_id", "cell", "subcell", "codes")))
-    val served = rows(Pq.ivfPqServeTopKStored(q, idxA, emb, sq, splitsA,
+    val served = rows(Pq.ivfPqServeTopK(q, idxA, emb, sq, splitsA,
       cents, k = 10, nProbe = 3, rerank = 50))
-    assert(served == rows(Pq.ivfPqTopKStored(q, emb, sq, cents,
+    assert(served == rows(Pq.ivfPqTopK(q, emb, sq, cents,
       k = 10, nProbe = 3, rerank = 50)))
     // ... and == the hier serve on identical content through the
     // artifact layer
     val pH = TestTmp.dir("pq-stored-life") + "/idx"
     Artifacts.saveIvfPqIndex(emb, pH, hq, cents)
     val (idxH, splitsH) = Artifacts.loadIvfPqIndex(spark, pH, hq, cents)
-    assert(rows(Pq.ivfPqServeTopKStored(q, idxU, emb, sq, splitsU,
+    assert(rows(Pq.ivfPqServeTopK(q, idxU, emb, sq, splitsU,
         cents, k = 10, nProbe = 3, rerank = 50))
-      == rows(Pq.ivfPqServeTopKHier(q, idxH, emb, hq, splitsH,
+      == rows(Pq.ivfPqServeTopK(q, idxH, emb, hq, splitsH,
         cents, k = 10, nProbe = 3, rerank = 50)))
     // takedown: removing the appended half restores the embA-only index
     Artifacts.removeFromIvfPqIndex(embB.select("vec_id"), embA, p,
@@ -487,9 +487,9 @@ class PqSpec extends SparkSpecBase {
     // identical content (same index rows, same probed cells, same ADC
     // margin, same exact confirm)
     val incoming = emb.filter(col("vec_id") >= 5 && col("vec_id") < 15)
-    assert(rows(Pq.annMatchesIncomingStored(incoming, idxU, emb, sq,
+    assert(rows(Pq.annMatchesIncoming(incoming, idxU, emb, sq,
         splitsU, cents, thresholdE4 = 7000))
-      == rows(Pq.annMatchesIncomingHier(incoming, idxU, emb, hq,
+      == rows(Pq.annMatchesIncoming(incoming, idxU, emb, hq,
         splitsU, cents, thresholdE4 = 7000)))
   }
 
@@ -534,44 +534,20 @@ class PqSpec extends SparkSpecBase {
         Artifacts.loadIvfPqIndex(spark, p + "/pq", fam, cb,
           maxCell = maxCell)
       assert(ivfSplits.nonEmpty && pqSplits.nonEmpty)
-      fam match {
-        case LiteralQuantizer(c) => Seq(
-          ("ivfTopK", () => Ivf.ivfTopK(q, emb, c, k = 3, nProbe = 2,
-            maxCell = maxCell), topK),
-          ("ivfServeTopK", () => Ivf.ivfServeTopK(q, ivfIdx, c, ivfSplits,
-            k = 3), topK),
-          ("ivfPqTopK", () => Pq.ivfPqTopK(q, emb, c, cb, k = 3,
-            nProbe = 2, maxCell = maxCell), topK),
-          ("ivfPqServeTopK", () => Pq.ivfPqServeTopK(q, pqIdx, emb, c,
-            pqSplits, cb, k = 3, nProbe = 2), topK),
-          ("annMatchesIncoming", () => Pq.annMatchesIncoming(incoming,
-            pqIdx, emb, c, pqSplits, cb, thresholdE4 = 3000,
-            nProbe = 2), pairs))
-        case h: HierarchicalQuantizer => Seq(
-          ("ivfTopK", () => Ivf.ivfTopKHier(q, emb, h, k = 3, nProbe = 2,
-            maxCell = maxCell), topK),
-          ("ivfServeTopK", () => Ivf.ivfServeTopKHier(q, ivfIdx, h,
-            ivfSplits, k = 3), topK),
-          ("ivfPqTopK", () => Pq.ivfPqTopKHier(q, emb, h, cb, k = 3,
-            nProbe = 2, maxCell = maxCell), topK),
-          ("ivfPqServeTopK", () => Pq.ivfPqServeTopKHier(q, pqIdx, emb, h,
-            pqSplits, cb, k = 3, nProbe = 2), topK),
-          ("annMatchesIncoming", () => Pq.annMatchesIncomingHier(incoming,
-            pqIdx, emb, h, pqSplits, cb, thresholdE4 = 3000,
-            perSuperProbe = 2), pairs))
-        case s: StoredQuantizer => Seq(
-          ("ivfTopK", () => Ivf.ivfTopKStored(q, emb, s, k = 3,
-            nProbe = 2, maxCell = maxCell), topK),
-          ("ivfServeTopK", () => Ivf.ivfServeTopKStored(q, ivfIdx, s,
-            ivfSplits, k = 3), topK),
-          ("ivfPqTopK", () => Pq.ivfPqTopKStored(q, emb, s, cb, k = 3,
-            nProbe = 2, maxCell = maxCell), topK),
-          ("ivfPqServeTopK", () => Pq.ivfPqServeTopKStored(q, pqIdx, emb,
-            s, pqSplits, cb, k = 3, nProbe = 2), topK),
-          ("annMatchesIncoming", () => Pq.annMatchesIncomingStored(
-            incoming, pqIdx, emb, s, pqSplits, cb, thresholdE4 = 3000,
-            perSuperProbe = 2), pairs))
-      }
+      // the literal family reads nProbe, the relation families read
+      // perSuperProbe
+      Seq(
+        ("ivfTopK", () => Ivf.ivfTopK(q, emb, fam, k = 3, nProbe = 2,
+          maxCell = maxCell), topK),
+        ("ivfServeTopK", () => Ivf.ivfServeTopK(q, ivfIdx, fam, ivfSplits,
+          k = 3), topK),
+        ("ivfPqTopK", () => Pq.ivfPqTopK(q, emb, fam, cb, k = 3,
+          nProbe = 2, maxCell = maxCell), topK),
+        ("ivfPqServeTopK", () => Pq.ivfPqServeTopK(q, pqIdx, emb, fam,
+          pqSplits, cb, k = 3, nProbe = 2), topK),
+        ("annMatchesIncoming", () => Pq.annMatchesIncoming(incoming,
+          pqIdx, emb, fam, pqSplits, cb, thresholdE4 = 3000, nProbe = 2,
+          perSuperProbe = 2), pairs))
     }
     // (family, shape) -> (Spark jobs of build + collect, rendered rows)
     val expected: Map[(String, String), (Int, String)] = Map(

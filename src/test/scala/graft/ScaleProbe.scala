@@ -1383,7 +1383,7 @@ object ScaleProbe {
     val nq = queries.count()
 
     val (ann, _) = timed(s"search ($nq queries)") {
-      val r = Ivf.ivfTopKHier(queries, corpus, quant, k = 10)
+      val r = Ivf.ivfTopK(queries, corpus, quant, k = 10)
       r.count()
       r
     }
@@ -1420,7 +1420,7 @@ object ScaleProbe {
         "ceiling=0 must force the shuffle-hash relation join:\n" +
           shufflePlan.take(2000))
       val (annS, _) = timed(s"search shuffle ($nq queries)") {
-        val r = Ivf.ivfTopKHier(queries, corpus, quant, k = 10)
+        val r = Ivf.ivfTopK(queries, corpus, quant, k = 10)
         r.count()
         r
       }
@@ -1461,7 +1461,7 @@ object ScaleProbe {
       println("[scale] stored-ivf assignment plan: parquet-backed " +
         "BroadcastHashJoin OK")
       val (annStored, _) = timed(s"stored search ($nq queries)") {
-        val r = Ivf.ivfTopKStored(queries, corpus, squant, k = 10)
+        val r = Ivf.ivfTopK(queries, corpus, squant, k = 10)
         r.count()
         r
       }

@@ -1008,7 +1008,7 @@ class StreamingSpec extends SparkSpecBase {
     val schema = spark.read.parquet(s"$src/in.parquet").schema
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val q = Pq.annMatchesIncomingHier(
+    val q = Pq.annMatchesIncoming(
         IncrementalStream.readTableStream(spark, src, "in", schema),
         index, emb, hq, splits, codebooks, thresholdE4 = 3500,
         perSuperProbe = 4)
@@ -1018,7 +1018,7 @@ class StreamingSpec extends SparkSpecBase {
     q.awaitTermination(60000)
     val streamed = pairs(spark.table("pq_hier_ingest_out"))
     val batchIn = spark.read.parquet(s"$src/in.parquet")
-    val batch = pairs(Pq.annMatchesIncomingHier(batchIn, index, emb, hq,
+    val batch = pairs(Pq.annMatchesIncoming(batchIn, index, emb, hq,
       splits, codebooks, thresholdE4 = 3500, perSuperProbe = 4))
     assert(streamed == batch && batch.nonEmpty)
     // full probing == the literal family probing all cells
@@ -1062,7 +1062,7 @@ class StreamingSpec extends SparkSpecBase {
     val schema = spark.read.parquet(s"$src/in.parquet").schema
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val q = Pq.annMatchesIncomingStored(
+    val q = Pq.annMatchesIncoming(
         IncrementalStream.readTableStream(spark, src, "in", schema),
         index, emb, sq, splits, codebooks, thresholdE4 = 3500,
         perSuperProbe = 4)
@@ -1072,7 +1072,7 @@ class StreamingSpec extends SparkSpecBase {
     q.awaitTermination(60000)
     val streamed = pairs(spark.table("pq_stored_ingest_out"))
     val batchIn = spark.read.parquet(s"$src/in.parquet")
-    val batch = pairs(Pq.annMatchesIncomingStored(batchIn, index, emb,
+    val batch = pairs(Pq.annMatchesIncoming(batchIn, index, emb,
       sq, splits, codebooks, thresholdE4 = 3500, perSuperProbe = 4))
     assert(streamed == batch && batch.nonEmpty)
     val literal = pairs(Pq.annMatchesIncoming(batchIn, index, emb,
