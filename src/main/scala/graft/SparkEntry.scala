@@ -23,37 +23,19 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  /** Artifact cache key for a corpus table: path plus a content
-    * fingerprint, so a REGENERATED corpus under the same path
-    * invalidates the stored train-once artifacts (pinned
-    * hyperparameters catch parameter drift; this catches content drift
-    * — serving a stale merge table or quantizer against new data would
-    * be silently wrong). For a single file the fingerprint is
-    * size+mtime; for a DIRECTORY-backed parquet table (normal Spark
-    * output) the directory's own length is filesystem noise (~4096
-    * constant), so the fingerprint folds every part file's
-    * name/size/mtime instead (ADVICE r9 #2).
+  /** Artifact cache key for a corpus table: its qualified path plus
+    * the digest of its Hadoop listing ([[Tables.listingKey]]: every
+    * file's relative name, size and mtime, walked recursively), so a
+    * REGENERATED corpus under the same path invalidates the stored
+    * train-once artifacts (pinned hyperparameters catch parameter drift;
+    * this catches content drift — serving a stale merge table or
+    * quantizer against new data would be silently wrong). The listing
+    * goes through the path's Hadoop FileSystem, so a `file:`, `hdfs://`
+    * or `s3a://` corpus is keyed by its content like a bare local path.
     */
-  private def corpusKey(dir: String, name: String): String = {
-    // RECURSIVE walk + 128-bit digest (ADVICE r10 #3): partitioned
-    // parquet puts part files in subdirectories, which a top-level
-    // listing misses entirely, and a 32-bit String.hashCode collision
-    // would silently serve stale train-once artifacts — MD5 over the
-    // full relative name:size:mtime listing closes both holes
-    val root = new java.io.File(s"$dir/$name.parquet")
-    def walk(x: java.io.File): Seq[java.io.File] =
-      if (x.isDirectory)
-        Option(x.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(x)
-    val listing = walk(root)
-      .map(p => s"${p.getPath.stripPrefix(root.getPath)}:${p.length}:${p.lastModified}")
-      .mkString("|")
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"$dir/$name-$fp"
-  }
+  private[graft] def corpusKey(spark: SparkSession, dir: String,
+                               name: String): String =
+    Tables.listingKey(spark, s"$dir/$name.parquet")
 
   /** Fan an ID-ONLY fixture source out across the session's cores
     * before an expensive per-id synthesis/decode map (optimization
@@ -83,7 +65,7 @@ object SparkEntry {
   private def hierQuantizerFor(s: SparkSession,
                                dir: String): graft.northstar.Ivf.HierarchicalQuantizer = {
     val emb = t(s, dir, "embeddings")
-    val key = corpusKey(dir, "embeddings")
+    val key = corpusKey(s, dir, "embeddings")
     graft.northstar.Ivf.HierarchicalQuantizer(
       graft.northstar.Artifacts.ivfCentroidsFor(emb, key, nCells = 3),
       graft.northstar.Artifacts.ivfCentroidsFor(emb, key, nCells = 8),
@@ -104,7 +86,7 @@ object SparkEntry {
   private def hierQuantizerPartialFor(s: SparkSession,
                                       dir: String): graft.northstar.Ivf.HierarchicalQuantizer = {
     val emb = t(s, dir, "embeddings")
-    val key = corpusKey(dir, "embeddings")
+    val key = corpusKey(s, dir, "embeddings")
     graft.northstar.Ivf.HierarchicalQuantizer(
       graft.northstar.Artifacts.ivfCentroidsFor(emb, key, nCells = 6),
       graft.northstar.Artifacts.ivfCentroidsFor(emb, key, nCells = 24),
@@ -128,7 +110,7 @@ object SparkEntry {
                                  nCells: Int, superProbe: Int)
       : graft.northstar.Ivf.StoredQuantizer = {
     val emb = t(s, dir, "embeddings")
-    val key = corpusKey(dir, "embeddings")
+    val key = corpusKey(s, dir, "embeddings")
     // the SHARED sizing rule (Ivf.autoNSuperTarget), not a local copy —
     // an override fit at a diverged size would silently pin constants
     // for a top-level shape production fitStored no longer produces
@@ -162,7 +144,7 @@ object SparkEntry {
     */
   private def semdedupPinLabels(emb: DataFrame, dir: String): DataFrame =
     graft.northstar.Artifacts.semanticLabelsFor(emb,
-      cacheKey = corpusKey(dir, "embeddings") + "-lt200",
+      cacheKey = corpusKey(emb.sparkSession, dir, "embeddings") + "-lt200",
       centroids = Array(Array.fill(64)(1.0f)), thresholdE4 = 3000)
 
   /** The append-lifecycle demo behind `ns_knn_ivfpq_append*`: the
@@ -284,7 +266,7 @@ object SparkEntry {
                                rerank: Int, maxCell: Int): DataFrame = {
     import graft.northstar.{Artifacts, Pq}
     val emb = t(s, dir, "embeddings")
-    val key = corpusKey(dir, "embeddings")
+    val key = corpusKey(s, dir, "embeddings")
     val embA = emb.filter(col("vec_id") % 2 === 0)
     val embB = emb.filter(col("vec_id") % 2 =!= 0)
     val centroids = Artifacts.ivfCentroidsFor(embA, s"$key/Ahalf",
@@ -324,7 +306,7 @@ object SparkEntry {
                                rerank: Int, maxCell: Int): DataFrame = {
     import graft.northstar.{Artifacts, Pq}
     val emb = t(s, dir, "embeddings")
-    val key = corpusKey(dir, "embeddings")
+    val key = corpusKey(s, dir, "embeddings")
     val extra = emb.select((col("vec_id") + 500000L).as("vec_id"),
       col("embedding"))
     val centroids = Artifacts.ivfCentroidsFor(emb, cacheKey = key,
@@ -652,9 +634,9 @@ object SparkEntry {
     // change a single value
     "q_star_bucketed" -> ((s, dir) => {
       val liB = Bucketing.bucketedTableFor(t(s, dir, "lineitem"),
-        "lineitem", corpusKey(dir, "lineitem"), "l_orderkey", 8)
+        "lineitem", corpusKey(s, dir, "lineitem"), "l_orderkey", 8)
       val oB = Bucketing.bucketedTableFor(t(s, dir, "orders"),
-        "orders", corpusKey(dir, "orders"), "o_orderkey", 8)
+        "orders", corpusKey(s, dir, "orders"), "o_orderkey", 8)
       val li = liB.select(col("l_orderkey"),
         (col("l_extendedprice").cast("decimal(12,2)") *
          (lit(1).cast("decimal(12,2)") - col("l_discount").cast("decimal(12,2)")))
@@ -944,7 +926,7 @@ object SparkEntry {
     "ns_dedup_keep_best" -> ((s, dir) => {
       val corpus = chainCorpus(s, dir)
       val labels = graft.northstar.Artifacts.collapseLabelsFor(
-        corpus, corpusKey(dir, "documents") + "-chain")(chainPairs(corpus))
+        corpus, corpusKey(s, dir, "documents") + "-chain")(chainPairs(corpus))
       Similarity.semanticDedupBestFromLabels(
           corpus.select(col("doc_id"), length(col("text")).as("n_chars_d")),
           labels, scoreCol = "n_chars_d", idCol = "doc_id")
@@ -981,7 +963,7 @@ object SparkEntry {
     "ns_lm_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (vocab, total) = graft.northstar.Artifacts.lmHeadFor(
-        docs, cacheKey = corpusKey(dir, "documents"), topK = 50)
+        docs, cacheKey = corpusKey(s, dir, "documents"), topK = 50)
       TextAnalysis.scoreWithLm(docs, vocab, total)
         .select(col("doc_id"), col("n_tokens"),
           round(col("mean_lp") * 10000).cast("long").as("s_e4"))
@@ -993,7 +975,7 @@ object SparkEntry {
     // like the target domain; the importance-resampling selection signal
     "ns_dsir_weights" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val key = corpusKey(dir, "documents")
+      val key = corpusKey(s, dir, "documents")
       val (tv, tt) = graft.northstar.Artifacts.lmHeadFor(
         docs.filter(col("source") === "src0"), s"$key-src0", topK = 50)
       val (rv, rt) = graft.northstar.Artifacts.lmHeadFor(docs, key, topK = 50)
@@ -1035,9 +1017,9 @@ object SparkEntry {
     "ns_bigram_lm" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (vocab, total) = graft.northstar.Artifacts.lmHeadFor(
-        docs, cacheKey = corpusKey(dir, "documents"), topK = 50)
+        docs, cacheKey = corpusKey(s, dir, "documents"), topK = 50)
       val bigrams = graft.northstar.Artifacts.bigramHeadFor(
-        docs, cacheKey = corpusKey(dir, "documents"), topK = 100)
+        docs, cacheKey = corpusKey(s, dir, "documents"), topK = 100)
       TextAnalysis.scoreWithBigramLm(docs, bigrams, vocab, total)
         .select(col("doc_id"), col("n_tokens"),
           round(col("mean_lp2") * 10000).cast("long").as("b_e4"))
@@ -1082,7 +1064,7 @@ object SparkEntry {
     "ns_ppl_buckets" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (vocab, total) = graft.northstar.Artifacts.lmHeadFor(
-        docs, cacheKey = corpusKey(dir, "documents"), topK = 50)
+        docs, cacheKey = corpusKey(s, dir, "documents"), topK = 50)
       val scored = TextAnalysis.scoreWithLm(docs, vocab, total)
         .select(col("doc_id"),
           round(col("mean_lp") * 10000).cast("long").as("s_e4"))
@@ -1173,7 +1155,7 @@ object SparkEntry {
     "ns_bpe_tokenize" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val merges = graft.northstar.Artifacts.bpeMergesFor(
-        docs, cacheKey = corpusKey(dir, "documents"), rounds = 5)
+        docs, cacheKey = corpusKey(s, dir, "documents"), rounds = 5)
       TextAnalysis.bpeApply(docs, merges)
         .select(col("doc_id"), col("n_words"), col("n_pieces"))
     }),
@@ -1276,7 +1258,7 @@ object SparkEntry {
       val cfg = graft.northstar.Curation.parseConfig(
         """{"min_quality": 0.5, "langs": ["en", "de"], "length_floor": "1/10"}""")
       val frozen = graft.northstar.Artifacts.frozenCurationFor(
-        docs, cacheKey = corpusKey(dir, "documents"), cfg)
+        docs, cacheKey = corpusKey(s, dir, "documents"), cfg)
       graft.northstar.Curation.serve(docs, frozen)
     }),
     // semantic keep-best composed into the curation chain (VERDICT r10
@@ -1528,7 +1510,7 @@ object SparkEntry {
       val incoming = corpus.select((col("doc_id") + 300000).as("doc_id"),
         concat(col("text"), lit(" quoted with appended commentary")).as("text"))
       val index = graft.northstar.Artifacts.winnowSketchFor(
-        corpus, cacheKey = corpusKey(dir, "documents"), maxBucket = 100)
+        corpus, cacheKey = corpusKey(s, dir, "documents"), maxBucket = 100)
       // probe with the INDEX'S cap (code-review r14: the independent
       // incoming-side default of 1000 contradicted the documented
       // same-cap contract; hash-neutral — an incoming fp over 100 is
@@ -1548,7 +1530,7 @@ object SparkEntry {
       val incoming = corpus.select((col("doc_id") + 300000).as("doc_id"),
         concat(col("text"), lit(" quoted with appended commentary")).as("text"))
       val path = Artifacts.pathFor("winnowappend",
-        s"${corpusKey(dir, "documents")}-$jvmTag")
+        s"${corpusKey(s, dir, "documents")}-$jvmTag")
       val index = Artifacts.CappedIndex.winnow(maxBucket = 100)
       index.save(corpus.filter(col("doc_id") % 2 === 0), path)
       index.append(corpus.filter(col("doc_id") % 2 =!= 0), path)
@@ -1570,7 +1552,7 @@ object SparkEntry {
       val incoming = corpus.select((col("doc_id") + 300000).as("doc_id"),
         concat(col("text"), lit(" quoted with appended commentary")).as("text"))
       val path = Artifacts.pathFor("winnowremove",
-        s"${corpusKey(dir, "documents")}-$jvmTag")
+        s"${corpusKey(s, dir, "documents")}-$jvmTag")
       val index = Artifacts.CappedIndex.winnow(maxBucket = 100)
       index.save(corpus.unionAll(extra), path)
       index.remove(extra.select("doc_id"), path)
@@ -1617,7 +1599,7 @@ object SparkEntry {
         concat(lit("shared boilerplate header\n"), col("text"),
           lit("\nid line "), col("doc_id")).as("text"))
       val boiler = graft.northstar.Artifacts.boilerplateLinesFor(
-        aug, cacheKey = s"${corpusKey(dir, "documents")}-hdr-aug",
+        aug, cacheKey = s"${corpusKey(s, dir, "documents")}-hdr-aug",
         maxDocFreq = 10)
       val incoming = t(s, dir, "documents").filter(col("doc_id") < 100)
         .select((col("doc_id") + 500000).as("doc_id"),
@@ -1679,7 +1661,7 @@ object SparkEntry {
     "ns_probe_serve" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val w = graft.northstar.Artifacts.probeWeightsFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"))
+        emb, cacheKey = corpusKey(s, dir, "embeddings"))
       graft.northstar.Probe.scoreQ(emb, w)
     }),
     // Okapi BM25 relevance against a fixed probe query (the retrieval
@@ -1698,7 +1680,7 @@ object SparkEntry {
     "ns_bm25_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (dfMap, n, dlSum) = graft.northstar.Artifacts.bm25StatsFor(
-        docs, cacheKey = corpusKey(dir, "documents"), queryTerms = bm25Terms)
+        docs, cacheKey = corpusKey(s, dir, "documents"), queryTerms = bm25Terms)
       bm25Top20(TextAnalysis.scoreWithBm25(docs, dfMap, n, dlSum))
     }),
     // corpus-trained unigram-LM scoring (the CCNet perplexity-filter
@@ -1974,7 +1956,7 @@ object SparkEntry {
       // serve from the persisted quantizer artifact (train-once, pinned
       // nCells/seed parquet) instead of refitting per query
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8)
+        emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8)
       graft.northstar.Ivf.ivfTopK(
         emb.filter(col("vec_id") < 5), emb, centroids, k = 10, nProbe = 3)
     }),
@@ -1994,7 +1976,7 @@ object SparkEntry {
     "ns_knn_ivf_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8)
+        emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8)
       graft.northstar.Ivf.ivfTopK(
         emb.filter(col("vec_id") < 5), emb, centroids, k = 10, nProbe = 8)
     }),
@@ -2018,7 +2000,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val hq = hierQuantizerFor(s, dir)
       val path = graft.northstar.Artifacts.pathFor("ivfhieridx",
-        s"${corpusKey(dir, "embeddings")}-c8-sp3")
+        s"${corpusKey(s, dir, "embeddings")}-c8-sp3")
       graft.northstar.Artifacts.ensureTrained(path) { tmp =>
         graft.northstar.Artifacts.saveIvfIndex(emb, tmp, hq)
       }
@@ -2051,7 +2033,7 @@ object SparkEntry {
       val sqPart = storedQuantizerFor(s, dir, nCells = 8, superProbe = 4)
       val sq = sqPart.copy(superProbe = sqPart.nSuper)
       val path = graft.northstar.Artifacts.pathFor("ivfstoredidx",
-        s"${corpusKey(dir, "embeddings")}-c8-full")
+        s"${corpusKey(s, dir, "embeddings")}-c8-full")
       graft.northstar.Artifacts.ensureTrained(path) { tmp =>
         graft.northstar.Artifacts.saveIvfIndex(emb, tmp, sq)
       }
@@ -2083,7 +2065,7 @@ object SparkEntry {
       // the recall floor holds AGAINST THE STORED INDEX — the quality
       // tripwire covers the artifact path a production probe would use
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8)
+        emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8)
       Similarity.recallCounts(
         graft.northstar.Ivf.ivfTopK(q, emb, centroids, k = 10, nProbe = 3),
         Similarity.bruteForceTopK(q, emb, k = 10))
@@ -2133,7 +2115,7 @@ object SparkEntry {
       // the quantizer internally and returns it, so the serving path
       // pays no second ivfCentroidsFor round-trip
       val (index, splits, centroids) = graft.northstar.Artifacts.ivfIndexFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8)
+        emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8)
       graft.northstar.Ivf.ivfServeTopK(
         emb.filter(col("vec_id") < 5), index, centroids, splits,
         k = 10, nProbe = 3)
@@ -2147,7 +2129,7 @@ object SparkEntry {
     // rank-exact exhaustive companion + recall floor below.
     "ns_knn_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key, nCells = 8)
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
@@ -2162,7 +2144,7 @@ object SparkEntry {
     // codebook quality — the oracle is the same SQL as ns_knn_brute
     "ns_knn_ivfpq_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key, nCells = 8)
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
@@ -2178,7 +2160,7 @@ object SparkEntry {
     // rank-exactly regardless of codebook quality
     "ns_knn_ivfpq_hier_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
       graft.northstar.Pq.ivfPqTopK(emb.filter(col("vec_id") < 5),
@@ -2192,7 +2174,7 @@ object SparkEntry {
     // rank-exactly regardless of fit quality
     "ns_knn_ivfpq_stored_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
       val sq = storedQuantizerFor(s, dir, nCells = 8, superProbe = 4)
@@ -2212,7 +2194,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val (index, splits, centroids, codebooks) =
         graft.northstar.Artifacts.ivfPqIndexFor(
-          emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8, m = 8,
+          emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8, m = 8,
           ksub = 16)
       graft.northstar.Pq.ivfPqServeTopK(emb.filter(col("vec_id") < 5),
         index, emb, centroids, splits, codebooks,
@@ -2259,7 +2241,7 @@ object SparkEntry {
     // codebook-fit, ADC, or rerank regression moves the constant
     "ns_knn_ivfpq_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key, nCells = 8)
@@ -2278,7 +2260,7 @@ object SparkEntry {
     // rerank fetch moves n_hits
     "ns_knn_ivfpq_tuned_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key, nCells = 8)
@@ -2299,7 +2281,7 @@ object SparkEntry {
     // base); ScaleProbe tracks the auto path's recall at 2k/10k
     "ns_knn_ivf_auto_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key)
@@ -2316,7 +2298,7 @@ object SparkEntry {
     // asserts the auto path DOMINATES the fixed base at 2k and 10k
     "ns_knn_ivfpq_auto_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
         emb, cacheKey = key, nCells = 8)
@@ -2349,7 +2331,7 @@ object SparkEntry {
     // pipeline's approximation quality as one constant
     "ns_knn_ivfpq_hier_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
@@ -2381,7 +2363,7 @@ object SparkEntry {
     // approximation quality as one constant
     "ns_knn_ivfpq_stored_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val key = corpusKey(dir, "embeddings")
+      val key = corpusKey(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
       val codebooks = graft.northstar.Artifacts.pqCodebooksFor(
         emb, cacheKey = key, m = 8, ksub = 16)
@@ -2402,7 +2384,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val (index, splits, centroids, codebooks) =
         graft.northstar.Artifacts.ivfPqIndexFor(
-          emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8, m = 8,
+          emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8, m = 8,
           ksub = 16)
       val incoming = emb.filter(col("vec_id") < 100)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
@@ -2446,7 +2428,7 @@ object SparkEntry {
     "ns_semdedup" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val centroids = graft.northstar.Artifacts.ivfCentroidsFor(
-        emb, cacheKey = corpusKey(dir, "embeddings"), nCells = 8)
+        emb, cacheKey = corpusKey(s, dir, "embeddings"), nCells = 8)
       Similarity.semanticDedup(emb, centroids, thresholdE4 = 3000)
     }),
     // hash-checked companion to ns_semdedup: ONE trivial cell makes the
@@ -2583,7 +2565,7 @@ object SparkEntry {
         Multimodal.syntheticPatternPng(id, flipTopLeft = true)))
         .toDF("asset_id", "payload")
       val sigs = graft.northstar.Artifacts.CappedIndex.imageHash()
-        .indexFor(corpus, cacheKey = corpusKey(dir, "documents"))
+        .indexFor(corpus, cacheKey = corpusKey(s, dir, "documents"))
       Multimodal.imageDupIncoming(incoming, sigs)
         .withColumn("hamming", col("hamming").cast("long"))
     }),
@@ -2613,7 +2595,7 @@ object SparkEntry {
         Multimodal.syntheticPatternPng(id, flipTopLeft = true)))
         .toDF("asset_id", "payload")
       val path = Artifacts.pathFor("phashappend",
-        s"${corpusKey(dir, "documents")}-$jvmTag")
+        s"${corpusKey(s, dir, "documents")}-$jvmTag")
       val index = Artifacts.CappedIndex.imageHash()
       index.save(evens, path)
       index.append(odds, path)
@@ -2646,7 +2628,7 @@ object SparkEntry {
         Multimodal.syntheticPatternPng(id, flipTopLeft = true)))
         .toDF("asset_id", "payload")
       val path = Artifacts.pathFor("phashremove",
-        s"${corpusKey(dir, "documents")}-$jvmTag")
+        s"${corpusKey(s, dir, "documents")}-$jvmTag")
       val index = Artifacts.CappedIndex.imageHash()
       index.save(corpus.unionAll(extra), path)
       index.remove(extra.select("asset_id"), path)

@@ -90,7 +90,10 @@ object Tables {
     hex("MD5", listing)
   }
 
-  private def listingKey(spark: SparkSession, path: String): String = {
+  /** A path's qualified form plus its listing digest: the key of both
+    * caches here and of [[graft.SparkEntry.corpusKey]].
+    */
+  private[graft] def listingKey(spark: SparkSession, path: String): String = {
     val (fs, root) = qualify(spark, path)
     s"$root#${listingDigest(fs, root)}"
   }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * Three protocols cover every artifact the engine ships:
   *   - PINNED ARTIFACT ([[PinnedArtifact]]): a parquet frame plus its
   *     `_params`, with one save, one load and one train-once `serve`.
-  *     Thirteen kinds: BPE merges, LM and bigram heads, BM25 stats,
+  *     Fourteen kinds: BPE merges, LM and bigram heads, BM25 stats,
   *     probe weights, IVF centroids, PQ codebooks, semantic pairs and
-  *     labels, collapse labels, the winnow sketch, boilerplate lines and
-  *     the frozen curation policy. Each has one public `…For` entrypoint.
+  *     labels, collapse labels, the winnow sketch, boilerplate lines,
+  *     the text fingerprint set and the frozen curation policy. Each has
+  *     one public `…For` entrypoint.
   *   - CELL INDEX: the cell-partitioned IVF / IVF-PQ serving index with
   *     publish, load, append, remove, compact and retrain verbs, one
   *     def each over the [[Ivf.CoarseQuantizer]] whose type picks the
@@ -268,7 +269,7 @@ object Artifacts {
 
   /** One PINNED ARTIFACT kind: a parquet frame plus the `_params`
     * sidecar, trained once under [[ensureTrained]] and served by load.
-    * The thirteen kinds below differ only in what this holds, so save,
+    * The fourteen kinds below differ only in what this holds, so save,
     * load and the train-once [[serve]] exist once:
     *   - `kind`: the [[pathFor]] kind of the kind's store entries;
     *   - `label`: names the artifact in refusals ("BPE merge");
@@ -834,6 +835,39 @@ object Artifacts {
     BoilerplateLines.serve(docs.sparkSession,
       s"$cacheKey-f$maxDocFreq-$idCol-$textCol", maxDocFreq)(
       TextAnalysis.boilerplateLines(docs, maxDocFreq, idCol, textCol))
+
+  /** The exact-dedup key of a document, shared by the stored
+    * [[TextFingerprints]] set and every screen probing it: the
+    * [[TextAnalysis.fingerprint]] of the text, with null text keyed by a
+    * sentinel. An equi-join never matches null keys, so without the
+    * sentinel every re-delivered null-text doc would read as unseen;
+    * with it null-text == null-text reads SEEN, matching corpusDiff's
+    * null-safe (<=>) semantics.
+    */
+  private[graft] def textFingerprint(text: Column): Column =
+    coalesce(TextAnalysis.fingerprint(text), lit("__null_text__"))
+
+  /** A corpus's distinct [[textFingerprint]] set, one `fp` string per
+    * distinct normalized text, with the text column it was taken from
+    * pinned. The static side of
+    * [[graft.streaming.IncrementalStream.streamingMerge]]: a stream
+    * anti-joins this stored set instead of re-fingerprinting the corpus.
+    * The trained value is the corpus itself; the encoder takes its
+    * fingerprints. An empty set (empty corpus) is valid.
+    */
+  private[graft] val TextFingerprints =
+    new PinnedArtifact[String, DataFrame, DataFrame](
+      "textfp", "text fingerprint set",
+      textCol => Map("text_col" -> textCol),
+      (_, corpus, textCol) =>
+        corpus.select(textFingerprint(col(textCol)).as("fp")).distinct(),
+      (df, _, _) => df.select("fp"))
+
+  /** Train-once / serve-by-load fingerprint set of `corpus`. */
+  def textFingerprintsFor(corpus: DataFrame, cacheKey: String,
+                          textCol: String = "text"): DataFrame =
+    TextFingerprints.serve(corpus.sparkSession, s"$cacheKey-$textCol",
+      textCol)(corpus)
 
   /** A [[Curation.freeze]] policy: one row holding the frozen statistics
     * (quality floor, language allowlist, exact length threshold,

@@ -160,11 +160,10 @@ object Dedup {
   }
 
   /** Materialize-once persist for sibling graft modules (Ivf's corpus
-    * cell assignment, Similarity's cell/subcell keying, streaming's
-    * static-side fingerprint set): same tracked, self-bounding,
-    * lazily-recomputable contract as the in-module [[materializeOnce]]
-    * call sites; released by [[releasePersisted]]/clearCache like every
-    * other tracked frame.
+    * cell assignment, Similarity's cell/subcell keying): same tracked,
+    * self-bounding, lazily-recomputable contract as the in-module
+    * [[materializeOnce]] call sites; released by
+    * [[releasePersisted]]/clearCache like every other tracked frame.
     */
   private[graft] def trackedPersist(df: DataFrame): DataFrame =
     materializeOnce(df)

@@ -689,8 +689,10 @@ object Ivf {
     * and stored families assign and probe through their centroid
     * relation ([[Family]]), and the stored family derives subcell
     * thresholds from the SPLIT cells' centroids only. With every
-    * supercell and every cell probed the result is exact
-    * (rank-identical to brute force) whatever the centroid content.
+    * supercell and every cell probed, and no cell past `maxCell`, the
+    * result is exact (rank-identical to brute force) whatever the
+    * centroid content; a re-split cell is probed only in the query's
+    * own subcell, so its other subcells' rows are never candidates.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
               quantizer: CoarseQuantizer, k: Int = 10,

@@ -31,10 +31,13 @@ import org.apache.spark.sql.functions._
   * they ride into the plan as a flattened literal array (KB-sized: m ×
   * ksub × dim/m floats = ksub × dim), no model state at scan time.
   *
-  * Degenerate identity pinned by tests and the driver oracle: probing
-  * ALL cells with an unbounded rerank makes the exact re-rank see every
-  * corpus row, so the output must equal [[Similarity.bruteForceTopK]]
-  * rank-exactly regardless of codebook quality.
+  * Degenerate identity pinned by tests and the DuckDB oracle: while no
+  * cell holds more than `maxCell` rows, probing ALL cells with an
+  * unbounded rerank makes the exact re-rank see every corpus row, so the
+  * output must equal [[Similarity.bruteForceTopK]] rank-exactly
+  * regardless of codebook quality. A cell past `maxCell` is re-split,
+  * and a query probes only its own subcell of it, so an all-cells probe
+  * can then miss neighbours in the other subcells.
   */
 object Pq {
 

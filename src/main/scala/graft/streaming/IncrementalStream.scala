@@ -22,6 +22,11 @@ import org.apache.spark.sql.types.StructType
   * aggregation is keyed by (window, group) in the state store, sized by
   * watermark retention, and shuffle parallelism follows
   * spark.sql.shuffle.partitions like any agg.
+  *
+  * A stream screened against a corpus ([[streamingMerge]], and the
+  * winnow, image, audio and IVF-PQ ingest screens in graft.northstar)
+  * anti-joins a STORED artifact: a restart loads the artifact, and no
+  * static side lives in a session cache that someone must release.
   */
 object IncrementalStream {
 
@@ -78,398 +83,37 @@ object IncrementalStream {
       .drop("__graft_event_time")
   }
 
-  /** Static fingerprint frames pinned by [[streamingMerge]], per
-    * session — held STRONGLY, deliberately (code-review r19, second
-    * pass): nothing else holds the pinned Dataset (the returned plan
-    * and the running query reference only its LogicalPlan), so a
-    * WeakReference here was clearable by the first minor GC and
-    * [[releaseMergePins]] became a no-op while the CacheManager kept
-    * the blocks — the exact unbounded-accumulation bug this registry
-    * exists to fix, plus a GC-racy release. The honest cost of strong
-    * refs: a session discarded WITHOUT releaseMergePins stays
-    * reachable through its pins — but in that scenario its cached
-    * blocks were already leaked (only this registry could have freed
-    * them), so the added session object is marginal. Release before
-    * dropping a session: the documented contract, and the release is
-    * now GUARANTEED to free every pin.
-    *
-    * [[releaseMergePins]] drains and unpersists them WITHOUT touching
-    * any other user's cached frames — the library-level release the
-    * r18 advice asked for, replacing the previous "global
-    * spark.catalog.clearCache()" remedy that evicted unrelated cache
-    * blocks. Frames are lineage-recomputable, so a release while a
-    * merge stream is still running costs one recompute on the next
-    * micro-batch, never correctness.
-    */
-  private final class MergePin(val frame: DataFrame) {
-    /** runId of the started streaming query whose analyzed plan was
-      * observed to CONTAIN the pinned frame; None until then. Written
-      * only from the session's listener-bus thread (start/termination
-      * events are delivered in order on one bus), read from release
-      * paths — hence volatile, no lock.
-      */
-    @volatile var owner: Option[java.util.UUID] = None
-    /** true once a termination freed this pin's blocks; cleared when a
-      * restart re-binds and re-persists. Released pins are the only
-      * ones the bounded-retention trim may forget. Set ONLY AFTER the
-      * unpersist returns (code-review r20, pass 3): flagged before it,
-      * a throwing unpersist (swallowed by the per-pin guard) left a
-      * still-cached pin trim-eligible — trimming it would forget the
-      * last reference to live blocks, the exact unreleasable-cache
-      * leak this registry exists to fix. A failed release keeps
-      * released=false, so the pin stays retained and releaseMergePins
-      * can still free it.
-      */
-    @volatile var released: Boolean = false
-    /** Monotonic stamp of this pin's most recent release — the trim's
-      * eviction key (code-review r20, pass 3: trimming by REGISTRATION
-      * order dropped the oldest-registered released pin, so the
-      * termination that trips the bound could evict the pin it just
-      * released — the one whose restart is most imminent — while
-      * keeping arbitrarily stale ones).
-      */
-    @volatile var releaseSeq: Long = -1L
-  }
-
-  private val releaseStamp = new java.util.concurrent.atomic.AtomicLong
-
-  /** How many RELEASED pins (blocks already freed, retained only so a
-    * restarted query can re-bind and re-persist) a session keeps,
-    * newest-RELEASED first. Beyond the window the pin metadata is forgotten —
-    * a restart past it pays one corpus recompute per micro-batch until
-    * the caller rebuilds the merge, which the streamingMerge scaladoc
-    * says to do for cold restarts anyway. Without the bound, the
-    * forgot-to-call-releaseMergePins app the auto-release listener
-    * exists for would trade its old block leak for an unbounded
-    * pin/plan metadata leak, and every query start would scan an
-    * ever-growing unbound list (code-review r20, pass 2).
-    */
-  private val MaxReleasedPins = 16
-
-  /** The retention window the trim actually reads — a test seam
-    * (StreamingSpec shrinks it to make the trim reachable with a
-    * handful of real queries instead of seventeen; restored in its
-    * finally). Production value is [[MaxReleasedPins]].
-    */
-  @volatile private[graft] var releasedPinWindow: Int = MaxReleasedPins
-
-  private val mergePins =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      Vector[MergePin]]()
-
-  /** The auto-release listener installed on each session's
-    * StreamingQueryManager — installed at the first pin, REMOVED by
-    * [[releaseMergePins]] (code-review r20, pass 1: a never-cleaned
-    * keySet held every cycled session strongly forever, so the
-    * documented release-before-dropping contract no longer severed the
-    * last strong ref and per-tenant sessions accumulated until driver
-    * OOM).
-    */
-  private val pinListeners =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      org.apache.spark.sql.streaming.StreamingQueryListener]()
-
-  private[graft] def pinListenerInstalled(spark: SparkSession): Boolean =
-    pinListeners.containsKey(spark)
-
-  /** Guards the CROSS-map invariant — a session carries the listener
-    * iff it carries pins: registration and teardown mutate BOTH maps
-    * under this lock (code-review r20, pass 2 — with the two maps
-    * mutated independently, a register racing the final release could
-    * strand either a listener with zero pins, retaining the session
-    * forever, or a freshly-registered pin drained by the release while
-    * its just-installed listener survived). The listener-bus thread
-    * never takes this lock (bind/terminate read snapshots and use
-    * per-key CHM compute only), so there is no inversion with Spark's
-    * bus; addListener/removeListener under it are quick
-    * CopyOnWriteArrayList ops, and no registry path holds it across
-    * a Spark job.
-    */
-  private val pinRegistryLock = new Object
-
-  private def registerMergePin(frame: DataFrame): Unit = {
-    val spark = frame.sparkSession
-    pinRegistryLock.synchronized {
-      // compute(), not computeIfAbsent-then-add (advice r19): the add
-      // is atomic with the map entry even against the trim path, which
-      // takes only the CHM bin lock
-      mergePins.compute(spark, (_, old) => {
-        (if (old == null) Vector.empty[MergePin] else old) :+
-          new MergePin(frame)
-      }): Unit
-      if (!pinListeners.containsKey(spark)) {
-        val l = newPinListener(spark)
-        spark.streams.addListener(l)
-        pinListeners.put(spark, l): Unit
-      }
-    }
-  }
-
-  /** Unpersist every static fingerprint frame [[streamingMerge]] pinned
-    * on this session, forget them, and uninstall the session's
-    * auto-release listener; returns how many pins were dropped. The
-    * manual/bulk TEARDOWN path (the Bench/Verify hygiene) — since r20
-    * the per-query CACHE path is automatic: a
-    * [[org.apache.spark.sql.streaming.StreamingQueryListener]] frees a
-    * pin's cached blocks when the query whose plan carries it
-    * terminates (VERDICT r19 task 3), so a long-lived ingest app that
-    * stops a merge stream and forgets this call no longer accumulates
-    * the stopped query's cached frame. The pin OBJECTS (frame
-    * references, not data) survive auto-release so a restarted query
-    * re-binds and re-persists; this call is what forgets them — and
-    * pins whose query never STARTED have no lifecycle event to ride,
-    * so only this call frees those.
-    */
-  def releaseMergePins(spark: SparkSession): Int = {
-    // both maps emptied ATOMICALLY w.r.t. registration (the registry
-    // lock): after this call NOTHING here retains the session — the
-    // documented teardown point (code-review r20, both passes)
-    val (l, pins) = pinRegistryLock.synchronized {
-      (pinListeners.remove(spark), mergePins.remove(spark))
-    }
-    if (l != null)
-      try spark.streams.removeListener(l)
-      catch { case scala.util.control.NonFatal(_) => () }
-    if (pins == null) 0
-    else { pins.foreach(_.frame.unpersist(): Unit); pins.size }
-  }
-
-  /** Test probes: live pin count / bound (query-owned) pin count for a
-    * session — StreamingSpec's observability into the auto-release
-    * lifecycle without consuming the pins the way releaseMergePins
-    * does.
-    */
-  private[graft] def mergePinCount(spark: SparkSession): Int = {
-    val pins = mergePins.get(spark)
-    if (pins == null) 0 else pins.size
-  }
-  private[graft] def mergePinBoundCount(spark: SparkSession): Int = {
-    val pins = mergePins.get(spark)
-    if (pins == null) 0 else pins.count(_.owner.isDefined)
-  }
-  private[graft] def mergePinCachedCount(spark: SparkSession): Int = {
-    val pins = mergePins.get(spark)
-    if (pins == null) 0
-    else pins.count(_.frame.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
-  }
-
-  /** True when `needle` (an analyzed plan) appears as a subtree of the
-    * query's analyzed plan — sameResult (canonicalized) rather than eq,
-    * because writeStream re-analysis may copy nodes.
-    */
-  private def planContains(
-      haystack: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      needle: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Boolean =
-    try haystack.exists(_.sameResult(needle))
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  /** AUTO-RELEASE listener (VERDICT r19 task 3 — the second half of the
-    * r18 advice): binds each pin to the streaming query whose analyzed
-    * plan contains its frame (onQueryStarted), and frees the pin's
-    * CACHED BLOCKS when that query terminates — UNLESS another
-    * still-active query's plan also carries the frame, in which case
-    * the pin is re-bound to that query instead of released (no release
-    * of a pin still in use). The pin OBJECT is retained, unbound
-    * (code-review r20, pass 1): a stop-then-restart of the same merge
-    * output re-binds here and RE-PERSISTS, instead of silently paying
-    * the full-corpus recompute on every post-restart micro-batch —
-    * which also self-heals the race where a second query sharing the
-    * frame starts between the first's termination event and its
-    * active-list walk. Released-pin retention is BOUNDED at
-    * [[MaxReleasedPins]] per session (newest kept), so the
-    * forgot-to-release app this listener exists for accumulates
-    * neither blocks nor unbounded pin metadata. Pins whose query never
-    * starts stay unbound and are untouched by the listener: only
-    * [[releaseMergePins]] — which remains the teardown that forgets
-    * pin objects and the listener itself — frees those, because an
-    * unpersist BEFORE the query's first batch would never re-persist.
-    */
-  private def newPinListener(spark: SparkSession)
-      : org.apache.spark.sql.streaming.StreamingQueryListener =
-    new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        bindPins(spark, e.id, e.runId)
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        releaseTerminatedPins(spark, e.runId)
-    }
-
-  /** Test seam (the retrainPreTokenSeam discipline): invoked on the
-    * listener-bus thread with the pin's frame after a re-bind claims
-    * the pin but BEFORE the re-persist — the exact window where a
-    * concurrent [[releaseMergePins]] can drain the registry so that
-    * the persist would re-register blocks nothing can ever release.
-    * StreamingSpec injects a release here to deterministically drive
-    * the resurrect guard's membership re-check; production never
-    * assigns it. A plain volatile var, not a ThreadLocal, because the
-    * seam must cross from the test thread to the bus thread.
-    */
-  @volatile private[graft] var resurrectSeam: DataFrame => Unit = _ => ()
-
-  private def bindPins(spark: SparkSession, id: java.util.UUID,
-                       runId: java.util.UUID): Unit =
-    try {
-      val q = spark.streams.get(id)
-      if (q != null)
-        org.apache.spark.sql.graftbridge.Bridge.streamingAnalyzedPlan(q)
-          .foreach { plan =>
-            val pins = mergePins.get(spark)
-            if (pins != null) pins.foreach { p =>
-              if (p.owner.isEmpty &&
-                  planContains(plan, p.frame.queryExecution.analyzed)) {
-                p.owner = Some(runId)
-                p.released = false
-                resurrectSeam(p.frame)
-                // a pin whose blocks a previous termination freed
-                // re-persists on restart — persist is lazy, the next
-                // micro-batch materializes the cache
-                if (p.frame.storageLevel ==
-                    org.apache.spark.storage.StorageLevel.NONE) {
-                  p.frame.persist(): Unit
-                  // resurrect guard (code-review r20, pass 2): a
-                  // concurrent releaseMergePins may have drained this
-                  // pin between our snapshot and the persist — the
-                  // re-registered blocks would then be unreleasable by
-                  // anything. Re-check membership and undo; the query
-                  // still runs, paying the documented one-recompute.
-                  val cur = mergePins.get(spark)
-                  if (cur == null || !cur.exists(_ eq p))
-                    p.frame.unpersist(): Unit
-                }
-              }
-            }
-          }
-    } catch {
-      // listener-bus threads must never die on a lookup race (the
-      // query can terminate between the event and the get)
-      case scala.util.control.NonFatal(_) => ()
-    }
-
-  private def releaseTerminatedPins(spark: SparkSession,
-                                    runId: java.util.UUID): Unit =
-    try {
-      // the plan walks run on a plain SNAPSHOT — pass 1 ran them
-      // inside the ConcurrentHashMap compute bin-lock, blocking every
-      // concurrent register/release on the session for the duration
-      // of plan canonicalization (code-review r20). The only map
-      // mutation on this path is the retention trim's compute() below:
-      // pure list work under the CHM bin lock, never a Spark call, and
-      // never pinRegistryLock — the bus thread stays off the registry
-      // lock by design.
-      val pins = mergePins.get(spark)
-      if (pins == null) return
-      val owned = pins.filter(_.owner.contains(runId))
-      if (owned.isEmpty) return
-      val live = spark.streams.active.toSeq.flatMap(q =>
-        org.apache.spark.sql.graftbridge.Bridge
-          .streamingAnalyzedPlan(q).map(q.runId -> _))
-      owned.foreach { p =>
-        // per-pin guard: one torn plan lookup must not leave the
-        // REMAINING pins bound to a dead runId (never auto-released)
-        try {
-          val pinPlan = p.frame.queryExecution.analyzed
-          live.find { case (_, pl) => planContains(pl, pinPlan) } match {
-            case Some((rid, _)) => p.owner = Some(rid)
-            case None =>
-              p.owner = None
-              // unpersist FIRST, flag after (see the released scaladoc):
-              // a throw here is swallowed by the per-pin guard with
-              // released still false, so the pin stays un-trimmable and
-              // releaseMergePins can retry the free
-              p.frame.unpersist(): Unit
-              p.releaseSeq = releaseStamp.incrementAndGet()
-              p.released = true
-          }
-        } catch { case scala.util.control.NonFatal(t) =>
-          // the degraded mode must be OBSERVABLE (code-review r20,
-          // pass 4): a pin whose unpersist keeps failing stays
-          // retained and trim-exempt by design (its blocks may be
-          // live), which is unbounded metadata growth if it recurs —
-          // the operator's remedy is releaseMergePins, named here
-          Console.err.println(
-            s"[graft] WARN merge-pin auto-release failed " +
-              s"(${t.getMessage}) — the pin stays retained with its " +
-              "blocks possibly cached; releaseMergePins(spark) retries " +
-              "the free")
-        }
-      }
-      // BOUNDED retention (code-review r20, pass 2): keep only the
-      // most-recently-RELEASED releasedPinWindow pins for restart
-      // re-binding; older ones are forgotten — their blocks are already
-      // free, so dropping the reference costs nothing unless that exact
-      // stream restarts past the window. Eviction keys on releaseSeq,
-      // NOT registration order (pass 3): by registration order, the
-      // termination that trips the bound could evict the pin it just
-      // released — the one whose restart is most imminent — while
-      // keeping arbitrarily stale ones. Pure list work inside the CHM
-      // bin lock; never-started and live-bound pins are never trimmed,
-      // so the result is never empty (the window's newest survive) and
-      // the "listener iff pins" invariant is untouched here.
-      mergePins.compute(spark, (_, old) => {
-        if (old == null) null
-        else {
-          val released = old.filter(_.released)
-          if (released.size <= releasedPinWindow) old
-          else {
-            val drop = released.sortBy(_.releaseSeq)
-              .dropRight(releasedPinWindow).toSet
-            old.filterNot(drop)
-          }
-        }
-      }): Unit
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Continuous corpus merge: a stream of incoming documents anti-joined
-    * against a STATIC existing corpus's fingerprint set — only docs whose
-    * normalized text is unseen pass through. Stream-static anti-joins are
-    * natively supported in append mode, so this is the streaming flavor
-    * of the batch ns_corpus_merge ingest dedup: the static side is
-    * re-read per micro-batch (cache it for hot loops), no state store is
-    * involved, and the output is exactly-once under the sink checkpoint.
+    * against a corpus's STORED fingerprint set — only docs whose
+    * normalized text is unseen pass through. `fingerprints` is the
+    * served [[graft.northstar.Artifacts.textFingerprintsFor]] set, which
+    * the caller names by `cacheKey` like every other `…For` artifact:
     *
-    * The pinned static frame is registered per-session; release it after
-    * stopping the query with [[releaseMergePins]] (scoped — does not
-    * evict anything else in the cache).
+    * {{{
+    * streamingMerge(incoming,
+    *   Artifacts.textFingerprintsFor(existing, cacheKey))
+    * }}}
+    *
+    * The streaming flavor of the batch ns_corpus_merge ingest dedup: a
+    * stream-static anti-join in append mode against the stored parquet,
+    * so no state store is involved, no micro-batch re-reads the corpus,
+    * a restart (in this JVM or another) loads the same stored set, and
+    * the output is exactly-once under the sink checkpoint. Both sides
+    * key on [[graft.northstar.Artifacts.textFingerprint]], so null text
+    * reads SEEN against a corpus holding a null-text doc.
     */
-  def streamingMerge(incoming: DataFrame, existing: DataFrame,
+  def streamingMerge(incoming: DataFrame, fingerprints: DataFrame,
                      textCol: String = "text"): DataFrame = {
-    import graft.northstar.TextAnalysis
+    import graft.northstar.Artifacts
     // same reserved-column guard as streamingDedup: withColumn would
     // silently OVERWRITE a caller's __fp and the final drop would then
     // remove it from the output schema entirely
     require(!incoming.columns.contains("__fp"),
       "streamingMerge reserves the __fp column; rename it on the input")
-    // null text fingerprints to null, and an equi anti-join never
-    // matches null keys — every re-delivered null-text doc would read
-    // as unseen and append another copy. Coalesce to a sentinel so
-    // null-text == null-text reads SEEN, matching corpusDiff's
-    // null-safe (<=>) semantics (code-review r13).
-    def fp(c: org.apache.spark.sql.Column) =
-      coalesce(TextAnalysis.fingerprint(c), lit("__null_text__"))
-    // the static side's fingerprint+distinct is PERSISTED so batches
-    // after the first probe the cached fingerprint set — it used to be
-    // rebuilt inside every micro-batch, re-running md5(normText) + a
-    // full distinct shuffle over the whole corpus per trigger
-    // (code-review r14). PINNED persist, deliberately OUTSIDE Dedup's
-    // bounded tracked queue (code-review r18): the queue evicts the
-    // oldest frame past 32 registrations, so a long-running stream in
-    // an application that keeps invoking tracked ops (Ivf/dedup jobs
-    // in the same JVM) would silently lose this block mid-stream and
-    // every later micro-batch would pay the full-corpus cliff again
-    // with no signal. Ownership is the streaming query's lifetime: the
-    // frame is lineage-recomputable, and a long-lived application
-    // frees it with `releaseMergePins(spark)` after stopping the
-    // query — scoped to THIS module's pins, not a global cache flush
-    // (advice r18).
-    val existingFps =
-      existing.select(fp(col(textCol)).as("__fp")).distinct().persist()
-    registerMergePin(existingFps)
     incoming
-      .withColumn("__fp", fp(col(textCol)))
-      .join(existingFps, Seq("__fp"), "left_anti")
+      .withColumn("__fp", Artifacts.textFingerprint(col(textCol)))
+      .join(fingerprints.select(col("fp").as("__fp")), Seq("__fp"),
+        "left_anti")
       .drop("__fp")
   }
 

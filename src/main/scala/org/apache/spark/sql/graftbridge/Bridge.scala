@@ -127,26 +127,6 @@ object Bridge {
           "out after 30 s — per-query metric windows may bleed")
     }
 
-  /** The ANALYZED logical plan of a running streaming query.
-    * StreamExecution and its wrapper are private[sql]; the merge-pin
-    * auto-release ([[graft.streaming.IncrementalStream]]'s
-    * StreamingQueryListener) needs the plan to decide which pinned
-    * static frame a started/terminated query actually references
-    * (subtree containment via sameResult), so pins can bind to the
-    * query lifecycle instead of leaking until a manual release. None
-    * for a non-classic implementation or a query whose plan lookup
-    * fails (e.g. already torn down).
-    */
-  def streamingAnalyzedPlan(
-      q: org.apache.spark.sql.streaming.StreamingQuery)
-      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-    q match {
-      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
-        try Some(w.streamingQuery.analyzedPlan)
-        catch { case scala.util.control.NonFatal(_) => None }
-      case _ => None
-    }
-
   /** The concrete RDD behind a `localCheckpoint`ed Dataset (its
     * analyzed plan is a LogicalRDD — private[sql], hence this bridge).
     * Iterative trainers ([[graft.northstar.TextAnalysis.bpeInduct]])

@@ -617,6 +617,33 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(again == first)
   }
 
+  test("textFingerprintsFor serves the stored fingerprint set by load: " +
+       "text_col pinned, a pin mismatch refused, an empty set served, " +
+       "and null text keyed by the shared sentinel") {
+    val key = s"artifacts-spec-textfp-${System.nanoTime()}"
+    val corpus = Seq((1L, "Hello  World"), (2L, "hello world"),
+      (3L, null: String), (4L, null: String)).toDF("doc_id", "text")
+    val expected = corpus.select(Artifacts.textFingerprint(col("text")))
+      .collect().map(_.getString(0)).toSet
+    assert(expected.size == 2 && expected.contains("__null_text__"))
+    val served = Artifacts.textFingerprintsFor(corpus, key)
+    assert(served.columns.toSeq == Seq("fp"))
+    assert(served.collect().map(_.getString(0)).sorted.toSeq ==
+      expected.toSeq.sorted)
+    // same key, different corpus: served from the store, not refit
+    val other = Seq((9L, "something else")).toDF("doc_id", "text")
+    assert(Artifacts.textFingerprintsFor(other, key)
+      .collect().map(_.getString(0)).toSet == expected)
+    val p = s"${tempDir("textfp")}/fp"
+    Artifacts.TextFingerprints.save(spark, corpus.limit(0), p, "text")
+    assert(new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(p, "_params").toPath), "UTF-8") == "text_col=text")
+    assert(Artifacts.TextFingerprints.load(spark, p, "text").count() == 0)
+    val e = intercept[IllegalArgumentException](
+      Artifacts.TextFingerprints.load(spark, p, "body"))
+    assert(e.getMessage.contains("text_col=text"), e.getMessage)
+  }
+
   // ------------------------------ incremental ANN index append (r13)
 
   // the append fixtures: quantizers pinned from the INITIAL build
@@ -1476,7 +1503,7 @@ class ArtifactsSpec extends SparkSpecBase {
   }
 
   test("every required sidecar is refused when missing: load, append and " +
-       "remove of an IVF, IVF-PQ and appendable winnow index name the " +
+       "remove of an IVF, IVF-PQ and every capped index name the " +
        "remedy, leave _SUCCESS and the data untouched, and the remedy " +
        "restores service") {
     import graft.northstar.Dedup

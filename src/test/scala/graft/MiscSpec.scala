@@ -66,6 +66,19 @@ class MiscSpec extends SparkSpecBase {
       warned.head.contains("did not apply"), err.toString("UTF-8"))
   }
 
+  test("corpusKey: a file:-URI corpus gets a new key when a part file is added") {
+    val dir = tmpDir("corpus-key")
+    val uri = new java.io.File(dir).toURI.toString.stripSuffix("/")
+    Seq((1L, "first")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val before = SparkEntry.corpusKey(spark, uri, "documents")
+    assert(SparkEntry.corpusKey(spark, uri, "documents") == before)
+    Seq((2L, "second")).toDF("doc_id", "text")
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.corpusKey(spark, uri, "documents") != before,
+      "a regenerated corpus must not keep serving the old key's artifacts")
+  }
+
   test("S9 CSV sink round-trips with header") {
     val dir = TestTmp.dir("csv")
     Tables.writeCsv(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), s"$dir/out")

@@ -299,44 +299,34 @@ object ScaleProbe {
     }
     println(f"[scale] incomingNearDup 10x-corpus ratio ${ni10 / ni1}%.1fx (linear-ish expected)")
 
-    // streamingMerge per-batch cost (code-review r14): the static
-    // side's fingerprint+distinct is persisted on first use, so batch 1
-    // pays the corpus pass and batches 2+ must probe the cache —
-    // per-batch work proportional to the STREAM side. Batch-mode stand-
-    // in for the stream-static anti-join (identical plan shape; the
-    // correctness twin is StreamingSpec's stream==batch parity).
+    // streamingMerge per-batch cost: the static side is the STORED
+    // fingerprint set (Artifacts.textFingerprintsFor), built once, so a
+    // batch's screen probes the stored set instead of re-running the
+    // corpus pass — per-batch work proportional to the STREAM side.
+    // Batch-mode stand-in for the stream-static anti-join (identical
+    // plan shape; the correctness twin is StreamingSpec's stream==batch
+    // parity).
     {
       val big = replicate(docs1, 10, "doc_id", 1000000L)
       def batch(start: Long): DataFrame = docs1.limit(100)
         .select((col("doc_id") + start).as("doc_id"),
           concat(lit(s"fresh$start "), col("text")).as("text"))
-      val fps = Dedup.trackedPersist(
-        big.select(org.apache.spark.sql.functions.coalesce(
-          graft.northstar.TextAnalysis.fingerprint(col("text")),
-          lit("__null_text__")).as("__fp")).distinct())
-      val b1 = timed("mergeScreen batch 1 (pays corpus)") {
-        batch(20000000L).withColumn("__fp",
-            graft.northstar.TextAnalysis.fingerprint(col("text")))
-          .join(fps, Seq("__fp"), "left_anti").count()
+      val key = s"scale-merge-${System.nanoTime()}"
+      def fps = graft.northstar.Artifacts.textFingerprintsFor(big, key)
+      val build = timed("mergeScreen stored set (pays corpus)") {
+        fps.count()
       }
-      val b2 = timed("mergeScreen batch 2 (cache hit)") {
-        batch(30000000L).withColumn("__fp",
-            graft.northstar.TextAnalysis.fingerprint(col("text")))
-          .join(fps, Seq("__fp"), "left_anti").count()
+      val b = timed("mergeScreen batch (stored set)") {
+        graft.streaming.IncrementalStream
+          .streamingMerge(batch(20000000L), fps).count()
       }
-      println(f"[scale] mergeScreen batch2/batch1      ${b2 / b1}%.2fx " +
-        "(<<1x expected: batches after the first skip the corpus pass)")
-      // tripwire with noise headroom (measured 0.13x): a dropped
-      // persist makes BOTH batches pay the corpus pass (ratio ~1), so
-      // 0.6 catches the regression without aborting the remaining
-      // probe sections over a GC pause (code-review r14, third pass)
-      assert(b2 < b1 * 0.6,
-        f"persisted fingerprint set did not make later batches cheaper " +
-          f"(batch2/batch1 = ${b2 / b1}%.2f)")
-      // release just THIS probe's frame: a session-wide clearCache
-      // would evict caches other sections still reuse and skew their
-      // timings (code-review r14, third pass)
-      fps.unpersist(blocking = false)
+      println(f"[scale] mergeScreen batch/build         ${b / build}%.2fx " +
+        "(<<1x expected: a batch skips the corpus pass)")
+      // tripwire with noise headroom: a screen that re-fingerprints the
+      // corpus per batch pays the build again (ratio ~1)
+      assert(b < build * 0.6,
+        f"the stored fingerprint set did not make a batch cheaper than " +
+          f"the build (batch/build = ${b / build}%.2f)")
     }
     // same nightly-ingest screen against a MATERIALIZED band index (the
     // r7 write-once artifact): probe cost = incoming signature build +

@@ -1,5 +1,6 @@
 package graft
 
+import graft.northstar.Artifacts
 import graft.streaming.IncrementalStream
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -310,8 +311,10 @@ class StreamingSpec extends SparkSpecBase {
     val incoming = Seq((10L, null: String), (11L, "brand new"))
       .toDF("doc_id", "text")
     // batch evaluation of the same plan (stream parity is covered by
-    // the merge test above): the null-text re-delivery must NOT pass
-    val out = IncrementalStream.streamingMerge(incoming, existing)
+    // the merge test below): the null-text re-delivery must NOT pass
+    val out = IncrementalStream.streamingMerge(incoming,
+        Artifacts.textFingerprintsFor(existing,
+          s"stream-merge-null-${System.nanoTime()}"))
       .collect().map(_.getLong(0)).toSet
     assert(out == Set(11L), out.toString)
   }
@@ -327,13 +330,99 @@ class StreamingSpec extends SparkSpecBase {
     ).toDF("doc_id", "text").write.parquet(s"$src/in.parquet")
     val schema = spark.read.parquet(s"$src/in.parquet").schema
     val out = IncrementalStream.streamingMerge(
-      IncrementalStream.readTableStream(spark, src, "in", schema), existing)
+      IncrementalStream.readTableStream(spark, src, "in", schema),
+      Artifacts.textFingerprintsFor(existing,
+        s"stream-merge-${System.nanoTime()}"))
     val q = out.writeStream.format("memory").queryName("merge_out")
       .option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     val got = spark.table("merge_out").collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(12L))
+  }
+
+  test("streamingMerge restarts against the STORED fingerprint set: two " +
+       "AvailableNow runs publish it once, no micro-batch reads the " +
+       "corpus, and the output equals the batch anti-join") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.graftbridge.Bridge
+    val src = tmp(); val ckpt = tmp(); val corpusDir = tmp()
+    // one key per test: the suites share the session and the store
+    val key = s"stream-merge-restart-${System.nanoTime()}"
+    Seq((1L, "the quick brown fox"), (2L, "hello world"), (3L, null: String))
+      .toDF("doc_id", "text").write.parquet(s"$corpusDir/docs.parquet")
+    val existing = spark.read.parquet(s"$corpusDir/docs.parquet")
+    Seq((10L, "THE  Quick   Brown FOX"), (11L, "first new doc"))
+      .toDF("doc_id", "text").write.parquet(s"$src/in.parquet")
+    val schema = spark.read.parquet(s"$src/in.parquet").schema
+    val store = Artifacts.pathFor("textfp", s"$key-text")
+    // every stored file with its mtime: a second publish would change it
+    def published(): Seq[(String, Long)] = {
+      val root = new java.io.File(store).toPath
+      val files = Files.walk(root)
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> f.toFile.lastModified)
+        .toSeq.sorted
+      finally files.close()
+    }
+    // the physical plan of every micro-batch: the SQL executions the
+    // named query runs that scan the stream's source directory (the
+    // foreachBatch body's own collect scans only the batch's rows)
+    val name = s"merge_restart_${System.nanoTime()}"
+    val batchPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.description.contains(name) &&
+              s.physicalPlanDescription.contains(src) =>
+          batchPlans.add(s.physicalPlanDescription): Unit
+        case _ => ()
+      }
+    }
+    // the memory sink cannot restart from a checkpoint; foreachBatch can
+    val streamedIds = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def run(): Unit = {
+      val q = IncrementalStream.streamingMerge(
+          IncrementalStream.readTableStream(spark, src, "in", schema),
+          Artifacts.textFingerprintsFor(existing, key))
+        .writeStream.queryName(name).option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.select("doc_id").collect()
+            .foreach(r => streamedIds.add(r.getLong(0)))
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(60000) && q.exception.isEmpty)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run()
+      val first = published()
+      assert(first.exists(_._1 == "_SUCCESS"), first.toString)
+      // a new batch file, then a restart from the checkpoint, same key
+      Seq((12L, "hello   WORLD"), (13L, null: String),
+        (14L, "second new doc"))
+        .toDF("doc_id", "text").write.mode("append")
+        .parquet(s"$src/in.parquet")
+      run()
+      assert(published() == first,
+        "the restart must load the stored set, not publish it again")
+      Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val plans = batchPlans.asScala.toSeq
+    assert(plans.size >= 2, s"expected a micro-batch per run: $plans")
+    plans.foreach { plan =>
+      assert(!plan.contains(corpusDir), s"a micro-batch read the corpus: $plan")
+      assert(plan.contains(store), s"a micro-batch missed the stored set: $plan")
+    }
+    val streamed = streamedIds.asScala.toSeq.sorted
+    val batch = IncrementalStream.streamingMerge(
+        spark.read.parquet(s"$src/in.parquet"),
+        Artifacts.textFingerprintsFor(existing, key))
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(streamed == batch && batch == Seq(11L, 14L),
+      s"streamed $streamed vs batch $batch")
   }
 
   test("winnow ingest: a streamed batch against the stored winnow index matches batch winnowPairsAgainstIndex") {
@@ -451,53 +540,10 @@ class StreamingSpec extends SparkSpecBase {
     assert(self.size == 50)
   }
 
-  test("streamingMerge pins its static fingerprint set OUTSIDE the " +
-       "bounded tracked queue (eviction there would silently restore " +
-       "the per-batch full-corpus cliff mid-stream) — code-review r18") {
-    val existing = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    val incoming = Seq((3L, "alpha"), (4L, "gamma")).toDF("doc_id", "text")
-    val snapBefore = graft.northstar.Dedup.threadTrackedSnapshot()
-    val out = IncrementalStream.streamingMerge(incoming, existing)
-    assert(out.collect().map(_.getLong(0)).toSet == Set(4L))
-    // cached: the anti-join's static side plans against the in-memory
-    // relation, not a per-batch recompute
-    assert(out.queryExecution.executedPlan.toString.contains("InMemory"),
-      out.queryExecution.executedPlan.toString.take(2000))
-    // ...and NOT via the evictable tracked queue: 32 later tracked
-    // registrations (or a releasePersisted) must not be able to drop
-    // the stream's frame for the query's lifetime. Thread-scoped
-    // snapshot, so concurrent suites can't flake this.
-    assert(graft.northstar.Dedup.threadTrackedSnapshot() == snapBefore,
-      "the stream's static side must not ride the evictable queue")
-    // no clearCache here: suites share the session and run in
-    // parallel, so a global cache flush mid-run is the exact
-    // suite-order flake class r17 fixed; the pinned frame is two
-    // fingerprint rows and dies with the test JVM
-  }
-
-  test("releaseMergePins unpersists ONLY streamingMerge's pinned frames, " +
-       "scoped to the session — no global cache flush needed (advice r18)") {
-    val existing = Seq((1L, "pin-a"), (2L, "pin-b")).toDF("doc_id", "text")
-    val incoming = Seq((3L, "pin-a"), (4L, "pin-new")).toDF("doc_id", "text")
-    // an unrelated user's cached frame must SURVIVE the release — the
-    // old remedy (spark.catalog.clearCache()) evicted it collaterally
-    val bystander = Seq((7L, "other")).toDF("k", "t").persist()
-    try {
-      bystander.count()
-      val out = IncrementalStream.streamingMerge(incoming, existing)
-      assert(out.collect().map(_.getLong(0)).toSet == Set(4L))
-      val released = IncrementalStream.releaseMergePins(spark)
-      assert(released >= 1, s"expected at least the merge pin, got $released")
-      // drained: a second release finds nothing to free
-      assert(IncrementalStream.releaseMergePins(spark) == 0)
-      assert(bystander.storageLevel.useMemory,
-        "release must not evict unrelated cached frames")
-    } finally bystander.unpersist()
-  }
-
   test("image ingest serves from the STORED fingerprint index: the " +
-       "streamed screen equals the batch screen against loadImageHashIndex " +
-       "— restarts load 8-byte sigs, never re-decode (VERDICT r19 task 2)") {
+       "streamed screen equals the batch screen against the loaded " +
+       "CappedIndex.imageHash index — restarts load 8-byte sigs, never " +
+       "re-decode (VERDICT r19 task 2)") {
     import graft.northstar.{Artifacts, Multimodal}
     val src = tmp(); val ckpt = tmp()
     val ids = 0L until 30L
@@ -567,260 +613,6 @@ class StreamingSpec extends SparkSpecBase {
       a - 1000L == b && h <= 1 } == incoming.size)
   }
 
-  private def poll(cond: => Boolean, ms: Long = 30000): Boolean = {
-    val deadline = System.currentTimeMillis() + ms
-    var ok = cond
-    while (!ok && System.currentTimeMillis() < deadline) {
-      Thread.sleep(100); ok = cond
-    }
-    ok
-  }
-
-  test("merge pins AUTO-RELEASE their cache when the owning query " +
-       "terminates — no manual call — and a RESTART re-binds and " +
-       "re-persists (VERDICT r19 task 3; code-review r20)") {
-    val src = tmp()
-    Seq((10L, "auto-a"), (11L, "auto-b")).toDF("doc_id", "text")
-      .write.parquet(s"$src/in.parquet")
-    val existing = Seq((1L, "auto-a")).toDF("doc_id", "text")
-    val base = IncrementalStream.mergePinCount(spark)
-    val boundBase = IncrementalStream.mergePinBoundCount(spark)
-    val cachedBase = IncrementalStream.mergePinCachedCount(spark)
-    val schema = spark.read.parquet(s"$src/in.parquet").schema
-    val out = IncrementalStream.streamingMerge(
-      IncrementalStream.readTableStream(spark, src, "in", schema),
-      existing)
-    assert(IncrementalStream.mergePinCount(spark) == base + 1,
-      "building the merge must register exactly one pin")
-    assert(IncrementalStream.mergePinCachedCount(spark) == cachedBase + 1)
-    // a LONG-RUNNING trigger: the started event must be processed
-    // while the query is still registered, so the listener can read
-    // its analyzed plan and bind the pin (an AvailableNow query can
-    // terminate before its own started event is handled — those fall
-    // back to the manual bulk release by design)
-    def start() = out.writeStream.format("memory")
-      .queryName(s"autorel_${System.nanoTime()}")
-      .option("checkpointLocation", tmp())
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .start()
-    val q = start()
-    try {
-      assert(poll(IncrementalStream.mergePinBoundCount(spark)
-          >= boundBase + 1),
-        "the started query's analyzed plan must bind the pin it contains")
-      q.stop()
-      assert(poll(IncrementalStream.mergePinCachedCount(spark)
-          == cachedBase),
-        "a terminated query's pin must unpersist WITHOUT a manual " +
-          "releaseMergePins call")
-      // the pin OBJECT survives (blocks freed, reference kept) so a
-      // restart of the same merge output re-binds and RE-PERSISTS
-      // instead of silently recomputing the corpus every micro-batch
-      assert(IncrementalStream.mergePinCount(spark) == base + 1)
-      val q2 = start()
-      try {
-        assert(poll(IncrementalStream.mergePinCachedCount(spark)
-            == cachedBase + 1),
-          "a restarted query must re-bind the released pin and " +
-            "re-persist its frame")
-        q2.stop()
-        assert(poll(IncrementalStream.mergePinCachedCount(spark)
-          == cachedBase))
-      } finally if (q2.isActive) q2.stop()
-    } finally if (q.isActive) q.stop()
-    // the bulk teardown forgets pin objects AND the listener — after
-    // it, nothing here retains the session (code-review r20)
-    assert(IncrementalStream.releaseMergePins(spark) >= 1)
-    assert(!IncrementalStream.pinListenerInstalled(spark)
-      && IncrementalStream.mergePinCount(spark) == 0)
-  }
-
-  test("a pin referenced by a SECOND live query is re-bound on the " +
-       "first termination, not released — no release of a pin in use") {
-    val src = tmp()
-    Seq((20L, "share-a"), (21L, "share-b")).toDF("doc_id", "text")
-      .write.parquet(s"$src/in.parquet")
-    val existing = Seq((2L, "share-a")).toDF("doc_id", "text")
-    val base = IncrementalStream.mergePinCount(spark)
-    val boundBase = IncrementalStream.mergePinBoundCount(spark)
-    val cachedBase = IncrementalStream.mergePinCachedCount(spark)
-    val schema = spark.read.parquet(s"$src/in.parquet").schema
-    // ONE merge frame, TWO queries over it: the pin is shared
-    val out = IncrementalStream.streamingMerge(
-      IncrementalStream.readTableStream(spark, src, "in", schema),
-      existing)
-    def start() = out.writeStream.format("memory")
-      .queryName(s"sharedpin_${System.nanoTime()}")
-      .option("checkpointLocation", tmp())
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .start()
-    val q1 = start(); val q2 = start()
-    try {
-      assert(poll(IncrementalStream.mergePinBoundCount(spark)
-        >= boundBase + 1))
-      assert(poll(IncrementalStream.mergePinCachedCount(spark)
-        == cachedBase + 1))
-      q1.stop()
-      // the first termination must NOT free the cache q2 still reads:
-      // give the listener bus a generous window to (wrongly) act,
-      // then check the blocks survived and q2 is still live
-      Thread.sleep(3000)
-      assert(IncrementalStream.mergePinCachedCount(spark)
-          == cachedBase + 1,
-        "the pin is still in use by the second query — releasing it " +
-          "would put the full-corpus recompute back on every batch")
-      assert(q2.isActive)
-      q2.stop()
-      assert(poll(IncrementalStream.mergePinCachedCount(spark)
-          == cachedBase),
-        "the LAST owning query's termination must release the cache")
-      assert(IncrementalStream.mergePinCount(spark) == base + 1,
-        "the pin object survives for a possible restart; only " +
-          "releaseMergePins forgets it")
-    } finally Seq(q1, q2).foreach(q => if (q.isActive) q.stop())
-  }
-
-  test("released-pin retention trims by RELEASE recency, not " +
-       "registration order — the pin the tripping termination just " +
-       "released survives the window (code-review r20, pass 3)") {
-    // window shrunk to 2 so the trim is reachable with four real
-    // queries; production is 16
-    // earlier tests deliberately leave released pins registered (the
-    // shared-pin test ends without the bulk release); those would be
-    // trimmed alongside this test's own and shift every count below —
-    // start from an empty registry via the documented teardown. BEFORE
-    // the seam mutation: a throw here must not leak window=2 to the
-    // rest of the suite (the finally isn't armed yet)
-    IncrementalStream.releaseMergePins(spark): Unit
-    val window0 = IncrementalStream.releasedPinWindow
-    IncrementalStream.releasedPinWindow = 2
-    try {
-      val src = tmp()
-      Seq((30L, "trim-a"), (31L, "trim-b")).toDF("doc_id", "text")
-        .write.parquet(s"$src/in.parquet")
-      val schema = spark.read.parquet(s"$src/in.parquet").schema
-      val base = IncrementalStream.mergePinCount(spark)
-      val cachedBase = IncrementalStream.mergePinCachedCount(spark)
-      val boundBase = IncrementalStream.mergePinBoundCount(spark)
-      // distinct corpora per merge: each pin's fingerprint frame must
-      // be sameResult-distinct, or bindPins would bind one merge's pin
-      // to another merge's query
-      def merge(tag: String) = IncrementalStream.streamingMerge(
-        IncrementalStream.readTableStream(spark, src, "in", schema),
-        Seq((3L, s"trim-$tag")).toDF("doc_id", "text"))
-      def start(out: org.apache.spark.sql.DataFrame) =
-        out.writeStream.format("memory")
-          .queryName(s"trimpin_${System.nanoTime()}")
-          .option("checkpointLocation", tmp())
-          .outputMode("append")
-          .trigger(Trigger.ProcessingTime("500 milliseconds"))
-          .start()
-      // pin A registers FIRST and stays live while three younger pins
-      // cycle through release: under registration-order eviction A is
-      // the trim's first victim once ITS termination trips the bound;
-      // under release recency it must be the freshest survivor
-      val outA = merge("a")
-      val qA = start(outA)
-      try {
-        assert(poll(IncrementalStream.mergePinBoundCount(spark)
-          >= boundBase + 1))
-        Seq("b", "c", "d").foreach { tag =>
-          val q = start(merge(tag))
-          try {
-            assert(poll(IncrementalStream.mergePinBoundCount(spark)
-                >= boundBase + 2),
-              s"merge $tag's query must bind its pin before the stop")
-            q.stop()
-            assert(poll(IncrementalStream.mergePinCachedCount(spark)
-                == cachedBase + 1),
-              s"merge $tag's termination must free its pin's blocks " +
-                "(only A stays cached)")
-          } finally if (q.isActive) q.stop()
-        }
-        // d's termination saw released = {b, c, d} > 2 and must have
-        // evicted b (oldest RELEASE), keeping A untouched (live-bound)
-        assert(poll(IncrementalStream.mergePinCount(spark) == base + 3),
-          "the trim keeps the live pin plus the 2 newest-released")
-        qA.stop()
-        assert(poll(IncrementalStream.mergePinCachedCount(spark)
-          == cachedBase))
-        // A's own termination trips the bound again (released =
-        // {c, d, A}): recency keeps A — registration order would
-        // evict it, the exact pin whose restart is most imminent
-        assert(poll(IncrementalStream.mergePinCount(spark) == base + 2))
-        val qA2 = start(outA)
-        try {
-          assert(poll(IncrementalStream.mergePinCachedCount(spark)
-              == cachedBase + 1),
-            "pin A must survive its own termination's trim and " +
-              "re-persist on restart — registration-order eviction " +
-              "drops exactly this pin")
-        } finally if (qA2.isActive) qA2.stop()
-      } finally if (qA.isActive) qA.stop()
-      IncrementalStream.releaseMergePins(spark): Unit
-    } finally IncrementalStream.releasedPinWindow = window0
-  }
-
-  test("resurrect guard: a releaseMergePins landing between a restart's " +
-       "re-bind and its re-persist leaves NO unreleasable blocks — the " +
-       "re-check undoes the persist (code-review r20 pass 2, seam-pinned)") {
-    val src = tmp()
-    Seq((40L, "res-a"), (41L, "res-b")).toDF("doc_id", "text")
-      .write.parquet(s"$src/in.parquet")
-    val schema = spark.read.parquet(s"$src/in.parquet").schema
-    IncrementalStream.releaseMergePins(spark): Unit
-    val out = IncrementalStream.streamingMerge(
-      IncrementalStream.readTableStream(spark, src, "in", schema),
-      Seq((4L, "res-a")).toDF("doc_id", "text"))
-    def start() = out.writeStream.format("memory")
-      .queryName(s"resurrect_${System.nanoTime()}")
-      .option("checkpointLocation", tmp())
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .start()
-    val seen =
-      new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.DataFrame](null)
-    try {
-      // cycle once so the pin is in the released (storage NONE) state
-      // a restart re-persists from
-      val q1 = start()
-      try {
-        assert(poll(IncrementalStream.mergePinBoundCount(spark) == 1))
-        q1.stop()
-        assert(poll(IncrementalStream.mergePinCachedCount(spark) == 0))
-      } finally if (q1.isActive) q1.stop()
-      // one-shot seam ON THE BUS THREAD: the restart's re-bind claims
-      // the pin, then — in the window before its re-persist — the bulk
-      // release drains the registry. Without the membership re-check,
-      // the persist that follows re-registers blocks that nothing can
-      // ever unpersist (the registry has already forgotten the pin).
-      IncrementalStream.resurrectSeam = { frame =>
-        if (seen.compareAndSet(null, frame)) {
-          IncrementalStream.releaseMergePins(spark): Unit
-          IncrementalStream.resurrectSeam = _ => ()
-        }
-      }
-      val q2 = start()
-      try {
-        assert(poll(seen.get != null), "the restart must re-bind the " +
-          "released pin and hit the seam window")
-        assert(poll(seen.get.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE &&
-            IncrementalStream.mergePinCount(spark) == 0),
-          "the concurrently-drained pin's re-persist must be undone — " +
-            "otherwise its blocks are unreleasable by anything")
-        // the query itself survives, paying the documented recompute
-        assert(q2.isActive)
-      } finally if (q2.isActive) q2.stop()
-    } finally {
-      IncrementalStream.resurrectSeam = _ => ()
-      IncrementalStream.releaseMergePins(spark): Unit
-    }
-  }
-
   test("streamingMerge refuses a caller-supplied __fp column instead of clobbering it") {
     import org.apache.spark.sql.functions.lit
     import spark.implicits._
@@ -828,7 +620,9 @@ class StreamingSpec extends SparkSpecBase {
     val incoming = Seq((2L, "new")).toDF("doc_id", "text")
       .withColumn("__fp", lit(0L))
     val e = intercept[IllegalArgumentException] {
-      IncrementalStream.streamingMerge(incoming, existing)
+      IncrementalStream.streamingMerge(incoming,
+        Artifacts.textFingerprintsFor(existing,
+          s"stream-merge-fp-${System.nanoTime()}"))
     }
     assert(e.getMessage.contains("__fp"), e.getMessage)
   }
