@@ -18,30 +18,27 @@ object Sql {
   /** Q1 execute SQL, errors-as-data: the reference returns failures as a
     * one-column "Error" table instead of throwing (front_end.py:222-224).
     *
-    * COST CAVEAT: to surface ANSI runtime errors (1/0, bad casts) as the
-    * Error frame, the plan is executed eagerly once here and the result
-    * is still lazy — so a successful query's plan runs TWICE (validation
-    * pass + the caller's action). That mirrors the interactive Q1
-    * surface, where results are small and error-as-data matters more
-    * than a second scan; for large programmatic results use [[trySql]]
-    * (single lazy execution, analysis errors only) or [[strictSql]] and
-    * handle runtime failures at your own action. We deliberately do NOT
-    * persist() here: validation-time caching would pin every Q1 result
-    * in executor memory with no principled release point.
+    * COST: the query runs ONCE, here, like the reference's pd.read_sql,
+    * and the frame returned is the result of that run: an eager
+    * `localCheckpoint`, so showing it (`collect`) and saving it
+    * ([[saveGold]]) read the same rows instead of running the plan
+    * again, and a nondeterministic query (`rand()`, `uuid()`) saves the
+    * rows it showed. The rows stay on the executors, in their block
+    * managers (memory, spilling to disk), never on the driver; Spark's
+    * ContextCleaner releases them once the frame is unreachable, and a
+    * lost executor loses them (local checkpoints are not replicated).
+    * The frame's plan is therefore a `LogicalRDD`: it lists no input
+    * files, and the query's own plan is not visible through it. For a
+    * large programmatic result read once, [[trySql]] (lazy, analysis
+    * errors only) or [[strictSql]] skip the stored copy.
     */
   def runSql(spark: SparkSession, query: String): DataFrame =
-    Try {
-      val df = spark.sql(query)
-      // execute EAGERLY: the reference materializes via pd.read_sql, so
-      // RUNTIME failures — routine under Spark 4's default ANSI mode
-      // (1/0, bad casts) — must also come back as the Error frame, not
-      // escape later at the caller's action. foreach evaluates the full
-      // plan with every column (count() would prune the projections
-      // whose evaluation we need to prove); the result frame itself
-      // stays distributed and lazy for the caller.
-      df.foreach(_ => ())
-      df
-    } match {
+    // execute EAGERLY: RUNTIME failures — routine under Spark 4's
+    // default ANSI mode (1/0, bad casts) — must also come back as the
+    // Error frame, not escape later at the caller's action. The
+    // checkpoint computes every column of every row (count() would
+    // prune the projections whose evaluation we need to prove)
+    Try(spark.sql(query).localCheckpoint(eager = true)) match {
       case Success(df) => df
       case Failure(e) =>
         import spark.implicits._

@@ -947,12 +947,15 @@ object Artifacts {
     * `verb` is the layout's verb stem, for the remedy messages.
     */
   private final case class CellFamily(
-      label: String, verb: String, params: Map[String, String],
-      maxCell: Int,
+      label: String, verb: String, stored: Boolean,
+      params: Map[String, String], maxCell: Int,
       assign: (DataFrame, String) => DataFrame,
       project: (DataFrame, Map[Int, Int]) => DataFrame) {
     def what: String = s"$label index"
-    def remedy: String = s"rebuild it with save$verb, or run retrain$verb, " +
+    /** The retrain that keeps this family: the stored one keeps its
+      * cells stored. */
+    def retrain: String = s"retrain$verb" + (if (stored) "Stored" else "")
+    def remedy: String = s"rebuild it with save$verb, or run $retrain, " +
       "which rewrites every sidecar"
   }
 
@@ -1006,7 +1009,7 @@ object Artifacts {
     }
     val (layout, verb) =
       if (codebooks.isEmpty) ("IVF", "IvfIndex") else ("IVF-PQ", "IvfPqIndex")
-    CellFamily(kind + layout, verb,
+    CellFamily(kind + layout, verb, quantizer.isInstanceOf[Ivf.StoredQuantizer],
       pins ++ codebooks.map(cb => "codebooks" -> centroidDigest(cb.flatten)) ++
         Map("maxCell" -> maxCell.toString, "vecCol" -> vecCol),
       maxCell, search.assign(_, _, vecCol), project)
@@ -1599,10 +1602,8 @@ object Artifacts {
           f"[graft] WARN $what at $path: append batch ($n rows) census " +
             f"drift $d%.3f exceeds the retrain bar " +
             f"${Ivf.RetrainDriftThreshold} — the pinned quantizers no " +
-            "longer model the incoming distribution; schedule a retrain " +
-            "([[retrainIvfIndex]]/[[retrainIvfPqIndex]], or " +
-            "[[retrainIvfIndexStored]] for a stored-cells root — " +
-            "recall on drifted rows decays silently otherwise)")
+            s"longer model the incoming distribution; schedule ${fam.retrain} " +
+            "(recall on drifted rows decays silently otherwise)")
     }
     // 4. republish the commit marker — the mutation (and its telemetry
     //    line) is complete; the mutex window closes here. In the

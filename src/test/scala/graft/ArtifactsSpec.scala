@@ -1160,6 +1160,40 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(viaStored.count() > 0)
   }
 
+  test("the append census-drift WARN names, in plain text, the one retrain " +
+       "of an IVF-PQ literal root and of an IVF-PQ stored-cells root") {
+    val shifted = embB.select((col("vec_id") + 5000L).as("vec_id"),
+      expr("transform(embedding, x -> cast(x + 1.5 as float))")
+        .as("embedding"))
+    val cb = graft.northstar.Pq.fitCodebooks(embA, m = 8, ksub = 8)
+    def warning(q: Ivf.CoarseQuantizer): String = {
+      val p = s"${tempDir("pqdriftwarn")}/idx"
+      Artifacts.saveIvfPqIndex(embA, p, q, cb)
+      val err = new java.io.ByteArrayOutputStream()
+      Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+        Artifacts.appendIvfPqIndex(shifted, embA, p, q, cb): Unit
+      }
+      val out = err.toString("UTF-8")
+      val lines = out.linesIterator.filter(_.contains("census drift")).toSeq
+      assert(lines.size == 1, out)
+      lines.head
+    }
+    val hq = Ivf.HierarchicalQuantizer(
+      Ivf.fitCentroids(embA, nCells = 3, seed = 7L),
+      Ivf.fitCentroids(embA, nCells = 8), superProbe = 3)
+    val cells = s"${tempDir("pqdriftwarn")}/cells"
+    hq.cellsRelation(spark).select("cell", "sup", "ccv").write.parquet(cells)
+    val stored = Ivf.StoredQuantizer(Ivf.LiteralQuantizer(hq.superCentroids),
+      cells, hq.nCells, hq.centroids(0).length, superProbe = 3)
+    for ((q, retrain) <- Seq(
+        Ivf.CoarseQuantizer.literal(hq.centroids) -> "retrainIvfPqIndex",
+        stored -> "retrainIvfPqIndexStored")) {
+      val w = warning(q)
+      assert(w.contains(s"schedule $retrain (") && !w.contains("[[") &&
+        "retrain\\w+".r.findAllIn(w).toSeq == Seq(retrain), w)
+    }
+  }
+
   test("append drift telemetry: in-distribution append stays under the " +
        "retrain bar, a shifted batch trips it; rebuild resets history") {
     import org.apache.spark.sql.functions.expr

@@ -12,21 +12,8 @@ class CodegenReuseSpec extends AnyFunSuite {
 
   test("a repeated Pipeline.run on an unchanged source compiles almost no whole-stage-codegen classes") {
     val root = TestTmp.dir("codegen-reuse")
-    val out = java.io.File.createTempFile("codegen-reuse-out", ".txt")
-    out.deleteOnExit()
-    val pb = new ProcessBuilder(
-      (Seq(ForkedJvm.javaBin) ++ ForkedJvm.addOpens ++ Seq("-Xmx1g",
-        "-Dspark.ui.enabled=false", "-cp", ForkedJvm.classPath,
-        "graft.CodegenReuseMain", root, "16")): _*)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(out)
-    val p = pb.start()
-    if (!p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) {
-      p.destroyForcibly()
-      fail("worker did not finish in 300 s")
-    }
-    val report = new String(java.nio.file.Files.readAllBytes(out.toPath), "UTF-8")
-    assert(p.exitValue() == 0, s"worker failed:\n$report")
+    val (exit, report) = ForkedJvm.run("graft.CodegenReuseMain", root, "16")
+    assert(exit == 0, s"worker failed:\n$report")
     val m = "first=(\\d+) second=(\\d+) reused=(\\d+)".r.findFirstMatchIn(report)
       .getOrElse(fail(s"no compile-count report:\n$report"))
     val (first, second) = (m.group(1).toLong, m.group(2).toLong)

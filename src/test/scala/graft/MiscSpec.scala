@@ -66,6 +66,25 @@ class MiscSpec extends SparkSpecBase {
       warned.head.contains("did not apply"), err.toString("UTF-8"))
   }
 
+  test("GraftSession.local warns once, naming fs.file.impl, when the JVM's file: file system is not the engine's") {
+    // the shared session was built without the engine's file system,
+    // and Hadoop's per-JVM cache already holds the stock one
+    val fileFs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(!fileFs.isInstanceOf[graft.engine.NioLocalFileSystem])
+    val err = new java.io.ByteArrayOutputStream()
+    restoringSessionConfs {
+      Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+        graft.engine.GraftSession.local(cores = 4)
+      }
+    }
+    val warned = err.toString("UTF-8").linesIterator
+      .filter(_.contains("fs.file.impl")).toSeq
+    assert(warned.size == 1 && warned.head.contains("WARN") &&
+      warned.head.contains(fileFs.getClass.getName) &&
+      warned.head.contains("chmod process"), err.toString("UTF-8"))
+  }
+
   test("corpusKey: a file:-URI corpus gets a new key when a part file is added") {
     val dir = tmpDir("corpus-key")
     val uri = new java.io.File(dir).toURI.toString.stripSuffix("/")

@@ -83,4 +83,25 @@ object ForkedJvm {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
+  /** Run `main` of the test classpath in a fresh 1 GiB JVM; its exit
+    * code and its stdout and stderr together. Throws when it has not
+    * finished within 300 s.
+    */
+  def run(main: String, args: String*): (Int, String) = {
+    val out = java.io.File.createTempFile("forked-jvm-out", ".txt")
+    try {
+      val pb = new ProcessBuilder((Seq(javaBin) ++ addOpens ++ Seq("-Xmx1g",
+        "-Dspark.ui.enabled=false", "-cp", classPath, main) ++ args): _*)
+      pb.redirectErrorStream(true)
+      pb.redirectOutput(out)
+      val p = pb.start()
+      if (!p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) {
+        p.destroyForcibly()
+        throw new IllegalStateException(s"$main did not finish in 300 s")
+      }
+      (p.exitValue(),
+        new String(java.nio.file.Files.readAllBytes(out.toPath), "UTF-8"))
+    } finally out.delete(): Unit
+  }
 }

@@ -30,6 +30,30 @@ class SqlSpec extends SparkSpecBase {
     assert(out.collect()(0).getString(0).toLowerCase.contains("divide"))
   }
 
+  test("Q1+Q3 a saved query shows and saves the same rows, even when they are nondeterministic") {
+    // a new draw per evaluation: a second run of the query would differ
+    spark.udf.register("sql_spec_draw", org.apache.spark.sql.functions
+      .udf(() => java.util.UUID.randomUUID().toString).asNondeterministic())
+    val out = Sql.runSql(spark, "SELECT id, sql_spec_draw() AS draw, " +
+      "rand() AS r, current_timestamp() AS at FROM range(0, 40, 1, 4)")
+    val shown = out.collect().map(_.toSeq).toSet
+    assert(shown.size == 40)
+    val dir = TestTmp.dir("gold-same")
+    Sql.saveGold(out, dir, "drawn")
+    assert(rows(spark.read.parquet(s"$dir/drawn.parquet")) == shown)
+  }
+
+  test("Q1+Q3 runSql, collect and saveGold evaluate each row of the query once") {
+    val evals = spark.sparkContext.longAccumulator("sql_spec_evals")
+    spark.udf.register("sql_spec_counted", org.apache.spark.sql.functions
+      .udf { (id: Long) => evals.add(1); id }.asNondeterministic())
+    val out = Sql.runSql(spark,
+      "SELECT sql_spec_counted(id) AS id FROM range(0, 30, 1, 3)")
+    assert(out.collect().length == 30)
+    Sql.saveGold(out, TestTmp.dir("gold-once"), "counted")
+    assert(evals.sum == 30, s"${evals.sum} evaluations of 30 rows")
+  }
+
   test("Q2 renderSchema: number/text type collapse, sorted tables") {
     val dfs = Map(
       "zeta" -> Seq((1, "a")).toDF("id", "name"),
