@@ -182,9 +182,7 @@ object Bench {
       // below still runs after it, so medians stay cold-CACHE honest
       // (r10 semantics) while becoming warm-JIT stable.
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      DevSession.releaseBlocks(spark)
       // second gc barrier: the warm-up execution's own allocation debt
       // must not bill rep 1 (the same r7 mechanism the pre-warm-up
       // barrier above exists for)
@@ -205,16 +203,11 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         // free THIS rep's materializations outside the timed region:
-        // cached relations (Dedup.materializeOnce persists) via
-        // clearCache, lineage-truncated checkpoint blocks (the CC loop's
-        // localCheckpoint) via explicit unpersist — getPersistentRDDs
-        // sees both. Blocks left pinned by rep k contended the block
-        // manager for everything after it (the r9 mechanism that made
+        // blocks left pinned by rep k contended the block manager for
+        // everything after it (the r9 mechanism that made
         // ns_winnow_pairs 6.4x slower under the driver's full sweep
         // than isolated).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        DevSession.releaseBlocks(spark)
         dt
       }.sorted
       drain()

@@ -22,4 +22,17 @@ object DevSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The per-query block release of the dev mains: cached relations
+    * (`Dedup.materializeOnce` persists) via clearCache, and
+    * lineage-truncated checkpoint blocks (the CC loop's
+    * localCheckpoint) via explicit unpersist — `getPersistentRDDs` sees
+    * both. Blocks one query leaves pinned contend the block manager for
+    * every query after it.
+    */
+  def releaseBlocks(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
 }

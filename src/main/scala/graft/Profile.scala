@@ -87,9 +87,7 @@ object Profile {
           // untimed warm-up (JIT + one-time artifact training)
           try { fn(spark, sfDir).count() } catch { case t: Throwable =>
             println(s"[profile] $n warm-up FAILED: ${t.getMessage}") }
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          DevSession.releaseBlocks(spark)
           System.gc()
           org.apache.spark.sql.graftbridge.Bridge
             .drainListenerBus(spark.sparkContext)
@@ -101,9 +99,7 @@ object Profile {
             .drainListenerBus(spark.sparkContext)
           println(f"\n========== $n%s  wall $dt%.3f s ==========")
           log.report()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          DevSession.releaseBlocks(spark)
         case None => println(s"[profile] unknown query '$n'")
       }
     } finally spark.stop()

@@ -123,8 +123,6 @@ object SparkEntry {
     graft.northstar.Artifacts.ensureTrained(path) { tmp =>
       graft.northstar.Ivf.fitStored(emb, nCells, tmp + "/cells",
         superProbe = superProbe, superQOverride = Some(superQ)): Unit
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_SUCCESS").toPath, Array.empty[Byte]): Unit
     }
     val n = s.read.parquet(path + "/cells").count().toInt
     graft.northstar.Ivf.StoredQuantizer(superQ, path + "/cells", n,

@@ -33,9 +33,7 @@ object Verify {
       // same per-query block hygiene as Bench: drop cached relations and
       // checkpoint blocks so 135 sequential queries don't accumulate
       // pinned storage in one JVM
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      DevSession.releaseBlocks(spark)
     }
     // Jackson (on Spark's classpath; Configs uses it) instead of a
     // hand-rolled escaper: a missed escape class would break the

@@ -133,19 +133,112 @@ object Artifacts {
     new java.io.File(defaultRoot, s"$kind-$md").toString
   }
 
-  /** Sweep stranded maintenance scratch dirs (`*.tmp-<nanos>` from a
-    * crashed append/remove/compact rewrite) under an artifact root:
-    * the marker discipline makes a torn run refusable, but the rebuild
-    * paths only overwrite `index/`/`rows/`/`splits/`, so without the
-    * sweep each torn maintenance run would strand a full-cell-sized
-    * scratch copy forever (code-review r14). Called ONLY after winning
-    * the marker-delete mutex (or in the single-writer save paths): a
-    * pre-mutex sweep could delete a concurrent mutator's live scratch
-    * dir and fail its rename mid-mutation.
+  // ------------------------------------------------ the commit marker
+  //
+  // Every artifact directory commits through ONE empty marker file at
+  // its top level: present = the directory is whole and servable,
+  // absent = missing, mid-build, or torn by a crashed mutation. The
+  // defs below are its only owners — the refusal, the claim (the
+  // marker delete is the cross-process mutex), the stamp, the mutation
+  // window and the scratch swap — so no verb spells the protocol out.
+
+  private val MarkerName = "_SUCCESS"
+
+  private def marker(dst: java.io.File): java.io.File =
+    new java.io.File(dst, MarkerName)
+
+  private def committed(dst: java.io.File): Boolean = marker(dst).exists()
+
+  private def stampMarker(dst: java.io.File): Unit =
+    java.nio.file.Files.write(marker(dst).toPath, Array.empty[Byte]): Unit
+
+  /** The refusal every read and mutation of an index runs first: a
+    * marker-less directory is served or mutated by no verb. `verb`
+    * names what was refused ("serving", "appending").
+    */
+  private def requireCommitted(path: String, what: String,
+                               verb: String): Unit =
+    require(committed(new java.io.File(path)),
+      s"$what at $path has no $MarkerName marker (missing, mid-build, " +
+        s"or torn by a crashed mutation) — rebuild it before $verb")
+
+  /** THE CLAIM: delete the marker. `delete()` is false iff it is already
+    * gone, so of two mutators that both passed [[requireCommitted]]
+    * exactly one wins; the loser fails loudly and retryably.
+    */
+  private def claimMarker(path: String, what: String): Unit =
+    require(marker(new java.io.File(path)).delete(),
+      s"$what at $path: could not remove the commit marker (lost the " +
+        "mutex to a concurrent mutator, or permissions)")
+
+  /** The ONE mutation window of every maintained index:
+    *   1. the claim ([[claimMarker]]; with `overwrite`, an unconditional
+    *      marker drop — a save needs no mutex, only that a crash
+    *      mid-write leaves a refusable wreck rather than a stale marker
+    *      over half-new data);
+    *   2. [[sweepTmp]], only now: an earlier sweep could delete a
+    *      concurrent mutator's live scratch and fail its swap
+    *      mid-mutation (code-review r14);
+    *   3. `stage`: reads, and writes scratch only. A throw here
+    *      mutated nothing, so the scratch is swept and the marker
+    *      republished — a planning error or a batch failing at run time
+    *      leaves the index servable;
+    *   4. `commit`: touches live files. A throw here leaves the loud
+    *      marker-less wreck every reader refuses, never a
+    *      silently-partial index;
+    *   5. `advisory`: telemetry after the data is committed, still
+    *      inside the window (a late drift line must not land on a
+    *      concurrent rebuild's fresh history, ADVICE r15). The scratch
+    *      sweep and the republish run in its finally, so even a fatal
+    *      error here cannot strand a committed mutation (ADVICE r16).
+    * Every read the mutation relies on belongs in `stage`, after the
+    * claim: a census read before it could be stale by the time the
+    * mutation lands (code-review r14, eighth pass). Local/POSIX rename
+    * semantics; on object stores swap [[swapIn]]'s rename for the
+    * store's atomic copy.
+    */
+  private def mutateCommitted[S, R](path: String, what: String,
+                                    overwrite: Boolean = false)(
+      stage: => S)(commit: S => R,
+                   advisory: S => Unit = (_: S) => ()): R = {
+    val dst = new java.io.File(path)
+    if (overwrite) marker(dst).delete(): Unit else claimMarker(path, what)
+    sweepTmp(dst)
+    def release(): Unit = { sweepTmp(dst); stampMarker(dst) }
+    val staged = try stage catch { case t: Throwable => release(); throw t }
+    val out = commit(staged)
+    try advisory(staged) finally release()
+    out
+  }
+
+  /** The ONE swap of staged scratch into live paths, run in a commit
+    * phase: each live target is deleted and its scratch renamed onto
+    * it. With `mayBeEmpty`, a scratch the stage never wrote — a
+    * removal's fully emptied cell — leaves its target deleted, the
+    * layout a rebuild would produce; otherwise a missing scratch fails
+    * the rename loudly.
+    */
+  private def swapIn(where: String,
+                     moves: Seq[(java.io.File, java.io.File)],
+                     mayBeEmpty: Boolean = false): Unit =
+    moves.foreach { case (scratch, live) =>
+      deleteRec(live)
+      if (!mayBeEmpty || scratch.exists())
+        require(scratch.renameTo(live),
+          s"$where: could not swap ${live.getName} in")
+    }
+
+  /** Sweep stranded maintenance scratch (`*.tmp-<nanos>` from a crashed
+    * append/remove/compact/canonicalize) under an artifact root: the
+    * marker makes a torn run refusable, but the rebuild paths only
+    * overwrite `index/`/`rows/`, so without the sweep each torn run
+    * would strand a full-cell-sized scratch copy forever (code-review
+    * r14). Runs only inside [[mutateCommitted]]'s window or a retrain's
+    * claim.
     */
   private def sweepTmp(dst: java.io.File): Unit =
     Option(dst.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.contains(".tmp-"))
+      .filter(_.getName.contains(".tmp-"))
       .foreach(deleteRec)
 
   /** The ONE splits-sidecar reader (code-review r17: five call sites
@@ -209,7 +302,7 @@ object Artifacts {
     * to a process-unique temp directory and RENAMES it into place.
     * Directory rename is atomic on a local/POSIX filesystem and FAILS
     * when the destination already exists, so when two JVMs (Bench and
-    * Verify in parallel, concurrent CI jobs) both miss the `_SUCCESS`
+    * Verify in parallel, concurrent CI jobs) both miss the commit-marker
     * probe, both may train but exactly ONE publishes; the loser
     * discards its copy and serves the winner's. No reader can ever see
     * a partially-committed artifact — the former in-place
@@ -217,6 +310,13 @@ object Artifacts {
     * rewriting it. `this.synchronized` still keeps one JVM from
     * training the same artifact twice. (On object stores without
     * atomic rename, swap this for the store's conditional-put.)
+    *
+    * The trainer's scratch is stamped with the commit marker HERE, once
+    * `train` has returned: a pinned artifact's only other marker would
+    * be Spark's job-commit file, which the standard
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` setting
+    * suppresses — every later call would then read the published entry
+    * as a wreck and retrain it.
     */
   // package-visible so the cross-JVM race test can drive the guard
   // directly against a scratch store with a plain-file trainer
@@ -224,12 +324,12 @@ object Artifacts {
     this.synchronized {
       val dst = new java.io.File(path)
       // stale-destination recovery (ADVICE r10 #1): a crashed trainer
-      // can leave dst existing WITHOUT _SUCCESS — renameTo would then
-      // fail on every attempt and the publish-race require below would
-      // throw forever (the old in-place overwrite self-healed; the
-      // atomic path must clear the wreck first). A CONCURRENT trainer
-      // never exposes this state: its rename lands _SUCCESS atomically
-      // or not at all.
+      // can leave dst existing WITHOUT its commit marker — renameTo
+      // would then fail on every attempt and the publish-race require
+      // below would throw forever (the old in-place overwrite
+      // self-healed; the atomic path must clear the wreck first). A
+      // CONCURRENT trainer never exposes this state: its rename lands
+      // the marker atomically or not at all.
       // The wreck is renamed ASIDE atomically and deleted there, not
       // deleted in place (code-review r13): two processes entering
       // recovery together could otherwise interleave — A moves the
@@ -238,24 +338,24 @@ object Artifacts {
       // artifact. With rename-aside exactly ONE process wins the wreck
       // (rename is atomic); the loser's rename fails and it falls
       // through to the normal marker re-check.
-      if (dst.exists() && !new java.io.File(dst, "_SUCCESS").exists()) {
+      if (dst.exists() && !committed(dst)) {
         val wreck = new java.io.File(path + ".wreck-" +
           java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
           "-" + System.nanoTime())
         if (dst.renameTo(wreck)) deleteRec(wreck)
       }
-      if (!new java.io.File(dst, "_SUCCESS").exists()) {
+      if (!committed(dst)) {
         val tmp = new java.io.File(path + ".tmp-" +
           java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
           "-" + System.nanoTime())
         // a failed training run must not strand its (potentially
         // corpus-sized) scratch for the 7-day prune TTL — the
         // winnow sketch's finally-delete shape (code-review r14)
-        try train(tmp.toString)
+        try { train(tmp.toString); stampMarker(tmp) }
         catch { case t: Throwable => deleteRec(tmp); throw t }
         if (!tmp.renameTo(dst)) {
           deleteRec(tmp)
-          require(new java.io.File(dst, "_SUCCESS").exists(),
+          require(committed(dst),
             s"artifact publish race at $path left no valid artifact")
         }
       } else {
@@ -1072,88 +1172,81 @@ object Artifacts {
 
   /** The publish protocol behind [[saveIvfIndex]] and [[saveIvfPqIndex]]
     * for every family: split census → hive-partitioned write → `_splits`
-    * → `_params` → `_schemas`/`drift_total` → top-level `_SUCCESS`. It
-    * exists ONCE, so a change to it (marker placement, splits encoding)
+    * → `_params` → `_schemas`/`drift_total`, inside the overwrite form
+    * of [[mutateCommitted]] (a crash mid-save leaves a refusable wreck,
+    * not a stale marker over half-new data; the ensureTrained path
+    * writes to a tmp dir and never overwrites, explicit-path re-saves
+    * do). It exists ONCE, so a change to it (splits encoding, sidecars)
     * cannot drift between families. `assigned` must carry (neighbor_id,
     * cv, cell) — the family's assignment — and be safe to evaluate twice
     * (persisted).
     */
   private def writeCellIndexAssigned(path: String, fam: CellFamily,
-                                     assigned: DataFrame): Unit = {
-    val maxCell = fam.maxCell
-    // overwriting a previously-published index: drop its marker FIRST,
-    // so a crash mid-overwrite leaves a refusable wreck, not a stale
-    // marker over half-new data (the ensureTrained path writes to a tmp
-    // dir and never hits this; explicit-path re-saves do)
-    new java.io.File(path, "_SUCCESS").delete(): Unit
-    // a from-scratch rebuild starts a fresh drift history — the old
-    // quantizer's telemetry doesn't describe the new one
-    new java.io.File(path, "drift.log").delete(): Unit
-    sweepTmp(new java.io.File(path))
-    // the from-scratch rebuild is the documented recovery for a retrain
-    // that crashed mid-build — clean its stranded sibling scratch too
-    sweepSiblingTmp(new java.io.File(path))
-    // the BUILD census persists as the drift baseline: every append's
-    // censusDrift compares against the distribution the quantizers were
-    // trained alongside. Comparing against the LIVE stored census would
-    // dilute the signal exactly when sustained drift accumulates — five
-    // drifted batches later the store is half drifted data and a pure-
-    // drift batch reads as half the tv it should (code-review r15).
-    // Persisted as a PARQUET relation — written distributed, read back
-    // as a frame by the append path's censusDriftFrames, so the
-    // baseline never rides the driver either.
-    new java.io.File(path).mkdirs(): Unit
-    // split policy + null-cell refusal RIDE the drift_base write
-    // (optimization r21, guide §1.2 — fewer actions): r20 derived them
-    // from the just-written census parquet, but that still cost two
-    // bounded actions (null probe + oversized collect) after the write.
-    // `observe` collects all three statistics — total rows, null-cell
-    // rows, the oversized (cell, count) set — on the write's own
-    // materialization pass; the collected set stays bounded by
-    // #oversized (the r18 discipline), and the nulls-vs-orphaned blame
-    // aggregation (ADVICE r17) still runs only on the always-throwing
-    // refusal path. A refusal below leaves the same marker-less wreck
-    // as before (recovery: ensureTrained rebuild; marker stays down).
-    val censusObs = org.apache.spark.sql.Observation(
-      s"graft-save-census-${System.nanoTime()}")
-    val censusFrame = assigned.groupBy("cell").count()
-    censusFrame.observe(censusObs,
-        coalesce(sum("count"), lit(0L)).as("total"),
-        coalesce(sum(when(col("cell").isNull, col("count"))), lit(0L))
-          .as("null_rows"),
-        collect_list(when(col("count") > maxCell,
-          struct(col("cell"), col("count")))).as("oversized"))
-      .write.mode("overwrite")
-      .parquet(new java.io.File(path, "drift_base").toString)
-    val cm = censusObs.get
-    if (cm("null_rows").asInstanceOf[Long] > 0)
-      Ivf.refuseNullCells(assigned, "cv")
-    val splits = Ivf.splitBitsFromCounts(
-      cm("oversized").asInstanceOf[scala.collection.Seq[
-        org.apache.spark.sql.Row]]
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap, maxCell)
-    val projected = fam.project(assigned, splits)
-    clusterByCell(projected)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(new java.io.File(path, "index").toString)
-    // split map as a local sidecar (r21, the readSplits note): one
-    // Spark write job fewer per publish, one collect fewer per load
-    writeSplitsFile(path, splits)
-    writeParams(path, fam.params)
-    // pin the reader-side schemas and the build total so serves/appends
-    // never pay inference or a base-total aggregation (r21 sidecars;
-    // append/remove rewrites preserve both, so the pins stay valid
-    // across the index's mutation lifecycle)
-    writeSchemas(path, Map(
-      "index" -> readBackSchema(projected.schema, Some("cell")),
-      "drift_base" -> readBackSchema(censusFrame.schema)))
-    writeDriftTotal(path, cm("total").asInstanceOf[Long])
-    // the artifact commit marker lives at the TOP level (the parquet
-    // writers put theirs inside index/ and splits/) — ensureTrained's
-    // publish/recovery protocol keys off this file
-    java.nio.file.Files.write(
-      new java.io.File(path, "_SUCCESS").toPath, Array.empty[Byte]): Unit
-  }
+                                     assigned: DataFrame): Unit =
+    mutateCommitted(path, fam.what, overwrite = true)(()) { _ =>
+      val maxCell = fam.maxCell
+      // a from-scratch rebuild starts a fresh drift history — the old
+      // quantizer's telemetry doesn't describe the new one
+      new java.io.File(path, "drift.log").delete(): Unit
+      // the from-scratch rebuild is the documented recovery for a retrain
+      // that crashed mid-build — clean its stranded sibling scratch too
+      sweepSiblingTmp(new java.io.File(path))
+      // the BUILD census persists as the drift baseline: every append's
+      // censusDrift compares against the distribution the quantizers were
+      // trained alongside. Comparing against the LIVE stored census would
+      // dilute the signal exactly when sustained drift accumulates — five
+      // drifted batches later the store is half drifted data and a pure-
+      // drift batch reads as half the tv it should (code-review r15).
+      // Persisted as a PARQUET relation — written distributed, read back
+      // as a frame by the append path's censusDriftFrames, so the
+      // baseline never rides the driver either.
+      new java.io.File(path).mkdirs(): Unit
+      // split policy + null-cell refusal RIDE the drift_base write
+      // (optimization r21, guide §1.2 — fewer actions): r20 derived them
+      // from the just-written census parquet, but that still cost two
+      // bounded actions (null probe + oversized collect) after the write.
+      // `observe` collects all three statistics — total rows, null-cell
+      // rows, the oversized (cell, count) set — on the write's own
+      // materialization pass; the collected set stays bounded by
+      // #oversized (the r18 discipline), and the nulls-vs-orphaned blame
+      // aggregation (ADVICE r17) still runs only on the always-throwing
+      // refusal path. A refusal below leaves the same marker-less wreck
+      // as before (recovery: ensureTrained rebuild; marker stays down).
+      val censusObs = org.apache.spark.sql.Observation(
+        s"graft-save-census-${System.nanoTime()}")
+      val censusFrame = assigned.groupBy("cell").count()
+      censusFrame.observe(censusObs,
+          coalesce(sum("count"), lit(0L)).as("total"),
+          coalesce(sum(when(col("cell").isNull, col("count"))), lit(0L))
+            .as("null_rows"),
+          collect_list(when(col("count") > maxCell,
+            struct(col("cell"), col("count")))).as("oversized"))
+        .write.mode("overwrite")
+        .parquet(new java.io.File(path, "drift_base").toString)
+      val cm = censusObs.get
+      if (cm("null_rows").asInstanceOf[Long] > 0)
+        Ivf.refuseNullCells(assigned, "cv")
+      val splits = Ivf.splitBitsFromCounts(
+        cm("oversized").asInstanceOf[scala.collection.Seq[
+          org.apache.spark.sql.Row]]
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap, maxCell)
+      val projected = fam.project(assigned, splits)
+      clusterByCell(projected)
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(new java.io.File(path, "index").toString)
+      // split map as a local sidecar (r21, the readSplits note): one
+      // Spark write job fewer per publish, one collect fewer per load
+      writeSplitsFile(path, splits)
+      writeParams(path, fam.params)
+      // pin the reader-side schemas and the build total so serves/appends
+      // never pay inference or a base-total aggregation (r21 sidecars;
+      // append/remove rewrites preserve both, so the pins stay valid
+      // across the index's mutation lifecycle)
+      writeSchemas(path, Map(
+        "index" -> readBackSchema(projected.schema, Some("cell")),
+        "drift_base" -> readBackSchema(censusFrame.schema)))
+      writeDriftTotal(path, cm("total").asInstanceOf[Long])
+    }
 
   /** Range-cluster index rows by cell ahead of a `partitionBy("cell")`
     * write (VERDICT r18 task 3). A dynamic-partition write of a frame
@@ -1188,9 +1281,7 @@ object Artifacts {
     // a torn append deletes the marker before its first mutation and
     // `_params` stays valid throughout, so the params check alone would
     // serve a half-mutated index; every read path refuses instead
-    require(new java.io.File(path, "_SUCCESS").exists(),
-      s"${fam.what} at $path has no _SUCCESS marker (missing, mid-build, " +
-        "or torn by a crashed append) — rebuild it before serving")
+    requireCommitted(path, fam.what, "serving")
     checkCellIndex(path, fam)
     (readPart(spark, path, "index"),
       knownSplits.getOrElse(readSplits(new java.io.File(path))))
@@ -1336,15 +1427,14 @@ object Artifacts {
     *     family's shared projection, so existing rows get their
     *     subcells recomputed exactly as a rebuild would compute them.
     *
-    * Crash safety (torn-append recovery, ArtifactsSpec): the top-level
-    * `_SUCCESS` marker is deleted BEFORE the first mutation and
-    * recreated after the split map is republished. A crash anywhere in
-    * between leaves a marker-less directory that [[ensureTrained]]
-    * already treats as a wreck — the next `*For` resolution deletes it
-    * and rebuilds from scratch; a direct [[loadIvfIndex]]/append on the
-    * torn index fails loudly instead of serving partial data. (Local/
-    * POSIX rename semantics, like [[ensureTrained]]; on object stores
-    * swap the cell-directory rename for the store's atomic copy.)
+    * Crash safety (torn-append recovery, ArtifactsSpec): the append runs
+    * inside [[mutateCommitted]]. The census, the refusals and the
+    * changed-cell rewrite are staged, so a bad batch leaves the index
+    * servable; a crash while the cells swap in leaves a marker-less
+    * directory that [[ensureTrained]] already treats as a wreck — the
+    * next `*For` resolution deletes it and rebuilds from scratch; a
+    * direct [[loadIvfIndex]]/append on the torn index fails loudly
+    * instead of serving partial data.
     *
     * Contract: `incoming` ids must be disjoint from the index's (run
     * [[graft.northstar.Dedup]] / [[Pq.annMatchesIncoming]] screening
@@ -1402,30 +1492,16 @@ object Artifacts {
     val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = incoming.sparkSession
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
-        "torn by a crashed append) — rebuild it before appending")
+    requireCommitted(path, what, "appending")
     checkCellIndex(path, fam)
-    val indexDir = new java.io.File(dst, "index").toString
-    // ---- the marker delete is the MUTEX, and it must be won BEFORE
-    // any census/splits read: two concurrent appenders both passed the
-    // exists() probe and collected censuses, and the mutex LOSER then
-    // appended under the stale split map — if the winner had re-split
-    // a cell, the loser's rows carried old-bits subcells that never
-    // matched at probe time and silently vanished from ANN results
-    // (code-review r14, eighth pass). Every read below happens inside
-    // the critical section; a failure during read/planning republishes
-    // the marker (nothing was mutated), while a crash in the mutation
-    // phase leaves the torn wreck the discipline demands.
-    require(marker.delete(),
-      s"$what at $path: could not remove the commit marker")
-    // sweep AFTER winning the marker-delete mutex: an earlier sweep
-    // could delete a CONCURRENT mutator's live scratch dir, failing
-    // its rename mid-mutation with the marker already dropped
-    // (code-review r14); only the mutex winner may touch scratch
-    sweepTmp(dst)
-    val (assignedIncoming, oldSplits, newSplits, changed, drift) = try {
+    val indexDir = new java.io.File(dst, "index")
+    // every census/splits read happens inside the claim: two concurrent
+    // appenders both passed the marker probe and collected censuses, and
+    // the mutex LOSER then appended under the stale split map — if the
+    // winner had re-split a cell, the loser's rows carried old-bits
+    // subcells that never matched at probe time and silently vanished
+    // from ANN results (code-review r14, eighth pass)
+    mutateCommitted(path, what) {
       val oldSplits = readSplits(dst)
       val assignedIncoming =
         Dedup.trackedPersist(fam.assign(incoming, idCol))
@@ -1453,8 +1529,8 @@ object Artifacts {
       // incoming-census subtree of the union the split policy collects
       // anyway, so the append pays one census action, not two. The
       // refusal check runs before the collected rows are decoded, so a
-      // null-cell batch still refuses (and the catch republishes the
-      // marker) before any split policy is derived from polluted rows.
+      // null-cell batch still refuses (staged: the marker comes back)
+      // before any split policy is derived from polluted rows.
       val inObs = org.apache.spark.sql.Observation(
         s"graft-append-census-${System.nanoTime()}")
       val merged = storedCensus.select("cell", "count")
@@ -1499,7 +1575,7 @@ object Artifacts {
       // trained alongside; the live stored census would dilute under
       // sustained drift, code-review r15) with its total from the
       // drift_total sidecar (no aggregation job). Computed here,
-      // recorded after the publish (it must not touch a wreck).
+      // recorded in the advisory phase (it must not touch a wreck).
       // All-frames: one tv aggregate, O(1) driver rows; skipped for a
       // zero-row batch.
       val incomingTotal = inStats("total").asInstanceOf[Long]
@@ -1511,106 +1587,74 @@ object Artifacts {
             baseTotal = Some(baseTotal),
             incomingTotal = Some(incomingTotal)), incomingTotal))
         else None
-      (assignedIncoming, oldSplits, newSplits, changed, drift)
-    } catch { case t: Throwable =>
-      // read/planning failure: nothing was mutated — republish the
-      // marker so a planning error doesn't strand a rebuild-only wreck
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      throw t
-    }
-    // ---- mutation starts (marker already down: ANY crash below
-    // leaves a wreck ensureTrained recovery rebuilds, never a
-    // silently-partial index)
-    val changedCol = changed.map(Int.box)
-    // 1. incoming rows of UNchanged cells append straight into their
-    //    partitions (their subcell derivation under newSplits equals
-    //    the old one — bits only differ on changed cells)
-    clusterByCell(project(assignedIncoming
-        .filter(!col("cell").isin(changedCol: _*)), newSplits))
-      .write.mode("append").partitionBy("cell").parquet(indexDir)
-    // 2. changed cells are rewritten whole: existing rows (vectors
-    //    resolved back) + incoming rows, re-projected under newSplits,
-    //    written to a scratch dir and swapped in per cell directory
-    if (changed.nonEmpty) {
-      val existing = resolveVectors(readPart(spark, path, "index")
-        .filter(col("cell").isin(changedCol: _*)))
-      val rewritten = project(existing.unionByName(
-        assignedIncoming.filter(col("cell").isin(changedCol: _*))),
-        newSplits)
-      val tmp = new java.io.File(dst, "index.rewrite.tmp-" +
+      // changed cells are rewritten whole into scratch: existing rows
+      // (vectors resolved back — the PQ corpus tripwire runs here, still
+      // staged) + incoming rows, re-projected under newSplits
+      val scratch = new java.io.File(dst, "index.rewrite.tmp-" +
         System.nanoTime())
-      clusterByCell(rewritten).write.mode("overwrite").partitionBy("cell")
-        .parquet(tmp.toString)
-      for (c <- changed) {
-        val cellDst = new java.io.File(indexDir, s"cell=$c")
-        val cellSrc = new java.io.File(tmp, s"cell=$c")
-        deleteRec(cellDst)
-        if (cellSrc.exists())
-          require(cellSrc.renameTo(cellDst),
-            s"$what at $path: could not swap rewritten cell $c in")
+      if (changed.nonEmpty) {
+        val changedCol = changed.map(Int.box)
+        val existing = resolveVectors(readPart(spark, path, "index")
+          .filter(col("cell").isin(changedCol: _*)))
+        clusterByCell(project(existing.unionByName(
+            assignedIncoming.filter(col("cell").isin(changedCol: _*))),
+            newSplits))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(scratch.toString)
       }
-      deleteRec(tmp)
-    }
-    // 3. republish the split map and the commit marker. The sidecar
-    //    write is a local file — cheap enough to run unconditionally.
-    writeSplitsFile(dst.toString, newSplits)
-    // 3b. record the drift statistic BEFORE the marker republish, i.e.
-    //    still inside the cross-process mutex window (ADVICE r15): a
-    //    post-marker append raced a concurrent from-scratch rebuild —
-    //    the rebuild could win the mutex, delete drift.log ("rebuild
-    //    resets history"), and the in-flight late write would then
-    //    resurrect a stale drift line onto the new quantizer's
-    //    supposedly-empty history. One line per append: epoch millis,
-    //    batch rows, the censusDrift value; [[appendDriftHistory]]
-    //    reads it back and a batch over the retrain bar additionally
-    //    WARNs right here, where the nightly-append operator sees it.
-    // the telemetry block runs BEFORE the marker republish (still
-    // inside the mutex window — the rebuild/resurrection race fix),
-    // but under try/FINALLY with the marker write in the finally
-    // (ADVICE r16): a FATAL error in telemetry (OOM, interrupt) must
-    // not strand a fully successful data mutation as an uncommitted
-    // wreck forcing a full rebuild — the fatal still propagates, but
-    // the completed mutation stays committed.
-    try drift.foreach { case (d, n) =>
-      // ADVISORY means advisory: the data mutation has fully succeeded,
-      // so a telemetry I/O failure here must not surface as an append
-      // failure — the natural retry would double-append the batch, and
-      // the raw-vector family has no duplicate tripwire (code-review
-      // r15). NonFatal only (ADVICE r15): an OutOfMemoryError or
-      // interrupt must still propagate — the advisory-write rationale
-      // covers I/O failures, not a dying JVM. Locale.ROOT: a
-      // comma-decimal default locale would write "drift=0,37" and
-      // silently break appendDriftHistory's parse (the KernelEdgeSpec
-      // locale class).
-      try
-        java.nio.file.Files.write(
-          new java.io.File(dst, "drift.log").toPath,
-          String.format(java.util.Locale.ROOT,
-            "ts=%d rows=%d drift=%.6f%n",
-            Long.box(System.currentTimeMillis()), Long.box(n),
-            Double.box(d))
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND): Unit
-      catch { case scala.util.control.NonFatal(t) =>
-        Console.err.println(
-          s"[graft] WARN $what at $path: could not record drift " +
-            s"telemetry (${t.getMessage}) — the append itself succeeded")
+      (assignedIncoming, newSplits, changed, drift, scratch)
+    }({ case (assignedIncoming, newSplits, changed, drift, scratch) =>
+      // incoming rows of UNchanged cells append straight into their
+      // partitions (their subcell derivation under newSplits equals
+      // the old one — bits only differ on changed cells), then the
+      // changed cells swap in and the split map is republished
+      clusterByCell(project(assignedIncoming
+          .filter(!col("cell").isin(changed.map(Int.box): _*)), newSplits))
+        .write.mode("append").partitionBy("cell").parquet(indexDir.toString)
+      swapIn(s"$what at $path", changed.map(c =>
+        new java.io.File(scratch, s"cell=$c") ->
+          new java.io.File(indexDir, s"cell=$c")), mayBeEmpty = true)
+      writeSplitsFile(path, newSplits)
+      newSplits
+    }, { case (_, _, _, drift, _) =>
+      // one drift.log line per append: epoch millis, batch rows, the
+      // censusDrift value; [[appendDriftHistory]] reads it back and a
+      // batch over the retrain bar additionally WARNs right here, where
+      // the nightly-append operator sees it
+      drift.foreach { case (d, n) =>
+        // ADVISORY means advisory: the data mutation has fully
+        // succeeded, so a telemetry I/O failure here must not surface
+        // as an append failure — the natural retry would double-append
+        // the batch, and the raw-vector family has no duplicate
+        // tripwire (code-review r15). NonFatal only (ADVICE r15): an
+        // OutOfMemoryError or interrupt must still propagate.
+        // Locale.ROOT: a comma-decimal default locale would write
+        // "drift=0,37" and silently break appendDriftHistory's parse
+        // (the KernelEdgeSpec locale class).
+        try
+          java.nio.file.Files.write(
+            new java.io.File(dst, "drift.log").toPath,
+            String.format(java.util.Locale.ROOT,
+              "ts=%d rows=%d drift=%.6f%n",
+              Long.box(System.currentTimeMillis()), Long.box(n),
+              Double.box(d))
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+            java.nio.file.StandardOpenOption.CREATE,
+            java.nio.file.StandardOpenOption.APPEND): Unit
+        catch { case scala.util.control.NonFatal(t) =>
+          Console.err.println(
+            s"[graft] WARN $what at $path: could not record drift " +
+              s"telemetry (${t.getMessage}) — the append itself succeeded")
+        }
+        if (d > Ivf.RetrainDriftThreshold)
+          Console.err.println(
+            f"[graft] WARN $what at $path: append batch ($n rows) census " +
+              f"drift $d%.3f exceeds the retrain bar " +
+              f"${Ivf.RetrainDriftThreshold} — the pinned quantizers no " +
+              s"longer model the incoming distribution; schedule ${fam.retrain} " +
+              "(recall on drifted rows decays silently otherwise)")
       }
-      if (d > Ivf.RetrainDriftThreshold)
-        Console.err.println(
-          f"[graft] WARN $what at $path: append batch ($n rows) census " +
-            f"drift $d%.3f exceeds the retrain bar " +
-            f"${Ivf.RetrainDriftThreshold} — the pinned quantizers no " +
-            s"longer model the incoming distribution; schedule ${fam.retrain} " +
-            "(recall on drifted rows decays silently otherwise)")
-    }
-    // 4. republish the commit marker — the mutation (and its telemetry
-    //    line) is complete; the mutex window closes here. In the
-    //    FINALLY: see the telemetry-block comment above.
-    finally
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
-    newSplits
+    })
   }
 
   /** Canonicalize a cell index's `drift.log` in place, under the marker
@@ -1621,14 +1665,13 @@ object Artifacts {
     * and re-confusing each time. No-op when the log is already
     * canonical. Returns true when the log was rewritten.
     *
-    * Mutex discipline is [[appendCellIndex]]'s: the marker comes down
-    * before the rewrite (a concurrent-mutator loss is the loud
-    * retryable "commit marker" class), and the log is ADVISORY
-    * telemetry — index data is never touched — so a thrown failure
-    * republishes the marker (finally; the telemetry-in-finally
-    * rationale of the append path). Only a hard kill mid-rewrite leaves
-    * the standard marker-less wreck, with the standard rebuild
-    * recovery.
+    * Runs in [[mutateCommitted]]: the claim comes first (a
+    * concurrent-mutator loss is the loud retryable "commit marker"
+    * class), the canonical log is staged into scratch, and the atomic
+    * replace runs in the advisory phase — the log is telemetry and
+    * index data is never touched, so any throw republishes the marker.
+    * Only a hard kill mid-rewrite leaves the standard marker-less wreck,
+    * with the standard rebuild recovery.
     */
   private def canonicalizeDriftLog(path: String): Boolean = {
     val dst = new java.io.File(path)
@@ -1639,31 +1682,21 @@ object Artifacts {
       java.nio.charset.StandardCharsets.UTF_8).asScala.toSeq
     val lines = raw.filter(l => DriftLine.findFirstMatchIn(l).isDefined)
     if (lines.size == raw.size) return false
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.delete(),
-      s"index at $path: could not remove the commit marker (lost the " +
-        "mutex to a concurrent mutator) — drift.log canonicalization " +
-        "retries on the next tick")
-    // sibling tmp + atomic move, NOT an in-place truncating write
-    // (advice r19): a hard kill mid-truncate would destroy the ENTIRE
-    // drift history — strictly worse than the torn state, where the
-    // torn line is merely dropped on every read
+    // scratch + atomic move, NOT an in-place truncating write (advice
+    // r19): a hard kill mid-truncate would destroy the ENTIRE drift
+    // history — strictly worse than the torn state, where the torn
+    // line is merely dropped on every read
     val ltmp = new java.io.File(dst,
       "drift.log.migrate.tmp-" + System.nanoTime())
-    try {
+    mutateCommitted(path, "index")(
       java.nio.file.Files.write(ltmp.toPath,
         lines.mkString("", "\n", if (lines.isEmpty) "" else "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(ltmp.toPath, logFile.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      true
-    } finally {
-      // pre-destructive either way: the original drift.log is intact
-      // until the atomic move lands, so the scratch leaks nothing
-      ltmp.delete(): Unit
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
-    }
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit)(
+      _ => (), _ =>
+        java.nio.file.Files.move(ltmp.toPath, logFile.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit)
+    true
   }
 
   /** One `drift.log` line as the append path writes it: exactly six
@@ -1756,7 +1789,7 @@ object Artifacts {
     ThreadLocal.withInitial(() => (_: java.io.File) => ())
 
   /** Shared mutate-in-place core of [[retrainIvfIndex]] /
-    * [[retrainIvfPqIndex]]: win the `_SUCCESS` marker mutex, resolve
+    * [[retrainIvfPqIndex]]: win the commit-marker mutex, resolve
     * the index's CURRENT corpus from its stored rows, fit-and-build a
     * complete replacement artifact in a sibling scratch dir (the old
     * directory untouched — every lazy read against it completes during
@@ -1783,10 +1816,7 @@ object Artifacts {
                                   corpusFromStored: DataFrame => DataFrame)(
       fitAndBuild: (DataFrame, String) => T): (T, Map[Int, Int]) = {
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
-        "torn by a crashed mutation) — rebuild it before retraining")
+    requireCommitted(path, what, "retraining")
     // SIBLING scratch via parent+name, NOT string concat on the raw
     // path (code-review r17): a trailing-slash path would nest the
     // scratch INSIDE the live directory, and the swap's deleteRec(dst)
@@ -1842,16 +1872,11 @@ object Artifacts {
             "marker claim (lost the mutex to a concurrent mutator)")
       case t: Throwable => deleteRec(tmp); throw t
     }
-    // ---- the CLAIM: the marker delete is the cross-process mutex.
-    // delete() returns false iff the marker is already gone — another
-    // mutator owns the root; this retrain drops its scratch and loses
-    // loudly (retryable), republishing nothing.
-    if (!marker.delete()) {
-      deleteRec(tmp)
-      throw new IllegalArgumentException(
-        s"$what at $path: could not remove the commit marker (lost " +
-          "the mutex to a concurrent mutator)")
-    }
+    // ---- the CLAIM ([[claimMarker]]): a loss means another mutator
+    // owns the root; this retrain drops its scratch and loses loudly
+    // (retryable), republishing nothing.
+    try claimMarker(path, what)
+    catch { case t: Throwable => deleteRec(tmp); throw t }
     sweepTmp(dst)
     sweepSiblingTmp(dst, keep = Some(tmp))
     val fitted = try {
@@ -1905,7 +1930,7 @@ object Artifacts {
       // deleteRec comes last, so the check-to-republish window is the
       // write's microseconds, not the delete's seconds (third pass)
       if (token.delete()) {
-        java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
+        stampMarker(dst)
         deleteRec(tmp)
         throw t
       }
@@ -1913,7 +1938,7 @@ object Artifacts {
       // claimed this marker-less root mid-retrain (its sweepSiblingTmp
       // is the only other deleter). It owns the directory and will
       // publish its own marker when complete — republishing here could
-      // stamp _SUCCESS over its half-written index.
+      // stamp the marker over its half-written index.
       throw new IllegalStateException(
         s"$what at $path: retrain scratch was swept by a concurrent " +
           "from-scratch rebuild of this index — the retrain is " +
@@ -1936,13 +1961,11 @@ object Artifacts {
           "from-scratch rebuild during the fit — the retrain is " +
           "abandoned and the rebuild owns the commit marker; verify " +
           "the rebuild completed before serving")
-    // deleteRec + rename, not rename-into — the replacement under tmp
-    // is COMPLETE (index, splits, _params, drift_base, its own
-    // _SUCCESS), so the post-swap directory is fully published the
-    // instant the rename lands
-    deleteRec(dst)
-    require(tmp.renameTo(dst),
-      s"$what at $path: could not swap the retrained index in")
+    // a whole-directory swap — the replacement under tmp is COMPLETE
+    // (index, splits, _params, drift_base, its own commit marker), so
+    // the post-swap directory is fully published the instant the
+    // rename lands
+    swapIn(s"$what at $path", Seq(tmp -> dst))
     (fitted, readSplits(dst))
   }
 
@@ -1955,7 +1978,7 @@ object Artifacts {
     * Refits the coarse quantizer on the index's CURRENT corpus (the
     * stored rows — build + appends − removals; the raw-vector layout
     * needs no external table) via [[Ivf.fitQuantizer]], rebuilds, and
-    * atomically swaps under the `_SUCCESS` mutex.
+    * atomically swaps under the commit-marker mutex.
     *
     * LITERAL→HIERARCHICAL MIGRATION rides the same dispatch (VERDICT
     * r15/r16 task 3): with the default `nCells = AutoCells`,
@@ -2240,10 +2263,7 @@ object Artifacts {
     // have canonicalized drift.log (a marker-down rewrite) first
     requireWindow(window)
     val dst = new java.io.File(path)
-    require(new java.io.File(dst, "_SUCCESS").exists(),
-      s"cell index at $path has no _SUCCESS marker (missing, " +
-        "mid-build, or torn by a crashed mutation) — rebuild it " +
-        "before maintaining")
+    requireCommitted(path, "index", "maintaining")
     requireSidecars(path, Seq("_params"), "index",
       "rebuild it with its save verb, or run retrainIvfIndex/" +
         "retrainIvfPqIndex (…Stored for a stored-cells root) on a cell " +
@@ -2354,8 +2374,9 @@ object Artifacts {
     * untouched, so compaction cost is bounded by the fragmented cells
     * only. Rows, codes, and subcells pass through byte-identical —
     * compact==no-op on the served frame is a pinned contract
-    * (ArtifactsSpec) — and the marker discipline is [[appendCellIndex]]'s:
-    * a crash mid-compaction leaves a refusable wreck, never a
+    * (ArtifactsSpec). The rewrites are staged in [[mutateCommitted]]
+    * and swapped in together: a failed rewrite leaves the index
+    * servable, a crash mid-swap a refusable wreck, never a
     * silently-partial cell. Returns the number of cells rewritten (0 =
     * nothing over threshold; the marker is not touched then).
     */
@@ -2363,28 +2384,23 @@ object Artifacts {
                        maxFilesPerCell: Int = 8,
                        targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"cell index at $path has no _SUCCESS marker (missing, mid-build, " +
-        "or torn by a crashed append/remove) — rebuild it before " +
-        "compacting")
+    requireCommitted(path, "cell index", "compacting")
     val indexDir = new java.io.File(dst, "index")
     val over = Option(indexDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
       .filter(c => parquetFiles(c).length > maxFilesPerCell)
     if (over.isEmpty) return 0
-    require(marker.delete(),
-      s"cell index at $path: could not remove the commit marker " +
-        "(concurrent mutation, or permissions)")
-    sweepTmp(dst) // post-mutex only (the appendCellIndex discipline)
+    val scratch = new java.io.File(dst, "index.compact.tmp-" +
+      System.nanoTime())
     // reading the LEAF cell directory drops the directory-encoded
     // partition column, so the rewritten files carry exactly the schema
     // of the originals and the hive layout re-derives cell= from the
     // directory name
-    for (c <- over)
-      rewriteCompacted(spark, c, indexDir, targetFileBytes,
-        s"cell index at $path: could not swap compacted cell ${c.getName} in")
-    java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
+    mutateCommitted(path, "cell index")(
+      over.foreach(c => compactInto(spark, c,
+        new java.io.File(scratch, c.getName), targetFileBytes)))(_ =>
+      swapIn(s"cell index at $path",
+        over.toSeq.map(c => new java.io.File(scratch, c.getName) -> c)))
     over.length
   }
 
@@ -2392,24 +2408,15 @@ object Artifacts {
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
-  /** The compaction tail both compactors share: rewrite `dir` into
-    * ceil(bytes / targetFileBytes) files in the scratch dir
-    * `<scratchOf>.compact.tmp-<nanos>` (a sibling of the artifact's
-    * top-level part, never inside a partitioned part), then swap it in.
-    * Runs inside the caller's marker-down window.
+  /** The compaction rewrite both compactors stage: `dir` rewritten into
+    * ceil(bytes / targetFileBytes) files at the scratch path `out`.
     */
-  private def rewriteCompacted(spark: SparkSession, dir: java.io.File,
-                               scratchOf: java.io.File,
-                               targetFileBytes: Long,
-                               swapRefusal: => String): Unit = {
+  private def compactInto(spark: SparkSession, dir: java.io.File,
+                          out: java.io.File, targetFileBytes: Long): Unit = {
     val nFiles = math.max(1, math.ceil(
       parquetFiles(dir).map(_.length).sum.toDouble / targetFileBytes).toInt)
-    val tmp = new java.io.File(scratchOf.getParentFile,
-      s"${scratchOf.getName}.compact.tmp-${System.nanoTime()}")
     spark.read.parquet(dir.toString).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    deleteRec(dir)
-    require(tmp.renameTo(dir), swapRefusal)
+      .write.mode("overwrite").parquet(out.toString)
   }
 
   /** [[compactCellIndex]] for the flat `rows/` directory of the
@@ -2424,19 +2431,14 @@ object Artifacts {
                              targetFileBytes: Long = 128L * 1024 * 1024)
       : Boolean = {
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"appendable index at $path has no _SUCCESS marker — rebuild it " +
-        "before compacting")
+    requireCommitted(path, "appendable index", "compacting")
     val rowsDir = new java.io.File(dst, "rows")
     if (parquetFiles(rowsDir).length <= maxFiles) return false
-    require(marker.delete(),
-      s"appendable index at $path: could not remove the commit marker " +
-        "(concurrent mutation, or permissions)")
-    sweepTmp(dst) // post-mutex only (the appendCellIndex discipline)
-    rewriteCompacted(spark, rowsDir, rowsDir, targetFileBytes,
-      s"appendable index at $path: could not swap compacted rows in")
-    java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
+    val scratch = new java.io.File(dst, "rows.compact.tmp-" +
+      System.nanoTime())
+    mutateCommitted(path, "appendable index")(
+      compactInto(spark, rowsDir, scratch, targetFileBytes))(_ =>
+      swapIn(s"appendable index at $path", Seq(scratch -> rowsDir)))
     true
   }
 
@@ -2458,10 +2460,10 @@ object Artifacts {
     *     the layout a rebuild would produce.
     *
     * Ids absent from the index are a no-op (takedown requests are
-    * replayable). Crash safety is the [[appendCellIndex]] discipline:
-    * the `_SUCCESS` marker drops before the first mutation, so a torn
-    * remove refuses to load/append/remove until rebuilt. Returns the
-    * new split map.
+    * replayable). Crash safety is the [[appendCellIndex]] discipline
+    * ([[mutateCommitted]]): the rewrites are staged, and a remove torn
+    * while its cells swap in refuses to load/append/remove until
+    * rebuilt. Returns the new split map.
     */
   def removeFromIvfIndex(removedIds: DataFrame, path: String,
                          quantizer: Ivf.CoarseQuantizer,
@@ -2533,33 +2535,20 @@ object Artifacts {
     val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = removedIds.sparkSession
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"$what at $path has no _SUCCESS marker (missing, mid-build, or " +
-        "torn by a crashed append/remove) — rebuild it before removing")
+    requireCommitted(path, what, "removing")
     checkCellIndex(path, fam)
-    val indexDir = new java.io.File(dst, "index").toString
+    val indexDir = new java.io.File(dst, "index")
     val rm = Dedup.trackedPersist(
       removedIds.select(col(idCol).as("neighbor_id")).distinct())
-    // replayed-takedown no-op probe BEFORE the marker drop (the
+    // replayed-takedown no-op probe BEFORE the claim (the
     // removeFromCappedIndex rationale): a retry of an already-applied
     // removal must not tear the marker down and brick the index if it
     // crashes doing zero work. The probe is advisory only — every
-    // census the mutation relies on is re-read INSIDE the mutex.
+    // census the mutation relies on is re-read INSIDE the claim.
     if (readPart(spark, path, "index")
         .join(broadcast(rm), Seq("neighbor_id"), "left_semi").isEmpty)
       return readSplits(dst)
-    // ---- the marker delete is the mutex + torn flag, won BEFORE any
-    // census/splits read the mutation relies on: a concurrent mutator
-    // completing between a pre-mutex read and this delete would leave
-    // this run rewriting cells from a stale census and publishing
-    // (cell,subcell) data inconsistent with the split map it skipped
-    // rewriting (code-review r14, eighth pass)
-    require(marker.delete(),
-      s"$what at $path: could not remove the commit marker " +
-        "(concurrent mutation, or permissions)")
-    sweepTmp(dst) // post-mutex only (the appendCellIndex discipline)
-    val (oldSplits, index, newSplits, plain, rebit) = try {
+    mutateCommitted(path, what) {
       val oldSplits = readSplits(dst)
       val index = readPart(spark, path, "index")
       // ONE census pass, ONE action (optimization r20 made it one scan;
@@ -2568,12 +2557,9 @@ object Artifacts {
       // set both derive from the same (cell, total, removed) rows, so
       // the in-plan filter keeps exactly the union of the two bounded
       // sets — removed>0 (the takedown's touched cells; the per-cell
-      // rename loop below is per-touched-cell driver work anyway) and
+      // swap is per-touched-cell driver work anyway) and
       // surviving>maxCell (#oversized) — and ONE collect splits them on
       // the driver. Never cell-count-proportional (the r18 discipline).
-      // The r20 form persisted the census for its two collects; with a
-      // single consumer the persist (and the block-manager residency
-      // the VERDICT r20 watch item suspected) is gone entirely.
       val censusRows = index
         .join(broadcast(rm.withColumn("__r", lit(1L))),
           Seq("neighbor_id"), "left")
@@ -2600,60 +2586,50 @@ object Artifacts {
         .filter(c => newSplits.getOrElse(c, 0) != oldSplits.getOrElse(c, 0))
       val plain = (removedCounts.keySet -- changedBits).toSeq.sorted
       val rebit = changedBits.toSeq.sorted
-      (oldSplits, index, newSplits, plain, rebit)
-    } catch { case t: Throwable =>
-      // read/planning failure: nothing was mutated — republish
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      throw t
-    }
-    val tmp = new java.io.File(dst, "index.rewrite.tmp-" +
-      System.nanoTime())
-    if (plain.nonEmpty) {
-      // stored shape passes through untouched — codes/subcells of the
-      // surviving rows are still valid under unchanged bits
-      val plainCol = plain.map(Int.box)
-      clusterByCell(index.filter(col("cell").isin(plainCol: _*))
-          .join(rm, Seq("neighbor_id"), "left_anti"))
-        .write.mode("append").partitionBy("cell").parquet(tmp.toString)
-    }
-    if (rebit.nonEmpty) {
-      val rebitCol = rebit.map(Int.box)
-      val remaining = resolveVectors(
-        index.filter(col("cell").isin(rebitCol: _*))
-          .join(rm, Seq("neighbor_id"), "left_anti"))
-      clusterByCell(project(remaining, newSplits))
-        .write.mode("append").partitionBy("cell").parquet(tmp.toString)
-    }
-    // the takedown list has no reader past the two rewrite joins above
-    // — free its blocks before the rename/republish tail (r21, the
-    // census-unpersist rationale)
-    rm.unpersist(blocking = false)
-    for (c <- plain ++ rebit) {
-      val cellDst = new java.io.File(indexDir, s"cell=$c")
-      val cellSrc = new java.io.File(tmp, s"cell=$c")
-      deleteRec(cellDst)
+      val scratch = new java.io.File(dst, "index.rewrite.tmp-" +
+        System.nanoTime())
+      if (plain.nonEmpty) {
+        // stored shape passes through untouched — codes/subcells of the
+        // surviving rows are still valid under unchanged bits
+        val plainCol = plain.map(Int.box)
+        clusterByCell(index.filter(col("cell").isin(plainCol: _*))
+            .join(rm, Seq("neighbor_id"), "left_anti"))
+          .write.mode("append").partitionBy("cell").parquet(scratch.toString)
+      }
+      if (rebit.nonEmpty) {
+        // the PQ corpus tripwire runs here, still staged
+        val rebitCol = rebit.map(Int.box)
+        val remaining = resolveVectors(
+          index.filter(col("cell").isin(rebitCol: _*))
+            .join(rm, Seq("neighbor_id"), "left_anti"))
+        clusterByCell(project(remaining, newSplits))
+          .write.mode("append").partitionBy("cell").parquet(scratch.toString)
+      }
+      // the takedown list has no reader past the two rewrite joins above
+      // — free its blocks before the swap/republish tail (r21, the
+      // census-unpersist rationale)
+      rm.unpersist(blocking = false)
+      (newSplits, plain ++ rebit, scratch)
+    } { case (newSplits, cells, scratch) =>
       // a fully-emptied cell writes nothing — its directory stays
       // deleted, the layout a rebuild on the difference would produce
-      if (cellSrc.exists())
-        require(cellSrc.renameTo(cellDst),
-          s"$what at $path: could not swap rewritten cell $c in")
+      swapIn(s"$what at $path", cells.map(c =>
+        new java.io.File(scratch, s"cell=$c") ->
+          new java.io.File(indexDir, s"cell=$c")), mayBeEmpty = true)
+      writeSplitsFile(path, newSplits)
+      newSplits
     }
-    deleteRec(tmp)
-    // local-file sidecar republish (the appendCellIndex note)
-    writeSplitsFile(dst.toString, newSplits)
-    java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
-    newSplits
   }
 
   // ----------------------------------------------------------- sidecars
 
   /** Pinned-parameter sidecar: a `_params` file inside the artifact
     * directory (underscore prefix — invisible to parquet readers, like
-    * `_SUCCESS`), one `key=value` line per pin. It is the ONLY place an
-    * artifact pins the caller's hyperparameters: a row-borne pin column
-    * validates nothing on an EMPTY artifact (a zero-row pair list saved
-    * at a threshold nothing crossed, an empty merge table) — the
-    * false-clean the mismatch discipline exists to close — and costs a
+    * the commit marker), one `key=value` line per pin. It is the ONLY
+    * place an artifact pins the caller's hyperparameters: a row-borne
+    * pin column validates nothing on an EMPTY artifact (a zero-row pair
+    * list saved at a threshold nothing crossed, an empty merge table) —
+    * the false-clean the mismatch discipline exists to close — and costs a
     * Spark job per load besides. The sidecar validates unconditionally,
     * and [[checkParams]] refuses an artifact without one.
     *
@@ -2865,44 +2841,41 @@ object Artifacts {
     * Append cost at scale: the incoming batch's narrow sketch pass, a
     * parquet append, and ONE map-side-combined aggregate over the rows
     * to refresh `dropped` (bucket-partitioned parquet on a real
-    * cluster). Crash safety is the [[appendIvfIndex]] discipline: the
-    * top-level `_SUCCESS` is dropped before the first mutation and
-    * republished after the `dropped/` refresh — a torn append refuses
-    * to load or append until rebuilt.
+    * cluster). Crash safety is the [[appendIvfIndex]] discipline
+    * ([[mutateCommitted]]): a torn append refuses to load or append
+    * until rebuilt.
     */
   private def writeCappedIndex(rows: DataFrame, path: String,
-                               ix: CappedIndex): Unit = {
-    val dst = new java.io.File(path)
-    // overwriting a previously-published index: drop its marker FIRST,
-    // so a crash mid-overwrite leaves a refusable wreck, not a stale
-    // marker over half-new data
-    new java.io.File(dst, "_SUCCESS").delete(): Unit
-    sweepTmp(dst)
-    // persist the sketch ONCE (optimization r20, guide §1.2): the save
-    // used to write rows/ and then re-READ the written parquet for the
-    // dropped/ aggregate — a second full pass over data the writer just
-    // had in hand. The persisted frame feeds both; recompute-safe (its
-    // lineage is the caller's sketch over the CORPUS, never the
-    // artifact being mutated). Append/remove keep the read-back form:
-    // their dropped/ must see rows the frame does not carry.
-    val r = Dedup.trackedPersist(rows)
-    r.write.mode("overwrite")
-      .parquet(new java.io.File(dst, "rows").toString)
-    refreshDroppedFrom(r, path, ix)
-    writeParams(path, ix.params)
-    // pin the reader-side schemas (r21 sidecar): every probe/load/
-    // refresh of rows/ and dropped/ otherwise pays a schema-inference
-    // job per read, per evaluation; append/remove preserve both shapes
-    writeSchemas(path, Map(
-      "rows" -> readBackSchema(r.schema),
-      "dropped" -> readBackSchema(org.apache.spark.sql.types.StructType(
-        Seq(r.schema(ix.bucketCol),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))))
-    java.nio.file.Files.write(
-      new java.io.File(dst, "_SUCCESS").toPath, Array.empty[Byte]): Unit
-  }
+                               ix: CappedIndex): Unit =
+    // the overwrite form of the mutation window (the
+    // writeCellIndexAssigned note): a crash mid-save leaves a refusable
+    // wreck, not a stale marker over half-new data
+    mutateCommitted(path, ix.label, overwrite = true)(()) { _ =>
+      // persist the sketch ONCE (optimization r20, guide §1.2): the save
+      // used to write rows/ and then re-READ the written parquet for the
+      // dropped/ aggregate — a second full pass over data the writer
+      // just had in hand. The persisted frame feeds both;
+      // recompute-safe (its lineage is the caller's sketch over the
+      // CORPUS, never the artifact being mutated). Append keeps the
+      // read-back form: its dropped/ must see rows the frame does not
+      // carry.
+      val r = Dedup.trackedPersist(rows)
+      r.write.mode("overwrite")
+        .parquet(new java.io.File(path, "rows").toString)
+      refreshDroppedFrom(r, path, ix)
+      writeParams(path, ix.params)
+      // pin the reader-side schemas (r21 sidecar): every probe/load/
+      // refresh of rows/ and dropped/ otherwise pays a schema-inference
+      // job per read, per evaluation; append/remove preserve both shapes
+      writeSchemas(path, Map(
+        "rows" -> readBackSchema(r.schema),
+        "dropped" -> readBackSchema(org.apache.spark.sql.types.StructType(
+          Seq(r.schema(ix.bucketCol),
+            org.apache.spark.sql.types.StructField("n",
+              org.apache.spark.sql.types.LongType))))))
+    }
 
+  /** Write the over-cap bucket list of `rows` as `<path>/dropped`. */
   private def refreshDroppedFrom(rows: DataFrame, path: String,
                                  ix: CappedIndex): Unit = {
     val agg = rows
@@ -2921,26 +2894,30 @@ object Artifacts {
       .parquet(new java.io.File(path, "dropped").toString)
   }
 
+  /** The capped append: the delta batch is sketched and written to
+    * scratch in the STAGE phase, so a batch that fails at run time (a
+    * bad cast, a poisoned payload) leaves the index servable with its
+    * marker back. The commit moves the delta's files into `rows/` — what
+    * an append-mode write there would have left — and refreshes
+    * `dropped/` over the union.
+    */
   private def appendCappedIndex(deltaRows: DataFrame, path: String,
                                 ix: CappedIndex): Unit = {
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"${ix.label} at $path has no _SUCCESS marker (missing, mid-build, " +
-        "or torn by a crashed append) — rebuild it before appending")
+    requireCommitted(path, ix.label, "appending")
     checkCappedIndex(path, ix)
-    // the delete IS the mutex, like appendCellIndex: a concurrent
-    // appender whose delete returns false aborts here instead of
-    // interleaving parquet appends into the same rows/ staging dirs
-    require(marker.delete(),
-      s"${ix.label} at $path: could not remove the commit marker " +
-        "(concurrent append, or permissions)")
-    sweepTmp(dst) // post-mutex only (the appendCellIndex discipline)
-    deltaRows.write.mode("append")
-      .parquet(new java.io.File(dst, "rows").toString)
-    refreshDroppedFrom(readPart(deltaRows.sparkSession, path, "rows"),
-      path, ix)
-    java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
+    val rowsDir = new java.io.File(dst, "rows")
+    val scratch = new java.io.File(dst, "rows.append.tmp-" +
+      System.nanoTime())
+    // the claim keeps a concurrent appender from interleaving parquet
+    // appends into the same rows/ directory
+    mutateCommitted(path, ix.label)(
+      deltaRows.write.mode("overwrite").parquet(scratch.toString)) { _ =>
+      swapIn(s"${ix.label} at $path", scratch.listFiles().toSeq.map(f =>
+        f -> new java.io.File(rowsDir, f.getName)))
+      refreshDroppedFrom(readPart(deltaRows.sparkSession, path, "rows"),
+        path, ix)
+    }
   }
 
   /** TAKEDOWN removal from an appendable capped index — the dedup-side
@@ -2951,57 +2928,49 @@ object Artifacts {
     * that was over cap ONLY because of the removed documents, which
     * correctly resurrects. Ids absent from the index are a no-op. The
     * rows rewrite is sketch-sized (what a rebuild would write anyway,
-    * minus the sketch compute); crash safety is the
-    * [[appendCappedIndex]] marker discipline.
+    * minus the sketch compute); both parts are staged in scratch and
+    * swapped in together ([[mutateCommitted]]).
     */
   private def removeFromCappedIndex(removedIds: DataFrame, path: String,
                                     idCol: String, ix: CappedIndex): Unit = {
     val spark = removedIds.sparkSession
     val dst = new java.io.File(path)
-    val marker = new java.io.File(dst, "_SUCCESS")
-    require(marker.exists(),
-      s"${ix.label} at $path has no _SUCCESS marker (missing, mid-build, " +
-        "or torn by a crashed append/remove) — rebuild it before removing")
+    requireCommitted(path, ix.label, "removing")
     checkCappedIndex(path, ix)
-    val rowsDir = new java.io.File(dst, "rows")
     val rm = Dedup.trackedPersist(
       removedIds.select(col(idCol).as(ix.rowIdCol)).distinct())
-    // replayed-takedown no-op BEFORE the marker drop: without it, a
-    // retry of an already-applied removal would tear down the marker
-    // and rewrite the whole rows/ dir for zero work — and a crash in
-    // that needless window bricks the index until rebuild
-    // (code-review r14). Both joins BROADCAST the bounded takedown
-    // list so neither shuffles the full rows/, and the probe's
-    // isEmpty (limit 1) terminates at the first surviving match, so
-    // an EFFECTIVE removal pays a partial scan + the one rewrite
-    // scan, not two full passes (code-review r14, second pass)
+    // replayed-takedown no-op BEFORE the claim: without it, a retry of
+    // an already-applied removal would tear down the marker and rewrite
+    // the whole rows/ dir for zero work — and a crash in that needless
+    // window bricks the index until rebuild (code-review r14). Both
+    // joins BROADCAST the bounded takedown list so neither shuffles the
+    // full rows/, and the probe's isEmpty (limit 1) terminates at the
+    // first surviving match, so an EFFECTIVE removal pays a partial
+    // scan + the one rewrite scan, not two full passes (code-review
+    // r14, second pass)
     if (readPart(spark, path, "rows")
         .join(broadcast(rm), Seq(ix.rowIdCol), "left_semi").isEmpty) return
-    require(marker.delete(),
-      s"${ix.label} at $path: could not remove the commit marker " +
-        "(concurrent mutation, or permissions)")
-    sweepTmp(dst) // post-mutex only (the appendCellIndex discipline)
-    // rows/ is LISTED inside the critical section: the pre-mutex probe
-    // frame's file index could miss a concurrent append landing between
-    // probe and marker delete, and the rewrite below would then erase
-    // every row that append published (code-review r14, eighth pass)
-    val kept = Dedup.trackedPersist(readPart(spark, path, "rows")
-      .join(broadcast(rm), Seq(ix.rowIdCol), "left_anti"))
-    val tmp = new java.io.File(dst, "rows.rewrite.tmp-" +
+    val scratch = new java.io.File(dst, "rows.rewrite.tmp-" +
       System.nanoTime())
-    kept.write.mode("overwrite").parquet(tmp.toString)
-    // dropped/ re-derives from the SURVIVING-rows frame the rewrite
-    // just materialized (optimization r21, guide §1.2): the old path
-    // re-READ the renamed rows/ parquet for the census — a second full
-    // pass over data this mutation had in hand. The refresh runs
-    // BEFORE the swap, while kept's lineage (old rows/ minus the
-    // broadcast takedown list) is still recomputable from disk.
-    refreshDroppedFrom(kept, path, ix)
-    kept.unpersist(blocking = false)
-    deleteRec(rowsDir)
-    require(tmp.renameTo(rowsDir),
-      s"${ix.label} at $path: could not swap the rewritten rows in")
-    java.nio.file.Files.write(marker.toPath, Array.empty[Byte]): Unit
+    mutateCommitted(path, ix.label) {
+      // rows/ is LISTED inside the claim: the pre-claim probe frame's
+      // file index could miss a concurrent append landing between probe
+      // and claim, and the rewrite below would then erase every row that
+      // append published (code-review r14, eighth pass)
+      val kept = Dedup.trackedPersist(readPart(spark, path, "rows")
+        .join(broadcast(rm), Seq(ix.rowIdCol), "left_anti"))
+      kept.write.mode("overwrite")
+        .parquet(new java.io.File(scratch, "rows").toString)
+      // dropped/ re-derives from the SURVIVING-rows frame the rewrite
+      // just materialized (optimization r21, guide §1.2): the old path
+      // re-READ the renamed rows/ parquet for the census — a second
+      // full pass over data this mutation had in hand
+      refreshDroppedFrom(kept, scratch.toString, ix)
+      kept.unpersist(blocking = false)
+    } { _ =>
+      swapIn(s"${ix.label} at $path", Seq("rows", "dropped").map(part =>
+        new java.io.File(scratch, part) -> new java.io.File(dst, part)))
+    }
   }
 
   /** [[checkParams]] plus the `_schemas` sidecar every capped-index
@@ -3015,9 +2984,7 @@ object Artifacts {
 
   private def readCappedIndex(spark: SparkSession, path: String,
                               ix: CappedIndex): DataFrame = {
-    require(new java.io.File(path, "_SUCCESS").exists(),
-      s"${ix.label} at $path has no _SUCCESS marker (missing, mid-build, " +
-        "or torn by a crashed append) — rebuild it before serving")
+    requireCommitted(path, ix.label, "serving")
     checkCappedIndex(path, ix)
     val rows = readPart(spark, path, "rows")
     val dropped = readPart(spark, path, "dropped")

@@ -2559,4 +2559,86 @@ class ArtifactsSpec extends SparkSpecBase {
         "same cache key must serve the stored rows, not re-sketch")
     }
   }
+
+  test("a pinned artifact trains once when Spark writes no job-commit " +
+       "marker (marksuccessfuljobs=false): ensureTrained stamps its own") {
+    // the standard Hadoop setting suppresses the committer's marker file;
+    // the entry must still read as published, not as a wreck to retrain
+    val conf = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val key = s"artifacts-spec-nomarker-${System.nanoTime()}"
+    var trained = 0
+    def serve() = Artifacts.BpeMerges.serve(spark, key, 2) {
+      trained += 1
+      TextAnalysis.bpeInduct(docs.limit(20), 2)
+    }
+    spark.conf.set(conf, "false")
+    try {
+      val first = serve()
+      val second = serve()
+      assert(trained == 1, s"the stored entry was retrained ($trained runs)")
+      assert(second == first)
+    } finally spark.conf.unset(conf)
+  }
+
+  test("a capped append whose batch fails at run time keeps the index " +
+       "servable: marker back, rows unchanged, the next append works") {
+    import graft.northstar.Multimodal
+    import org.apache.spark.sql.DataFrame
+    val texts = docs.orderBy("doc_id").limit(24).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
+    def assets(gen: Long => Array[Byte]) =
+      (0L until 12L).map(id => (id, gen(id))).toDF("asset_id", "payload")
+    // (name, kind, corpus, id column, payload column the sketch reads)
+    val cases = Seq(
+      ("winnow", Artifacts.CappedIndex.winnow(maxBucket = 100), texts,
+        "doc_id", "text"),
+      ("band", Artifacts.CappedIndex.band(maxBucket = 100), texts,
+        "doc_id", "text"),
+      ("imageHash", Artifacts.CappedIndex.imageHash(),
+        assets(Multimodal.syntheticPatternPng(_)), "asset_id", "payload"),
+      ("audioHash", Artifacts.CappedIndex.audioHash(),
+        assets(Multimodal.syntheticPatternWav(_)), "asset_id", "payload"))
+    for ((name, ix, corpus, idCol, payloadCol) <- cases) {
+      val half = (df: DataFrame, r: Int) => df.filter(col(idCol) % 2 === r)
+      val p = s"${tempDir("cappedpoison")}/idx"
+      ix.save(half(corpus, 0), p)
+      val before = rows(ix.load(spark, p))
+      // one row's payload is an ANSI cast that fails only when the
+      // append's write evaluates it
+      val poisonId = half(corpus, 1).agg(min(idCol)).head().getLong(0)
+      val payloadType = corpus.schema(payloadCol).dataType
+      val poisoned = half(corpus, 1).withColumn(payloadCol,
+        when(col(idCol) === poisonId,
+            expr("cast('x' as int)").cast("string").cast(payloadType))
+          .otherwise(col(payloadCol)))
+      intercept[Exception](ix.append(poisoned, p))
+      assert(new java.io.File(p, "_SUCCESS").exists(),
+        s"$name: a failed batch must republish the commit marker")
+      assert(rows(ix.load(spark, p)) == before,
+        s"$name: a failed batch must leave the served rows as they were")
+      ix.append(half(corpus, 1), p)
+      val union = s"${tempDir("cappedpoison")}/idx"
+      ix.save(corpus, union)
+      assert(rows(ix.load(spark, p)) == rows(ix.load(spark, union)),
+        s"$name: the clean append after the failure must land whole")
+    }
+  }
+
+  test("the commit marker's file name is spelled in exactly one place " +
+       "in the program sources") {
+    // every refusal, claim, stamp and swap goes through the Artifacts
+    // marker defs; a second spelling is a verb that hand-rolls the
+    // protocol again
+    val spellings = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+          .filter(_._1.contains("_SUCCESS"))
+          .map { case (_, i) => s"$f:${i + 1}" }
+      }
+    assert(spellings.size == 1 &&
+      spellings.head.contains("northstar/Artifacts.scala:"),
+      s"the marker name must be spelled once, found: $spellings")
+  }
 }
