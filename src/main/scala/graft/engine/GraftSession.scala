@@ -30,6 +30,14 @@ import org.apache.spark.sql.SparkSession
   * keeps one `file:` file system per JVM and user, built by whichever
   * code asked for it first, so a reused session or an earlier caller in
   * the same JVM can keep the stock one; the factory then warns.
+  *
+  * `spark.sql.ui.explainMode` is `simple`. Spark formats the plan of
+  * every SQL execution start and every adaptive re-plan for its event
+  * (the physical plan description), on the query thread, whether or
+  * not a UI is there to show it; the default `formatted` mode prints
+  * the tree and then each operator again with its details. `simple`
+  * prints the tree once; a file scan's location in it is abbreviated to
+  * `spark.sql.maxMetadataStringLength` characters.
   */
 object GraftSession {
 
@@ -56,6 +64,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(CodegenCacheKey, CodegenCacheEntries.toString)
+      .config("spark.sql.ui.explainMode", "simple")
       .config(s"spark.hadoop.$FileImplKey", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     // getOrCreate silently IGNORES every config above when any session

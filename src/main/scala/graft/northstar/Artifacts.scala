@@ -186,9 +186,10 @@ object Artifacts {
     *   4. `commit`: touches live files. A throw here leaves the loud
     *      marker-less wreck every reader refuses, never a
     *      silently-partial index;
-    *   5. `advisory`: telemetry after the data is committed, still
-    *      inside the window (a late drift line must not land on a
-    *      concurrent rebuild's fresh history, ADVICE r15). The scratch
+    *   5. `advisory`: telemetry over what the commit returned, after
+    *      the data is committed, still inside the window (a late drift
+    *      line must not land on a concurrent rebuild's fresh history,
+    *      ADVICE r15). The scratch
     *      sweep and the republish run in its finally, so even a fatal
     *      error here cannot strand a committed mutation (ADVICE r16).
     * Every read the mutation relies on belongs in `stage`, after the
@@ -200,14 +201,14 @@ object Artifacts {
   private def mutateCommitted[S, R](path: String, what: String,
                                     overwrite: Boolean = false)(
       stage: => S)(commit: S => R,
-                   advisory: S => Unit = (_: S) => ()): R = {
+                   advisory: R => Unit = (_: R) => ()): R = {
     val dst = new java.io.File(path)
     if (overwrite) marker(dst).delete(): Unit else claimMarker(path, what)
     sweepTmp(dst)
     def release(): Unit = { sweepTmp(dst); stampMarker(dst) }
     val staged = try stage catch { case t: Throwable => release(); throw t }
     val out = commit(staged)
-    try advisory(staged) finally release()
+    try advisory(out) finally release()
     out
   }
 
@@ -1479,6 +1480,17 @@ object Artifacts {
       pqResolveVectors(corpus, path, idCol, vecCol, s"${fam.label} append"))
   }
 
+  /** `body`, then every frame this thread tracked while it ran is
+    * released ([[Dedup.releaseThreadTrackedSince]]): the persists a
+    * mutation verb owns — the incoming assignment, the takedown list,
+    * the PQ resolver's corpus join — which nothing it returns
+    * references.
+    */
+  private def releasingTracked[T](body: => T): T = {
+    val before = Dedup.threadTrackedSnapshot()
+    try body finally Dedup.releaseThreadTrackedSince(before)
+  }
+
   /** Shared census → split-diff → append/rewrite → republish sequence
     * behind [[appendIvfIndex]] and [[appendIvfPqIndex]] (the
     * [[writeCellIndexAssigned]] discipline: the mutation protocol exists
@@ -1488,13 +1500,16 @@ object Artifacts {
     */
   private def appendCellIndex(
       incoming: DataFrame, path: String, idCol: String, fam: CellFamily,
-      resolveVectors: DataFrame => DataFrame): Map[Int, Int] = {
+      resolveVectors: DataFrame => DataFrame): Map[Int, Int] =
+      releasingTracked {
     val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = incoming.sparkSession
     val dst = new java.io.File(path)
     requireCommitted(path, what, "appending")
     checkCellIndex(path, fam)
     val indexDir = new java.io.File(dst, "index")
+    // the drift value (or the aggregate's failure) and the batch rows
+    type DriftRun = Option[(scala.util.Try[Double], Long)]
     // every census/splits read happens inside the claim: two concurrent
     // appenders both passed the marker probe and collected censuses, and
     // the mutex LOSER then appended under the stale split map — if the
@@ -1574,19 +1589,22 @@ object Artifacts {
       // census (drift_base — the distribution the quantizers were
       // trained alongside; the live stored census would dilute under
       // sustained drift, code-review r15) with its total from the
-      // drift_total sidecar (no aggregation job). Computed here,
-      // recorded in the advisory phase (it must not touch a wreck).
-      // All-frames: one tv aggregate, O(1) driver rows; skipped for a
-      // zero-row batch.
+      // drift_total sidecar (no aggregation job). Planned here, run in
+      // the commit beside the unchanged-cell append (its one consumer
+      // is the advisory record, so it need not hold up the census →
+      // rewrite chain), recorded in the advisory phase (it must not
+      // touch a wreck). All-frames: one tv aggregate, O(1) driver rows;
+      // skipped for a zero-row batch.
       val incomingTotal = inStats("total").asInstanceOf[Long]
       val baseTotal = readDriftTotal(path)
       val drift =
-        if (incomingTotal > 0 && baseTotal > 0)
-          Some((Ivf.censusDriftFrames(readPart(spark, path, "drift_base"),
+        if (incomingTotal > 0 && baseTotal > 0) {
+          val base = readPart(spark, path, "drift_base")
+          Some((() => Ivf.censusDriftFrames(base,
             incomingCensus.select("cell", "count"),
             baseTotal = Some(baseTotal),
             incomingTotal = Some(incomingTotal)), incomingTotal))
-        else None
+        } else None
       // changed cells are rewritten whole into scratch: existing rows
       // (vectors resolved back — the PQ corpus tripwire runs here, still
       // staged) + incoming rows, re-projected under newSplits
@@ -1606,55 +1624,67 @@ object Artifacts {
     }({ case (assignedIncoming, newSplits, changed, drift, scratch) =>
       // incoming rows of UNchanged cells append straight into their
       // partitions (their subcell derivation under newSplits equals
-      // the old one — bits only differ on changed cells), then the
-      // changed cells swap in and the split map is republished
-      clusterByCell(project(assignedIncoming
-          .filter(!col("cell").isin(changed.map(Int.box): _*)), newSplits))
-        .write.mode("append").partitionBy("cell").parquet(indexDir.toString)
+      // the old one — bits only differ on changed cells), with the
+      // drift aggregate running beside the write; both are joined here
+      // before the changed cells swap in and the split map is
+      // republished. A drift failure (NonFatal) is kept as a value for
+      // the advisory phase, never a commit failure.
+      val unchanged = project(assignedIncoming
+        .filter(!col("cell").isin(changed.map(Int.box): _*)), newSplits)
+      val driftRun = graft.engine.Parallel.map(spark, Seq(
+          () => {
+            clusterByCell(unchanged).write.mode("append")
+              .partitionBy("cell").parquet(indexDir.toString)
+            None
+          },
+          () => drift.map { case (d, n) => (scala.util.Try(d()), n) }))(_())
+        .flatten.headOption
       swapIn(s"$what at $path", changed.map(c =>
         new java.io.File(scratch, s"cell=$c") ->
           new java.io.File(indexDir, s"cell=$c")), mayBeEmpty = true)
       writeSplitsFile(path, newSplits)
-      newSplits
-    }, { case (_, _, _, drift, _) =>
+      (newSplits, driftRun)
+    }, { (committed: (Map[Int, Int], DriftRun)) =>
       // one drift.log line per append: epoch millis, batch rows, the
       // censusDrift value; [[appendDriftHistory]] reads it back and a
       // batch over the retrain bar additionally WARNs right here, where
-      // the nightly-append operator sees it
-      drift.foreach { case (d, n) =>
-        // ADVISORY means advisory: the data mutation has fully
-        // succeeded, so a telemetry I/O failure here must not surface
-        // as an append failure — the natural retry would double-append
-        // the batch, and the raw-vector family has no duplicate
-        // tripwire (code-review r15). NonFatal only (ADVICE r15): an
-        // OutOfMemoryError or interrupt must still propagate.
-        // Locale.ROOT: a comma-decimal default locale would write
-        // "drift=0,37" and silently break appendDriftHistory's parse
-        // (the KernelEdgeSpec locale class).
-        try
-          java.nio.file.Files.write(
-            new java.io.File(dst, "drift.log").toPath,
-            String.format(java.util.Locale.ROOT,
-              "ts=%d rows=%d drift=%.6f%n",
-              Long.box(System.currentTimeMillis()), Long.box(n),
-              Double.box(d))
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND): Unit
-        catch { case scala.util.control.NonFatal(t) =>
-          Console.err.println(
-            s"[graft] WARN $what at $path: could not record drift " +
-              s"telemetry (${t.getMessage}) — the append itself succeeded")
-        }
-        if (d > Ivf.RetrainDriftThreshold)
-          Console.err.println(
-            f"[graft] WARN $what at $path: append batch ($n rows) census " +
-              f"drift $d%.3f exceeds the retrain bar " +
-              f"${Ivf.RetrainDriftThreshold} — the pinned quantizers no " +
-              s"longer model the incoming distribution; schedule ${fam.retrain} " +
-              "(recall on drifted rows decays silently otherwise)")
+      // the nightly-append operator sees it.
+      // ADVISORY means advisory: the data mutation has fully
+      // succeeded, so a failed drift aggregate or telemetry write here
+      // must not surface as an append failure — the natural retry
+      // would double-append the batch, and the raw-vector family has
+      // no duplicate tripwire (code-review r15). NonFatal only (ADVICE
+      // r15): an OutOfMemoryError or interrupt must still propagate.
+      def unrecorded(t: Throwable): Unit =
+        Console.err.println(
+          s"[graft] WARN $what at $path: could not record drift " +
+            s"telemetry (${t.getMessage}) — the append itself succeeded")
+      committed._2.foreach {
+        case (scala.util.Failure(t), _) => unrecorded(t)
+        case (scala.util.Success(d), n) =>
+          // Locale.ROOT: a comma-decimal default locale would write
+          // "drift=0,37" and silently break appendDriftHistory's parse
+          // (the KernelEdgeSpec locale class).
+          try
+            java.nio.file.Files.write(
+              new java.io.File(dst, "drift.log").toPath,
+              String.format(java.util.Locale.ROOT,
+                "ts=%d rows=%d drift=%.6f%n",
+                Long.box(System.currentTimeMillis()), Long.box(n),
+                Double.box(d))
+                .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+              java.nio.file.StandardOpenOption.CREATE,
+              java.nio.file.StandardOpenOption.APPEND): Unit
+          catch { case scala.util.control.NonFatal(t) => unrecorded(t) }
+          if (d > Ivf.RetrainDriftThreshold)
+            Console.err.println(
+              f"[graft] WARN $what at $path: append batch ($n rows) census " +
+                f"drift $d%.3f exceeds the retrain bar " +
+                f"${Ivf.RetrainDriftThreshold} — the pinned quantizers no " +
+                s"longer model the incoming distribution; schedule ${fam.retrain} " +
+                "(recall on drifted rows decays silently otherwise)")
       }
-    })
+    })._1
   }
 
   /** Canonicalize a cell index's `drift.log` in place, under the marker
@@ -1692,7 +1722,7 @@ object Artifacts {
       java.nio.file.Files.write(ltmp.toPath,
         lines.mkString("", "\n", if (lines.isEmpty) "" else "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit)(
-      _ => (), _ =>
+      _ => (), (_: Unit) =>
         java.nio.file.Files.move(ltmp.toPath, logFile.toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit)
@@ -2409,14 +2439,30 @@ object Artifacts {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
   /** The compaction rewrite both compactors stage: `dir` rewritten into
-    * ceil(bytes / targetFileBytes) files at the scratch path `out`.
+    * ceil(bytes / targetFileBytes) files at the scratch path `out`, in
+    * the [[rowDerivedLayout]].
     */
   private def compactInto(spark: SparkSession, dir: java.io.File,
                           out: java.io.File, targetFileBytes: Long): Unit = {
     val nFiles = math.max(1, math.ceil(
       parquetFiles(dir).map(_.length).sum.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(dir.toString).repartition(nFiles)
+    rowDerivedLayout(spark.read.parquet(dir.toString), nFiles)
       .write.mode("overwrite").parquet(out.toString)
+  }
+
+  /** `df` as `nFiles` write partitions that are functions of the rows
+    * alone: hash-partitioned on every orderable column and sorted on
+    * them within each partition, so the same rows give the same files
+    * with the same row order. A rewrite's read order varies from run to
+    * run (the input file names carry a per-write UUID), and so does any
+    * layout that follows it.
+    */
+  private def rowDerivedLayout(df: DataFrame, nFiles: Int): DataFrame = {
+    val keys = df.schema.fields.toSeq
+      .filter(f => org.apache.spark.sql.catalyst.expressions.RowOrdering
+        .isOrderable(f.dataType))
+      .map(f => col(s"`${f.name}`"))
+    df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)
   }
 
   /** [[compactCellIndex]] for the flat `rows/` directory of the
@@ -2531,7 +2577,8 @@ object Artifacts {
     */
   private def removeFromCellIndex(
       removedIds: DataFrame, path: String, idCol: String, fam: CellFamily,
-      resolveVectors: DataFrame => DataFrame): Map[Int, Int] = {
+      resolveVectors: DataFrame => DataFrame): Map[Int, Int] =
+      releasingTracked {
     val (what, maxCell, project) = (fam.what, fam.maxCell, fam.project)
     val spark = removedIds.sparkSession
     val dst = new java.io.File(path)
@@ -2547,8 +2594,8 @@ object Artifacts {
     // census the mutation relies on is re-read INSIDE the claim.
     if (readPart(spark, path, "index")
         .join(broadcast(rm), Seq("neighbor_id"), "left_semi").isEmpty)
-      return readSplits(dst)
-    mutateCommitted(path, what) {
+      readSplits(dst)
+    else mutateCommitted(path, what) {
       val oldSplits = readSplits(dst)
       val index = readPart(spark, path, "index")
       // ONE census pass, ONE action (optimization r20 made it one scan;
@@ -2957,9 +3004,13 @@ object Artifacts {
       // file index could miss a concurrent append landing between probe
       // and claim, and the rewrite below would then erase every row that
       // append published (code-review r14, eighth pass)
-      val kept = Dedup.trackedPersist(readPart(spark, path, "rows")
-        .join(broadcast(rm), Seq(ix.rowIdCol), "left_anti"))
-      kept.write.mode("overwrite")
+      val rows = readPart(spark, path, "rows")
+      val kept = Dedup.trackedPersist(
+        rows.join(broadcast(rm), Seq(ix.rowIdCol), "left_anti"))
+      // as many files as the read of rows/ has partitions, each in the
+      // row-derived layout
+      rowDerivedLayout(kept, rows.rdd.getNumPartitions)
+        .write.mode("overwrite")
         .parquet(new java.io.File(scratch, "rows").toString)
       // dropped/ re-derives from the SURVIVING-rows frame the rewrite
       // just materialized (optimization r21, guide §1.2): the old path

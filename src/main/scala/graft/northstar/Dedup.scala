@@ -757,25 +757,32 @@ object Dedup {
     * and an EXISTING corpus — the nightly-ingest near-dedup (the exact
     * half is [[graft.northstar]]'s fingerprint anti-join, `ns_corpus_merge`;
     * this catches re-crawled pages with small edits that exact
-    * fingerprints miss). Same banded construction, estimate screen, and
+    * fingerprints miss). Same banding, bucket caps, estimate screen and
     * exact-Jaccard verify as [[minhashPairs]], but the band-bucket join
     * is incoming ⋈ corpus instead of a self-join: candidates are only
-    * cross-slice, never within-slice, so the incoming side's (small)
-    * signature table joins the corpus's banded table on band_hash — at
-    * 100 TB the corpus bands can be precomputed and bucketed/persisted,
-    * making the nightly screen a join against a static index. Output:
-    * (doc_a ∈ incoming, doc_b ∈ corpus, jaccard ≥ threshold). Ids must
-    * be unique across the two frames.
+    * cross-slice, never within-slice. Output: (doc_a ∈ incoming,
+    * doc_b ∈ corpus, jaccard ≥ threshold).
+    *
+    * Plan ([[screenAgainst]]): the corpus is signed once, and only the
+    * corpus buckets the batch touches go further — its band rows are
+    * semi-joined against the batch's broadcast band hashes, and the
+    * `maxBucket` cap counts each touched bucket over that subset, which
+    * holds every corpus row of the bucket, so the count (and the kept
+    * rows) equal a cap over the whole corpus. Only candidate pairs are
+    * shingled for the exact Jaccard. Nothing is persisted.
+    *
+    * Ids are expected to be unique across the two frames; an id present
+    * in both is verified against each of its texts, one output row per
+    * (doc_a text, doc_b text) combination that passes the threshold.
     */
   def minhashPairsAgainst(incoming: DataFrame, corpus: DataFrame,
                           textCol: String = "text", idCol: String = "doc_id",
                           k: Int = 16, bands: Int = 8,
                           threshold: Double = 0.7,
                           maxBucket: Int = 1000): DataFrame =
-    minhashPairsAgainstIndex(incoming,
-      bandIndex(corpus, textCol, idCol, k, bands, maxBucket),
-      corpus.select(col(idCol), col(textCol)),
-      textCol, idCol, k, bands, threshold, maxBucket)
+    screenAgainst(incoming, bandRows(corpus, textCol, idCol, k, bands),
+      capCorpus = true, corpus, textCol, idCol, k, bands, threshold,
+      maxBucket)
 
   /** The corpus's banded-signature index as a plain frame
     * (id, mh, band_hash) — every column is hash-deterministic, so the
@@ -789,14 +796,16 @@ object Dedup {
     * k/bands disagree with what the index was built with (band hashes of
     * mismatched parameters never collide, so the silent outcome would be
     * zero pairs — a false-clean at the safety-critical dedup layer).
+    *
+    * This is the artifact builder: the in-query screen
+    * [[minhashPairsAgainst]] does not go through it. The signed rows
+    * are persisted once (tracked, see [[releasePersisted]]) because the
+    * cap's count branch and its semi-join would each re-run the minhash
+    * kernel over the whole frame.
     */
   def bandIndex(df: DataFrame, textCol: String = "text",
                 idCol: String = "doc_id", k: Int = 16, bands: Int = 8,
                 maxBucket: Int = 1000): DataFrame =
-    // materialize once before the cap: its count branch and semi-join
-    // would re-run the minhash kernel (the minhashPairs recompute shape
-    // — matters for the in-query incoming-batch screens; the parquet
-    // artifact path materializes anyway)
     capBuckets(materializeOnce(bandRows(df, textCol, idCol, k, bands)),
       Seq("band_hash"), maxBucket)
       .withColumn("__k", lit(k)).withColumn("__bands", lit(bands))
@@ -822,13 +831,17 @@ object Dedup {
 
   /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
     * [[bandIndex]], possibly parquet-round-tripped) plus the (id, text)
-    * corpus frame for the exact-Jaccard verify of the candidates.
+    * corpus frame for the exact-Jaccard verify of the candidates. The
+    * index's caps were applied when it was built, so only the batch
+    * side is capped here; the index is semi-joined against the batch's
+    * band hashes like the frame form's corpus rows.
     *
     * INVARIANT: the caller's k/bands MUST match the parameters the index
     * was built with. When the index carries the `__k`/`__bands` artifact
     * columns (every index built since they were added does; older stored
-    * indexes may not), the check rides the plan as an `assert_true` and
-    * a mismatch fails the job instead of silently screening zero pairs.
+    * indexes may not), the check rides the plan as an `assert_true` on
+    * every index row and a mismatch fails the job instead of silently
+    * screening zero pairs.
     */
   def minhashPairsAgainstIndex(incoming: DataFrame, corpusIndex: DataFrame,
                                corpusTexts: DataFrame,
@@ -847,20 +860,63 @@ object Dedup {
                 lit(s", probed with $k/$bands"))).isNull,
             col("band_hash")))
       else corpusIndex
-    val screened = bandIndex(incoming, textCol, idCol, k, bands, maxBucket)
+    screenAgainst(incoming, checked, capCorpus = false, corpusTexts,
+      textCol, idCol, k, bands, threshold, maxBucket)
+  }
+
+  /** The one screen body of [[minhashPairsAgainst]] and
+    * [[minhashPairsAgainstIndex]]. `corpusRows` are (id, mh, band_hash)
+    * corpus band rows; with `capCorpus` they are uncapped and the
+    * `maxBucket` cap is applied here, over the buckets the batch touches.
+    */
+  private def screenAgainst(incoming: DataFrame, corpusRows: DataFrame,
+                            capCorpus: Boolean, corpusTexts: DataFrame,
+                            textCol: String, idCol: String, k: Int,
+                            bands: Int, threshold: Double,
+                            maxBucket: Int): DataFrame = {
+    val batchRows = bandRows(incoming, textCol, idCol, k, bands)
+    val batch = capByCount(batchRows, maxBucket)
+    // the semi-join keeps every corpus row of each touched bucket, so a
+    // count over the subset is the whole-corpus bucket count. It screens
+    // on the UNcapped batch hashes: a superset of the capped batch's,
+    // whose extra buckets the candidate join drops, and a broadcast that
+    // needs no shuffle of the batch first
+    val touched = corpusRows.select("id", "mh", "band_hash")
+      .join(broadcast(batchRows.select("band_hash")), Seq("band_hash"),
+        "left_semi")
+    val corpusSide = if (capCorpus) capByCount(touched, maxBucket) else touched
+    val candidates = batch
       .select(col("band_hash"), col("id").as("doc_a"), col("mh").as("mh_a"))
-      .join(checked.select(col("band_hash"), col("id").as("doc_b"),
+      .join(corpusSide.select(col("band_hash"), col("id").as("doc_b"),
         col("mh").as("mh_b")), Seq("band_hash"))
       .filter(estimatedJaccard(col("mh_a"), col("mh_b"))
         >= threshold - 2.0 / k)
       .select("doc_a", "doc_b").distinct()
-    // project to (id, text) first: the two frames may carry different
-    // extra columns, and the verify join needs only these two
-    jaccardForPairs(
-      incoming.select(col(idCol), col(textCol))
-        .unionByName(corpusTexts.select(col(idCol), col(textCol))),
-      screened, textCol, idCol)
+    // the texts of both frames, looked up by id on either side of a
+    // pair: an id in both frames verifies against each of its texts
+    val texts = incoming.select(col(idCol).as("__id"), col(textCol).as("__t"))
+      .unionByName(corpusTexts.select(col(idCol).as("__id"),
+        col(textCol).as("__t")))
+    def side(doc: String, text: String): DataFrame =
+      texts.select(col("__id").as(doc), col("__t").as(text))
+    candidates
+      .join(side("doc_a", "text_a"), Seq("doc_a"))
+      .join(side("doc_b", "text_b"), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        jaccard(shingles(col("text_a")), shingles(col("text_b")))
+          .as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** [[capBuckets]] on `band_hash` as ONE pass: a per-bucket window count
+    * keeps each row of a bucket of at most `maxBucket` rows, so the
+    * frame is evaluated once instead of once per branch.
+    */
+  private def capByCount(banded: DataFrame, maxBucket: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    banded
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy("band_hash")))
+      .filter(col("__n") <= maxBucket).drop("__n")
   }
 
   /** Freeze a benchmark's distinct word n-grams into a serialized Bloom

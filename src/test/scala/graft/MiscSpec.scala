@@ -15,10 +15,14 @@ class MiscSpec extends SparkSpecBase {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNanos = spark.conf
       .getOption("spark.sql.legacy.parquet.nanosAsLong")
+    val prevExplain = spark.conf.get("spark.sql.ui.explainMode")
     try body
     finally {
       spark.conf.set("spark.sql.session.timeZone", prevTz)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // the factory's simple explain mode abbreviates scan locations in
+      // the plan descriptions later suites match paths against
+      spark.conf.set("spark.sql.ui.explainMode", prevExplain)
       // restore the legacy flag too: leaving it flipped on the shared
       // singleton changes later suites' parquet schemas (code-review
       // r14 — the exact cross-contamination this file's tsnorm test
