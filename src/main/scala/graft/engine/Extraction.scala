@@ -13,16 +13,18 @@ import graft.sources.{CsvStore, JsonlStore, ParquetStore, Store}
   * string-quotes the value and leans on MySQL implicit casts; we keep the
   * declared comparison semantics — SURVEY.md §7.5.4).
   *
-  * Where the watermark comes from: every load [[runJob]] makes into a
-  * parquet target records the max of the written first column, riding
-  * the write's own row-count observation, in the table layer's per-JVM
-  * reuse memo (`Tables.Written`). While the target's listing is still
-  * the one that write left, the next incremental load takes the
-  * watermark from there and runs no job for it. Otherwise — a new JVM,
-  * a target another writer touched, a JDBC target, a first column that
-  * is not orderable, or the public [[incrementalLoad]] — it probes the
+  * Every load — [[fullRefresh]], [[incrementalLoad]] and each table of
+  * [[runJob]] — is one per-table [[load]]. Into a parquet target it
+  * records the max of the written first column, riding the write's own
+  * row-count observation, in the table layer's per-JVM record of the
+  * target path (`Tables.Written`). Watermarks come from the record:
+  * while the target's listing is still the one that write left, the
+  * next incremental load takes the watermark from there and runs no job
+  * for it. Otherwise — a new JVM, a target another writer touched, a
+  * JDBC target, a first column that is not orderable — it probes the
   * target: one scalar MAX job over the watermark column only
-  * (column-pruned scan).
+  * (column-pruned scan). Skipping a load needs a fingerprint the engine
+  * built, which only [[runJob]] passes.
   *
   * Scale notes: the incremental filter is a plain predicate on the source
   * scan — Catalyst pushes it into the parquet/JDBC reader, so an
@@ -49,11 +51,8 @@ object Extraction {
     * (the reference's target is always a MySQL DB).
     */
   def fullRefresh(source: DataFrame, target: Store,
-                  table: String): ExtractResult = {
-    val (_, rows, _) =
-      Tables.observed(source)(target.write(_, table, mode = "overwrite"))
-    ExtractResult(table, "Full Refresh", rows)
-  }
+                  table: String): ExtractResult =
+    load(source.sparkSession, source, None, target, table, "Full Refresh")._1
 
   /** The rows of `source` strictly past `target`'s high watermark
     * (max of the first column); whole source when the target is absent or
@@ -82,13 +81,8 @@ object Extraction {
     * chunked `to_sql` (data_extraction.py:51).
     */
   def incrementalLoad(spark: SparkSession, source: DataFrame,
-                      target: Store, table: String): ExtractResult = {
-    val existing = target.readIfExists(spark, table)
-    val mode = if (existing.isDefined) "append" else "overwrite"
-    val (_, rows, _) = Tables.observed(incrementalRows(source, existing))(
-      target.write(_, table, mode))
-    ExtractResult(table, "Incremental Load", rows)
-  }
+                      target: Store, table: String): ExtractResult =
+    load(spark, source, None, target, table, "Incremental Load")._1
 
   /** Per-table extraction config (extraction.json,
     * data_extraction.py:110-144): mode is "Full Refresh" or
@@ -109,15 +103,9 @@ object Extraction {
     * ([[Parallel.map]]); results come back in `jobs` order, and every
     * table has finished when this returns.
     *
-    * A load into a parquet target goes through the table layer's reuse
-    * memo (`Tables.Written`): a Full Refresh whose source frame has the
-    * fingerprint of the target's recorded overwrite, and whose target
-    * still shows the listing that write left, is skipped and reports
-    * the rows it wrote; an Incremental Load of a source with the
-    * fingerprint of the target's last recorded write (which took every
-    * source row up to a known max) is skipped with 0 rows; and an
-    * Incremental Load takes its watermark from the memo (see the
-    * object's note). Only a source read by one of the engine's file
+    * Each table's source is fingerprinted, so a load into a parquet
+    * target that would write what the target's record says it holds is
+    * skipped ([[load]]). Only a source read by one of the engine's file
     * stores is fingerprinted: a custom [[Store]]'s read could carry a
     * UDF, whose body no fingerprint sees.
     */
@@ -137,24 +125,7 @@ object Extraction {
             Tables.fingerprint(src)
           case _ => None
         }
-        Right((j.mode, target) match {
-          case ("Incremental Load", ParquetStore(dir)) =>
-            incrementalRecorded(spark, src, fp, dir, j.table)
-          case ("Full Refresh", ParquetStore(dir)) =>
-            val (w, reused) = Tables.overwriteReusing(src, dir, j.table, fp)
-            (ExtractResult(j.table, j.mode, w.rows), reused)
-          case ("Incremental Load", _) =>
-            (incrementalLoad(spark, src, target, j.table), false)
-          case ("Full Refresh", _) => (fullRefresh(src, target, j.table), false)
-          // a catch-all-to-fullRefresh turned a typo'd or re-cased mode
-          // string ("incremental load") into mode=overwrite — silently
-          // replacing an accumulated incremental target with the
-          // source's current window (code-review r13). Unknown modes
-          // fail the TABLE (a Left), like any other per-table error.
-          case (other, _) => throw new IllegalArgumentException(
-            s"unknown extraction mode '$other' for ${j.table} " +
-              "(expected 'Full Refresh' or 'Incremental Load')")
-        })
+        Right(load(spark, src, fp, target, j.table, j.mode))
       } catch {
         // NonFatal: swallowing an OutOfMemoryError or interrupt into a
         // per-table Left and continuing 49 more jobs on a broken JVM is
@@ -163,30 +134,50 @@ object Extraction {
       }
     }
 
-  /** E2 into the parquet table `dir/table` through the reuse memo. The
-    * skip is exact: the recorded write of this same source appended (or
-    * wrote) every row past the watermark it used, so every non-null
-    * first-column value of the source is at most the recorded max, and
-    * `past` would select nothing. A recorded max that is null would
-    * select the whole source again, so that load runs.
+  /** E1 or E2 (`mode`) of `src` into `target`'s `table`, returning
+    * whether it was skipped. Into a parquet target the load reads and
+    * leaves the path's record: a Full Refresh is skipped, reporting the
+    * rows it wrote, when the record's overwrite was of a frame with
+    * fingerprint `fp`; an Incremental Load is skipped with 0 rows when
+    * the record's write was of such a frame and left a non-null max.
+    * That skip is exact: that write appended (or wrote) every source row
+    * past the watermark it used, so every non-null first-column value of
+    * the source is at most the recorded max, and `past` would select
+    * nothing. Into other stores every load runs, and an incremental
+    * one probes.
     */
-  private def incrementalRecorded(spark: SparkSession, src: DataFrame,
-      fp: Option[String], dir: String,
-      table: String): (ExtractResult, Boolean) = {
-    val last = Tables.lastWrite(spark, dir, table)
-    def result(rows: Long) = ExtractResult(table, "Incremental Load", rows)
-    if (last.exists(w => fp.isDefined && w.fingerprint == fp &&
-        w.max.flatten.isDefined)) (result(0), true)
-    else {
-      // Some(watermark) when the target exists
-      val wm = last.flatMap(_.max)
-        .orElse(ParquetStore(dir).readIfExists(spark, table).map(probe))
-      val w = wm match {
-        case None => Tables.writeRecorded(src, dir, table, "overwrite", fp)
-        case Some(v) =>
-          Tables.writeRecorded(past(src, v), dir, table, "append", fp, v)
-      }
-      (result(w.rows), false)
+  private def load(spark: SparkSession, src: DataFrame, fp: Option[String],
+      target: Store, table: String,
+      mode: String): (ExtractResult, Boolean) = {
+    val full = mode match {
+      case "Full Refresh" => true
+      case "Incremental Load" => false
+      // a catch-all-to-fullRefresh turned a typo'd or re-cased mode
+      // string ("incremental load") into mode=overwrite — silently
+      // replacing an accumulated incremental target with the source's
+      // current window (code-review r13). Unknown modes fail the TABLE
+      // (a Left in runJob), like any other per-table error.
+      case other => throw new IllegalArgumentException(
+        s"unknown extraction mode '$other' for $table " +
+          "(expected 'Full Refresh' or 'Incremental Load')")
+    }
+    def result(rows: Long) = ExtractResult(table, mode, rows)
+    val dir = Some(target).collect { case ParquetStore(d) => d }
+    lazy val last = dir.flatMap(Tables.lastWrite(spark, _, table))
+    val reusable = if (fp.isEmpty) None else last.filter(w =>
+      w.fingerprint == fp && (if (full) w.overwrite else w.max.flatten.isDefined))
+    reusable match {
+      case Some(w) => (result(if (full) w.rows else 0), true)
+      case None =>
+        // Some(watermark) when the target exists
+        val wm = if (full) None else last.flatMap(_.max)
+          .orElse(target.readIfExists(spark, table).map(probe))
+        val (delta, m) =
+          wm.fold((src, "overwrite"))(v => (past(src, v), "append"))
+        (result(dir match {
+          case Some(d) => Tables.writeRecorded(delta, d, table, m, fp, wm.flatten).rows
+          case None => Tables.observed(delta)(target.write(_, table, m))._2
+        }), false)
     }
   }
 }

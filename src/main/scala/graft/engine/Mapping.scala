@@ -130,26 +130,4 @@ object Mapping {
       out += n -> tables(n)
     out.toMap
   }
-
-  /** Salted equi-join for extreme key skew: when one join key carries a
-    * disproportionate share of BIG-side rows, the reducer owning that key
-    * becomes the straggler (and AQE's skew splitting only applies to
-    * sort-merge stages it can re-plan). Salting spreads the hot key
-    * deterministically: the big side gets a per-row salt in [0, salts),
-    * the small side is replicated once per salt value, and the join runs
-    * equi on (key, salt) — the hot key's rows land on `salts` reducers
-    * instead of one. Results are identical to the plain join (each big
-    * row meets each matching small row exactly once, at its own salt).
-    * Cost: small side shuffled `salts`×; use for big-skewed ⋈ modest-
-    * sized right sides where broadcast doesn't fit.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salts: Int = 16, joinType: String = "inner"): DataFrame =
-    // ONE salt-and-replicate implementation: this used to be a parallel
-    // copy of SkewJoin.saltedJoin with gratuitous differences (hash vs
-    // xxhash64 for the row salt, using-join vs condition join) — result-
-    // identical, but a fix landing in one copy (e.g. the same-named-key
-    // dedup SkewJoin grew) silently missed the other (code-review r14).
-    // Results are unchanged: salt routing only redistributes rows.
-    SkewJoin.saltedJoin(big, small, key, key, salts, joinType)
 }

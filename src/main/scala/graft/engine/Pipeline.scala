@@ -16,26 +16,29 @@ import graft.sources.ParquetStore
   * codegen'd pass, but a stage can still run jobs per table before its
   * writes: imputeNulls' stats pass, unless an earlier Remove Null Rows
   * made it provably zero (Transforms.pipeline), and extraction's
-  * watermark probe when the table layer's reuse memo cannot give the
-  * watermark (Extraction). The tables of a stage are independent, so the
-  * stage entry points (Extraction.runJob, Transforms.transformAll and
+  * watermark probe when the target's record in the table layer cannot
+  * give the watermark (Extraction). The tables of a stage are
+  * independent, so the stage entry points (Extraction.runJob, Transforms.transformAll and
   * the table writers) run their per-table work concurrently through
   * [[Parallel.map]], and every table's task is joined before the stage
   * returns or fails — the next stage never starts beside a straggler of
   * the last. The tables a stage writes are read back by the next without
   * a schema-inference job (Tables.write pins their schemas).
   *
-  * A stage rewrites only the outputs whose inputs changed. Every stage
-  * write (the extraction loads, and the mapping, transformation and
-  * aggregation outputs, all frames the engine built itself) goes through
-  * the per-JVM reuse memo in [[Tables]]: an output whose frame has the
-  * fingerprint of its last recorded write — same plan, same confs, same
-  * listing of every file it reads — and whose own listing is unchanged
-  * since that write is left as it is, and no job runs for it. Between
-  * two ticks only the fact tables grow, so the dimension tables and
-  * every output built from them alone are reused. Each stage's detail
-  * says how many outputs it reused. A new JVM recomputes everything
-  * once; the public writers (Tables.write/writeAll, Sql.saveGold) always
+  * A stage rewrites only the outputs whose inputs changed. [[Tables]]
+  * keeps one per-JVM record per output path: the schema pinned for the
+  * path's listing and the last recorded write. Reuse needs a
+  * fingerprint the engine built, and every stage write (the extraction
+  * loads, and the mapping, transformation and aggregation outputs, all
+  * frames the engine built itself) passes one: an output whose frame
+  * has the fingerprint of its last recorded write — same plan, same
+  * confs, same listing of every file it reads — and whose own listing
+  * is unchanged since that write is left as it is, and no job runs for
+  * it. Watermarks come from the record too (Extraction). Between two
+  * ticks only the fact tables grow, so the dimension tables and every
+  * output built from them alone are reused. Each stage's detail says
+  * how many outputs it reused. A new JVM recomputes everything once;
+  * the public writers (Tables.write/writeAll, Sql.saveGold) always
   * write.
   *
   * Time-based scheduling (O2/O3) is driver-side orchestration outside the

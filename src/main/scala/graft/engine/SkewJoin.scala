@@ -88,15 +88,4 @@ object SkewJoin {
       joinType)
     (if (dropSmallKey) joined.drop("__salt_rk") else joined).drop("__salt")
   }
-
-  /** Partitioned parquet write at an explicit path. Thin shim kept for
-    * callers holding a raw path; table-convention writes should use
-    * [[Tables.writePartitioned]] (the same write with the layer/name
-    * path convention and a mode parameter) so the layout ops
-    * ([[Tables.compact]]/[[Tables.upsert]]) can find and preserve the
-    * partitioning (code-review r14 — two diverging copies).
-    */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 }

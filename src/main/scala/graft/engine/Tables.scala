@@ -49,17 +49,17 @@ object Tables {
     * `event_id`), so nothing loses pushdown — if one ever does, filter on
     * the timestamp column before calling normalize.
     */
-  /** Two per-JVM caches below trust a digest of a path's file listing:
-    * [[schemaCache]] pins the parquet schema a listing was read with, and
-    * the reuse memo ([[written]]) trusts that a listing it recorded still
-    * holds the rows its write left there. The digest is the full 128-bit
-    * MD5 (hex) of the listing's `relative path:size:mtime` entries, read
-    * through the session's Hadoop filesystem like every read and write of
-    * the path (a local-file walk sees nothing under an `hdfs://`, `s3a://`
-    * or `file:` URI). A Spark write always lands fresh part-file names,
-    * so every overwrite or append changes the listing. An outside writer
-    * that replaces files keeping their name, size and mtime is NOT
-    * detected: both caches would go on serving what they hold.
+  /** The per-JVM path records below ([[records]]) trust a digest of a
+    * path's file listing: a record's pinned schema was read or written
+    * with that listing, and its recorded write left it. The digest is
+    * the full 128-bit MD5 (hex) of the listing's `relative
+    * path:size:mtime` entries, read through the session's Hadoop
+    * filesystem like every read and write of the path (a local-file walk
+    * sees nothing under an `hdfs://`, `s3a://` or `file:` URI). A Spark
+    * write always lands fresh part-file names, so every overwrite or
+    * append changes the listing. An outside writer that replaces files
+    * keeping their name, size and mtime is NOT detected: the record
+    * would go on serving what it holds.
     */
   private def qualify(spark: SparkSession, path: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
@@ -90,77 +90,91 @@ object Tables {
     hex("MD5", listing)
   }
 
-  /** A path's qualified form plus its listing digest: the key of both
-    * caches here and of [[graft.SparkEntry.corpusKey]].
+  /** A path's qualified form plus its listing digest: the key of
+    * [[graft.SparkEntry.corpusKey]].
     */
   private[graft] def listingKey(spark: SparkSession, path: String): String = {
     val (fs, root) = qualify(spark, path)
     s"$root#${listingDigest(fs, root)}"
   }
 
-  /** Per-JVM parquet-schema cache (optimization r21, guide §6 — the
-    * file-listing-cache class of fix, and the artifact store's
-    * `_schemas` discipline applied to the table layer): every
-    * schema-less `spark.read.parquet` runs a footer-reading Spark job
-    * (`mergeSchemasInParallel`), and plan CONSTRUCTION re-runs it per
-    * call — the bench pays it for every table reference of every rep
-    * of every query, and on an object store each one is a round-trip
-    * before the real read starts. The first read's inferred schema is
-    * pinned per listing key (the qualified path and its listing digest)
-    * and later reads pass it explicitly — zero inference jobs. This
-    * caches METADATA only; every action still reads the parquet bytes.
-    *
-    * Keying on the listing, NOT the bare path: Pipeline re-reads layer
-    * directories it has just rewritten, and a path-keyed entry would
-    * serve the PREVIOUS write's schema. A rewrite changes the listing,
-    * so it re-infers (or is seeded, see below); stale entries for
-    * superseded listings are bounded by rewrites per JVM.
-    *
-    * [[write]] also SEEDS the cache: an overwrite leaves only files
-    * carrying the written frame's schema, which a read infers back made
-    * recursively nullable, so that schema is pinned under the listing
-    * the write left and the stage that reads the table next (Pipeline's
-    * raw → silver_mapping → silver hand-offs) runs no inference job.
-    * An append keeps the older files, so it seeds only when the schema
-    * pinned for the listing it appended to equals the one it writes
-    * (every file then carries it); otherwise the next read infers.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
-
-  /** What the last recorded write of an output left there (an entry of
-    * the reuse memo, [[written]]):
+  /** What the last recorded write of an output left there:
     *   - `fingerprint`: of the frame written, when it may be reused
     *     ([[fingerprint]]);
     *   - `overwrite`: the write replaced the output (false: appended);
-    *   - `listing`: the output's listing digest right after the write;
     *   - `rows`: the rows written;
     *   - `max`: the max of the first column as the output now holds it,
     *     `Some(None)` when it holds no non-null value, `None` when the
     *     column is not orderable.
     */
   private[graft] final case class Written(fingerprint: Option[String],
-      overwrite: Boolean, listing: String, rows: Long,
-      max: Option[Option[Any]])
+      overwrite: Boolean, rows: Long, max: Option[Option[Any]])
 
-  /** Per-JVM reuse memo: qualified output path → [[Written]]. Between
-    * two medallion ticks only the fact tables grow, yet every tick used
-    * to rewrite the dimension tables and every mapping, transform and
-    * aggregate output built from them alone, with the same rows.
-    * Pipeline's stages skip an overwrite whose frame has the fingerprint
-    * of the recorded write while the output still shows the listing
-    * that write left ([[overwriteReusing]]), and Extraction takes its
-    * incremental watermark from `max` instead of a probe job. Every
-    * write of a path drops its entry first; only a recorded write that
-    * succeeded puts one back, so a write that throws leaves nothing to
-    * reuse. Nothing is kept on disk: a new JVM recomputes every output
+  /** What this JVM knows of a path while it shows `listing`: the parquet
+    * schema pinned for that listing, if any, and the recorded write that
+    * left it, if one did.
+    */
+  private final case class Record(listing: String,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      written: Option[Written])
+
+  /** Per-JVM path records: qualified path → [[Record]], one entry per
+    * path however often it is rewritten. Every use first checks the
+    * record's listing against the one on disk and ignores a record the
+    * path no longer shows.
+    *
+    * The schema (optimization r21, guide §6 — the file-listing-cache
+    * class of fix, and the artifact store's `_schemas` discipline
+    * applied to the table layer): every schema-less `spark.read.parquet`
+    * runs a footer-reading Spark job (`mergeSchemasInParallel`), and
+    * plan CONSTRUCTION re-runs it per call — the bench pays it for every
+    * table reference of every rep of every query, and on an object store
+    * each one is a round-trip before the real read starts. The first
+    * read of a listing pins its inferred schema and later reads pass it
+    * explicitly — zero inference jobs. This is METADATA only; every
+    * action still reads the parquet bytes. A rewrite changes the
+    * listing, so the next read re-infers, unless the write SEEDED the
+    * schema: an overwrite leaves only files carrying the written frame's
+    * schema, which a read infers back made recursively nullable, so that
+    * schema is pinned with the listing the write left and the stage that
+    * reads the table next (Pipeline's raw → silver_mapping → silver
+    * hand-offs) runs no inference job. An append keeps the older files,
+    * so it seeds only when the record's listing is the one it appended
+    * to and its schema equals the one it writes (every file then
+    * carries it).
+    *
+    * The write (the reuse memo): between two medallion ticks only the
+    * fact tables grow, yet every tick used to rewrite the dimension
+    * tables and every mapping, transform and aggregate output built from
+    * them alone, with the same rows. Pipeline's stages skip an overwrite
+    * whose frame has the fingerprint of the recorded write while the
+    * output still shows the listing that write left
+    * ([[overwriteReusing]]), and Extraction takes its incremental
+    * watermark from `max` instead of a probe job. Reuse needs a
+    * fingerprint the engine built: the public writers record none. Every
+    * write drops the path's record first, so a write that throws leaves
+    * none. Nothing is kept on disk: a new JVM recomputes every output
     * once.
     */
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[String, Written]()
+  private val records =
+    new java.util.concurrent.ConcurrentHashMap[String, Record]()
 
-  /** The identity of what `df` computes, for the reuse memo: a SHA-256
+  /** The qualified paths that hold a record. */
+  private[graft] def recordedPaths: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    records.keySet.asScala.toSet
+  }
+
+  /** A qualified path's listing digest, and its record while the path
+    * still shows the record's listing.
+    */
+  private def current(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): (String, Option[Record]) = {
+    val listing = listingDigest(fs, root)
+    (listing, Option(records.get(root.toString)).filter(_.listing == listing))
+  }
+
+  /** The identity of what `df` computes, for reuse: a SHA-256
     * over its canonicalized analyzed plan printed in full (ids
     * normalized, no field elided: Bridge.fullPlanString), its output
     * schema, the session's SQL confs (the timezone among them) and, per
@@ -177,7 +191,7 @@ object Tables {
     *
     * A UDF prints by its name only, so its body is not covered: only
     * frames the engine built, whose UDFs are its own, are fingerprinted
-    * for reuse. The public writers never consult the memo.
+    * for reuse. The public writers record no fingerprint.
     */
   private[graft] def fingerprint(df: DataFrame): Option[String] = {
     import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp,
@@ -215,18 +229,17 @@ object Tables {
       scans.flatten).mkString("\n\u0000\n")))
   }
 
-  /** The memo's entry for `dir/name` while the output still shows the
-    * listing its recorded write left; None otherwise.
+  /** The recorded write of `dir/name` while the output still shows the
+    * listing that write left; None otherwise.
     */
   private[graft] def lastWrite(spark: SparkSession, dir: String,
                                name: String): Option[Written] = {
     val (fs, root) = qualify(spark, s"$dir/$name.parquet")
-    Option(written.get(root.toString))
-      .filter(_.listing == listingDigest(fs, root))
+    current(fs, root)._2.flatMap(_.written)
   }
 
   /** Write `df` to `dir/name` ("overwrite" or "append") and record the
-    * write in the memo under `fingerprint`. The row count and the
+    * write in the path's record under `fingerprint`. The row count and the
     * first column's max ride the write's one job ([[observed]]). An
     * append's max is the appended rows' max, or `watermark` — the
     * output's max before the append, which every appended row exceeds —
@@ -235,17 +248,18 @@ object Tables {
   private[engine] def writeRecorded(df: DataFrame, dir: String, name: String,
       mode: String, fingerprint: Option[String],
       watermark: Option[Any] = None): Written = {
-    val ((path, listing), rows, max) = observed(df)(put(_, dir, name, mode))
-    val w = Written(fingerprint, mode == "overwrite", listing, rows,
+    val ((path, rec), rows, max) = observed(df)(put(_, dir, name, mode))
+    val w = Written(fingerprint, mode == "overwrite", rows,
       if (mode == "overwrite") max else max.map(_.orElse(watermark)))
-    written.put(path, w)
+    records.put(path, rec.copy(written = Some(w)))
     w
   }
 
   /** Pipeline's sink for one frame the engine built: overwrite `dir/name`
-    * unless the memo's entry for it replaced it with a frame of the same
+    * unless its recorded write replaced it with a frame of the same
     * `fingerprint` and its listing is still the one that write left.
-    * Returns the output's entry and whether it was reused (nothing ran).
+    * Returns the output's recorded write and whether it was reused
+    * (nothing ran).
     */
   private[engine] def overwriteReusing(df: DataFrame, dir: String,
       name: String, fingerprint: Option[String]): (Written, Boolean) =
@@ -282,20 +296,22 @@ object Tables {
   }
 
   /** Schema-cached parquet read of an immutable-while-referenced path
-    * (the [[schemaCache]] note): first read infers and pins, later
-    * reads of the SAME listing pass the schema explicitly — zero
-    * inference jobs. A rewritten path re-infers (listing-keyed). Also
-    * serves the artifact store's loaders, whose serve rows otherwise
-    * pay one inference job per evaluation.
+    * (the [[records]] note): the first read of a listing infers and
+    * pins, later reads of the SAME listing pass the schema explicitly —
+    * zero inference jobs. A rewritten path re-infers unless its write
+    * seeded the schema. Also serves the artifact store's loaders, whose
+    * serve rows otherwise pay one inference job per evaluation.
     */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val key = listingKey(spark, path)
-    val cached = schemaCache.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val d = spark.read.parquet(path)
-      schemaCache.put(key, d.schema)
-      d
+    val (fs, root) = qualify(spark, path)
+    val (listing, rec) = current(fs, root)
+    rec.flatMap(_.schema) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val d = spark.read.parquet(path)
+        records.put(root.toString,
+          Record(listing, Some(d.schema), rec.flatMap(_.written)))
+        d
     }
   }
 
@@ -390,28 +406,29 @@ object Tables {
     ()
   }
 
-  /** [[write]], returning the qualified output path and the listing
-    * digest the write left. Drops the path's reuse-memo entry first
-    * ([[written]]).
+  /** [[write]], returning the qualified output path and the record the
+    * write left, which holds no recorded write. Drops the path's record
+    * first ([[records]]).
     */
   private def put(df: DataFrame, dir: String, name: String,
-                  mode: String): (String, String) = {
+                  mode: String): (String, Record) = {
     val path = s"$dir/$name.parquet"
     val (fs, root) = qualify(df.sparkSession, path)
     val schema = org.apache.spark.sql.graftbridge.Bridge.asNullable(df.schema)
-    written.remove(root.toString)
-    // seed (the [[schemaCache]] note): an append keeps the older files,
-    // so it seeds only when their pinned schema is the one it writes
+    val before = Option(records.remove(root.toString))
+    // seed (the [[records]] note): an append keeps the older files, so
+    // it seeds only when their pinned schema is the one it writes
     val seed = mode.toLowerCase match {
       case "overwrite" => true
-      case "append" =>
-        schema == schemaCache.get(s"$root#${listingDigest(fs, root)}")
+      case "append" => before.exists(r =>
+        r.schema.contains(schema) && r.listing == listingDigest(fs, root))
       case _ => false
     }
     df.write.mode(mode).parquet(path)
-    val listing = listingDigest(fs, root)
-    if (seed) schemaCache.put(s"$root#$listing", schema)
-    (root.toString, listing)
+    val rec = Record(listingDigest(fs, root), Some(schema).filter(_ => seed),
+      None)
+    records.put(root.toString, rec)
+    (root.toString, rec)
   }
 
   /** S10 bulk loader: write every table with a name prefix

@@ -107,7 +107,7 @@ class MappingSpec extends SparkSpecBase {
 
 class SaltedJoinSpec extends SparkSpecBase {
   import spark.implicits._
-  import graft.engine.Mapping
+  import graft.engine.SkewJoin
 
   test("saltedJoin: identical rows to the plain join on a skewed key") {
     // 90% of big-side rows share key 1 — the hot-reducer case
@@ -117,7 +117,7 @@ class SaltedJoinSpec extends SparkSpecBase {
       .toDF("k", "label")
     val plain = big.join(small, Seq("k")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val salted = Mapping.saltedJoin(big, small, "k", salts = 8).collect()
+    val salted = SkewJoin.saltedJoin(big, small, "k", "k", saltFactor = 8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val dimMatched = big.filter($"k".isin(2L, 3L)).count().toInt
     assert(salted == plain && plain.size == 900 + dimMatched && dimMatched > 0)
@@ -131,7 +131,7 @@ class SaltedJoinSpec extends SparkSpecBase {
     // would have passed undetected (code-review r14)
     val big = (1 to 1000).map(i => (1L, i.toLong)).toDF("k", "payload")
     val spread = big
-      .withColumn("__salt", graft.engine.SkewJoin.saltExpr(big, 8))
+      .withColumn("__salt", SkewJoin.saltExpr(big, 8))
       .select(countDistinct("__salt")).collect()(0).getLong(0)
     assert(spread == 8L, s"hot key used only $spread of 8 salts")
   }

@@ -328,4 +328,41 @@ class ReuseSpec extends SparkSpecBase {
     assert(again.isLeft && probed.isFailure)
     assert(again.swap.toOption.get._2.getClass == probed.failed.get.getClass)
   }
+
+  test("a path written and read many times holds one record, and a repeat read after the last write runs no job") {
+    val dir = tmp()
+    val modes = Seq("overwrite", "append", "append", "overwrite", "append",
+      "overwrite", "append")
+    for ((mode, i) <- modes.zipWithIndex) {
+      Tables.write(orders(Seq(i.toLong)), dir, "t", mode)
+      val expected = i - modes.lastIndexOf("overwrite", i) + 1
+      assert(Tables.table(spark, dir, "t").count() == expected, s"write $i")
+    }
+    val paths = Tables.recordedPaths.filter(_.contains(dir))
+    assert(paths.size == 1, paths)
+    Tables.table(spark, dir, "t").schema
+    val jobs = jobStarts(Tables.table(spark, dir, "t").schema)
+    assert(jobs.isEmpty, s"${jobs.size} jobs")
+  }
+
+  test("the public incrementalLoad into parquet takes its watermark from the record, and probes after another writer appended") {
+    val raw = tmp()
+    def load(ids: Seq[Long]) =
+      Extraction.incrementalLoad(spark, orders(ids), raw, "orders").rows
+    assert(load(1L to 3L) == 3)
+    var rows = 0L
+    // the append is the load's one job; a watermark probe adds its own
+    val recorded = jobStarts { rows = load(1L to 5L) }
+    val n = recorded.size
+    assert(rows == 2)
+    assert(n == 1, s"$n jobs")
+    assert(!recorded.exists(_.stageInfos.exists(_.name.contains("Extraction.scala"))))
+    // okey 6 and 7 land from outside: the record no longer holds
+    orders(6L to 7L).write.mode("append").parquet(s"$raw/orders.parquet")
+    val probed = jobStarts { rows = load(1L to 9L) }.size
+    assert(rows == 2)
+    assert(probed > 1, s"$probed jobs")
+    assert(spark.read.parquet(s"$raw/orders.parquet").as[(Long, Long, Double)]
+      .collect().map(_._1).sorted.toSeq == (1L to 9L))
+  }
 }

@@ -61,8 +61,8 @@ class SkewJoinSpec extends SparkSpecBase {
   test("writePartitioned: partition pruning visible in the scan") {
     val dir = TestTmp.dir("part")
     val df = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("part_key", "v")
-    SkewJoin.writePartitioned(df, s"$dir/t", Seq("part_key"))
-    val read = spark.read.parquet(s"$dir/t").filter($"part_key" === "a")
+    graft.engine.Tables.writePartitioned(df, dir, "t", Seq("part_key"))
+    val read = spark.read.parquet(s"$dir/t.parquet").filter($"part_key" === "a")
     assert(read.count() == 2)
     val plan = read.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
