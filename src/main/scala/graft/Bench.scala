@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, median of SPARK_GRAFT_BENCH_REPS runs each.
@@ -11,7 +12,19 @@ import org.apache.spark.sql.SparkSession
   *     also carries `shuffle_bytes` — per-query shuffle read/write
   *     bytes per execution (task-end listener, window = the timed
   *     reps / reps), so a plan regression that doubles shuffle volume
-  *     is a diffable number even when sf0.1 wall time hides it. Since
+  *     is a diffable number even when sf0.1 wall time hides it. It
+  *     also carries `jobs`, the per-layer split of each query's median
+  *     rep: `jobs` is the number of Spark jobs the rep ran, `job_s` the
+  *     seconds during which at least one of them was running (the
+  *     union of their intervals, from the job events' own times, so
+  *     overlapping jobs count once), `gap_s` the rest of the rep's wall
+  *     time (wall − `job_s`: plan construction, driver work between
+  *     jobs), and `run_s`/`cpu_s`/`gc_s` the summed executor run, CPU
+  *     and GC time of the rep's tasks. A failed query's entry is `{}`.
+  *     The same rep's per-job table goes to stderr, so a profile of a
+  *     few queries is `SPARK_GRAFT_BENCH_ONLY=<q,...>
+  *     SPARK_GRAFT_BENCH_REPS=1` with `SPARK_GRAFT_BENCH_OUT` pointed
+  *     away from the committed artifact. Since
   *     r15 it also carries `rep_stats` (per-query min/max/stddev over
   *     the timed reps) so a round-over-round median delta can be
   *     classified: inside the min-to-median spread = environment noise,
@@ -79,6 +92,134 @@ import org.apache.spark.sql.SparkSession
   * comparisons are apples-to-apples again.
   */
 object Bench {
+  /** One Spark job of a measured rep. `start` and `end` are the job
+    * events' own epoch-ms times, not the listener-bus thread's clock,
+    * so bus lag is not counted as job time; the task figures sum the
+    * job's task-end events.
+    */
+  private[graft] final case class Job(id: Int, site: String, desc: String,
+      start: Long, tasks: Int, var end: Long = 0L, var runMs: Long = 0L,
+      var cpuMs: Long = 0L, var gcMs: Long = 0L, var shuffleRead: Long = 0L,
+      var shuffleWrite: Long = 0L)
+
+  /** One timed execution of a query: its wall seconds, what it threw, if
+    * it threw, and the jobs it ran.
+    */
+  private[graft] final case class Rep(wall: Double, failed: Option[Throwable],
+      jobs: Seq[Job]) {
+    /** Seconds during which at least one of the jobs was running. */
+    def jobSeconds: Double = jobs.sortBy(_.start)
+      .foldLeft((0L, Long.MinValue)) { case ((sum, reach), j) =>
+        (sum + math.max(0L, j.end - math.max(j.start, reach)),
+          math.max(reach, j.end))
+      }._1 / 1000.0
+
+    /** This rep's entry in the artifact's `jobs` block. */
+    def jobsJson: String = {
+      val s = (f: Job => Long) => r3(jobs.map(f).sum / 1000.0)
+      val js = jobSeconds
+      s"""{"jobs":${jobs.size},"job_s":${r3(js)},"gap_s":${r3(wall - js)},"run_s":${s(_.runMs)},"cpu_s":${s(_.cpuMs)},"gc_s":${s(_.gcMs)}}"""
+    }
+  }
+
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  /** The measurement window's job log: every job started since the last
+    * [[take]], with its tasks' run/CPU/GC time and shuffle bytes.
+    */
+  private final class JobLog extends SparkListener {
+    private val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
+    private val stageToJob = scala.collection.mutable.Map[Int, Int]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val prop = (k: String) =>
+        Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = prop("callSite.short")
+        .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("")
+      jobs(e.jobId) = Job(e.jobId, site,
+        prop("spark.job.description").getOrElse(""), e.time,
+        e.stageInfos.map(_.numTasks).sum, end = e.time)
+      e.stageInfos.foreach(si => stageToJob(si.stageId) = e.jobId)
+    }
+
+    // cpu near run means real compute; cpu far under run means the
+    // tasks were blocked (lock contention, IO waits)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (id <- stageToJob.get(e.stageId); j <- jobs.get(id);
+           m <- Option(e.taskMetrics)) {
+        j.runMs += m.executorRunTime
+        j.cpuMs += m.executorCpuTime / 1000000L
+        j.gcMs += m.jvmGCTime
+        j.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        j.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(_.end = e.time)
+    }
+
+    /** The jobs logged so far, in start order; the log starts empty. */
+    def take(): Seq[Job] = synchronized {
+      val js = jobs.values.toSeq
+      jobs.clear(); stageToJob.clear()
+      js
+    }
+  }
+
+  /** The measurement window of one contract query: one untimed
+    * execution (JIT, codegen and one-time artifact training), block
+    * release, a collection and a listener-bus drain outside the timed
+    * region, then `reps` timed executions. Each rep's blocks are
+    * released and the bus drained after its clock stops, so a rep's
+    * jobs are exactly the jobs submitted while it ran.
+    */
+  private[graft] def measure(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, sfDir: String,
+      reps: Int): Seq[Rep] = {
+    val sc = spark.sparkContext
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      // untimed per-query JIT warm-up (r13, VERDICT r12 task 6): the
+      // ns_winnow_pairs variance (2.10/1.46/1.06 s across snapshots of
+      // identical code) was JIT, not GC/spill/persists — profiled
+      // per-rep: rep1 5.4 s with 18 s of compiler time (the in-row
+      // sketch's very large codegen method), converging to 1.45 s ±7%
+      // by rep 3; GC <60 ms every rep. A median over reps 1..5 lands on
+      // the decaying compilation slope, where the compiler-queue state
+      // left by PRECEDING queries moves the result ±40%. One untimed
+      // execution hoists compilation out of the timed reps; the hygiene
+      // below still runs after it, so medians stay cold-CACHE honest
+      // (r10 semantics) while becoming warm-JIT stable.
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      DevSession.releaseBlocks(spark)
+      // second gc barrier: the warm-up execution's own allocation debt
+      // must not bill rep 1 (the r7 mechanism the pre-warm-up barrier
+      // in main exists for)
+      System.gc()
+      drain()
+      log.take()
+      Seq.fill(reps) {
+        val t0 = System.nanoTime()
+        val failed =
+          try { fn(spark, sfDir).count(); None }
+          catch { case t: Throwable => Some(t) }
+        val wall = (System.nanoTime() - t0) / 1e9
+        // free THIS rep's materializations outside the timed region:
+        // blocks left pinned by rep k contended the block manager for
+        // everything after it (the r9 mechanism that made
+        // ns_winnow_pairs 6.4x slower under the driver's full sweep
+        // than isolated).
+        DevSession.releaseBlocks(spark)
+        drain()
+        Rep(wall, failed, log.take())
+      }
+    } finally sc.removeSparkListener(log)
+  }
+
   /** The FROZEN round-1 per-query wall times (BENCH_r01.json —
     * 2026-08-12, cpus=32, sf0.1, single rep: means are the only stats
     * r1 recorded; total 26.93 s over these 48 queries). The fixed
@@ -141,27 +282,10 @@ object Bench {
     // per-query shuffle read/write bytes (VERDICT r13 task 5): wall
     // time at sf0.1 hides scale-killers — a plan that doubles its
     // shuffle volume can still time flat locally but dominates a real
-    // cluster's network. A task-end listener accumulates bytes; the
-    // per-query window spans the `reps` timed executions (post-warm-up,
-    // so one-time artifact training doesn't bill the query) and divides
-    // by reps — plans are deterministic, every rep shuffles the same
-    // bytes. The listener bus is asynchronous, so each window is
-    // bracketed by a drain (Bridge.drainListenerBus).
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead): Unit
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-          }
-        }
-      })
-    def drain(): Unit = org.apache.spark.sql.graftbridge.Bridge
-      .drainListenerBus(spark.sparkContext)
+    // cluster's network. The window's job log sums the bytes of the
+    // `reps` timed executions (post-warm-up, so one-time artifact
+    // training doesn't bill the query), divided by reps — plans are
+    // deterministic, every rep shuffles the same bytes.
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -170,53 +294,34 @@ object Bench {
       // the GC debt of queries 1..k-1 (the r7 uniform-drift mechanism)
       spark.catalog.clearCache()
       System.gc()
-      // untimed per-query JIT warm-up (r13, VERDICT r12 task 6): the
-      // ns_winnow_pairs variance (2.10/1.46/1.06 s across snapshots of
-      // identical code) was JIT, not GC/spill/persists — profiled
-      // per-rep: rep1 5.4 s with 18 s of compiler time (the in-row
-      // sketch's very large codegen method), converging to 1.45 s ±7%
-      // by rep 3; GC <60 ms every rep. A median over reps 1..5 lands on
-      // the decaying compilation slope, where the compiler-queue state
-      // left by PRECEDING queries moves the result ±40%. One untimed
-      // execution hoists compilation out of the timed reps; the hygiene
-      // below still runs after it, so medians stay cold-CACHE honest
-      // (r10 semantics) while becoming warm-JIT stable.
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      DevSession.releaseBlocks(spark)
-      // second gc barrier: the warm-up execution's own allocation debt
-      // must not bill rep 1 (the same r7 mechanism the pre-warm-up
-      // barrier above exists for)
-      System.gc()
-      drain()
-      val (read0, write0) = (shufRead.get, shufWrite.get)
+      val rs = measure(spark, fn, sfDir, reps).sortBy(_.wall)
       // a rep that THROWS must not masquerade as its wall-time-to-fail:
       // a query regressing into an AnalysisException failed in ~1 ms
       // and rode into the totals as the suite's biggest "speedup"
       // (code-review r14) — record it as -1 and keep it out of total
-      var broke = false
-      val times = Seq.fill(reps) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case t: Throwable =>
-          if (!broke) System.err.println(
-            s"[bench] $name FAILED: ${t.getMessage}")
-          broke = true
+      val broke = rs.exists(_.failed.isDefined)
+      rs.flatMap(_.failed).headOption.foreach(t =>
+        System.err.println(s"[bench] $name FAILED: ${t.getMessage}"))
+      val med = rs(rs.size / 2)
+      if (!broke) {
+        System.err.println(f"[bench] jobs $name: ${med.jobs.size} jobs, " +
+          f"job_s ${med.jobSeconds}%.3f, gap_s " +
+          f"${med.wall - med.jobSeconds}%.3f, wall ${med.wall}%.3f s")
+        med.jobs.foreach { j =>
+          System.err.println(f"[bench]   job ${j.id}%4d " +
+            f"${(j.end - j.start) / 1000.0}%7.3f s  tasks=${j.tasks}%-4d " +
+            f"run=${j.runMs / 1000.0}%7.2f cpu=${j.cpuMs / 1000.0}%7.2f " +
+            f"gc=${j.gcMs / 1000.0}%5.2f  ${j.site.take(60)}  " +
+            j.desc.take(80))
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // free THIS rep's materializations outside the timed region:
-        // blocks left pinned by rep k contended the block manager for
-        // everything after it (the r9 mechanism that made
-        // ns_winnow_pairs 6.4x slower under the driver's full sweep
-        // than isolated).
-        DevSession.releaseBlocks(spark)
-        dt
-      }.sorted
-      drain()
-      val perRep = (n: Long) => n / reps
-      name -> (if (broke) -1.0 else times(times.size / 2),
-        perRep(shufRead.get - read0), perRep(shufWrite.get - write0),
-        if (broke) Seq.empty[Double] else times)
+      }
+      val perRep = (f: Job => Long) => rs.flatMap(_.jobs).map(f).sum / reps
+      name -> (if (broke) -1.0 else med.wall,
+        perRep(_.shuffleRead), perRep(_.shuffleWrite),
+        if (broke) Seq.empty[Double] else rs.map(_.wall),
+        if (broke) "{}" else med.jobsJson)
     }
-    val qs = results.map { case (k, (v, _, _, _)) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, (v, _, _, _, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // failed queries ride as -1 in the per-query map (visible, never a
     // phantom speedup) and stay out of the total
@@ -226,7 +331,7 @@ object Bench {
     // per-query shuffle bytes ride ONLY in the full artifact (the
     // driver's tail window is too small); "read"/"write" are per-
     // execution bytes, diffable round-over-round like the wall times
-    val shuf = results.map { case (k, (_, r, w, _)) =>
+    val shuf = results.map { case (k, (_, r, w, _, _)) =>
       s"\"" + k + "\":{\"read\":" + r + ",\"write\":" + w + "}"
     }.mkString("{", ",", "}")
     // per-query rep spread (VERDICT r14 task 4): without min/stddev next
@@ -236,12 +341,11 @@ object Bench {
     // The MIN is the best noise-floor estimate (machine contention only
     // ever adds time); a round delta on medians that stays inside the
     // min-to-median spread is environment, not plan.
-    val repStats = results.map { case (k, (_, _, _, ts)) =>
+    val repStats = results.map { case (k, (_, _, _, ts, _)) =>
       if (ts.isEmpty) s"\"" + k + "\":{}"
       else {
         val mean = ts.sum / ts.size
         val std = math.sqrt(ts.map(t => (t - mean) * (t - mean)).sum / ts.size)
-        val r3 = (x: Double) => math.round(x * 1000) / 1000.0
         s"\"" + k + "\":{\"min\":" + r3(ts.min) + ",\"max\":" + r3(ts.max) +
           ",\"std\":" + r3(std) + "}"
       }
@@ -267,7 +371,7 @@ object Bench {
     val baselinePath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", benchOut)
     val curMins: Map[String, Double] = results.collect {
-      case (k, (_, _, _, ts)) if ts.nonEmpty => k -> ts.min }.toMap
+      case (k, (_, _, _, ts, _)) if ts.nonEmpty => k -> ts.min }.toMap
     val likeForLikeMin = try {
       val prev = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(baselinePath)), "UTF-8")
@@ -294,7 +398,6 @@ object Bench {
       else {
         val p = shared.map(prevMins).sum
         val c = shared.map(curMins).sum
-        val r3 = (x: Double) => math.round(x * 1000) / 1000.0
         Console.err.println(
           f"[bench] like-for-like rep-min: prev ${p}%.1f s -> " +
             f"cur ${c}%.1f s (ratio ${c / p}%.2f, ${shared.size} queries)")
@@ -338,7 +441,6 @@ object Bench {
       else {
         val p = shared.map(R1Anchor).sum
         val c = shared.map(curMins).sum
-        val r3 = (x: Double) => math.round(x * 1000) / 1000.0
         Console.err.println(
           f"[bench] r1 fixed anchor: r1 ${p}%.1f s -> cur floor " +
             f"${c}%.1f s (ratio ${c / p}%.2f, ${shared.size} queries)")
@@ -350,8 +452,10 @@ object Bench {
         s"""{"queries":${shared.size},"r1_sum_sec":${r3(p)},"cur_sum_sec":${r3(c)},"ratio":${r3(c / p)},"r1_stat":"single_rep_mean","cur_stat":"rep_min"}"""
       }
     }
+    val jobs = results.map { case (k, (_, _, _, _, j)) => s"\"" + k + "\":" + j }
+      .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"shuffle_bytes":$shuf,"rep_stats":$repStats,"like_for_like_min":$likeForLikeMin,"r1_anchor_min":$r1AnchorBlock,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"shuffle_bytes":$shuf,"rep_stats":$repStats,"jobs":$jobs,"like_for_like_min":$likeForLikeMin,"r1_anchor_min":$r1AnchorBlock,"sf":"$sfDir"}"""
     // the STDOUT copy of the full line stays times-only: ~5 KB of
     // shuffle_bytes between the queries map and end-of-line would push
     // every per-query time out of the driver's 2000-char tail window
@@ -362,7 +466,7 @@ object Bench {
     // the contract line: top-40 slowest queries at 3 decimals keeps it
     // ~1.2 KB — comfortably inside the driver's 2000-char tail window
     val top = results.toSeq.sortBy(-_._2._1).take(40)
-      .map { case (k, (v, _, _, _)) =>
+      .map { case (k, (v, _, _, _, _)) =>
         s"\"" + k + "\":" + (math.round(v * 1000) / 1000.0) }
       .mkString("{", ",", "}")
     // the lfl block rides the contract line too (~90 chars of the
@@ -384,7 +488,7 @@ object Bench {
     }
     // top shuffle writers, human-readable (stderr: stdout's last line
     // must stay the contract line)
-    results.toSeq.sortBy(-_._2._3).take(5).foreach { case (k, (_, r, w, _)) =>
+    results.toSeq.sortBy(-_._2._3).take(5).foreach { case (k, (_, r, w, _, _)) =>
       Console.err.println(
         f"[bench] shuffle $k%-28s write=${w / 1048576.0}%.1f MiB " +
           f"read=${r / 1048576.0}%.1f MiB")

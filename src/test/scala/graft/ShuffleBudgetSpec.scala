@@ -4,10 +4,9 @@ package graft
   * task 3): Bench records per-query shuffle bytes since r14, but nothing
   * FAILED when they grew — a plan regression that doubles shuffle volume
   * could ride three rounds before a judge diffed the numbers. Each query
-  * here executes once untimed (artifact build / JIT / cache warm-up —
-  * the same discipline as Bench's measurement window), then once
-  * measured, and the per-execution shuffle-WRITE bytes must stay under a
-  * pinned ceiling.
+  * here runs through Bench's measurement window (once untimed for
+  * artifact build / JIT / cache warm-up, then once measured), and the
+  * per-execution shuffle-WRITE bytes must stay under a pinned ceiling.
   *
   * Ceilings are calibrated at sf0.01 (the oracle scale; local[4], 4
   * shuffle partitions) at ~2–3× the values measured (2026-08-15; the
@@ -20,43 +19,16 @@ package graft
   */
 class ShuffleBudgetSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.01"
-  private val written = new java.util.concurrent.atomic.AtomicLong
-
-  private lazy val listenerReady: Unit =
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null)
-            written.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        }
-      })
-
-  private def drain(): Unit =
-    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(
-      spark.sparkContext)
 
   /** Per-execution shuffle-write MiB of a contract query at sf0.01,
-    * measured on the SECOND execution (the first warms artifacts and
-    * codegen, and releases its persisted blocks, exactly like Bench's
-    * window).
+    * measured through Bench's window: one rep after the untimed warm-up
+    * execution (artifacts, codegen), blocks released as Bench does. A
+    * rep that throws fails the test.
     */
   private def measuredMiB(name: String): Double = {
-    listenerReady
-    val fn = SparkEntry.queries(name)
-    fn(spark, sf).count()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    drain()
-    val w0 = written.get
-    fn(spark, sf).count()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    drain()
-    (written.get - w0) / 1048576.0
+    val rep = Bench.measure(spark, SparkEntry.queries(name), sf, 1).head
+    rep.failed.foreach(t => throw t)
+    rep.jobs.map(_.shuffleWrite).sum / 1048576.0
   }
 
   /** (query, ceiling MiB, measured-at-calibration MiB). The measured
@@ -125,6 +97,26 @@ class ShuffleBudgetSpec extends SparkSpecBase {
     // regression
     ("ns_audiodup_hamming", 0.05, 0.000),
   )
+
+  test("Bench's measurement window adds no Spark job, and its job_s counts overlapping jobs once") {
+    for (name <- Seq("ns_knn_ivfpq_append", "ns_curation_config")) {
+      val fn = SparkEntry.queries(name)
+      val rep = Bench.measure(spark, fn, sf, 1).head
+      assert(rep.failed.isEmpty, name)
+      val plain = jobStarts(fn(spark, sf).count())
+      DevSession.releaseBlocks(spark)
+      val jobWalls = rep.jobs.map(j => j.end - j.start).sum / 1000.0
+      info(s"$name ${rep.jobsJson} wall ${rep.wall}; sum of job walls $jobWalls")
+      assert(rep.jobs.size == plain.size, name)
+      // both queries run jobs concurrently: their union is shorter than
+      // their sum
+      assert(rep.jobSeconds < jobWalls, name)
+      val split = "\"(job_s|gap_s)\":(-?[0-9.]+)".r
+        .findAllMatchIn(rep.jobsJson).map(_.group(2).toDouble).toSeq
+      assert(split.size == 2 && split.forall(_ >= 0), rep.jobsJson)
+      assert(math.abs(split.sum - rep.wall) <= 0.001, s"${rep.jobsJson} wall ${rep.wall}")
+    }
+  }
 
   budgets.foreach { case (name, ceilMiB, _) =>
     test(f"$name shuffle-write <= $ceilMiB%.2f MiB at sf0.01") {
