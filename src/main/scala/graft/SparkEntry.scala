@@ -622,7 +622,7 @@ object SparkEntry {
              count(lit(1)).as("n_items"))
     }),
     // the SAME star query served from the BUCKETED fact layout
-    // (Bucketing.bucketedTableFor / Pipeline cfg.bucketBy): lineitem and
+    // (Bucketing.bucketedTableFor): lineitem and
     // orders are published to the catalog pre-shuffled into 8 buckets on
     // their orderkey, so the fact⋈fact edge — the one per-query shuffle
     // of q_star_revenue — plans with ZERO Exchange (plan-guarded); the

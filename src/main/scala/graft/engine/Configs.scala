@@ -27,9 +27,17 @@ object Configs {
 
   private val mapper = new ObjectMapper()
 
-  private def strings(n: JsonNode): Seq[String] =
-    if (n == null || !n.isArray) Nil
-    else n.elements().asScala.map(_.asText()).toSeq
+  /** A list-valued key: absent or JSON null reads as empty, and any other
+    * non-array value refuses — reading `{"tables": "orders"}` as empty
+    * would extract no table and still succeed.
+    */
+  private def strings(n: JsonNode, key: String, file: String): Seq[String] =
+    if (n == null || n.isNull) Nil
+    else {
+      require(n.isArray,
+        s"$file: $key must be a JSON array, got ${n.getNodeType}")
+      n.elements().asScala.map(_.asText()).toSeq
+    }
 
   def parseExtraction(json: String): Seq[Extraction.TableJob] = {
     val root = mapper.readTree(json)
@@ -39,7 +47,8 @@ object Configs {
     // (code-review r14)
     val mode = Option(root.get("extraction_type")).filter(!_.isNull)
       .map(_.asText()).getOrElse("Full Refresh")
-    strings(root.get("tables")).map(t => Extraction.TableJob(t, mode))
+    strings(root.get("tables"), "tables", "extraction.json")
+      .map(t => Extraction.TableJob(t, mode))
   }
 
   def parseMappingStatus(json: String): Boolean = {
@@ -49,7 +58,8 @@ object Configs {
 
   def parseTransformations(json: String): Seq[String] = {
     val root = mapper.readTree(json)
-    strings(root.get("selected_transformations"))
+    strings(root.get("selected_transformations"), "selected_transformations",
+      "selected_transformations.json")
   }
 
   def parseAggregations(json: String): Map[String, AggSpec] = {
@@ -62,12 +72,14 @@ object Configs {
       // skips the table — coercing it to sum would emit an agg output
       // the reference pipeline never produces. Empty funcs flow through
       // and Aggregations.aggregate skips (A3).
+      def list(key: String) = strings(p.get(key), s"${e.getKey}.$key",
+        "selected_aggregation_parameters.json")
       val funcs =
         if (p.get("aggregation_functions") == null) Seq("sum")
-        else strings(p.get("aggregation_functions"))
+        else list("aggregation_functions")
       e.getKey -> AggSpec(
-        groupBy = strings(p.get("groupby_columns")),
-        aggCols = strings(p.get("aggregation_columns")),
+        groupBy = list("groupby_columns"),
+        aggCols = list("aggregation_columns"),
         funcs = funcs)
     }.toMap
   }

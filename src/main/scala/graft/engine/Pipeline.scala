@@ -53,18 +53,17 @@ object Pipeline {
     * - transforms: selected transform display names in application order
     *   (selected_transformations.json)
     * - aggregations: per-table A1 specs (selected_aggregation_parameters.json)
+    * - tableMeta: per-table PK/FK the reference introspects from MySQL
+    *
+    * A bucketed catalog copy of a silver table is not a pipeline stage:
+    * publish one with [[Bucketing.writeBucketed]].
     */
   case class Config(
     extraction: Seq[Extraction.TableJob] = Nil,
     mappingEnabled: Boolean = true,
     transforms: Seq[String] = Nil,
     aggregations: Map[String, AggSpec] = Map.empty,
-    tableMeta: Map[String, Mapping.TableMeta] = Map.empty,
-    // silver tables to ALSO publish as catalog tables bucketed by their
-    // join key: table → (key, nBuckets). The repeated fact⋈fact join is
-    // the dominant per-query shuffle of a star schema; bucketing at the
-    // silver write pays it once at ingest (see [[Bucketing]])
-    bucketBy: Map[String, (String, Int)] = Map.empty)
+    tableMeta: Map[String, Mapping.TableMeta] = Map.empty)
 
   /** Layer directories (the reference's five MySQL databases). */
   case class Layers(source: String, raw: String, silverMapping: String,
@@ -119,30 +118,14 @@ object Pipeline {
     }) return statuses.toSeq
 
     // 3. transformation: silver_mapping → silver, prefix "transformed"
-    //    (transformations_code.py:206-213 via scheduler.py:113-183),
-    //    plus the bucketed-layout publication
+    //    (transformations_code.py:206-213 via scheduler.py:113-183)
     var transformed = Map.empty[String, org.apache.spark.sql.DataFrame]
     if (!stage("transformation") {
       val silverIn = Tables.load(spark, layers.silverMapping, mapped.keys.toSeq)
       transformed = Transforms.transformAll(silverIn, cfg.transforms)
       val reused = Tables.writeAllReusing(transformed, layers.silver,
         prefix = "transformed")
-      // bucketed-layout publication: the configured fact tables ALSO land
-      // in the catalog pre-shuffled on their join key, so downstream
-      // star queries join them with zero Exchange on the fact edge. A
-      // bucketBy name with no silver table (typo, or a table that never
-      // reached this stage) fails HERE, at the config boundary — a
-      // silent skip would surface later as table-not-found far from the
-      // cause, or worse, as the per-query shuffle quietly coming back
-      val unknown = cfg.bucketBy.keySet -- transformed.keySet
-      require(unknown.isEmpty,
-        s"bucketBy names ${unknown.mkString(", ")} have no silver table " +
-          s"(available: ${transformed.keys.toSeq.sorted.mkString(", ")})")
-      for ((name, (key, buckets)) <- cfg.bucketBy)
-        Bucketing.writeBucketed(transformed(name),
-          s"silver_${name}_bucketed", key, buckets)
-      s"${transformed.size} transformed, $reused reused" +
-        (if (cfg.bucketBy.nonEmpty) s", ${cfg.bucketBy.size} bucketed" else "")
+      s"${transformed.size} transformed, $reused reused"
     }) return statuses.toSeq
 
     // 4. aggregation: per-table A1, prefix "agg" (scheduler.py:143-170);

@@ -116,18 +116,6 @@ object Dedup {
     */
   def shingles(c: Column, n: Int = 3): Column = texthash.shingles(c, n)
 
-  /** Reference formulation of the minhash signature over an ALREADY
-    * materialized shingle array column — kept for composability with
-    * arbitrary shingle definitions. NOTE: nested higher-order functions
-    * fall back to interpreted eval at depth; the hot path
-    * (minhashPairs) uses the fused text→signature kernel
-    * graft.functions.MinHashSig instead.
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 16): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingleCol,
-        s => xxhash64(s, i))))
-
   /** Materialize a frame the surrounding plan references more than once
     * (the 4x-recompute shape: capBuckets' count branch + both candidate
     * self-join sides re-running an expensive kernel subtree).
@@ -559,9 +547,9 @@ object Dedup {
     * tripped via [[Artifacts.winnowSketchFor]]) — the incremental-ingest
     * form of [[winnowPairs]]: candidates are cross-slice only, the
     * corpus side is never re-sketched. Ids must be unique across the
-    * two frames. When the index carries the `__k`/`__window` artifact
-    * columns the parameter check rides the plan as an `assert_true`;
-    * a mismatch fails the job instead of silently finding no overlap.
+    * two frames. The index must carry the `__k`/`__window` artifact
+    * columns; the parameter check rides the plan as an `assert_true`,
+    * so a mismatch fails the job instead of silently finding no overlap.
     * Output: (doc_a ∈ incoming, doc_b ∈ corpus, n_shared_fps).
     */
   def winnowPairsAgainstIndex(incoming: DataFrame, corpusIndex: DataFrame,
@@ -569,16 +557,13 @@ object Dedup {
                               idCol: String = "doc_id",
                               textCol: String = "text",
                               maxBucket: Int = 1000): DataFrame = {
-    val checked =
-      if (corpusIndex.columns.contains("__k")
-          && corpusIndex.columns.contains("__window"))
-        corpusIndex.withColumn("fp",
-          when(assert_true(col("__k") === k && col("__window") === window,
-              concat(lit("winnow sketch built with k/window = "), col("__k"),
-                lit("/"), col("__window"),
-                lit(s", probed with $k/$window"))).isNull,
-            col("fp")))
-      else corpusIndex
+    requirePinned(corpusIndex, "__window", "winnow", "winnowIndex")
+    val checked = corpusIndex.withColumn("fp",
+      when(assert_true(col("__k") === k && col("__window") === window,
+          concat(lit("winnow sketch built with k/window = "), col("__k"),
+            lit("/"), col("__window"),
+            lit(s", probed with $k/$window"))).isNull,
+        col("fp")))
     // the INCOMING side gets the same per-fingerprint bucket cap the
     // index was built under: a boilerplate fingerprint shared by a
     // million incoming docs against a just-under-cap corpus bucket is a
@@ -837,10 +822,9 @@ object Dedup {
     * band hashes like the frame form's corpus rows.
     *
     * INVARIANT: the caller's k/bands MUST match the parameters the index
-    * was built with. When the index carries the `__k`/`__bands` artifact
-    * columns (every index built since they were added does; older stored
-    * indexes may not), the check rides the plan as an `assert_true` on
-    * every index row and a mismatch fails the job instead of silently
+    * was built with. The index must carry the `__k`/`__bands` artifact
+    * columns; the check rides the plan as an `assert_true` on every
+    * index row, so a mismatch fails the job instead of silently
     * screening zero pairs.
     */
   def minhashPairsAgainstIndex(incoming: DataFrame, corpusIndex: DataFrame,
@@ -850,19 +834,25 @@ object Dedup {
                                k: Int = 16, bands: Int = 8,
                                threshold: Double = 0.7,
                                maxBucket: Int = 1000): DataFrame = {
-    val checked =
-      if (corpusIndex.columns.contains("__k")
-          && corpusIndex.columns.contains("__bands"))
-        corpusIndex.withColumn("band_hash",
-          when(assert_true(col("__k") === k && col("__bands") === bands,
-              concat(lit(s"band index built with k/bands = "), col("__k"),
-                lit("/"), col("__bands"),
-                lit(s", probed with $k/$bands"))).isNull,
-            col("band_hash")))
-      else corpusIndex
+    requirePinned(corpusIndex, "__bands", "band", "bandIndex")
+    val checked = corpusIndex.withColumn("band_hash",
+      when(assert_true(col("__k") === k && col("__bands") === bands,
+          concat(lit(s"band index built with k/bands = "), col("__k"),
+            lit("/"), col("__bands"),
+            lit(s", probed with $k/$bands"))).isNull,
+        col("band_hash")))
     screenAgainst(incoming, checked, capCorpus = false, corpusTexts,
       textCol, idCol, k, bands, threshold, maxBucket)
   }
+
+  /** A prebuilt index without its pinned parameter columns cannot be
+    * checked against the probe's parameters, so it is refused.
+    */
+  private def requirePinned(index: DataFrame, pin: String, kind: String,
+                            builder: String): Unit =
+    require(index.columns.contains("__k") && index.columns.contains(pin),
+      s"$kind index lacks its pinned __k/$pin columns, so its parameters " +
+        s"cannot be checked; rebuild it with Dedup.$builder")
 
   /** The one screen body of [[minhashPairsAgainst]] and
     * [[minhashPairsAgainstIndex]]. `corpusRows` are (id, mh, band_hash)
@@ -988,13 +978,13 @@ object Dedup {
     * constant number of shuffles on the id key. Labels are (id, long)
     * pairs only; document payloads never enter the loop. `localCheckpoint`
     * truncates the lineage each round so the plan doesn't grow with the
-    * iteration count. This is the standard Spark re-expression of
-    * small-star/large-star CC (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14).
+    * iteration count; its blocks live in executor storage, so an
+    * executor loss mid-loop fails the job. This is the standard Spark
+    * re-expression of small-star/large-star CC (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14).
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
-                          bCol: String = "doc_b", maxIter: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          bCol: String = "doc_b", maxIter: Int = 25): DataFrame = {
     // ids must be integral: a lossy string→long cast would null EVERY
     // id, the label join would match nothing, and collapseByPairs would
     // silently delete the whole corpus (code-review r13). URL/UUID-keyed
@@ -1006,63 +996,9 @@ object Dedup {
         s"connectedComponents needs integral ids, got $c: ${dt.simpleString}" +
           " — hash non-numeric ids to long (e.g. xxhash64) before CC")
     }
-    // Lineage truncation per round, so the plan doesn't grow with the
-    // iteration count. localCheckpoint pins blocks to executor storage —
-    // fast, but an executor loss kills the job mid-iteration. With a
-    // checkpoint dir the snapshot is instead an explicit parquet
-    // round-trip through that directory: the write job materializes the
-    // frame EXACTLY once (Dataset.checkpoint on an unpersisted frame
-    // recomputes its plan in a second job), the read-back is file-backed
-    // so it survives executor loss — the right mode for a multi-hour
-    // 100 TB run. Superseded snapshots are deleted as soon as their
-    // successor lands, so a long run keeps O(1) snapshots in object
-    // storage, and no global SparkContext checkpoint-dir state is
-    // touched. The FINAL label snapshot backs the returned DataFrame and
-    // is left in place — the caller owns the directory's lifecycle, and
-    // because snapshot paths are per-run unique (below), a REUSED
-    // checkpointDir accumulates one retained final snapshot per run:
-    // reclaim with [[cleanCcSnapshots]] (age-gated, concurrency-safe)
-    // once prior runs' results are consumed (code-review r14).
-    val session = pairs.sparkSession
-    var snapSeq = 0
-    // per-run unique component: two runs (sequential or concurrent)
-    // sharing a checkpointDir would otherwise write the SAME
-    // cc-snap-N paths in overwrite mode and drop each other's
-    // snapshots — including the retained final snapshot backing the
-    // other run's returned frame, which then reads wrong labels or
-    // throws FileNotFound (code-review r14)
+    // per-call unique observation names: two concurrent runs must not
+    // read each other's convergence statistic
     val runTag = java.util.UUID.randomUUID().toString.take(12)
-    def snapshot(df: DataFrame, dir: String): (DataFrame, String) = {
-      val path = s"${dir.stripSuffix("/")}/cc-snap-$runTag-$snapSeq"
-      snapSeq += 1
-      df.write.mode("overwrite").parquet(path)
-      (session.read.parquet(path), path)
-    }
-    def drop(path: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      hp.getFileSystem(session.sparkContext.hadoopConfiguration)
-        .delete(hp, true)
-    }
-    // loop-invariant snapshots (pairs, edges) live until the loop ends;
-    // label snapshots are superseded each round and dropped eagerly
-    var invariantPaths = List.empty[String]
-    var prevLabelPath: Option[String] = None
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val (snap, path) = snapshot(df, dir)
-        invariantPaths ::= path
-        snap
-      }
-      case None => df => df.localCheckpoint()
-    }
-    def ckptLabels(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val (snap, path) = snapshot(df, dir)
-        prevLabelPath.foreach(drop)
-        prevLabelPath = Some(path)
-        snap
-      case None => df.localCheckpoint()
-    }
     // convergence statistic FUSED into the checkpoint's own
     // materialization job (optimization r21, guide §1.2 — fewer
     // actions): the loop used to run a second scalar-agg action per
@@ -1077,9 +1013,9 @@ object Dedup {
         : (DataFrame, java.math.BigDecimal, Long) = {
       val obs = org.apache.spark.sql.Observation(s"cc-$runTag-$obsSeq")
       obsSeq += 1
-      val snap = ckptLabels(df.observe(obs,
+      val snap = df.observe(obs,
         sum(col("cluster_id").cast("decimal(38,0)")).as("total"),
-        count(lit(1)).as("n")))
+        count(lit(1)).as("n")).localCheckpoint()
       val m = obs.get
       val tot = m("total") match {
         case null => java.math.BigDecimal.ZERO
@@ -1092,15 +1028,16 @@ object Dedup {
     // below (two edge directions, self-loops via nodes), and the caller's
     // pair generator is typically an expensive LSH join that must not be
     // re-evaluated per branch
-    val p = ckpt(pairs)
+    val p = pairs.localCheckpoint()
     val a = col(aCol).cast("long"); val b = col(bCol).cast("long")
     val nodes = p.select(a.as("id"))
       .union(p.select(b.as("id"))).distinct()
     // symmetric edges + self-loops: one groupBy-min then computes
     // min(self, neighbors) in a single pass
-    val edges = ckpt(p.select(a.as("src"), b.as("dst"))
+    val edges = p.select(a.as("src"), b.as("dst"))
       .union(p.select(b.as("src"), a.as("dst")))
-      .union(nodes.select(col("id").as("src"), col("id").as("dst"))))
+      .union(nodes.select(col("id").as("src"), col("id").as("dst")))
+      .localCheckpoint()
     // labels only decrease, and every round's frame carries the SAME id
     // set (self-loops put every node in every round's dst set), so an
     // unchanged DECIMAL(38,0) sum round-over-round proves NO row changed
@@ -1140,54 +1077,7 @@ object Dedup {
       s"connectedComponents did not converge within maxIter=$maxIter " +
         "rounds — raise maxIter (label propagation with path halving " +
         "needs ~log2(component diameter) rounds)")
-    // the returned frame is file-backed in reliable mode, so the
-    // loop-invariant snapshots are no longer needed
-    invariantPaths.foreach(drop)
     labels
-  }
-
-  /** Reclaim retained `cc-snap-*` snapshots older than `olderThanMs`
-    * under a shared [[connectedComponents]] checkpointDir. Per-run
-    * unique snapshot paths (the r14 concurrency fix) mean a REUSED
-    * directory accumulates one retained final-label snapshot per run —
-    * a nightly pipeline pointing at a fixed object-store dir would
-    * otherwise grow one corpus-sized parquet per night forever
-    * (code-review r14, second pass). The sweep is age-gated so a
-    * CONCURRENT run's live snapshots (younger than any plausible run
-    * duration) are never touched; run it only when snapshots older
-    * than the threshold are no longer consumed. Resolves the
-    * filesystem from the active session (the resetLayers discipline).
-    * Returns the number of snapshot directories deleted.
-    */
-  def cleanCcSnapshots(checkpointDir: String,
-                       olderThanMs: Long = 24L * 3600 * 1000): Int = {
-    val p = new org.apache.hadoop.fs.Path(checkpointDir)
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0
-    val now = System.currentTimeMillis()
-    // age from the NEWEST timestamp visible for the snapshot — the dir
-    // mtime AND its direct children's: object stores (S3A) report 0
-    // for directory mtimes, which made every snapshot look infinitely
-    // old and the "age-gated" sweep delete a CONCURRENT run's live
-    // snapshots (code-review r14, third pass). A snapshot with no
-    // usable timestamp at all is conservatively KEPT.
-    def newestStamp(dir: org.apache.hadoop.fs.Path): Long = {
-      val own = fs.getFileStatus(dir).getModificationTime
-      val kids = fs.listStatus(dir).map(_.getModificationTime)
-      (own +: kids.toSeq).max
-    }
-    fs.listStatus(p).iterator
-      .filter(st => st.isDirectory
-        && st.getPath.getName.startsWith("cc-snap-"))
-      .filter { st =>
-        val stamp = newestStamp(st.getPath)
-        stamp > 0L && now - stamp > olderThanMs
-      }
-      .count(st => fs.delete(st.getPath, true))
   }
 
   /** Pair→cluster resolution: collapse near-dup PAIRS (from any generator —
@@ -1202,8 +1092,7 @@ object Dedup {
     * dedup pipeline needs (pair lists are an intermediate).
     */
   def collapseByPairs(docs: DataFrame, pairs: DataFrame,
-                      idCol: String = "doc_id",
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      idCol: String = "doc_id"): DataFrame = {
     // docs' id must be integral for the same silent-null reason the CC
     // guard documents (a string id would coalesce every unpaired row's
     // cluster to null and null === null keeps nothing)
@@ -1213,7 +1102,7 @@ object Dedup {
     // rename the CC label id before joining: with idCol == "id" a
     // by-name drop("id") would remove BOTH columns and the docs(idCol)
     // reference below would fail to resolve (code-review r13)
-    val cc = connectedComponents(pairs, checkpointDir = checkpointDir)
+    val cc = connectedComponents(pairs)
       .withColumnRenamed("id", "__cc_id")
     docs.join(cc, docs(idCol) === col("__cc_id"), "left")
       .drop("__cc_id")
@@ -1232,10 +1121,9 @@ object Dedup {
     * bounded).
     */
   def collapseByPairsBest(docs: DataFrame, pairs: DataFrame,
-                          scoreCol: String, idCol: String = "doc_id",
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          scoreCol: String, idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val labeled = collapseByPairs(docs, pairs, idCol, checkpointDir)
+    val labeled = collapseByPairs(docs, pairs, idCol)
     val w = Window.partitionBy("cluster_id")
       .orderBy(col(scoreCol).desc, col(idCol))
     labeled.withColumn("is_keeper", row_number().over(w) === 1)

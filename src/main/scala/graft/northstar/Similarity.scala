@@ -436,23 +436,6 @@ object Similarity {
       semanticDedupPairs(emb, centroids, thresholdE4, idCol, vecCol,
         maxCell), scoreCol, idCol)
 
-  /** Collapse a PRECOMPUTED semantic pair list (typically the stored
-    * [[Artifacts.semanticPairsFor]] artifact) keep-min — the serving
-    * half of [[semanticDedup]] with the expensive in-cell cosine join
-    * factored out. `ids` must hold one row per document id.
-    */
-  def semanticDedupFromPairs(ids: DataFrame, pairs: DataFrame,
-                             idCol: String = "vec_id"): DataFrame =
-    Dedup.collapseByPairs(ids, pairs, idCol)
-
-  /** Collapse a precomputed semantic pair list with the quality-aware
-    * keeper ([[semanticDedupBest]]'s rule); `ids` must carry `scoreCol`.
-    */
-  def semanticDedupBestFromPairs(ids: DataFrame, pairs: DataFrame,
-                                 scoreCol: String,
-                                 idCol: String = "vec_id"): DataFrame =
-    Dedup.collapseByPairsBest(ids, pairs, scoreCol, idCol)
-
   /** Keep-min collapse served from PRECOMPUTED cluster labels (the
     * stored [[Artifacts.semanticLabelsFor]] artifact — one row per
     * document, `cluster_id` = its connected-component label). The CC

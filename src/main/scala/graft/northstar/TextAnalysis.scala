@@ -207,14 +207,13 @@ object TextAnalysis {
     * corpus (the correct semantics, verified in the harness plan —
     * PushedFilters on one scan, none on the other). Full-corpus callers
     * should persist the frame before fan-out if the double scan matters.
-    * N is a driver-side scalar (one count job) unless supplied. The
+    * N is a driver-side scalar (one count job). The
     * tf ⋈ df join keys on term: the df side is vocabulary-sized,
     * broadcastable after a heavy-hitters cap at corpus scale.
     */
   def tfIdf(df: DataFrame, idCol: String = "doc_id",
-            textCol: String = "text", minTermLen: Int = 3,
-            docCount: Option[Long] = None): DataFrame = {
-    val n = docCount.getOrElse(df.count())
+            textCol: String = "text", minTermLen: Int = 3): DataFrame = {
+    val n = df.count()
     val terms = df.select(col(idCol),
         explode(split(lower(col(textCol)), "\\W+")).as("term"))
       .filter(length(col("term")) >= minTermLen)
@@ -548,25 +547,6 @@ object TextAnalysis {
     * over that small frame plus a bounded collect; the merge table
     * itself is the bounded driver artifact (`rounds` rows).
     *
-    * Batched induction (`batch` > 1): tokenizer-scale training (30k
-    * merges) must not mean 30k driver round-trips, so each round may
-    * commit up to `batch` merges from ONE pair-count job. Standard
-    * batched-BPE argument: if two pairs share no symbol, applying one
-    * merge cannot create or destroy adjacencies of the other (the
-    * replace only touches `|a||b|` sites and only mints the new symbol
-    * `ab`), so the counts of symbol-DISJOINT pairs are invariant under
-    * each other's merges — each round commits the maximal
-    * symbol-disjoint PREFIX of the (cnt desc, pair) candidate list
-    * (stopping at the first conflict, so a lower-count pair can never
-    * jump ahead of a conflicting higher-count one the way
-    * skip-and-continue selection would), which makes every committed
-    * prefix sequential-exact in both counts AND order. The one
-    * divergence from batch=1 is intentional and standard: a pair
-    * involving a symbol minted earlier in the same round (which
-    * sequential induction could have picked next) waits for the next
-    * round. `batch = 1` (the default) reproduces sequential induction
-    * verbatim — `ns_bpe_induct` pins that hash.
-    *
     * Replayability: each word rides as a pipe-delimited symbol string
     * (`hello` → `|h||e||l||l||o|`), and applying a merge (a,b) is the
     * LITERAL string replace `|a||b|` → `|ab|` — no regex, no lookaround
@@ -576,28 +556,10 @@ object TextAnalysis {
     * characters (words come from a \W+ split), so the delimiters are
     * unambiguous. The `ns_bpe_induct` oracle unrolls the rounds as
     * CTEs, carrying each round's winner via a 1-row cross join.
-    *
-    * Greedy mode (`greedy = true`): the strict prefix rule stalls to
-    * ~1 merge per round whenever the top two candidates share a symbol
-    * (common early in training, when most pairs involve the same few
-    * hot characters) — at tokenizer scale (30k merges) that is 30k
-    * driver round-trips again. Greedy selection skips conflicting
-    * candidates and keeps walking the (cnt desc, pair) order until
-    * `batch` pairwise-disjoint pairs are found. Every committed pair's
-    * count is still EXACT for the round-start vocab (pairwise
-    * disjointness ⇒ the merges cannot affect each other's counts), but
-    * the merge-table ORDER may diverge from sequential induction: a
-    * skipped conflicting pair commits in a LATER round even though
-    * sequential might have picked it next. This is the standard
-    * batched-BPE tradeoff production tokenizer trainers make; use the
-    * default strict mode when sequential-exact replay matters (the
-    * `ns_bpe_induct` contract hash pins strict mode).
     */
   def bpeInduct(df: DataFrame, rounds: Int = 5,
-                textCol: String = "text", batch: Int = 1,
-                greedy: Boolean = false): DataFrame = {
+                textCol: String = "text"): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
-    require(batch > 0, s"batch must be positive, got $batch")
     val spark = df.sparkSession
     var vocab = df
       .select(explode(split(lower(col(textCol)), "\\W+")).as("w"))
@@ -619,16 +581,7 @@ object TextAnalysis {
       org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(vocab)
     var dry = false
     while (merges.size < rounds && !dry) {
-      val want = math.min(batch, rounds - merges.size)
-      // candidate window: greedy disjoint selection can skip at most 2
-      // symbols' worth of conflicts per kept pair, so a few× `want`
-      // candidates nearly always yields `want` picks; if the window
-      // starves we still commit what we found (progress each round)
-      // greedy mode walks past conflicts, so it digests a wider window
-      // per round-trip; a starved window only lowers commits-per-round
-      // (the first candidate always commits — progress is guaranteed)
-      val window = if (greedy) want * 8 + 16 else want * 4 + 4
-      val cands = vocab
+      val top = vocab
         .withColumn("syms", split(trim(col("s"), "|"), "\\|\\|"))
         .filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
@@ -636,7 +589,7 @@ object TextAnalysis {
             "i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))"))
           .as("pair"))
         .groupBy("pair").agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair")).limit(window).collect()
+        .orderBy(col("cnt").desc, col("pair")).limit(1).collect()
       // the collect above ran over the CURRENT vocab: if it was a lazy
       // checkpoint, it is materialized now (the sort reads every
       // partition), so the previous round's blocks can be freed
@@ -646,46 +599,19 @@ object TextAnalysis {
         liveCk.foreach(_.unpersist(false))
         liveCk = nowLive
       }
-      if (cands.isEmpty) dry = true
-      else {
-        // maximal disjoint PREFIX of the (cnt desc, pair) order — NOT
-        // skip-and-continue: committing a lower-count pair past a
-        // conflicting higher-count one would reorder the merge table
-        // vs sequential induction (the skipped pair's count is often
-        // UNCHANGED by the earlier merge, so sequential still picks it
-        // first; e.g. ab×10/ca×9/cd×8 — skip-and-continue would commit
-        // (c,d) before (c,a)). Stopping at the first conflict keeps
-        // every committed prefix sequential-exact in both counts AND
-        // order; the only remaining divergence is the documented
-        // minted-symbol case. The first candidate always commits, so
-        // every round makes progress.
-        val used = scala.collection.mutable.Set.empty[String]
-        val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val it = cands.iterator
-        var blocked = false
-        while (picked.size < want && it.hasNext && !blocked) {
-          val row = it.next()
+      top.headOption match {
+        case None => dry = true
+        case Some(row) =>
           val Array(a, b) = row.getString(0).split(" ", 2)
-          if (!used(a) && !used(b)) {
-            used += a; used += b
-            picked += ((a, b, row.getLong(1)))
-          } else if (!greedy) blocked = true
-        }
-        picked.foreach { case (a, b, cnt) =>
-          merges += ((merges.size + 1L, a, b, cnt))
-        }
-        // one pass applies every committed merge: the replaces touch
-        // disjoint symbol sites, so chaining them is order-independent.
-        // symbols are \w-only, safe to embed in the literal-replace SQL
-        val applied = picked.foldLeft("s") { case (e, (a, b, _)) =>
-          s"replace($e, '|$a||$b|', '|$a$b|')"
-        }
-        // lazy checkpoint: lineage still truncates, but materialization
-        // happens inside the NEXT round's pair-count job instead of a
-        // dedicated job — one driver round-trip per round, not two
-        vocab = vocab
-          .select(expr(applied).as("s"), col("freq"))
-          .localCheckpoint(false)
+          merges += ((merges.size + 1L, a, b, row.getLong(1)))
+          // symbols are \w-only, safe to embed in the literal-replace SQL.
+          // Lazy checkpoint: lineage still truncates, but materialization
+          // happens inside the NEXT round's pair-count job instead of a
+          // dedicated job — one driver round-trip per round, not two
+          vocab = vocab
+            .select(expr(s"replace(s, '|$a||$b|', '|$a$b|')").as("s"),
+              col("freq"))
+            .localCheckpoint(false)
       }
     }
     // the merge table is a driver buffer — the final vocab copy serves

@@ -326,7 +326,7 @@ class ArtifactsSpec extends SparkSpecBase {
   }
 
   test("semantic pair artifact: stored pairs equal the direct list; both collapse variants identical through the store; mismatch fails loudly") {
-    import graft.northstar.Similarity
+    import graft.northstar.{Dedup, Similarity}
     val centroids = Array(Array.fill(64)(1.0f))
     val sub = emb.filter(col("vec_id") < 120)
     val direct = Similarity.semanticDedupPairs(sub, centroids,
@@ -337,12 +337,13 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(rows(stored) == rows(direct) && stored.count() > 0)
     // keep-min collapse through the stored list == the one-shot op
     val ids = sub.select(col("vec_id"))
-    assert(rows(Similarity.semanticDedupFromPairs(ids, stored)) ==
+    assert(rows(Dedup.collapseByPairs(ids, stored, "vec_id")) ==
       rows(Similarity.semanticDedup(sub, centroids, thresholdE4 = 3000)))
     // keep-best collapse through the stored list == the one-shot op
     val scored = sub.withColumn("q", (col("vec_id") % 7).cast("long"))
-    assert(rows(Similarity.semanticDedupBestFromPairs(
-        scored.select(col("vec_id"), col("q")), stored, scoreCol = "q")) ==
+    assert(rows(Dedup.collapseByPairsBest(
+        scored.select(col("vec_id"), col("q")), stored, scoreCol = "q",
+        idCol = "vec_id")) ==
       rows(Similarity.semanticDedupBest(scored, centroids,
         thresholdE4 = 3000, scoreCol = "q")))
     // serve-by-load: different corpus under the same key returns the

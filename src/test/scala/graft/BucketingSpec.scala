@@ -96,42 +96,6 @@ class BucketingSpec extends SparkSpecBase {
     }
   }
 
-  test("pipeline cfg.bucketBy publishes silver facts bucketed; the downstream join is shuffle-free") {
-    import graft.engine.{Extraction, Pipeline, Tables}
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val root = TestTmp.dir("bucketpipe")
-    try {
-      val layers = Pipeline.Layers(
-        source = "/root/testdata/sf0.001",
-        raw = s"$root/raw", silverMapping = s"$root/sm",
-        silver = s"$root/silver", gold = s"$root/gold")
-      val cfg = Pipeline.Config(
-        extraction = Seq(
-          Extraction.TableJob("lineitem", "Full Refresh"),
-          Extraction.TableJob("orders", "Full Refresh")),
-        mappingEnabled = false,
-        bucketBy = Map(
-          "lineitem" -> ("l_orderkey", 4),
-          "orders" -> ("o_orderkey", 4)))
-      val statuses = Pipeline.run(spark, layers, cfg)
-      assert(statuses.forall(_.ok), statuses.mkString("; "))
-      val joined = Bucketing.joinBucketed(spark,
-        "silver_lineitem_bucketed", "l_orderkey",
-        "silver_orders_bucketed", "o_orderkey")
-      assert(Bucketing.isShuffleFree(joined),
-        joined.queryExecution.executedPlan.toString.take(600))
-      // values match the plain silver parquet join
-      val li = Tables.table(spark, s"$root/silver", "transformed_lineitem")
-      val o = Tables.table(spark, s"$root/silver", "transformed_orders")
-      assert(joined.count() ==
-        li.join(o, li("l_orderkey") === o("o_orderkey")).count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS silver_lineitem_bucketed")
-      spark.sql("DROP TABLE IF EXISTS silver_orders_bucketed")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-  }
-
   test("isShuffleFree discriminates every shuffle flavor, not just hash") {
     // code-review r13: rangepartitioning (orderBy) and SinglePartition
     // (global agg) shuffles previously read as "shuffle-free"

@@ -46,6 +46,24 @@ class ConfigsSpec extends AnyFunSuite {
     assert(specs("items").funcs == Seq("sum")) // scheduler default
   }
 
+  test("a list key holding a non-array value refuses, naming the key and the file; null reads as absent") {
+    def refusal(parse: => Any): String =
+      intercept[IllegalArgumentException](parse).getMessage
+    val ext = refusal(Configs.parseExtraction("""{"tables": "orders"}"""))
+    assert(ext.contains("extraction.json") && ext.contains("tables"), ext)
+    val tr = refusal(Configs.parseTransformations(
+      """{"selected_transformations": "Remove Duplicates"}"""))
+    assert(tr.contains("selected_transformations.json")
+      && tr.contains("selected_transformations"), tr)
+    val agg = refusal(Configs.parseAggregations(
+      """{"orders": {"groupby_columns": "status", "aggregation_columns": ["total"]}}"""))
+    assert(agg.contains("selected_aggregation_parameters.json")
+      && agg.contains("orders.groupby_columns"), agg)
+    assert(Configs.parseExtraction("""{"tables": null}""").isEmpty)
+    assert(Configs.parseTransformations(
+      """{"selected_transformations": null}""").isEmpty)
+  }
+
   test("load: directory assembly with defaults for absent files") {
     val dir = TestTmp.dir("cfg")
     Files.writeString(java.nio.file.Paths.get(dir, "extraction.json"),

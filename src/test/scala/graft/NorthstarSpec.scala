@@ -102,6 +102,31 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("an index without its pinned parameter columns is refused, naming the rebuild") {
+    val words = (1 to 30).map(i => s"w$i").mkString(" ")
+    val docs = Seq((1L, words)).toDF("doc_id", "text")
+    val incoming = Seq((101L, words)).toDF("doc_id", "text")
+    val band = Dedup.bandIndex(docs)
+    for (pin <- Seq("__k", "__bands")) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.minhashPairsAgainstIndex(incoming, band.drop(pin), docs).count()
+      }
+      assert(e.getMessage.contains("rebuild it with Dedup.bandIndex"),
+        e.getMessage)
+    }
+    val winnow = Dedup.winnowIndex(docs)
+    for (pin <- Seq("__k", "__window")) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.winnowPairsAgainstIndex(incoming, winnow.drop(pin)).count()
+      }
+      assert(e.getMessage.contains("rebuild it with Dedup.winnowIndex"),
+        e.getMessage)
+    }
+    // with the pins in place the same probes pair the clone
+    assert(Dedup.minhashPairsAgainstIndex(incoming, band, docs).count() == 1)
+    assert(Dedup.winnowPairsAgainstIndex(incoming, winnow).count() == 1)
+  }
+
   test("collapseByPairsBest: keeper is the highest-scoring cluster member, not the min id") {
     val scored = Seq(
       (1L, "a", 0.2), (2L, "a dup", 0.9), (3L, "a dup dup", 0.5), // cluster of 1-2-3
@@ -437,25 +462,6 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
-  test("reliable-checkpoint mode: labels identical to localCheckpoint mode, snapshots cleaned") {
-    val rnd = new scala.util.Random(3)
-    val edges = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
-    val pairs = edges.toDF("doc_a", "doc_b")
-    val local = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val tmp = TestTmp.dir("cc-ckpt")
-    val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(tmp))
-    val got = reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == local)
-    // eager cleanup: only the FINAL label snapshot survives the run
-    val remaining = new java.io.File(tmp).listFiles()
-      .filter(_.getName.startsWith("cc-snap-"))
-    assert(remaining.length == 1, remaining.map(_.getName).mkString(","))
-    // the returned frame is file-backed, so it stays consumable after cleanup
-    assert(reliable.count() == local.size.toLong)
-  }
-
   test("connectedComponents refuses to return unconverged labels") {
     // a 40-node chain needs several path-halving rounds; maxIter=1 must
     // stop loudly, not hand back silently SPLIT clusters
@@ -468,42 +474,6 @@ class DedupSpec extends SparkSpecBase {
     val cc = Dedup.connectedComponents(chain).collect()
       .map(r => r.getLong(1)).toSet
     assert(cc == Set(1L))
-  }
-
-  test("cleanCcSnapshots reclaims only snapshots older than the gate") {
-    val tmp = TestTmp.dir("cc-clean")
-    // two runs accumulate two retained final snapshots
-    Dedup.connectedComponents(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
-      checkpointDir = Some(tmp)).count()
-    Dedup.connectedComponents(Seq((3L, 4L)).toDF("doc_a", "doc_b"),
-      checkpointDir = Some(tmp)).count()
-    def snaps = new java.io.File(tmp).listFiles()
-      .filter(_.getName.startsWith("cc-snap-"))
-    assert(snaps.length == 2)
-    // both are fresh: a 1h gate deletes nothing (concurrency safety)
-    assert(Dedup.cleanCcSnapshots(tmp, olderThanMs = 3600 * 1000L) == 0)
-    // age ONE of them (dir + children — the S3A-safe gate takes the
-    // newest visible stamp) and sweep it
-    val old = snaps.head
-    val past = System.currentTimeMillis() - 48L * 3600 * 1000
-    (old +: Option(old.listFiles()).getOrElse(Array.empty).toSeq)
-      .foreach(f => assert(f.setLastModified(past)))
-    assert(Dedup.cleanCcSnapshots(tmp, olderThanMs = 3600 * 1000L) == 1)
-    assert(snaps.length == 1)
-  }
-
-  test("two CC runs sharing a checkpointDir keep both result frames consumable") {
-    // pre-r14 both runs wrote the SAME cc-snap-N paths: the second run
-    // overwrote (then cleaned) the first's retained final snapshot, so
-    // the first frame read wrong labels or threw FileNotFound
-    val tmp = TestTmp.dir("cc-shared")
-    val a = Dedup.connectedComponents(
-      Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b"),
-      checkpointDir = Some(tmp))
-    val b = Dedup.connectedComponents(
-      Seq((10L, 11L)).toDF("doc_a", "doc_b"), checkpointDir = Some(tmp))
-    assert(rows(a) == Set(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L)))
-    assert(rows(b) == Set(Seq(10L, 10L), Seq(11L, 10L)))
   }
 
   test("collapseByPairs composes with minhashPairs: near-dup corpus collapses to keepers") {
@@ -1302,64 +1272,38 @@ class TextAnalysisSpec extends SparkSpecBase {
     val short = TextAnalysis.bpeInduct(tiny, rounds = 5).collect()
     assert(short.length == 1 && short(0).getString(1) == "a"
       && short(0).getString(2) == "b")
-  }
-
-  test("bpeInduct batch>1: greedy disjoint commits, sequential-exact counts, conflict deferral") {
-    // same corpus as the hand-computed sequential test: rounds 1 and 2
-    // have an all-conflicting frontier (everything touches 'a'), so a
-    // batch=4 round commits exactly ONE merge there; round 3's frontier
-    // holds the disjoint pair {a n} + {aa ab}, committed together with
-    // the counts sequential induction reports — so the full 5-merge
-    // table is IDENTICAL to batch=1 while needing 4 rounds, not 5
-    val df = Seq((1L, "aaab aaab banana")).toDF("doc_id", "text")
-    def run(b: Int) = TextAnalysis.bpeInduct(df, rounds = 5, batch = b)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    assert(run(4) == run(1))
-    assert(run(1) == Seq(
-      (1L, "a", "a", 4L), (2L, "a", "b", 2L), (3L, "a", "n", 2L),
-      (4L, "aa", "ab", 2L), (5L, "an", "a", 1L)))
-    // disjoint frontier: every merge lands in ONE batched round, in
-    // (cnt desc, pair asc) order with the per-pair corpus counts
-    val disjoint = Seq((1L, "ab ab ab ab cd cd cd ef ef")).toDF("doc_id", "text")
-    val one = TextAnalysis.bpeInduct(disjoint, rounds = 3, batch = 8)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    assert(one == Seq(
-      (1L, "a", "b", 4L), (2L, "c", "d", 3L), (3L, "e", "f", 2L)))
-  }
-
-  test("bpeInduct greedy: same merge set with exact counts; a skipped conflict defers, not disappears") {
-    // 'a b'=3, 'b c'=2, 'c d'=1: greedy batch=2 commits {a b} then skips
-    // the conflicting {b c} and takes the disjoint {c d} in round 1 —
-    // {b c} lands in round 2. Sequential order differs ({b c} second),
-    // but the SET and every count are identical: the documented
-    // batched-BPE tradeoff.
-    val df = Seq((1L, "ab ab ab bc bc cd")).toDF("doc_id", "text")
-    def tbl(greedy: Boolean, b: Int) =
-      TextAnalysis.bpeInduct(df, rounds = 3, batch = b, greedy = greedy)
+    def table(text: String, rounds: Int) =
+      TextAnalysis.bpeInduct(Seq((1L, text)).toDF("doc_id", "text"), rounds)
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .sortBy(_._1).toSeq
-    val seqT = tbl(greedy = false, b = 1)
-    assert(seqT == Seq(
+    // symbol-disjoint frontier: (cnt desc, pair asc) with the corpus
+    // counts; the ef/gh tie breaks by pair order
+    assert(table("ab ab ab ab gh gh cd cd cd ef ef", rounds = 4) == Seq(
+      (1L, "a", "b", 4L), (2L, "c", "d", 3L), (3L, "e", "f", 2L),
+      (4L, "g", "h", 2L)))
+    // chained pairs: each merge leaves the next pair's count intact
+    assert(table("ab ab ab bc bc cd", rounds = 3) == Seq(
       (1L, "a", "b", 3L), (2L, "b", "c", 2L), (3L, "c", "d", 1L)))
-    assert(tbl(greedy = true, b = 2) == Seq(
-      (1L, "a", "b", 3L), (2L, "c", "d", 1L), (3L, "b", "c", 2L)))
-    // batch=1 greedy degenerates to strict sequential (first candidate
-    // always commits; nothing to skip past)
-    assert(tbl(greedy = true, b = 1) == seqT)
-    // when every conflict would ALSO block sequential progress within
-    // the round, greedy reproduces the sequential table exactly
-    val df2 = Seq((1L, "aaab aaab banana")).toDF("doc_id", "text")
-    def tbl2(greedy: Boolean, b: Int) =
-      TextAnalysis.bpeInduct(df2, rounds = 5, batch = b, greedy = greedy)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-    assert(tbl2(greedy = true, b = 4) == tbl2(greedy = false, b = 1))
+    // merging (a,b) leaves count(c,a) intact, so (c,a) comes before the
+    // lower-count (c,d)
+    val text = (Seq.fill(10)("ab") ++ Seq.fill(9)("ca") ++
+      Seq.fill(8)("cd")).mkString(" ")
+    assert(table(text, rounds = 3) == Seq(
+      (1L, "a", "b", 10L), (2L, "c", "a", 9L), (3L, "c", "d", 8L)))
+  }
+
+  test("bpeInduct releases every vocab checkpoint it registers") {
+    // one checkpoint per round is registered; each superseded one and
+    // the last must be unpersisted, or a long induction pins every
+    // round's vocab copy. The registry holds weak values, so GC may
+    // drop older entries: compare the ids the call added
+    val df = Seq((1L, "alpha bravo charlie delta echo foxtrot golf hotel"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(TextAnalysis.bpeInduct(df, rounds = 20).count() == 20)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"vocab checkpoints left registered: $added")
   }
 
   test("normalizeText: strips control chars, keeps newline structure, collapses runs, trims") {

@@ -191,52 +191,6 @@ class SparkPropertySpec extends SparkSpecBase {
     }
   }
 
-  test("bpeInduct batched == sequential when the merge frontier is symbol-disjoint") {
-    import graft.northstar.TextAnalysis
-    val rnd = new scala.util.Random(29)
-    // words drawn from pairwise-disjoint letter pairs: every candidate
-    // merge is symbol-disjoint from every other, which is exactly the
-    // regime where one batched round must reproduce sequential
-    // induction merge-for-merge (same pairs, same counts, same order)
-    val pool = Seq("ab", "cd", "ef", "gh", "ij", "kl", "mn", "op")
-    for (trial <- 1 to 6) {
-      val freqs = pool.map(w => w -> (1 + rnd.nextInt(30)))
-      val text = rnd.shuffle(
-        freqs.flatMap { case (w, f) => Seq.fill(f)(w) }).mkString(" ")
-      val df = Seq((1L, text)).toDF("doc_id", "text")
-      def run(b: Int) = TextAnalysis.bpeInduct(df, rounds = 5, batch = b)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-      val seq = run(1)
-      assert(seq == run(8), s"trial $trial: batch=8 diverged from sequential")
-      // and the sequential order itself is (freq desc, pair asc)
-      val want = freqs.sortBy { case (w, f) => (-f, s"${w(0)} ${w(1)}") }
-        .take(5).zipWithIndex
-        .map { case ((w, f), i) =>
-          (i + 1L, w(0).toString, w(1).toString, f.toLong) }
-      assert(seq == want, s"trial $trial: merge order wrong")
-    }
-  }
-
-  test("bpeInduct batched matches sequential ORDER past a conflicting pair (prefix rule)") {
-    import graft.northstar.TextAnalysis
-    // ab×10, ca×9, cd×8: merging (a,b) does not change count(c,a), so
-    // sequential order is (a,b),(c,a),(c,d). Skip-and-continue batching
-    // would commit (c,d) ahead of (c,a) — the prefix rule must not.
-    val text = (Seq.fill(10)("ab") ++ Seq.fill(9)("ca") ++
-      Seq.fill(8)("cd")).mkString(" ")
-    val df = Seq((1L, text)).toDF("doc_id", "text")
-    def run(b: Int) = TextAnalysis.bpeInduct(df, rounds = 3, batch = b)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    val seq = run(1)
-    assert(seq == Seq((1L, "a", "b", 10L), (2L, "c", "a", 9L),
-      (3L, "c", "d", 8L)))
-    assert(run(3) == seq, "batch=3 reordered merges past a conflict")
-  }
-
   test("probe training: update equals BigDecimal HALF_UP average-gradient step; invariant under corpus replication") {
     import graft.northstar.Probe
     val rnd = new scala.util.Random(31)

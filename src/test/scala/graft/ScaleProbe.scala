@@ -401,88 +401,6 @@ object ScaleProbe {
         replicate(docs1, 10, "doc_id", 1000000L), merges9).count()
     }
     println(f"[scale] bpeApply serve 10x-data ratio  ${ba10 / ba1}%.1fx (linear-ish expected)")
-    // batched induction: tokenizer-scale training (30k merges) must not
-    // mean one driver round-trip per merge. Count Spark jobs (job-group
-    // attribution) for ~50 effective merges, sequential vs batch=16:
-    // each batched round commits many symbol-disjoint merges from ONE
-    // pair-count aggregate, so the job count should drop >=5x
-    def jobsFor(group: String)(f: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      f
-      spark.sparkContext.clearJobGroup()
-      Thread.sleep(2000) // status store drains the listener bus async
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    }
-    val bpeSeqJobs = jobsFor("bpe-seq") {
-      TextAnalysis.bpeInduct(docs1, rounds = 50).count(): Unit
-    }
-    val bpeBatJobs = jobsFor("bpe-batch") {
-      TextAnalysis.bpeInduct(docs1, rounds = 50, batch = 16).count(): Unit
-    }
-    // NOTE (r13): the lazy per-round checkpoint halved BOTH paths'
-    // jobs, and strict prefix batching stalls to ~1 commit/round on
-    // this conflict-heavy corpus (measured ratio ~1.6x, down from r12's
-    // >=5x with eager checkpoints) — the tokenizer-scale lever is the
-    // greedy probe below, not strict batch width
-    println(f"[scale] bpeInduct 50-merge driver jobs seq=$bpeSeqJobs batch16=$bpeBatJobs " +
-      f"ratio=${bpeSeqJobs.toDouble / math.max(1, bpeBatJobs)}%.1fx (strict batching; see greedy probe)")
-    // tokenizer-scale induction (VERDICT r12 task 7): >=500 effective
-    // merges. The base 5k-doc corpus draws from a tiny shared
-    // vocabulary and runs DRY at ~89 merges, so train on 15 mangled
-    // replicas (per-replica word suffix -> ~15x distinct words, ~1300
-    // merges available). The strict prefix rule stalls to ~1
-    // commit/round on this corpus (the hot-character frontier all
-    // conflicts), so tokenizer scale uses greedy disjoint selection —
-    // merge SET and counts exact, order may defer conflicts
-    // (NorthstarSpec pins both properties).
-    // Measured 2026-08-14 (r13, local[8], lazy per-round checkpoint):
-    //   strict batch=16: 500 merges, 838 jobs (1.68 jobs/merge), 39 s
-    //   greedy batch=64: 500 merges,  60 jobs (0.12 jobs/merge),  3 s
-    // — 0.12 <= the 0.2 jobs/merge target; wall time is vocab-bound,
-    // not corpus-bound (the corpus is tokenized once either way).
-    val docsBpe = (0 until 15).map(mangled).reduce(_ unionAll _)
-    var bpe500merges = 0L
-    val bpe500jobs = jobsFor("bpe-500") {
-      bpe500merges = TextAnalysis.bpeInduct(docsBpe, rounds = 500,
-        batch = 64, greedy = true).count()
-    }
-    println(f"[scale] bpeInduct 500-merge greedy b64  merges=$bpe500merges jobs=$bpe500jobs " +
-      f"jobs/merge=${bpe500jobs.toDouble / math.max(1L, bpe500merges)}%.3f (<=0.2 expected)")
-    // real-tokenizer scale (VERDICT r13 task 4): >=5k effective merges.
-    // Replica suffixes alone run dry ~2k merges (merges are shared
-    // across words, so distinct-WORD growth is what opens merge space);
-    // POSITION-dependent suffixes multiply distinct words by position,
-    // opening a 100k+ merge space from 2 replicas. batch=128 greedy.
-    // Driver memory is bounded by construction since r14: each round's
-    // superseded vocab checkpoint is unpersisted once its successor
-    // materializes (TextAnalysis.bpeInduct liveCk), so live persistent
-    // RDDs stay O(1) across the run — asserted below, as is the
-    // <=0.15 jobs/merge budget.
-    // Measured 2026-08-14 (r14, local[8]): 5000 merges, 316 jobs
-    // (0.063 jobs/merge), persistent RDDs 9 -> 9 (leak-free).
-    def mangledPos(i: Int): DataFrame = docs1
-      .withColumn("doc_id", col("doc_id") + lit(i * 1000000L))
-      .withColumn("text", array_join(
-        transform(split(col("text"), " "),
-          (w, j) => concat(w, lit(s"_${i}x"), j)), " "))
-    val docsBpe5k = (0 until 2).map(mangledPos).reduce(_ unionAll _)
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
-    var bpe5kMerges = 0L
-    val bpe5kJobs = jobsFor("bpe-5k") {
-      bpe5kMerges = TextAnalysis.bpeInduct(docsBpe5k, rounds = 5000,
-        batch = 128, greedy = true).count()
-    }
-    val rddsAfter = spark.sparkContext.getPersistentRDDs.size
-    val jobsPerMerge = bpe5kJobs.toDouble / math.max(1L, bpe5kMerges)
-    println(f"[scale] bpeInduct 5k-merge greedy b128  merges=$bpe5kMerges jobs=$bpe5kJobs " +
-      f"jobs/merge=$jobsPerMerge%.3f (<=0.15 expected) " +
-      f"persistentRDDs $rddsBefore -> $rddsAfter (leak-free expected)")
-    assert(bpe5kMerges >= 5000,
-      s"corpus must open >=5000 merges, got $bpe5kMerges")
-    assert(jobsPerMerge <= 0.15,
-      f"jobs/merge $jobsPerMerge%.3f exceeds the 0.15 budget")
-    assert(rddsAfter <= rddsBefore,
-      s"vocab checkpoints leaked: $rddsBefore -> $rddsAfter live RDDs")
     // quantileCuts: the cumulative window's input is the value DOMAIN,
     // not the row count — replication grows histogram counts, not
     // distinct values, so cost tracks the one aggregate pass and the
