@@ -145,29 +145,6 @@ object SparkEntry {
       cacheKey = corpusKey(emb.sparkSession, dir, "embeddings") + "-lt200",
       centroids = Array(Array.fill(64)(1.0f)), thresholdE4 = 3000)
 
-  /** The append-lifecycle demo behind `ns_knn_ivfpq_append*`: the
-    * IVF-PQ serving index is BUILT on the even-id half of the corpus,
-    * the odd-id half arrives as ingest and is APPENDED with the
-    * quantizers pinned from the initial build (the production nightly
-    * pattern [[graft.northstar.Artifacts.appendIvfPqIndex]] exists
-    * for), and queries serve from the appended index. save→append is
-    * idempotent per evaluation: the save's static overwrite resets the
-    * index to the A-half before each append, so repeated runs (Verify,
-    * Bench reps, plan guards) are deterministic. The index path folds
-    * in the JVM's runtime name: unlike every other artifact here (which
-    * ensureTrained publishes once, atomically, and then only reads),
-    * this demo MUTATES its directory on every evaluation — overwrite,
-    * marker drop, cell renames — which must not interleave with a
-    * concurrent Bench/Verify process sharing the artifact root; the
-    * results are data-deterministic either way, so each JVM builds its
-    * own small disposable copy.
-    */
-  /** The cross-slice winnow replay, shared verbatim by
-    * `ns_winnow_incoming` (capped build-on-everything artifact) and
-    * `ns_winnow_append` (appendable index built on the even half, odd
-    * half appended): the append lifecycle must not change a single
-    * pair, so both rows hash against the SAME oracle.
-    */
   /** Shared oracle of the three phash-lifecycle rows
     * (`ns_imagedup_incoming`/`_append`/`_remove`): the FULL
     * incoming×corpus screen — every (flipped copy, original) pair
@@ -208,6 +185,12 @@ object SparkEntry {
       |HAVING SUM(CASE WHEN fa.hb <> ob.hb THEN 1 ELSE 0 END) <= 3"""
       .stripMargin
 
+  /** The cross-slice winnow replay, shared verbatim by
+    * `ns_winnow_incoming` (capped build-on-everything artifact) and
+    * `ns_winnow_append` (appendable index built on the even half, odd
+    * half appended): the append lifecycle must not change a single
+    * pair, so both rows hash against the SAME oracle.
+    */
   private val winnowIncomingOracle: String =
     """WITH corpus AS (SELECT doc_id, text FROM documents),
       |incoming AS (
@@ -260,6 +243,23 @@ object SparkEntry {
     java.lang.management.ManagementFactory.getRuntimeMXBean
       .getName.replaceAll("[^A-Za-z0-9]", "")
 
+  /** The append-lifecycle demo behind `ns_knn_ivfpq_append*`: the
+    * IVF-PQ serving index is BUILT on the even-id half of the corpus,
+    * the odd-id half arrives as ingest and is APPENDED with the
+    * quantizers pinned from the initial build (the production nightly
+    * pattern [[graft.northstar.Artifacts.appendIvfPqIndex]] exists
+    * for), and queries serve from the appended index. save→append is
+    * idempotent per evaluation: the save's static overwrite resets the
+    * index to the A-half before each append, so repeated runs (Verify,
+    * Bench reps, plan guards) are deterministic. The index path folds
+    * in the JVM's runtime name: unlike every other artifact here (which
+    * ensureTrained publishes once, atomically, and then only reads),
+    * this demo MUTATES its directory on every evaluation — overwrite,
+    * marker drop, cell renames — which must not interleave with a
+    * concurrent Bench/Verify process sharing the artifact root; the
+    * results are data-deterministic either way, so each JVM builds its
+    * own small disposable copy.
+    */
   private def ivfPqAppendServe(s: SparkSession, dir: String, nProbe: Int,
                                rerank: Int, maxCell: Int): DataFrame = {
     import graft.northstar.{Artifacts, Pq}
@@ -2878,9 +2878,6 @@ object SparkEntry {
       |  row_number() OVER (ORDER BY bm25_e4 DESC, doc_id) AS rank
       |FROM top""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
   /** The ONE brute-force top-10 oracle every exhaustive ANN identity
     * row hashes against (ns_knn_brute and its 6 "must equal brute"
     * companions) — defined once so a tweak to the ranking tie-break or
@@ -2897,6 +2894,9 @@ object SparkEntry {
         |      FROM s)
         |SELECT query_id, neighbor_id, rnk AS "rank" FROM r WHERE rnk <= 10""".stripMargin
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops.
+    */
   def oracleSql: Map[String, String] = Map(
     // l_quantity is integer-valued → double sums are exact and
     // order-independent, so the sum/mean stay DOUBLE to match Spark's type

@@ -27,62 +27,96 @@ object Configs {
 
   private val mapper = new ObjectMapper()
 
-  /** A list-valued key: absent or JSON null reads as empty, and any other
-    * non-array value refuses — reading `{"tables": "orders"}` as empty
-    * would extract no table and still succeed.
+  /** Strict reads of one JSON config object, shared by every config
+    * parser (these four files and `Curation`'s two configs). An absent
+    * key and JSON null both read as "not set"; a value of the wrong JSON
+    * type refuses, naming the file and the key. Jackson's own readers
+    * coerce instead: `asBoolean(true)` reads `"no"` as true and `0` as
+    * false, `asLong` reads `"3k"` as 0, and `get` on a string reads every
+    * key as absent.
     */
-  private def strings(n: JsonNode, key: String, file: String): Seq[String] =
-    if (n == null || n.isNull) Nil
-    else {
-      require(n.isArray,
-        s"$file: $key must be a JSON array, got ${n.getNodeType}")
-      n.elements().asScala.map(_.asText()).toSeq
+  private[graft] final class Fields(node: JsonNode, file: String,
+                                    path: String = "") {
+    private def name(key: String) = if (path.isEmpty) key else s"$path.$key"
+    require(node.isObject, s"$file: ${if (path.isEmpty) "the config" else path}" +
+      s" must be a JSON object, got ${node.getNodeType}")
+
+    /** Refuse keys outside `known`: a typoed key would otherwise read as
+      * absent and silently disable its stage. */
+    def onlyKeys(known: Set[String]): Unit = {
+      val unknown = node.fieldNames().asScala.toSet -- known
+      require(unknown.isEmpty, s"$file: unknown keys: " +
+        s"${unknown.toSeq.sorted.mkString(", ")} " +
+        s"(known: ${known.toSeq.sorted.mkString(", ")})")
     }
 
+    /** Whether the key is present, even as JSON null. */
+    def has(key: String): Boolean = node.has(key)
+
+    private def get(key: String, kind: String,
+                    ok: JsonNode => Boolean): Option[JsonNode] =
+      Option(node.get(key)).filterNot(_.isNull).map { n =>
+        require(ok(n), s"$file: ${name(key)} must be a JSON $kind, " +
+          s"got ${n.getNodeType}")
+        n
+      }
+    def bool(key: String): Option[Boolean] =
+      get(key, "boolean", _.isBoolean).map(_.booleanValue)
+    def number(key: String): Option[Double] =
+      get(key, "number", _.isNumber).map(_.asDouble)
+    def integer(key: String): Option[Long] =
+      get(key, "integer", _.isIntegralNumber).map(_.asLong)
+    def text(key: String): Option[String] =
+      get(key, "string", _.isTextual).map(_.asText)
+    def strings(key: String): Option[Seq[String]] =
+      get(key, "array of strings",
+        n => n.isArray && n.elements().asScala.forall(_.isTextual))
+        .map(_.elements().asScala.map(_.asText).toSeq)
+
+    /** Every key whose value is set, read as a nested object. */
+    def objects: Seq[(String, Fields)] =
+      node.properties().asScala.toSeq.filterNot(_.getValue.isNull)
+        .map(e => e.getKey -> new Fields(e.getValue, file, name(e.getKey)))
+  }
+
+  private[graft] object Fields {
+    def apply(json: String, file: String): Fields =
+      new Fields(mapper.readTree(json), file)
+  }
+
   def parseExtraction(json: String): Seq[Extraction.TableJob] = {
-    val root = mapper.readTree(json)
-    // filter(!_.isNull): an explicit JSON null used to become the
-    // literal mode string "null" (NullNode.asText), failing every table
-    // with unknown-mode where the reference's dict.get(None) defaults
-    // (code-review r14)
-    val mode = Option(root.get("extraction_type")).filter(!_.isNull)
-      .map(_.asText()).getOrElse("Full Refresh")
-    strings(root.get("tables"), "tables", "extraction.json")
-      .map(t => Extraction.TableJob(t, mode))
+    val f = Fields(json, "extraction.json")
+    // an explicit JSON null defaults like an absent key (the reference's
+    // dict.get)
+    val mode = f.text("extraction_type").getOrElse("Full Refresh")
+    f.strings("tables").getOrElse(Nil).map(t => Extraction.TableJob(t, mode))
   }
 
-  def parseMappingStatus(json: String): Boolean = {
-    val root = mapper.readTree(json)
-    Option(root.get("mapping")).forall(_.asBoolean(true))
-  }
+  def parseMappingStatus(json: String): Boolean =
+    Fields(json, "mapping_status.json").bool("mapping").getOrElse(true)
 
-  def parseTransformations(json: String): Seq[String] = {
-    val root = mapper.readTree(json)
-    strings(root.get("selected_transformations"), "selected_transformations",
-      "selected_transformations.json")
-  }
+  def parseTransformations(json: String): Seq[String] =
+    Fields(json, "selected_transformations.json")
+      .strings("selected_transformations").getOrElse(Nil)
 
-  def parseAggregations(json: String): Map[String, AggSpec] = {
-    val root = mapper.readTree(json)
-    root.properties().asScala.map { e =>
-      val p = e.getValue
-      // the "sum" default applies only when the KEY IS ABSENT
-      // (scheduler.py:155 .get(..., ["sum"])); an explicitly EMPTY list
-      // is falsy in the reference's `if ... and agg_funcs` guard and
-      // skips the table — coercing it to sum would emit an agg output
-      // the reference pipeline never produces. Empty funcs flow through
-      // and Aggregations.aggregate skips (A3).
-      def list(key: String) = strings(p.get(key), s"${e.getKey}.$key",
-        "selected_aggregation_parameters.json")
-      val funcs =
-        if (p.get("aggregation_functions") == null) Seq("sum")
-        else list("aggregation_functions")
-      e.getKey -> AggSpec(
-        groupBy = list("groupby_columns"),
-        aggCols = list("aggregation_columns"),
-        funcs = funcs)
+  def parseAggregations(json: String): Map[String, AggSpec] =
+    Fields(json, "selected_aggregation_parameters.json").objects.map {
+      case (table, p) =>
+        // the "sum" default applies only when the KEY IS ABSENT
+        // (scheduler.py:155 .get(..., ["sum"])); an explicit null or an
+        // EMPTY list is falsy in the reference's `if ... and agg_funcs`
+        // guard and skips the table — coercing it to sum would emit an
+        // agg output the reference pipeline never produces. Empty funcs
+        // flow through and Aggregations.aggregate skips (A3).
+        def list(key: String) = p.strings(key).getOrElse(Nil)
+        val funcs =
+          if (!p.has("aggregation_functions")) Seq("sum")
+          else list("aggregation_functions")
+        table -> AggSpec(
+          groupBy = list("groupby_columns"),
+          aggCols = list("aggregation_columns"),
+          funcs = funcs)
     }.toMap
-  }
 
   /** Assemble a Pipeline.Config from a directory holding any subset of the
     * four files; absent files take the reference's defaults (no tables,

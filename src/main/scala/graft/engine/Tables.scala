@@ -31,24 +31,6 @@ object Tables {
   private val nanosContract: Map[String, Seq[String]] = Map(
     "events" -> Seq("ts"))
 
-  /** S1 full scan: one table from a layer directory.
-    *
-    * Timestamp columns surface as epoch-NANOS int64, whatever the parquet
-    * physical type. Parquet TIMESTAMP(NANOS) has no lossless TimestampType
-    * representation (Spark is µs), so it is read as raw int64 nanos
-    * (legacy.parquet.nanosAsLong); TIMESTAMP(MICROS) — what the driver's
-    * pandas writer emits for events.ts since r11 — reads as
-    * TIMESTAMP_NTZ/TIMESTAMP and is converted to nanos by
-    * [[normalizeTimestamps]] (exact: µs·1000 is far inside long range).
-    * One contract for every consumer; those needing a timestamp view use
-    * [[nanosToTimestamp]] explicitly (lossy below µs, exact here).
-    *
-    * Scale note: the conversion is a narrow per-row projection appended to
-    * the scan; filters on OTHER columns still push to parquet. No query
-    * filters on raw `ts` at scan time (watermark predicates key on
-    * `event_id`), so nothing loses pushdown — if one ever does, filter on
-    * the timestamp column before calling normalize.
-    */
   /** The per-JVM path records below ([[records]]) trust a digest of a
     * path's file listing: a record's pinned schema was read or written
     * with that listing, and its recorded write left it. The digest is
@@ -315,6 +297,24 @@ object Tables {
     }
   }
 
+  /** S1 full scan: one table from a layer directory.
+    *
+    * Timestamp columns surface as epoch-NANOS int64, whatever the parquet
+    * physical type. Parquet TIMESTAMP(NANOS) has no lossless TimestampType
+    * representation (Spark is µs), so it is read as raw int64 nanos
+    * (legacy.parquet.nanosAsLong); TIMESTAMP(MICROS) — what the driver's
+    * pandas writer emits for events.ts since r11 — reads as
+    * TIMESTAMP_NTZ/TIMESTAMP and is converted to nanos by
+    * [[normalizeTimestamps]] (exact: µs·1000 is far inside long range).
+    * One contract for every consumer; those needing a timestamp view use
+    * [[nanosToTimestamp]] explicitly (lossy below µs, exact here).
+    *
+    * Scale note: the conversion is a narrow per-row projection appended to
+    * the scan; filters on OTHER columns still push to parquet. No query
+    * filters on raw `ts` at scan time (watermark predicates key on
+    * `event_id`), so nothing loses pushdown — if one ever does, filter on
+    * the timestamp column before calling normalize.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the nanosAsLong flag is session-scoped and Spark exposes no
     // per-read switch, so flipping it here unconditionally changed the

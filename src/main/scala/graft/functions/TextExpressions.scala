@@ -418,7 +418,6 @@ case class MinHashSig(child: Expression, n: Int, k: Int)
     copy(child = newChild)
 }
 
-/** shingles(text) → array<string> of distinct word n-gram shingles. */
 /** winnow_sketch(array<string>, k, window, chunkTokens) →
   * array<string>: the fused winnowing-sketch kernel
   * ([[TextOps.winnowSketch]]) behind
@@ -443,6 +442,7 @@ case class WinnowSketchExpr(child: Expression, k: Int, window: Int,
     copy(child = newChild)
 }
 
+/** shingles(text) → array<string> of distinct word n-gram shingles. */
 case class ShinglesExpr(child: Expression, n: Int)
     extends UnaryExpression with org.apache.spark.sql.graftbridge.KernelInputTypes {
   // n=0 yielded the single empty shingle for every document — every
@@ -607,7 +607,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
-/** Column-level API for the text-hash kernels. */
 /** ascii_strip(string) → string: both-ends strip of ASCII whitespace
   * (space, \t, \n, \r, VT \u000B, FF \u000C) — exactly
   * `trim(col, Transforms.TrimChars)`,
@@ -632,6 +631,7 @@ case class AsciiStrip(child: Expression)
     copy(child = newChild)
 }
 
+/** Column-level API for the text-hash kernels. */
 object texthash {
   def ascii_strip(text: Column): Column =
     Bridge.column(AsciiStrip(Bridge.expression(text)))

@@ -1,9 +1,8 @@
 package graft.northstar
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import graft.engine.Configs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Config-driven corpus curation: the r7 operator set composed into ONE
   * declarative pipeline, in the same JSON-replay style as the
@@ -19,8 +18,11 @@ import scala.jdk.CollectionConverters._
   *   4. temperature    (per-lang rebalance over the floored survivors)
   *   5. budget fill    (greedy best-quality-first per lang)
   *
-  * Every stage is optional (absent key = skipped). The whole composition
-  * stays one lazy plan — histogram/count aggregates ride as broadcast
+  * Every stage is optional (absent key = skipped). Each rule is written
+  * once, as a per-row flag ([[flagged]], [[budgetFill]]); [[run]],
+  * [[funnel]], [[freeze]] and [[serve]] differ only in where the two
+  * statistics come from and what they do with the flags. The whole
+  * composition stays one lazy plan — histogram/count aggregates ride as broadcast
   * 1-row/stratum-row sides, nothing materializes between stages — and
   * every decision is deterministic integer/hash arithmetic, so an
   * external SQL engine can replay the full pipeline (see the
@@ -39,102 +41,50 @@ object Curation {
       temperatureAlpha: Option[Double] = None,
       budgetPerLang: Option[Long] = None)
 
-  private val mapper = new ObjectMapper()
-
   /** Parse a curation config from JSON, e.g.
     * `{"min_quality": 0.5, "langs": ["en","de"], "length_floor": "1/10",
-    *   "temperature_alpha": 0.5, "budget_per_lang": 3000}`.
+    *   "temperature_alpha": 0.5, "budget_per_lang": 3000}`. Read
+    * strictly ([[Configs.Fields]]): a typoed key refuses rather than
+    * silently disabling its gate, JSON null reads as absent (treating
+    * `{"langs": null}` as Some(Nil) would make the isin() gate drop the
+    * ENTIRE corpus), and a value of the wrong type refuses rather than
+    * coercing to 0 (`{"budget_per_lang": "3k"}` silently dropped the whole
+    * corpus; code-review r13/r14).
     */
-  private val knownKeys = Set("min_quality", "langs", "length_floor",
-    "temperature_alpha", "budget_per_lang")
-
   def parseConfig(json: String): CurationConfig = {
-    val root = mapper.readTree(json)
-    // a typoed key would silently DISABLE its gate (field lookup misses,
-    // stage skipped, unfiltered docs flow into the mixture) — refuse
-    // unknown keys at the config boundary instead (code-review r13)
-    val unknown = root.fieldNames().asScala.toSet -- knownKeys
-    require(unknown.isEmpty,
-      s"unknown curation config keys: ${unknown.toSeq.sorted.mkString(", ")} " +
-        s"(known: ${knownKeys.toSeq.sorted.mkString(", ")})")
-    // JSON null reads as ABSENT for every key: Option(root.get(k)) is
-    // Some(NullNode), and treating {"langs": null} as Some(Nil) would
-    // make the isin() gate silently drop the ENTIRE corpus (and
-    // {"min_quality": null} would become Some(0.0))
-    def field(k: String) = Option(root.get(k)).filterNot(_.isNull)
-    // numeric fields must BE numbers: Jackson's asDouble()/asLong()
-    // coerce a malformed scalar ("3k", true, an object) to 0 instead of
-    // throwing — {"min_quality": "strict"} silently DISABLED the
-    // quality gate and {"budget_per_lang": "3k"} silently dropped the
-    // whole corpus (budget 0) — the exact silent-drop class this
-    // boundary exists to refuse (code-review r14)
-    def num(k: String): Option[Double] = field(k).map { n =>
-      require(n.isNumber, s"$k must be a JSON number, got ${n.getNodeType}")
-      n.asDouble()
-    }
-    def intNum(k: String): Option[Long] = field(k).map { n =>
-      require(n.isIntegralNumber,
-        s"$k must be a JSON integer, got ${n.getNodeType}")
-      n.asLong()
-    }
-    val floor = field("length_floor").map(_.asText())
-      .map { s =>
-        s.split("/", 2) match {
-          case Array(n, d) => (n.trim.toLong, d.trim.toLong)
-          case _ => throw new IllegalArgumentException(
-            s"length_floor must be 'num/den', got '$s'")
-        }
+    val f = Configs.Fields(json, "curation config")
+    f.onlyKeys(Set("min_quality", "langs", "length_floor",
+      "temperature_alpha", "budget_per_lang"))
+    val floor = f.text("length_floor").map { s =>
+      s.split("/", 2) match {
+        case Array(n, d) => (n.trim.toLong, d.trim.toLong)
+        case _ => throw new IllegalArgumentException(
+          s"length_floor must be 'num/den', got '$s'")
       }
-    // an explicit empty array means "no language filter", same as
-    // absent: Some(Nil) would hand isin() ZERO arguments — false for
-    // every row, the whole corpus silently dropped (the exact failure
-    // the null-guard above documents; code-review r13)
-    val langs = field("langs").map { node =>
-      require(node.isArray,
-        s"langs must be a JSON array, got ${node.getNodeType}")
-      node.elements().asScala.map(_.asText()).toSeq
-    }.filter(_.nonEmpty)
-    val budget = intNum("budget_per_lang")
+    }
+    val budget = f.integer("budget_per_lang")
     // a zero/negative budget admits nothing — refuse rather than
     // silently emptying every language's quota
     budget.foreach(b => require(b > 0,
       s"budget_per_lang must be positive, got $b"))
     CurationConfig(
-      minQuality = num("min_quality"),
-      langs = langs,
+      minQuality = f.number("min_quality"),
+      // an explicit empty array means "no language filter", same as
+      // absent: Some(Nil) would hand isin() ZERO arguments
+      langs = f.strings("langs").filter(_.nonEmpty),
       lengthFloorNum = floor.map(_._1),
       lengthFloorDen = floor.map(_._2),
-      temperatureAlpha = num("temperature_alpha"),
+      temperatureAlpha = f.number("temperature_alpha"),
       budgetPerLang = budget)
   }
 
-  /** The five stage frames (input, gated, floored, sampled, selected),
-    * lazily composed; shared by [[run]] and [[funnel]].
-    */
-  private def stages(df: DataFrame, cfg: CurationConfig, idCol: String,
-                     textCol: String, langCol: String): Seq[DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = scoredOnce(df, cfg, idCol, textCol, langCol)
-    val gated0 = cfg.minQuality.fold(scored)(q =>
-      scored.filter(col("q_score") >= q))
-    val gated = cfg.langs.fold(gated0)(ls =>
-      gated0.filter(col(langCol).isin(ls: _*)))
-    val floored = (cfg.lengthFloorNum, cfg.lengthFloorDen) match {
-      case (Some(n), Some(d)) => Sampling.quantileFloor(gated, "n_tokens", n, d)
-      case _ => gated
-    }
-    val sampled = cfg.temperatureAlpha.fold(floored)(a =>
-      Sampling.temperatureSample(floored, langCol, a, idCol))
-    val filled = cfg.budgetPerLang.fold(sampled) { budget =>
-      val w = Window.partitionBy(langCol)
-        .orderBy(col("q_score").desc, col(idCol))
-      sampled.withColumn("__cum_before",
-          sum(col("n_tokens")).over(w) - col("n_tokens"))
-        .filter(col("__cum_before") < budget)
-        .drop("__cum_before")
-    }
-    Seq(scored, gated, floored, sampled, filled)
-  }
+  /** (id, lang, q_score, n_tokens) of every document: the text kernel
+    * every stage reads. */
+  private def scored(df: DataFrame, idCol: String, textCol: String,
+                     langCol: String): DataFrame =
+    TextAnalysis.qualityScore(df, textCol)
+      .select(col(idCol), col(langCol), col("q_score"),
+        TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
 
   /** The scored frame every stage derives from — persisted when the
     * config carries a statistic-bearing stage (optimization r21, guide
@@ -150,25 +100,110 @@ object Curation {
     */
   private def scoredOnce(df: DataFrame, cfg: CurationConfig, idCol: String,
                          textCol: String, langCol: String): DataFrame = {
-    val scored = TextAnalysis.qualityScore(df, textCol)
-      .select(col(idCol), col(langCol), col("q_score"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    val needsStats =
-      (cfg.lengthFloorNum.isDefined && cfg.lengthFloorDen.isDefined) ||
-        cfg.temperatureAlpha.isDefined
-    if (needsStats) Dedup.trackedPersist(scored) else scored
+    val s = scored(df, idCol, textCol, langCol)
+    if (lengthCut(cfg).isDefined || cfg.temperatureAlpha.isDefined)
+      Dedup.trackedPersist(s)
+    else s
   }
+
+  /** A stage statistic on its way to each row: adds its column to the
+    * frame of flags so far. */
+  private type Stat = DataFrame => DataFrame
+
+  private def literal(name: String, value: Column): Stat =
+    _.withColumn(name, value)
+
+  /** The scored frame plus one flag column per stage: `__s2` the gates,
+    * `__s3` the length floor, `__s4` the temperature sample. Each flag is
+    * the one before AND its stage's rule, so a row survives every stage
+    * up to its last true flag; a stage without its statistic keeps the
+    * flag before. The length cut (`__thr`) and the per-language rates
+    * (`__rate`) reach each row through `cut` and `rates`: [[batch]] joins
+    * them as broadcast frames derived from the flagged survivors,
+    * [[serve]] adds them as frozen literals.
+    */
+  private def flagged(scored: DataFrame, minQuality: Option[Double],
+                      langs: Option[Seq[String]], cut: Option[Stat],
+                      rates: Option[Stat], idCol: String,
+                      langCol: String): DataFrame = {
+    val gates = Seq(minQuality.map(q => col("q_score") >= q),
+        langs.map(ls => col(langCol).isin(ls: _*)))
+      .flatten.reduceOption(_ && _).getOrElse(lit(true))
+    def stage(f: DataFrame, stat: Option[Stat], prev: String, flag: String,
+              rule: Column) =
+      stat.fold(f.withColumn(flag, col(prev)))(attach =>
+        attach(f).withColumn(flag, col(prev) && rule))
+    val floored = stage(scored.withColumn("__s2", gates), cut, "__s2",
+      "__s3", col("n_tokens") > col("__thr"))
+    stage(floored, rates, "__s3", "__s4",
+      Sampling.hashUnit(col(idCol)) < col("__rate"))
+  }
+
+  /** The length cut as a 1-row `__thr` frame: the k-th smallest token
+    * count of the gated survivors ([[Sampling.quantileFloor]]'s cut). */
+  private def lengthCut(cfg: CurationConfig): Option[DataFrame => DataFrame] =
+    for (n <- cfg.lengthFloorNum; d <- cfg.lengthFloorDen) yield
+      (f: DataFrame) => Sampling.quantileThresholdFrame(
+        f.filter(col("__s2")), "n_tokens", n, d)
+
+  /** The per-language rates of the floored survivors
+    * ([[Sampling.temperatureSample]]'s arithmetic, null languages
+    * excluded). */
+  private def langRates(cfg: CurationConfig,
+                        langCol: String): Option[DataFrame => DataFrame] =
+    cfg.temperatureAlpha.map(a => (f: DataFrame) =>
+      Sampling.temperatureRates(f.filter(col("__s3")), langCol, a))
+
+  /** The batch flags: both statistics ride as broadcast sides. A row
+    * whose language has no rate gets a null `__rate`, so its `__s4` is
+    * false or null and it never survives. */
+  private def batch(df: DataFrame, cfg: CurationConfig, idCol: String,
+                    textCol: String, langCol: String): DataFrame =
+    flagged(scoredOnce(df, cfg, idCol, textCol, langCol), cfg.minQuality,
+      cfg.langs,
+      lengthCut(cfg).map(cut => f => f.crossJoin(broadcast(cut(f)))),
+      langRates(cfg, langCol).map(r => f =>
+        f.join(broadcast(r(f)), Seq(langCol), "left")),
+      idCol, langCol)
+
+  /** The budget fill as the flag `__s5`: per language, best quality
+    * first (id ties), a row is admitted while the tokens admitted before
+    * it stay under the budget. [[run]] passes the temperature survivors
+    * alone (`alive` None); [[funnel]] passes every row, and rows not
+    * `alive` add no tokens, which leaves each live row's running total
+    * unchanged (ids are unique, so the RANGE/ROWS frame distinction is
+    * moot).
+    */
+  private def budgetFill(f: DataFrame, cfg: CurationConfig,
+                         alive: Option[Column], idCol: String,
+                         langCol: String): DataFrame = {
+    val live = alive.getOrElse(lit(true))
+    cfg.budgetPerLang.fold(f.withColumn("__s5", live)) { budget =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(langCol)
+        .orderBy(col("q_score").desc, col(idCol))
+      val tokens = alive.fold(col("n_tokens"))(
+        when(_, col("n_tokens")).otherwise(0L))
+      f.withColumn("__s5", live && (sum(tokens).over(w) - tokens) < budget)
+    }
+  }
+
+  private def output(f: DataFrame, idCol: String, langCol: String) =
+    f.select(col(idCol), col(langCol), col("n_tokens"),
+      round(col("q_score") * 10000).cast("long").as("q_e4"))
 
   /** Run the curation pipeline over a documents frame (doc_id, text,
     * lang, ...). Output: (doc_id, lang, n_tokens, q_e4) for every
-    * surviving document.
+    * surviving document. The budget window runs over the temperature
+    * survivors only.
     */
   def run(df: DataFrame, cfg: CurationConfig,
           idCol: String = "doc_id", textCol: String = "text",
-          langCol: String = "lang"): DataFrame =
-    stages(df, cfg, idCol, textCol, langCol).last
-      .select(col(idCol), col(langCol), col("n_tokens"),
-        round(col("q_score") * 10000).cast("long").as("q_e4"))
+          langCol: String = "lang"): DataFrame = {
+    val sampled = batch(df, cfg, idCol, textCol, langCol).filter(col("__s4"))
+    output(budgetFill(sampled, cfg, None, idCol, langCol)
+      .filter(col("__s5")), idCol, langCol)
+  }
 
   /** The deployable artifact of a batch curation run: every data-derived
     * statistic frozen to plain values — the length-floor threshold and
@@ -185,42 +220,27 @@ object Curation {
       lengthThreshold: Option[Long],
       rates: Option[Map[String, Double]])
 
-  /** Freeze a config's data-derived statistics from a batch corpus.
-    * Driver collects are bounded: one scalar threshold + one row per
-    * language.
+  /** Freeze a config's data-derived statistics from a batch corpus: the
+    * two statistic frames [[batch]] joins, collected. Driver collects are
+    * bounded: one scalar threshold + one row per language. The rates see
+    * the collected cut as a literal, exactly as [[serve]] applies it; an
+    * empty input freezes the cut at Long.MaxValue and the rates to an
+    * empty map, so serve keeps nothing, as the batch run would.
     */
   def freeze(df: DataFrame, cfg: CurationConfig,
              idCol: String = "doc_id", textCol: String = "text",
              langCol: String = "lang"): FrozenCuration = {
-    val Seq(_, gated, _, _, _) =
-      stages(df, cfg, idCol, textCol, langCol)
-    val thr = (cfg.lengthFloorNum, cfg.lengthFloorDen) match {
-      case (Some(n), Some(d)) =>
-        // the exact k-th-smallest cut the batch floor used — NOT derived
-        // from the kept set's minimum, which would misplace stream
-        // values absent from the training corpus
-        Some(Sampling.quantileThresholdFrame(gated, "n_tokens", n, d)
-          .first() match {
-            case r if r.isNullAt(0) => Long.MaxValue // empty input
-            case r => r.getLong(0)
-          })
-      case _ => None
-    }
-    val rates = cfg.temperatureAlpha.map { a =>
-      // the SAME rate arithmetic the batch run uses
-      // (Sampling.temperatureRates): null strata excluded (a tiny
-      // null-lang group would poison cmin for every real language —
-      // the batch side filters them, so a frozen policy must too or
-      // run/serve parity breaks) and the alpha domain require applies.
-      // Empty survivor set → empty rates map: serve() then keeps
-      // nothing, matching the batch run over the same empty input.
-      val floored = thr match {
-        case Some(t) => gated.filter(col("n_tokens") > t)
-        case None => gated
-      }
-      Sampling.temperatureRates(floored, langCol, a)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
+    val base = scoredOnce(df, cfg, idCol, textCol, langCol)
+    def flags(cut: Option[Stat]) =
+      flagged(base, cfg.minQuality, cfg.langs, cut, None, idCol, langCol)
+    val thr = lengthCut(cfg).map(cut =>
+      cut(flags(None)).first() match {
+        case r if r.isNullAt(0) => Long.MaxValue
+        case r => r.getLong(0)
+      })
+    val rates = langRates(cfg, langCol).map(r =>
+      r(flags(thr.map(t => literal("__thr", lit(t))))).collect()
+        .map(row => row.getString(0) -> row.getDouble(1)).toMap)
     FrozenCuration(cfg.minQuality, cfg.langs, thr, rates)
   }
 
@@ -232,22 +252,13 @@ object Curation {
   def serve(df: DataFrame, frozen: FrozenCuration,
             idCol: String = "doc_id", textCol: String = "text",
             langCol: String = "lang"): DataFrame = {
-    val scored = TextAnalysis.qualityScore(df, textCol)
-      .select(col(idCol), col(langCol), col("q_score"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    val q = frozen.minQuality.fold(scored)(x =>
-      scored.filter(col("q_score") >= x))
-    val l = frozen.langs.fold(q)(ls => q.filter(col(langCol).isin(ls: _*)))
-    val f = frozen.lengthThreshold.fold(l)(t =>
-      l.filter(col("n_tokens") > t))
-    val s = frozen.rates.fold(f) { rs =>
-      val rate = rs.foldLeft(lit(-1.0)) { case (acc, (k, v)) =>
-        when(col(langCol) === k, lit(v)).otherwise(acc)
-      }
-      f.filter(Sampling.hashUnit(col(idCol)) < rate)
-    }
-    s.select(col(idCol), col(langCol), col("n_tokens"),
-      round(col("q_score") * 10000).cast("long").as("q_e4"))
+    val rate = frozen.rates.map(_.foldLeft(lit(-1.0)) { case (acc, (k, v)) =>
+      when(col(langCol) === k, lit(v)).otherwise(acc)
+    })
+    output(flagged(scored(df, idCol, textCol, langCol), frozen.minQuality,
+        frozen.langs, frozen.lengthThreshold.map(t => literal("__thr", lit(t))),
+        rate.map(literal("__rate", _)), idCol, langCol)
+      .filter(col("__s4")), idCol, langCol)
   }
 
   /** Per-source document cap — the C4/RefinedWeb "domain cap" curation
@@ -285,76 +296,23 @@ object Curation {
     * (and tokens) survive each curation stage — the observability row a
     * nightly run logs next to its output.
     *
-    * SINGLE-PASS shape (the r7 form aggregated the five shared lazy
-    * stage frames independently, re-deriving the text-scoring kernel
-    * ~12×; at 100 TB that is ~12 corpus scans for one report row):
-    * every stage's survival is decidable PER ROW once the stage
-    * statistics are known, so the funnel scores each document once,
-    * derives monotone stage flags s2..s5 from broadcast statistic
-    * sides, and reduces with ONE conditional aggregate. The statistic
-    * subtrees (quantile threshold, temperature rates) read the
-    * PERSISTED scored frame ([[scoredOnce]], optimization r21) — the
-    * stage-stats data dependency no longer re-runs the text kernel —
-    * and the main pass, the budget window, and the final aggregate all
-    * ride one scan. Stage
-    * membership is IDENTICAL to [[run]]/[[stages]]: same threshold
-    * frame, same [[Sampling.temperatureRates]] arithmetic, same budget
-    * window order; the budget stage's cumulative sum treats
-    * non-survivors of stage 4 as zero-token rows, which leaves every
-    * survivor's running total unchanged (ids are unique, so the
-    * RANGE/ROWS frame distinction is moot).
+    * SINGLE-PASS shape: the stage flags [[run]] filters on are reduced
+    * with ONE conditional aggregate, so the text kernel runs once, not
+    * once per stage (at 100 TB each rerun is a corpus scan). The
+    * statistic subtrees read the PERSISTED scored frame ([[scoredOnce]]),
+    * and the main pass, the budget window and the aggregate ride one
+    * scan. The budget window is [[run]]'s, over every row, with rows dead
+    * before it adding zero tokens.
     */
   def funnel(df: DataFrame, cfg: CurationConfig,
              idCol: String = "doc_id", textCol: String = "text",
              langCol: String = "lang"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // same persisted-scored discipline as [[stages]]: the statistic
-    // subtrees below re-derive this frame, so with floor+temperature
-    // configured the funnel's "3 extra kernel scans" (the r12 header
-    // note) collapse to cache reads (optimization r21)
-    val scored = scoredOnce(df, cfg, idCol, textCol, langCol)
-    val gatePred = Seq(
-        cfg.minQuality.map(q => col("q_score") >= q),
-        cfg.langs.map(ls => col(langCol).isin(ls: _*)))
-      .flatten.reduceOption(_ && _).getOrElse(lit(true))
-    // statistic subtrees replicate stages(): threshold from the GATED
-    // survivors, temperature rates from the FLOORED survivors
-    val gated = scored.filter(gatePred)
-    val floored = (cfg.lengthFloorNum, cfg.lengthFloorDen) match {
-      case (Some(n), Some(d)) => Sampling.quantileFloor(gated, "n_tokens", n, d)
-      case _ => gated
-    }
-    val s2 = scored.withColumn("__s2", gatePred)
-    val s3 = (cfg.lengthFloorNum, cfg.lengthFloorDen) match {
-      case (Some(n), Some(d)) =>
-        s2.crossJoin(broadcast(
-            Sampling.quantileThresholdFrame(gated, "n_tokens", n, d)))
-          .withColumn("__s3", col("__s2") && col("n_tokens") > col("__thr"))
-      case _ => s2.withColumn("__s3", col("__s2"))
-    }
-    val s4 = cfg.temperatureAlpha match {
-      case Some(a) =>
-        // left join: rows already dead at stage 3 may carry languages
-        // absent from the rates side; null rate => flag stays false
-        s3.join(broadcast(Sampling.temperatureRates(floored, langCol, a)),
-            Seq(langCol), "left")
-          .withColumn("__s4", col("__s3") &&
-            Sampling.hashUnit(col(idCol)) < col("__rate"))
-      case None => s3.withColumn("__s4", col("__s3"))
-    }
-    val s5 = cfg.budgetPerLang match {
-      case Some(budget) =>
-        val w = Window.partitionBy(langCol)
-          .orderBy(col("q_score").desc, col(idCol))
-        val contrib = when(col("__s4"), col("n_tokens")).otherwise(0L)
-        s4.withColumn("__s5",
-          col("__s4") && (sum(contrib).over(w) - contrib) < budget)
-      case None => s4.withColumn("__s5", col("__s4"))
-    }
+    val f = budgetFill(batch(df, cfg, idCol, textCol, langCol), cfg,
+      Some(col("__s4")), idCol, langCol)
     def n(flag: String) = coalesce(sum(when(col(flag), 1L)), lit(0L))
     def tok(flag: String) =
       coalesce(sum(when(col(flag), col("n_tokens"))), lit(0L))
-    s5.agg(
+    f.agg(
       count(lit(1)).as("n_input"),
       coalesce(sum(col("n_tokens")), lit(0L)).as("tok_input"),
       n("__s2").as("n_gated"), tok("__s2").as("tok_gated"),
@@ -380,44 +338,21 @@ object Curation {
       minWidth: Option[Long] = None, maxWidth: Option[Long] = None,
       minHeight: Option[Long] = None, maxHeight: Option[Long] = None)
 
-  private val knownAssetKeys = Set("formats", "min_width", "max_width",
-    "min_height", "max_height")
-
   /** Parse an asset curation config from JSON, e.g.
     * `{"formats": ["png","mp4"], "min_width": 32, "max_width": 4096}`.
-    * Same boundary discipline as [[parseConfig]]: unknown keys refuse
-    * (a typo must not silently disable a gate), JSON null reads as
-    * absent, and an explicit empty `formats` array means "no format
-    * filter" — `Some(Nil)` would hand isin() zero arguments and drop
-    * every asset.
+    * Read as strictly as [[parseConfig]]; an explicit empty `formats`
+    * array means "no format filter".
     */
   def parseAssetConfig(json: String): AssetCurationConfig = {
-    val root = mapper.readTree(json)
-    val unknown = root.fieldNames().asScala.toSet -- knownAssetKeys
-    require(unknown.isEmpty,
-      s"unknown asset curation config keys: " +
-        s"${unknown.toSeq.sorted.mkString(", ")} " +
-        s"(known: ${knownAssetKeys.toSeq.sorted.mkString(", ")})")
-    def field(k: String) = Option(root.get(k)).filterNot(_.isNull)
-    val formats = field("formats").map { node =>
-      require(node.isArray,
-        s"formats must be a JSON array, got ${node.getNodeType}")
-      node.elements().asScala.map(_.asText()).toSeq
-    }.filter(_.nonEmpty)
-    // same numeric-type discipline as parseConfig: asLong() coerces a
-    // malformed scalar ("4k") to 0, silently turning a max bound into
-    // drop-everything (code-review r14)
-    def intNum(k: String): Option[Long] = field(k).map { n =>
-      require(n.isIntegralNumber,
-        s"$k must be a JSON integer, got ${n.getNodeType}")
-      n.asLong()
-    }
+    val f = Configs.Fields(json, "asset curation config")
+    f.onlyKeys(Set("formats", "min_width", "max_width", "min_height",
+      "max_height"))
     AssetCurationConfig(
-      formats = formats,
-      minWidth = intNum("min_width"),
-      maxWidth = intNum("max_width"),
-      minHeight = intNum("min_height"),
-      maxHeight = intNum("max_height"))
+      formats = f.strings("formats").filter(_.nonEmpty),
+      minWidth = f.integer("min_width"),
+      maxWidth = f.integer("max_width"),
+      minHeight = f.integer("min_height"),
+      maxHeight = f.integer("max_height"))
   }
 
   /** Apply an asset curation config to a decoded-asset frame. Every

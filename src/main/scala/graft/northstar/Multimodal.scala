@@ -324,13 +324,6 @@ object Multimodal {
           Decoded(assetId, frames, channels, "wav", rms.map(_.toFloat))
       }
 
-    /** Per-stripe RMS energy of the decoded PCM — `dim` equal TIME
-      * stripes over the frame axis, channels pooled into each stripe.
-      * The shared walk behind [[decode]]'s feature vector (dim =
-      * FeatureDim) and [[robustHash]]'s 65-stripe gradient pass; None
-      * for non-WAV payloads and unsupported encodings. An empty stripe
-      * reads 0.0 (the decode path's historical convention).
-      */
     /** The RIFF chunk walk behind [[stripeEnergies]]: (channels, bits,
       * data offset, data length) of the first `fmt `/`data` chunk pair,
       * accepting exactly the payloads the old `javax.sound` path
@@ -385,6 +378,13 @@ object Multimodal {
       None
     }
 
+    /** Per-stripe RMS energy of the decoded PCM — `dim` equal TIME
+      * stripes over the frame axis, channels pooled into each stripe.
+      * The shared walk behind [[decode]]'s feature vector (dim =
+      * FeatureDim) and [[robustHash]]'s 65-stripe gradient pass; None
+      * for non-WAV payloads and unsupported encodings. An empty stripe
+      * reads 0.0 (the decode path's historical convention).
+      */
     private def stripeEnergies(payload: Array[Byte], dim: Int)
         : Option[(Array[Double], Int, Int)] =
       if (!looksLikeWav(payload)) None

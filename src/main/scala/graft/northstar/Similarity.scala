@@ -483,12 +483,6 @@ object Similarity {
       .withColumn("is_keeper", row_number().over(w) === 1)
   }
 
-  /** The cell-scoped above-threshold pair list shared by
-    * [[semanticDedup]] and [[semanticDedupBest]]: one row per unordered
-    * in-cell pair with e4-integer cosine >= thresholdE4. Public so the
-    * pair list can be persisted once ([[Artifacts.semanticPairsFor]])
-    * and served to every collapse variant.
-    */
   /** The (cell, subcell) scoping key every SemDeDup pair join groups
     * by: coarse cell from the quantizer, oversized cells re-split by
     * centroid-centered hyperplane bits. Public so diagnostics
@@ -513,6 +507,12 @@ object Similarity {
       Ivf.subcellOf(col("v"), col("cell"), centroids, splits))
   }
 
+  /** The cell-scoped above-threshold pair list shared by
+    * [[semanticDedup]] and [[semanticDedupBest]]: one row per unordered
+    * in-cell pair with e4-integer cosine >= thresholdE4. Public so the
+    * pair list can be persisted once ([[Artifacts.semanticPairsFor]])
+    * and served to every collapse variant.
+    */
   def semanticDedupPairs(emb: DataFrame,
                                  centroids: Array[Array[Float]],
                                  thresholdE4: Long, idCol: String,

@@ -1145,11 +1145,4 @@ object TextAnalysis {
         max(col("n_tokens")).as("n_tokens"),
         (-sum(col("t_e4"))).as("entropy_e4"))
   }
-
-  /** One frame with all per-document text-analysis columns. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame =
-    qualityScore(df, textCol)
-      .withColumn("lang_guess", languageId(col(textCol)))
-      .withColumn("fingerprint", fingerprint(col(textCol)))
-      .withColumn("subword_tokens", subwordCount(col(textCol)))
 }

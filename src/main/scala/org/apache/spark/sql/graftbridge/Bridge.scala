@@ -4,12 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ⇄ Expression bridge. Spark 4 made these conversions
-  * private[sql] (Column now wraps a ColumnNode); a custom Catalyst
-  * Expression still needs them to surface as a Column. This object lives
-  * in an org.apache.spark.sql subpackage purely to satisfy that access
-  * qualifier — it adds no behavior.
-  */
 /** Input-type declaration for graft kernels: `AbstractDataType` (the
   * element type of `ImplicitCastInputTypes.inputTypes`) is private[sql],
   * so expressions living in graft.functions cannot write the override
@@ -27,6 +21,12 @@ trait KernelInputTypes
     kernelInputTypes
 }
 
+/** Column ⇄ Expression bridge. Spark 4 made these conversions
+  * private[sql] (Column now wraps a ColumnNode); a custom Catalyst
+  * Expression still needs them to surface as a Column. This object lives
+  * in an org.apache.spark.sql subpackage purely to satisfy that access
+  * qualifier — it adds no behavior.
+  */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

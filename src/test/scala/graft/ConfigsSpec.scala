@@ -64,6 +64,44 @@ class ConfigsSpec extends AnyFunSuite {
       """{"selected_transformations": null}""").isEmpty)
   }
 
+  test("a mapping flag that is not a JSON boolean refuses, naming the key and the file; null reads as absent") {
+    // Jackson's asBoolean(true) read "no" as true and 0 as false
+    for (v <- Seq("\"no\"", "\"false\"", "0", "1", "[]")) {
+      val e = intercept[IllegalArgumentException](
+        Configs.parseMappingStatus(s"""{"mapping": $v}"""))
+      assert(e.getMessage.contains("mapping_status.json")
+        && e.getMessage.contains("mapping must be a JSON boolean"), e.getMessage)
+    }
+    assert(Configs.parseMappingStatus("""{"mapping": null}"""))
+  }
+
+  test("an aggregation table entry that is not a JSON object refuses, naming the table and the file") {
+    // a string entry used to read as a spec with no columns, which the
+    // A3 guard skips, so the stage succeeded having aggregated nothing
+    for (v <- Seq("\"x\"", "[]", "3")) {
+      val e = intercept[IllegalArgumentException](Configs.parseAggregations(
+        s"""{"orders": $v, "items": {"groupby_columns": ["k"]}}"""))
+      assert(e.getMessage.contains("selected_aggregation_parameters.json")
+        && e.getMessage.contains("orders must be a JSON object"), e.getMessage)
+    }
+    // a null entry reads as not set: the table is not aggregated
+    assert(Configs.parseAggregations(
+      """{"orders": null, "items": {"groupby_columns": ["k"]}}""").keySet
+      == Set("items"))
+  }
+
+  test("list elements, scalar strings and the top level must have their JSON type") {
+    def refusal(parse: => Any): String =
+      intercept[IllegalArgumentException](parse).getMessage
+    val el = refusal(Configs.parseExtraction("""{"tables": ["t1", 2]}"""))
+    assert(el.contains("extraction.json") && el.contains("tables must be a JSON array of strings"), el)
+    val mode = refusal(Configs.parseExtraction("""{"tables": [], "extraction_type": 1}"""))
+    assert(mode.contains("extraction_type must be a JSON string"), mode)
+    val top = refusal(Configs.parseTransformations("""["Remove Duplicates"]"""))
+    assert(top.contains("selected_transformations.json")
+      && top.contains("must be a JSON object"), top)
+  }
+
   test("load: directory assembly with defaults for absent files") {
     val dir = TestTmp.dir("cfg")
     Files.writeString(java.nio.file.Paths.get(dir, "extraction.json"),

@@ -1750,16 +1750,49 @@ class CurationSpec extends SparkSpecBase {
     assert(out == Map(2L -> 8L, 3L -> 9L))
   }
 
+  // every single-stage config, the full config, and the full config
+  // without its budget (the one a frozen policy can serve)
+  private val stageConfigs = Seq(
+    """{"min_quality": 0.5}""", """{"langs": ["en","de"]}""",
+    """{"length_floor": "1/10"}""", """{"temperature_alpha": 0.5}""",
+    """{"budget_per_lang": 1000}""",
+    """{"min_quality": 0.5, "langs": ["en","de"], "length_floor": "1/10",
+      |"temperature_alpha": 0.5, "budget_per_lang": 1000}""".stripMargin,
+    """{"min_quality": 0.5, "langs": ["en","de","fr","es"],
+      |"length_floor": "1/10", "temperature_alpha": 0.5}""".stripMargin)
+    .map(Curation.parseConfig)
+
+  // 20 quality documents: six 10-token ones tie at the length floor
+  // (k = ceil(20/10) = 2 lands on 10, so all six go), and four carry a
+  // null language; plus two all-'z' documents the quality gate drops
+  private lazy val edgeDocs = {
+    val line = "the and of to in is it that for with"
+    val langs = Seq("en", "de", null, "en", "fr")
+    ((1 to 20).map { i =>
+      (i.toLong, Seq.fill(if (i <= 6) 1 else i)(line).mkString(" "),
+        langs(i % langs.size))
+    } ++ Seq((21L, "z z", "en"), (22L, "z z", null: String)))
+      .toDF("doc_id", "text", "lang")
+  }
+
+  private def curationInputs = Seq("sf0.001" -> docs, "edge" -> edgeDocs,
+    "empty" -> docs.limit(0))
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.collect().map(_.getLong(0)).toSet
+
   test("funnel: stage counts are monotone non-increasing and match run()'s output") {
-    val cfg = Curation.parseConfig(
-      """{"min_quality": 0.5, "langs": ["en","de"], "length_floor": "1/10",
-        |"temperature_alpha": 0.5, "budget_per_lang": 1000}""".stripMargin)
-    val row = Curation.funnel(docs, cfg).collect()(0)
-    val ns = Seq("n_input", "n_gated", "n_floored", "n_sampled", "n_selected")
-      .map(n => row.getLong(row.fieldIndex(n)))
-    assert(ns == ns.sorted.reverse, s"stage counts must not increase: $ns")
-    assert(ns.head == docs.count())
-    assert(ns.last == Curation.run(docs, cfg).count())
+    for ((name, in) <- curationInputs; cfg <- stageConfigs) {
+      val row = Curation.funnel(in, cfg).collect()(0)
+      val ns = Seq("n_input", "n_gated", "n_floored", "n_sampled", "n_selected")
+        .map(n => row.getLong(row.fieldIndex(n)))
+      assert(ns == ns.sorted.reverse, s"$name $cfg: stage counts must not increase: $ns")
+      assert(ns.head == in.count(), s"$name $cfg")
+      val out = Curation.run(in, cfg).collect()
+      assert(ns.last == out.length, s"$name $cfg: n_selected vs run")
+      assert(row.getLong(row.fieldIndex("tok_selected")) == out.map(_.getLong(2)).sum,
+        s"$name $cfg: tok_selected vs run")
+    }
   }
 
   test("freeze/serve reproduces the batch pipeline exactly (budget stage excluded by design)") {
@@ -1778,6 +1811,30 @@ class CurationSpec extends SparkSpecBase {
     val batch = Curation.run(docs, cfg).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(served == batch && batch.nonEmpty)
+    for ((name, in) <- curationInputs; c <- stageConfigs
+         if c.budgetPerLang.isEmpty) {
+      val kept = ids(Curation.run(in, c))
+      assert(ids(Curation.serve(in, Curation.freeze(in, c))) == kept,
+        s"$name $c")
+      if (name == "empty") assert(kept.isEmpty)
+      else assert(kept.nonEmpty, s"$name $c keeps nothing")
+    }
+    // the edge fixture: the tie at the floor goes whole (null-language
+    // rows 7, 12 and 17 stay), and null languages pass the quality gate
+    // but never the temperature stage
+    val floorOnly = Curation.CurationConfig(lengthFloorNum = Some(1L),
+      lengthFloorDen = Some(10L))
+    assert(Curation.freeze(edgeDocs.filter("doc_id <= 20"), floorOnly)
+      .lengthThreshold.contains(10L))
+    assert(ids(Curation.run(edgeDocs.filter("doc_id <= 20"), floorOnly))
+      == (7L to 20L).toSet)
+    val nullLang = edgeDocs.filter("lang IS NULL").collect().map(_.getLong(0)).toSet
+    assert(nullLang.size == 5)
+    val tempered = ids(Curation.run(edgeDocs,
+      Curation.CurationConfig(temperatureAlpha = Some(0.5))))
+    assert(tempered.nonEmpty && tempered.intersect(nullLang).isEmpty)
+    assert((nullLang - 22L).subsetOf(ids(Curation.run(edgeDocs,
+      Curation.CurationConfig(minQuality = Some(0.5))))))
   }
 
   test("serve drops languages absent from the frozen rates") {
